@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{CacheScope, CellId, Planar}
+import graft.core.{CacheScope, CellCover, CellId, Planar}
 import graft.functions.Fns
 import graft.sources.Synth
 
@@ -17,10 +17,19 @@ import graft.sources.Synth
   */
 object SpatialOps {
 
-  /** Cover level used for the broadcast PIP prefilter: 64x32 grid cells of
-    * ~5.6° — a few cells per admin-sized polygon.
+  /** Cover level of the broadcast PIP joins ([[pipJoinConvexTagged]],
+    * [[pipJoinGeneral]]): a 256x256 grid, cells of ~1.4° lon by ~0.7° lat.
+    * Fine enough that most of an admin-sized polygon's cover cells are
+    * FULL and skip the ray cast: the 30 hexagons cover 2,299 cells, 1,261
+    * of them FULL.
     */
-  val CoverLevel = 6
+  val CoverLevel = 8
+
+  /** Default cover level of the distributed-cover joins (pipJoinPolygons,
+    * bboxJoin, polyIntersectJoin, dissolve, frechetJoin, dtwJoin): a 64x64
+    * grid, cells of ~5.6° lon by ~2.8° lat.
+    */
+  val CorpusCoverLevel = 6
 
   /** Point-in-polygon join of a (pid, lon_fix, lat_fix) point table against
     * the deterministic hexagon set: broadcast cell-cover equi-join, then
@@ -38,30 +47,19 @@ object SpatialOps {
 
   /** pipJoinConvex carrying the point coordinates through, so downstream
     * tiling needs NO join back against the full point table. Shape:
-    * one broadcast hash join (cell cover) + the native ray-cast filter
-    * (PointInPolygonSet) — zero shuffles of the point side; the plan is a
-    * single map stage until the consumer's aggregation. For CCW convex
+    * one broadcast hash join on the hexagons' classified level-8 cover
+    * ([[pipCoverJoin]]) with the native ray cast (PointInPolygonSet) run
+    * for PARTIAL cells only — zero shuffles of the point side; the plan is
+    * a single map stage until the consumer's aggregation. For CCW convex
     * rings the boundary-inclusive ray cast equals the half-plane
     * conjunction bool_and(cross >= 0), which is what the DuckDB oracle
-    * computes (property-tested in SparkOpsSpec).
+    * computes (property-tested in SparkOpsSpec and PipCoverSpec).
     */
   def pipJoinConvexTagged(spark: SparkSession, points: DataFrame,
-                          carryCols: Seq[Column] = Nil): DataFrame = {
-    import spark.implicits._
-    val cover = Synth.hexagons.flatMap { h =>
-      CellId.coverBBox(h.xs.min, h.ys.min, h.xs.max, h.ys.max, CoverLevel)
-        .map(c => (c, h.polyId))
-    }.toDF("cell", "poly_id")
-    val polyMap: graft.plans.PipKernel.Polys =
-      Synth.hexagons.map(h => h.polyId -> Array((h.xs, h.ys))).toMap
+                          carryCols: Seq[Column] = Nil): DataFrame =
+    pipCoverJoin(spark, points, hexagonCover, Synth.hexagonPolys, CoverLevel, carryCols)
 
-    points.withColumn("cell", Fns.cellId(col("lon_fix"), col("lat_fix"), CoverLevel))
-      .join(broadcast(cover), "cell")
-      .filter(graft.plans.PointInPolygonSet(
-        spark, col("poly_id"), col("lon_fix"), col("lat_fix"), polyMap))
-      .select(Seq(col("pid"), col("poly_id"), col("lon_fix"), col("lat_fix"))
-        ++ carryCols: _*)
-  }
+  private lazy val hexagonCover = classifiedCover(Synth.hexagonPolys, CoverLevel)
 
   /** Sorted-interval cell-list PIP — the north rule's named strategy, as a
     * pure MAP-stage alternative to the broadcast cell-cover join: an
@@ -75,9 +73,7 @@ object SpatialOps {
     */
   def pipJoinIntervals(spark: SparkSession, points: DataFrame,
                        minLevel: Int = 4, maxLevel: Int = 9): DataFrame = {
-    val polyMap: graft.plans.PipKernel.Polys =
-      Synth.hexagons.map(h => h.polyId -> Array((h.xs, h.ys))).toMap
-    val idx = graft.plans.PipIntervalKernel.build(polyMap, minLevel, maxLevel)
+    val idx = graft.plans.PipIntervalKernel.build(Synth.hexagonPolys, minLevel, maxLevel)
     points.select(col("pid"),
       explode(graft.plans.PipIntervalHits(
         spark, col("lon_fix"), col("lat_fix"), idx)).as("poly_id"))
@@ -93,33 +89,52 @@ object SpatialOps {
     */
   def pipAntiJoin(spark: SparkSession, points: DataFrame,
                   minLevel: Int = 4, maxLevel: Int = 9): DataFrame = {
-    val polyMap: graft.plans.PipKernel.Polys =
-      Synth.hexagons.map(h => h.polyId -> Array((h.xs, h.ys))).toMap
-    val idx = graft.plans.PipIntervalKernel.build(polyMap, minLevel, maxLevel)
+    val idx = graft.plans.PipIntervalKernel.build(Synth.hexagonPolys, minLevel, maxLevel)
     points.filter(size(graft.plans.PipIntervalHits(
         spark, col("lon_fix"), col("lat_fix"), idx)) === 0)
       .select(col("pid"))
   }
 
   /** General-polygon PIP via the exact ray-cast kernel (concave rings,
-    * holes): broadcast cover join + native-Expression refinement
-    * (graft.plans.PointInPolygonSet — stays inside whole-stage codegen
-    * where a Scala UDF would break the span). Used by the area pipeline;
-    * the convex variant above is the oracle-checked path.
+    * holes): the same classified broadcast cover join as the convex path
+    * ([[pipCoverJoin]]). The convex variant above is the oracle-checked
+    * path.
     */
   def pipJoinGeneral(spark: SparkSession, points: DataFrame,
                      polygons: Map[Int, Array[(Array[Long], Array[Long])]],
-                     coverLevel: Int = CoverLevel): DataFrame = {
-    import spark.implicits._
-    val cover = polygons.toSeq.flatMap { case (id, rings) =>
-      val xs = rings.flatMap(_._1); val ys = rings.flatMap(_._2)
-      CellId.coverBBox(xs.min, ys.min, xs.max, ys.max, coverLevel).map(c => (c, id))
-    }.toDF("cell", "poly_id")
-    points.withColumn("cell", Fns.cellId(col("lon_fix"), col("lat_fix"), coverLevel))
-      .join(broadcast(cover), "cell")
-      .filter(graft.plans.PointInPolygonSet(
-        spark, col("poly_id"), col("lon_fix"), col("lat_fix"), polygons))
+                     coverLevel: Int = CoverLevel): DataFrame =
+    pipCoverJoin(spark, points, classifiedCover(polygons, coverLevel), polygons,
+        coverLevel, Nil)
       .select(col("pid"), col("poly_id"))
+
+  /** (cell, poly_id, full) rows of every polygon's classified cover at
+    * `level` ([[graft.core.CellCover.classified]]): cells the polygon
+    * does not reach are left out.
+    */
+  private[graft] def classifiedCover(polys: graft.plans.PipKernel.Polys,
+                                     level: Int): Seq[(Long, Int, Boolean)] =
+    polys.toSeq.flatMap { case (id, rings) =>
+      CellCover.classified(rings, level).map { case (cell, full) => (cell, id, full) }
+    }
+
+  /** The broadcast cell-cover PIP join: every point's level-`coverLevel`
+    * cell equi-joins the broadcast `cover`, a FULL cell accepts the pair
+    * and a PARTIAL one runs the exact ray cast against the broadcast
+    * `polys`. `Or` evaluates its right side only when the left is false,
+    * so FULL pairs never reach PointInPolygonSet. Output (pid, poly_id,
+    * lon_fix, lat_fix, carryCols...).
+    */
+  private[graft] def pipCoverJoin(spark: SparkSession, points: DataFrame,
+                                  cover: Seq[(Long, Int, Boolean)],
+                                  polys: graft.plans.PipKernel.Polys, coverLevel: Int,
+                                  carryCols: Seq[Column]): DataFrame = {
+    import spark.implicits._
+    points.withColumn("cell", Fns.cellId(col("lon_fix"), col("lat_fix"), coverLevel))
+      .join(broadcast(cover.toDF("cell", "poly_id", "full")), "cell")
+      .filter(col("full") || graft.plans.PointInPolygonSet(
+        spark, col("poly_id"), col("lon_fix"), col("lat_fix"), polys))
+      .select(Seq(col("pid"), col("poly_id"), col("lon_fix"), col("lat_fix"))
+        ++ carryCols: _*)
   }
 
   /** Point-in-polygon join against a polygon CORPUS held as a DataFrame
@@ -163,7 +178,7 @@ object SpatialOps {
       .select(carry :+ Fns.cellIdFromXY(col("ccx"), col("ccy"), coverLevel).as("cell"): _*)
 
   def pipJoinPolygons(points: DataFrame, polys: DataFrame,
-                      coverLevel: Int = CoverLevel): DataFrame = {
+                      coverLevel: Int = CorpusCoverLevel): DataFrame = {
     val cover = coverByBBox(polys,
       array_min(col("xs")), array_min(col("ys")),
       array_max(col("xs")), array_max(col("ys")), coverLevel,
@@ -199,7 +214,7 @@ object SpatialOps {
     * broadcast of either side), refined by a codegen'd range conjunction.
     */
   def bboxJoin(points: DataFrame, boxes: DataFrame,
-               coverLevel: Int = CoverLevel): DataFrame = {
+               coverLevel: Int = CorpusCoverLevel): DataFrame = {
     val cover = coverByBBox(boxes,
       col("minx"), col("miny"), col("maxx"), col("maxy"), coverLevel,
       Seq(col("box_id"), col("minx"), col("miny"), col("maxx"), col("maxy")))
@@ -234,7 +249,7 @@ object SpatialOps {
     * bounded-vertex rings.
     */
   def polyIntersectJoin(polysA: DataFrame, polysB: DataFrame,
-                        coverLevel: Int = CoverLevel): DataFrame = {
+                        coverLevel: Int = CorpusCoverLevel): DataFrame = {
     def side(p: DataFrame, tag: String): DataFrame =
       coverByBBox(
         p.select(col("poly_id").as(s"${tag}id"), col("xs").as(s"${tag}xs"),
@@ -275,7 +290,7 @@ object SpatialOps {
     * Input: (poly_id, xs, ys) closed convex rings. Output: (component,
     * n_polys, area2, minx, miny, maxx, maxy).
     */
-  def dissolve(polys: DataFrame, coverLevel: Int = CoverLevel): DataFrame = {
+  def dissolve(polys: DataFrame, coverLevel: Int = CorpusCoverLevel): DataFrame = {
     val edges = polyIntersectJoin(polys, polys, coverLevel)
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id").as("src"), col("b_id").as("dst"))
@@ -315,7 +330,7 @@ object SpatialOps {
     * Output: (way_a, way_b, df2).
     */
   def frechetJoin(tracksA: DataFrame, tracksB: DataFrame, thrFix: Long,
-                  coverLevel: Int = CoverLevel,
+                  coverLevel: Int = CorpusCoverLevel,
                   selfJoin: Boolean = false): DataFrame =
     trackPairCandidates(tracksA, tracksB, thrFix, coverLevel, selfJoin)
       .select(col("aid").as("way_a"), col("bid").as("way_b"),
@@ -338,7 +353,7 @@ object SpatialOps {
     * Output: (way_a, way_b, dtw2).
     */
   def dtwJoin(tracksA: DataFrame, tracksB: DataFrame, budget: Long,
-              coverLevel: Int = CoverLevel,
+              coverLevel: Int = CorpusCoverLevel,
               selfJoin: Boolean = false): DataFrame = {
     val expand = math.ceil(math.sqrt(budget.toDouble)).toLong
     trackPairCandidates(tracksA, tracksB, expand, coverLevel, selfJoin)
@@ -3068,7 +3083,7 @@ object SpatialOps {
       compactCells(
         rasterizePolygons(polys, level).select(col("poly_id"),
           col("cell_x").as("bx"), col("cell_y").as("by")),
-        level, keys = Seq("poly_id"), scope))
+        level, keys = Seq("poly_id"), scope), scope)
 
   /** Production overload: probe a PRECOMPUTED per-polygon compacted
     * cover (the [[compactCells]] output shape `(lv, poly_id, bx, by)` —
@@ -3078,11 +3093,16 @@ object SpatialOps {
     * shuffle-hash join on the ancestor keys plus the broadcast ray-cast
     * refine — no rasterize, no compaction rounds (plan-asserted in
     * CompactCoverSpec). The convenience overload above keeps the
-    * build-in-query path for one-shot use.
+    * build-in-query path for one-shot use. The cover's persist is
+    * registered in `scope` (global here, the caller's in the overload
+    * below), so releasing that scope unpersists it.
     */
   def pipJoinCompact(points: DataFrame, polys: DataFrame, level: Int,
-                     cover: DataFrame): DataFrame = {
-    val scope = CacheScope.global
+                     cover: DataFrame): DataFrame =
+    pipJoinCompact(points, polys, level, cover, CacheScope.global)
+
+  def pipJoinCompact(points: DataFrame, polys: DataFrame, level: Int,
+                     cover: DataFrame, scope: CacheScope): DataFrame = {
     // ONE tiny probe over the (artifact-sized) cover picks the join
     // dispatch and trims the ancestor ladder to the level range actually
     // present: compacted covers never reach the coarse root levels, so

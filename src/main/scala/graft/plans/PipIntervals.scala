@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
-import graft.core.{CellId, Planar}
+import graft.core.{CellCover, CellId, Planar}
 
 /** Sorted-interval cell-list point-in-polygon index — the S2-idiomatic
   * strategy the north rule names verbatim ("broadcast sorted-interval cell
@@ -19,8 +19,12 @@ import graft.core.{CellId, Planar}
   * Build (driver, polygon side is small-by-construction — admin polygons):
   * an ADAPTIVE multi-level cover per polygon — coarse cells fully inside
   * the polygon stay coarse and are marked FULL; boundary cells refine down
-  * to `maxLevel` and are marked PARTIAL. Every cover cell becomes its
-  * MaxLevel descendant-id range [[CellId.rangeMin]]..[[CellId.rangeMax]]
+  * to `maxLevel` and are marked PARTIAL. Cells are classified by
+  * [[graft.core.CellCover]], the exact classifier that also builds the
+  * broadcast join's single-level cover; the two plans differ in how a
+  * point finds its cover cells (one binary search here, a hash join
+  * there). Every cover cell becomes its MaxLevel descendant-id range
+  * [[CellId.rangeMin]]..[[CellId.rangeMax]]
   * (the property the sentinel-bit id layout exists for), and the ranges of
   * ALL polygons are swept into DISJOINT sorted elementary segments, each
   * carrying the list of (polygon, full?) refs that cover it.
@@ -83,64 +87,6 @@ object PipIntervalKernel {
 
   // ---- driver-side index construction --------------------------------------
 
-  /** Exact inclusive fix-coordinate rect of cell (cx, cy) at `lvl`:
-    * lo(c) = ceil(c·span / 2^lvl) − half (the smallest coordinate binning
-    * into c); the top cell absorbs the clamped domain edge. Mirrors the
-    * distributed formulation in SpatialOps.segmentCellCover.
-    */
-  private def cellRect(cx: Long, cy: Long, lvl: Int): (Long, Long, Long, Long) = {
-    val n = 1L << lvl
-    def lo(c: Long, span: Long, half: Long): Long = ((c * span + n - 1) >> lvl) - half
-    val x0 = lo(cx, 3600000000L, 1800000000L)
-    val x1 = if (cx == n - 1) 1800000000L else lo(cx + 1, 3600000000L, 1800000000L) - 1
-    val y0 = lo(cy, 1800000000L, 900000000L)
-    val y1 = if (cy == n - 1) 900000000L else lo(cy + 1, 1800000000L, 900000000L) - 1
-    (x0, y0, x1, y1)
-  }
-
-  /** Does ring segment (ax,ay)-(bx,by) intersect the closed rect? Exact:
-    * bbox overlap AND the supporting line does not leave all four corners
-    * strictly on one side (the SAT axis segmentCellCover uses, BigInt here
-    * because driver-side cells can be continent-sized).
-    */
-  private def segHitsRect(ax: Long, ay: Long, bx: Long, by: Long,
-                          x0: Long, y0: Long, x1: Long, y1: Long): Boolean = {
-    if (math.max(ax, bx) < x0 || math.min(ax, bx) > x1 ||
-        math.max(ay, by) < y0 || math.min(ay, by) > y1) return false
-    val dx = BigInt(bx) - ax
-    val dy = BigInt(by) - ay
-    def side(px: Long, py: Long): BigInt = dx * (BigInt(py) - ay) - dy * (BigInt(px) - ax)
-    val s = Array(side(x0, y0), side(x1, y0), side(x0, y1), side(x1, y1))
-    s.min <= 0 && s.max >= 0
-  }
-
-  /** Exact cell-vs-polygon classification. 1 = FULL (rect entirely inside),
-    * 0 = PARTIAL (boundary crosses, or polygon inside rect), -1 = disjoint.
-    * A rect with no boundary segment touching it is entirely on one side of
-    * the (closed) boundary curve set: one corner decides which.
-    */
-  private def classify(rect: (Long, Long, Long, Long),
-                       rings: Array[(Array[Long], Array[Long])]): Int = {
-    val (x0, y0, x1, y1) = rect
-    var i = 0
-    while (i < rings.length) {
-      val (xs, ys) = rings(i)
-      val n = if (xs.length > 1 && xs.head == xs.last && ys.head == ys.last)
-        xs.length - 1 else xs.length
-      var j = 0
-      while (j < n) {
-        val k = (j + 1) % n
-        if (segHitsRect(xs(j), ys(j), xs(k), ys(k), x0, y0, x1, y1)) return 0
-        // a ring wholly inside the rect never crosses its boundary: catch it
-        // by vertex containment (checked per vertex, cheap at driver scale)
-        if (xs(j) >= x0 && xs(j) <= x1 && ys(j) >= y0 && ys(j) <= y1) return 0
-        j += 1
-      }
-      i += 1
-    }
-    if (Planar.pointInPolygon(x0, y0, rings)) 1 else -1
-  }
-
   /** Adaptive cover of one polygon: recurse PARTIAL cells from `minLevel`
     * to `maxLevel`; FULL cells stop coarse. Emits (cell, full).
     */
@@ -150,9 +96,9 @@ object PipIntervalKernel {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean)]
     def walk(cell: Long): Unit = {
       val lvl = CellId.level(cell)
-      classify(cellRect(CellId.x(cell), CellId.y(cell), lvl), rings) match {
-        case 1 => out += ((cell, true))
-        case 0 =>
+      CellCover.classify(cell, rings) match {
+        case CellCover.Full => out += ((cell, true))
+        case CellCover.Partial =>
           if (lvl >= maxLevel) out += ((cell, false))
           else CellId.children(cell).foreach(walk)
         case _ => ()

@@ -54,6 +54,12 @@ object Synth {
     Hexagon(k, cx, cy, xs, ys)
   }
 
+  /** The hexagons as the broadcast polygon map of the PIP kernels
+    * (poly_id → one ring).
+    */
+  lazy val hexagonPolys: graft.plans.PipKernel.Polys =
+    hexagons.map(h => h.polyId -> Array((h.xs, h.ys))).toMap
+
   /** Polygon vertex table (poly_id, seq, x, y) — CCW open rings. */
   def polygonVertices(spark: SparkSession): DataFrame = {
     import spark.implicits._

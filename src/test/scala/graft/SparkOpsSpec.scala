@@ -61,9 +61,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(viaIntervals === viaJoin)
     // the adaptive cover actually produces FULL (interior) cells — the
     // ray-cast-free fast path exists for every admin-sized hexagon
-    val polyMap: graft.plans.PipKernel.Polys =
-      Synth.hexagons.map(h => h.polyId -> Array((h.xs, h.ys))).toMap
-    val idx = graft.plans.PipIntervalKernel.build(polyMap, 4, 9)
+    val idx = graft.plans.PipIntervalKernel.build(Synth.hexagonPolys, 4, 9)
     assert(idx.fullRefs > 0, "expected interior FULL cells in the index")
     // disjointness + order invariants of the swept segment list
     (1 until idx.segmentCount).foreach { i =>
@@ -86,9 +84,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pipJoinGeneral (native Expression) agrees with convex path and handles concave rings") {
     val pts = Synth.points(spark, dir)
-    val polyMap: Map[Int, Array[(Array[Long], Array[Long])]] =
-      Synth.hexagons.map(h => h.polyId -> Array((h.xs, h.ys))).toMap
-    val general = SpatialOps.pipJoinGeneral(spark, pts, polyMap)
+    val general = SpatialOps.pipJoinGeneral(spark, pts, Synth.hexagonPolys)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     val convex = SpatialOps.pipJoinConvex(spark, pts)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet

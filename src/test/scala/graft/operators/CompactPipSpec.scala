@@ -131,4 +131,33 @@ class CompactPipSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(full === run(true))
     cov.unpersist()
   }
+
+  test("the caller's scope owns the cover persist: releasing it unpersists the cover") {
+    val s = spark; import s.implicits._
+    s.catalog.clearCache()
+    graft.core.CacheScope.releaseGlobal()
+    val rnd = new scala.util.Random(47)
+    val polysDf = Seq(
+      (1L, Array(0L, 400000000L, 400000000L, 0L),
+        Array(0L, 0L, 300000000L, 300000000L)))
+      .toDF("poly_id", "xs", "ys")
+    val pts = Seq.tabulate(500)(i =>
+      (i.toLong, rnd.nextLong() % 900000000L, rnd.nextLong() % 600000000L))
+      .toDF("pid", "lon_fix", "lat_fix")
+    val cover = SpatialOps.compactCells(
+      SpatialOps.rasterizePolygons(polysDf, L)
+        .select(col("poly_id"), col("cell_x").as("bx"), col("cell_y").as("by")),
+      L, keys = Seq("poly_id"))
+    val scope = new graft.core.CacheScope
+    SpatialOps.pipJoinCompact(pts, polysDf, L, cover, scope).collect()
+    assert(cover.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    scope.release()
+    assert(cover.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+    // the build-in-query overload hands its scope to the cover persist too
+    val built = new graft.core.CacheScope
+    SpatialOps.pipJoinCompact(pts, polysDf, L, built).collect()
+    assert(!s.sharedState.cacheManager.isEmpty)
+    built.release()
+    assert(s.sharedState.cacheManager.isEmpty, "a persist escaped the caller's scope")
+  }
 }
