@@ -60,11 +60,10 @@ object CrawlOps {
                          graft.core.CacheScope.global): DataFrame = {
     val spark = redirects.sparkSession
     val edges = scope.persist(redirects.select(col("src"), col("dst")))
-    val n = edges.count() // documented probe: sets the doubling depth
-    if (n <= GraphOps.LocalSweepEdges &&
-        GraphOps.integralId(redirects.schema("src").dataType,
-          redirects.schema("dst").dataType)) resolveRedirectsLocal(edges)
-    else resolveRedirectsLoop(edges, n, scope)
+    // the size probe also sets the distributed loop's doubling depth
+    LocalGraph.dispatchBySize(edges, GraphOps.LocalSweepEdges,
+        redirects.schema("src").dataType, redirects.schema("dst").dataType)(
+      resolveRedirectsLocal(edges))(n => resolveRedirectsLoop(edges, n, scope))
   }
 
   /** The distributed doubling loop (spec-reachable; `edges` must be the
@@ -103,61 +102,37 @@ object CrawlOps {
   }
 
   /** Single-shard twin of the doubling loop for redirect maps under the
-    * [[GraphOps.LocalSweepEdges]] budget: memoized chain walking with
-    * in-walk cycle detection in ONE task. The output contract is
-    * algorithm-independent — a src resolves to its chain's terminal
-    * (final, 0) or, when the walk enters a cycle, to (NULL, 1) — so the
-    * walk and the ⌈log₂ n⌉+1 doubling rounds emit identical rows
-    * (parity spec'd).
+    * [[GraphOps.LocalSweepEdges]] budget: memoized chain walking with in-walk
+    * cycle detection over a [[LocalGraph]] in ONE task. The output contract
+    * is algorithm-independent — a src resolves to its chain's terminal
+    * (final, 0) or, when the walk enters a cycle, to (NULL, 1) — so the walk
+    * and the ⌈log₂ n⌉+1 doubling rounds emit identical rows (parity spec'd).
     */
-  private def resolveRedirectsLocal(edges: DataFrame): DataFrame = {
-    val sess = edges.sparkSession
-    import sess.implicits._
-    val idType = edges.schema("src").dataType
-    edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        val succ = new java.util.HashMap[Long, Long]()
-        // contract: at most one dst per src (functional map). On
-        // malformed input keep the MIN dst so the resolution is
-        // deterministic (a plain put would keep whichever duplicate
-        // happened to land later in the coalesced partition).
-        it.foreach { case (s, d) =>
-          succ.merge(s, d, (a, b) => math.min(a, b)) }
-        // memo: final terminal boxed, or null sentinel entry for cycles
-        val memo = new java.util.HashMap[Long, java.lang.Long]()
-        val resolved = new java.util.HashSet[Long]()
-        val path = new scala.collection.mutable.ArrayBuffer[Long]()
-        val onPath = new java.util.HashSet[Long]()
-        val si = succ.keySet().iterator()
-        val out = new scala.collection.mutable.ArrayBuffer[
-          (Long, Option[Long], Long)](succ.size)
-        while (si.hasNext) {
-          val start = si.next()
-          if (!resolved.contains(start)) {
-            path.clear(); onPath.clear()
-            var cur = start
-            var outcome: java.lang.Long = null
-            var done = false
-            while (!done) {
-              if (resolved.contains(cur)) { outcome = memo.get(cur); done = true }
-              else if (onPath.contains(cur)) { outcome = null; done = true }
-              else if (!succ.containsKey(cur)) { outcome = cur; done = true }
-              else { path += cur; onPath.add(cur); cur = succ.get(cur) }
-            }
-            path.foreach { p =>
-              resolved.add(p); memo.put(p, outcome)
-            }
-          }
+  private def resolveRedirectsLocal(edges: DataFrame): DataFrame =
+    LocalGraph.run(edges) { g =>
+      // contract: at most one dst per src (functional map). On malformed
+      // input follow the MIN dst so the resolution is deterministic.
+      def succ(u: Int): Int =
+        (g.off(u) until g.off(u + 1)).map(g.nbr).min
+      // final node index per node: -1 = unresolved, -2 = on the current
+      // walk, -3 = in (or leading into) a cycle
+      val fin = Array.fill(g.n)(-1)
+      (0 until g.n).filter(g.degree(_) > 0).foreach { start =>
+        val path = new scala.collection.mutable.ArrayBuffer[Int]()
+        var cur = start
+        while (fin(cur) == -1 && g.degree(cur) > 0) {
+          fin(cur) = -2; path += cur; cur = succ(cur)
         }
-        val mi = succ.keySet().iterator()
-        while (mi.hasNext) {
-          val s = mi.next()
-          val f = memo.get(s)
-          out += ((s, Option(f).map(_.longValue), if (f == null) 1L else 0L))
-        }
-        out.iterator
-      }.toDF("src", "final", "is_cycle")
-      .select(col("src").cast(idType).as("src"),
-        col("final").cast(idType).as("final"), col("is_cycle"))
-  }
+        val outcome =
+          if (fin(cur) == -2) -3 // walked into its own path: a cycle
+          else if (fin(cur) == -1) cur // a terminal: no outgoing redirect
+          else fin(cur)
+        path.foreach(fin(_) = outcome)
+      }
+      (0 until g.n).iterator.filter(g.degree(_) > 0).map { u =>
+        val f = fin(u)
+        (g.ids(u), if (f < 0) None else Some(g.ids(f)), if (f < 0) 1L else 0L)
+      }
+    }.toDF("src", "final", "is_cycle")
+      .transform(LocalGraph.castIds(edges.schema("src").dataType, "src", "final"))
 }

@@ -206,11 +206,10 @@ object DedupOps {
   private[graft] def duplicateClustersCounted(pairs: DataFrame,
       scope: CacheScope): (DataFrame, Int) = {
     val e = scope.persist(pairs.select(col("doc_a"), col("doc_b")))
-    if (e.count() <= GraphOps.LocalSweepEdges &&
-        GraphOps.integralId(pairs.schema("doc_a").dataType,
-          pairs.schema("doc_b").dataType))
-      (duplicateClustersLocal(e), 0)
-    else duplicateClustersContractedLoop(e, scope)
+    LocalGraph.dispatchBySize(e, GraphOps.LocalSweepEdges,
+        pairs.schema("doc_a").dataType, pairs.schema("doc_b").dataType)(
+      (duplicateClustersLocal(e), 0))(
+      _ => duplicateClustersContractedLoop(e, scope))
   }
 
   /** The distributed contraction + pointer-jump machinery of
@@ -232,43 +231,31 @@ object DedupOps {
     }
 
   /** Single-shard twin of [[duplicateClusters]] under
-    * [[GraphOps.LocalSweepEdges]]: one union-find task over the whole
-    * pair list. Unions always direct the larger root at the smaller, so
-    * find(x) IS the component's minimum member — the same label contract
-    * as the contraction + jump path (and the same kernel as
-    * [[contractPairs]]' per-partition pass, here seeing every edge);
-    * parity spec'd.
+    * [[GraphOps.LocalSweepEdges]]: one union-find task over the whole pair
+    * list as a [[LocalGraph]]. Unions always direct the larger root at the
+    * smaller, so find(x) IS the component's minimum member — the same label
+    * contract as the contraction + jump path (and the same kernel as
+    * [[contractPairs]]' per-partition pass, here seeing every edge); parity
+    * spec'd.
     */
-  private[graft] def duplicateClustersLocal(e: DataFrame): DataFrame = {
-    val sess = e.sparkSession
-    import sess.implicits._
-    val idType = e.schema("doc_a").dataType
-    e.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.get(r) != r) r = parent.get(r)
-          var c = x
-          while (c != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
-          r
-        }
-        it.foreach { case (a, b) =>
-          if (!parent.containsKey(a)) parent.put(a, a)
-          if (!parent.containsKey(b)) parent.put(b, b)
-          val ra = find(a); val rb = find(b)
-          if (ra < rb) parent.put(rb, ra)
-          else if (rb < ra) parent.put(ra, rb)
-        }
-        val out = new scala.collection.mutable.ArrayBuffer[
-          (Long, Long)](parent.size)
-        val ks = parent.keySet().iterator()
-        while (ks.hasNext) { val k = ks.next(); out += ((k, find(k))) }
-        out.iterator
-      }.toDF("doc_id", "cluster_id")
-      .select(col("doc_id").cast(idType).as("doc_id"),
-        col("cluster_id").cast(idType).as("cluster_id"))
-  }
+  private[graft] def duplicateClustersLocal(e: DataFrame): DataFrame =
+    LocalGraph.run(e) { g =>
+      // union by min index: index order is id order
+      val parent = Array.range(0, g.n)
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var c = x
+        while (c != r) { val nx = parent(c); parent(c) = r; c = nx }
+        r
+      }
+      (0 until g.m).foreach { k =>
+        val ra = find(g.src(k)); val rb = find(g.nbr(k))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      (0 until g.n).iterator.map(i => (g.ids(i), g.ids(find(i))))
+    }.toDF("doc_id", "cluster_id").transform(
+      LocalGraph.castIds(e.schema("doc_a").dataType, "doc_id", "cluster_id"))
 
   /** Per-partition edge budget for one cascaded-contraction pass: a
     * union-find pass is allowed to see at most ~this many edges per

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.CacheScope
 import graft.functions.Fns
+import LocalGraph.{castIds, dispatchBySize}
 
 /** Link-graph analytics over crawl-scale edge lists — the rank side of a
   * web-corpus pipeline (page importance feeds crawl scheduling and
@@ -46,10 +47,9 @@ object GraphOps {
   def pageRank(edges: DataFrame, iterations: Int,
                scope: CacheScope = CacheScope.global): DataFrame = {
     val simple = scope.persist(edges.select(col("src"), col("dst")).distinct())
-    if (simple.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType))
-      prLocal(simple, None, iterations, edges.schema("src").dataType)
-    else pageRankLoop(simple, iterations, scope)
+    dispatchBySize(simple, LocalSweepEdges, srcDst(edges): _*)(
+      prLocal(simple, None, iterations, edges.schema("src").dataType))(
+      _ => pageRankLoop(simple, iterations, scope))
   }
 
   /** The distributed power-iteration loop of [[pageRank]]
@@ -111,11 +111,11 @@ object GraphOps {
                            iterations: Int,
                            scope: CacheScope = CacheScope.global): DataFrame = {
     val simple = scope.persist(edges.select(col("src"), col("dst")).distinct())
-    if (simple.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType,
-          seeds.schema("node_id").dataType))
-      prLocal(simple, Some(seeds), iterations, edges.schema("src").dataType)
-    else personalizedPageRankLoop(simple, seeds, iterations, scope)
+    dispatchBySize(simple, LocalSweepEdges,
+        srcDst(edges) :+ seeds.schema("node_id").dataType: _*)(
+      prLocal(simple, Some(seeds.select(col("node_id")).distinct()),
+        iterations, edges.schema("src").dataType))(
+      _ => personalizedPageRankLoop(simple, seeds, iterations, scope))
   }
 
   /** The distributed loop of [[personalizedPageRank]] (spec-reachable). */
@@ -171,10 +171,9 @@ object GraphOps {
   def pageRankWeighted(edges: DataFrame, iterations: Int,
                        scope: CacheScope = CacheScope.global): DataFrame = {
     val e = scope.persist(edges.select(col("src"), col("dst"), col("w")))
-    if (e.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType))
-      pageRankWeightedLocal(e, iterations, edges.schema("src").dataType)
-    else pageRankWeightedLoop(e, iterations, scope)
+    dispatchBySize(e, LocalSweepEdges, srcDst(edges): _*)(
+      pageRankWeightedLocal(e, iterations, edges.schema("src").dataType))(
+      _ => pageRankWeightedLoop(e, iterations, scope))
   }
 
   /** The distributed loop of [[pageRankWeighted]] (spec-reachable). */
@@ -232,21 +231,19 @@ object GraphOps {
     * Input: edges (src, dst, w) with w a non-negative long; sources
     * (node_id). Output: (node_id, dist); unreached nodes are absent.
     *
-    * Strategy selection: a deduplicated integral-id edge list at or
-    * under [[LocalSweepEdges]] runs every relaxation round inside ONE
-    * task over an in-memory adjacency map ([[weightedDistanceLocal]] —
-    * sources ride a tagged union, never a driver collect); larger
-    * graphs take the distributed loop verbatim. Parity spec'd.
+    * Strategy selection ([[LocalGraph.dispatchBySize]]): a small
+    * deduplicated edge list runs every relaxation round inside ONE task
+    * over a [[LocalGraph]] ([[weightedDistanceLocal]]); larger graphs
+    * take the distributed loop verbatim. Parity spec'd.
     */
   def weightedDistance(edges: DataFrame, sources: DataFrame, maxRounds: Int,
                        scope: CacheScope = CacheScope.global): DataFrame = {
     val e = scope.persist(
       edges.select(col("src"), col("dst"), col("w")).distinct())
-    if (e.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType,
-          edges.schema("w").dataType, sources.schema("node_id").dataType))
-      weightedDistanceLocal(e, sources, maxRounds)
-    else weightedDistanceLoop(e, sources, maxRounds, scope)
+    dispatchBySize(e, LocalSweepEdges, srcDst(edges) :+
+        edges.schema("w").dataType :+ sources.schema("node_id").dataType: _*)(
+      weightedDistanceLocal(e, sources, maxRounds))(
+      _ => weightedDistanceLoop(e, sources, maxRounds, scope))
   }
 
   /** The distributed Bellman-Ford loop of [[weightedDistance]]
@@ -292,61 +289,40 @@ object GraphOps {
     * construction; parity spec'd against the distributed loop.
     */
   private[graft] def weightedDistanceLocal(e: DataFrame, sources: DataFrame,
-                                           maxRounds: Int): DataFrame = {
-    val sess = e.sparkSession
-    import sess.implicits._
-    val idType = sources.schema("node_id").dataType
-    val tagged = e
-      .select(col("src").cast("long"), col("dst").cast("long"),
-        col("w").cast("long"), lit(1).as("t"))
-      .unionByName(sources.select(col("node_id").cast("long").as("src"))
-        .distinct()
-        .select(col("src"), lit(0L).as("dst"), lit(0L).as("w"), lit(0).as("t")))
-    tagged.as[(Long, Long, Long, Int)].coalesce(1).mapPartitions { it =>
-      val adj = new java.util.HashMap[
-        Long, scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
-      val seeds = new java.util.LinkedHashSet[Long]()
-      it.foreach { case (s, d, w, t) =>
-        if (t == 1) adj.computeIfAbsent(s,
-          _ => new scala.collection.mutable.ArrayBuffer[(Long, Long)]()) +=
-            ((d, w))
-        else seeds.add(s)
-      }
-      val dist = new java.util.HashMap[Long, Long]()
-      var frontier = new scala.collection.mutable.ArrayBuffer[Long]()
-      val si = seeds.iterator()
-      while (si.hasNext) { val n = si.next(); dist.put(n, 0L); frontier += n }
+                                           maxRounds: Int): DataFrame =
+    LocalGraph.run(e, Some(sources.select(col("node_id")).distinct())) { g =>
+      val dist = new Array[Long](g.n)
+      val reached = new Array[Boolean](g.n)
+      val cand = new Array[Long](g.n)
+      val hasCand = new Array[Boolean](g.n)
+      var frontier = g.seeds
+      frontier.foreach { i => reached(i) = true }
       var round = 0
       while (round < maxRounds && frontier.nonEmpty) {
         round += 1
         // min candidate per destination from the frontier's round-start
         // distances (the synchronous half of the loop's union + min agg)
-        val cand = new java.util.HashMap[Long, Long]()
-        frontier.foreach { n =>
-          val dn = dist.get(n)
-          val ns = adj.get(n)
-          if (ns != null) ns.foreach { case (m, w) =>
-            cand.merge(m, dn + w, (a, b) => math.min(a, b))
+        val touched = new scala.collection.mutable.ArrayBuilder.ofInt
+        frontier.foreach { u =>
+          var k = g.off(u)
+          while (k < g.off(u + 1)) {
+            val v = g.nbr(k)
+            val c = dist(u) + g.w(k)
+            if (!hasCand(v)) { hasCand(v) = true; cand(v) = c; touched += v }
+            else if (c < cand(v)) cand(v) = c
+            k += 1
           }
         }
-        val next = new scala.collection.mutable.ArrayBuffer[Long]()
-        val ci = cand.entrySet().iterator()
-        while (ci.hasNext) {
-          val kv = ci.next()
-          val k2 = kv.getKey
-          if (!dist.containsKey(k2) || kv.getValue < dist.get(k2)) {
-            dist.put(k2, kv.getValue); next += k2
-          }
+        frontier = touched.result().filter { v =>
+          hasCand(v) = false
+          val better = !reached(v) || cand(v) < dist(v)
+          if (better) { reached(v) = true; dist(v) = cand(v) }
+          better
         }
-        frontier = next
       }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](dist.size)
-      val ks = dist.entrySet().iterator()
-      while (ks.hasNext) { val kv = ks.next(); out += ((kv.getKey, kv.getValue)) }
-      out.iterator
+      (0 until g.n).iterator.filter(reached).map(i => (g.ids(i), dist(i)))
     }.toDF("node_id", "dist")
-      .select(col("node_id").cast(idType).as("node_id"), col("dist"))
-  }
+      .transform(castIds(sources.schema("node_id").dataType, "node_id"))
 
   /** Per-node triangle participation counts over the undirected simple
     * graph — the local clustering signal of a link graph (spam farms and
@@ -451,10 +427,8 @@ object GraphOps {
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b")).distinct()
     val cec = scope.persist(ec)
-    if (cec.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType))
-      kTrussLocal(cec, k, rounds)
-    else kTrussLoop(cec, k, rounds, scope)
+    dispatchBySize(cec, LocalSweepEdges, srcDst(edges): _*)(
+      kTrussLocal(cec, k, rounds))(_ => kTrussLoop(cec, k, rounds, scope))
   }
 
   /** The distributed peel loop of [[kTruss]] (spec-reachable directly).
@@ -488,54 +462,41 @@ object GraphOps {
     * budget: the same synchronous peel schedule (per-round support =
     * |N(a) ∩ N(b)| within the surviving set, remove sup < k−2, stop on
     * stability or the round cap, output survivors with support
-    * RECOMPUTED) over in-memory adjacency sets in one task. Support is
+    * RECOMPUTED) over sorted adjacency arrays in one task. Support is
     * algorithm-independent (triangles through an edge), so rows match
     * the oriented-wedge loop bit-for-bit; parity spec'd.
     */
   private[graft] def kTrussLocal(ec: DataFrame, k: Int,
-                                 rounds: Int): DataFrame = {
-    val sess = ec.sparkSession
-    import sess.implicits._
-    val idType = ec.schema("a").dataType
-    ec.select(col("a").cast("long"), col("b").cast("long"))
-      .as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        var es = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-        it.foreach(es += _)
-        def adjacency(edges: Iterable[(Long, Long)]) = {
-          val adj = new java.util.HashMap[Long, java.util.HashSet[Long]]()
-          edges.foreach { case (a, b) =>
-            adj.computeIfAbsent(a, _ => new java.util.HashSet[Long]()).add(b)
-            adj.computeIfAbsent(b, _ => new java.util.HashSet[Long]()).add(a)
-          }
-          adj
+                                 rounds: Int): DataFrame =
+    LocalGraph.run(ec) { g =>
+      var (as, bs) = (g.src, g.nbr)
+      // support of every edge (a, b): |N(a) ∩ N(b)| within the edge set,
+      // each smaller row probed against the bigger row, sorted
+      def support(): Array[Long] = {
+        val adj = g.withEdges(as ++ bs, bs ++ as)
+        (0 until adj.n).foreach(i =>
+          java.util.Arrays.sort(adj.nbr, adj.off(i), adj.off(i + 1)))
+        Array.tabulate(as.length) { j =>
+          val (x, y) =
+            if (adj.degree(as(j)) <= adj.degree(bs(j))) (as(j), bs(j))
+            else (bs(j), as(j))
+          (adj.off(x) until adj.off(x + 1)).count(p =>
+            java.util.Arrays.binarySearch(adj.nbr, adj.off(y), adj.off(y + 1),
+              adj.nbr(p)) >= 0).toLong
         }
-        def support(adj: java.util.HashMap[Long, java.util.HashSet[Long]],
-                    a: Long, b: Long): Long = {
-          val na = adj.get(a); val nb = adj.get(b)
-          if (na == null || nb == null) 0L
-          else {
-            val (small, big) = if (na.size <= nb.size) (na, nb) else (nb, na)
-            var c = 0L
-            val i = small.iterator()
-            while (i.hasNext) if (big.contains(i.next())) c += 1
-            c
-          }
-        }
-        var r = 0
-        var stable = false
-        while (r < rounds && !stable) {
-          r += 1
-          val adj = adjacency(es)
-          val keep = es.filter { case (a, b) => support(adj, a, b) >= k - 2 }
-          stable = keep.length == es.length
-          es = keep
-        }
-        val adj = adjacency(es)
-        es.iterator.map { case (a, b) => (a, b, support(adj, a, b)) }
-      }.toDF("a", "b", "sup")
-      .select(col("a").cast(idType).as("a"), col("b").cast(idType).as("b"),
-        col("sup"))
-  }
+      }
+      var r = 0
+      var stable = false
+      while (r < rounds && !stable) {
+        r += 1
+        val sup = support()
+        stable = sup.forall(_ >= k - 2)
+        as = as.indices.filter(sup(_) >= k - 2).map(as).toArray
+        bs = bs.indices.filter(sup(_) >= k - 2).map(bs).toArray
+      }
+      val sup = support()
+      as.indices.iterator.map(j => (g.ids(as(j)), g.ids(bs(j)), sup(j)))
+    }.toDF("a", "b", "sup").transform(castIds(ec.schema("a").dataType, "a", "b"))
 
   /** Synchronous label-propagation community detection, FIXED rounds:
     * every node starts labeled with its own id; each round every node
@@ -568,10 +529,9 @@ object GraphOps {
       .filter(col("a") =!= col("b")).distinct()
     val adj = scope.persist(ec.select(col("a").as("u"), col("b").as("v"))
       .unionByName(ec.select(col("b").as("u"), col("a").as("v"))))
-    if (adj.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType))
-      labelPropagationLocal(adj, rounds)
-    else labelPropagationLoop(adj, rounds, scope)
+    dispatchBySize(adj, LocalSweepEdges, srcDst(edges): _*)(
+      labelPropagationLocal(adj, rounds))(
+      _ => labelPropagationLoop(adj, rounds, scope))
   }
 
   /** The distributed vote loop of [[labelPropagation]] (spec-reachable
@@ -603,62 +563,39 @@ object GraphOps {
     labels.select(col("node_id"), col("lab").as("community"))
   }
 
-  /** Single-shard twin of [[labelPropagation]] under the
-    * [[LocalSweepEdges]] budget: the same synchronous schedule (every
-    * node adopts its neighbors' most frequent label, ties to the
-    * SMALLEST label, exactly `rounds` rounds) over an in-memory doubled
-    * adjacency in one task. Deterministic by the same tie rule, so rows
-    * match the vote loop bit-for-bit; parity spec'd.
+  /** Single-shard twin of [[labelPropagation]] under the [[LocalSweepEdges]]
+    * budget: the same synchronous schedule (every node adopts its neighbors'
+    * most frequent label, ties to the SMALLEST label, exactly `rounds`
+    * rounds) over the doubled adjacency as a [[LocalGraph]] in one task.
+    * Deterministic by the same tie rule, so rows match the vote loop
+    * bit-for-bit; parity spec'd.
     */
   private[graft] def labelPropagationLocal(adj: DataFrame,
-                                           rounds: Int): DataFrame = {
-    val sess = adj.sparkSession
-    import sess.implicits._
-    val idType = adj.schema("u").dataType
-    adj.select(col("u").cast("long"), col("v").cast("long"))
-      .as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        val nbrs = new java.util.HashMap[
-          Long, scala.collection.mutable.ArrayBuffer[Long]]()
-        it.foreach { case (u, v) =>
-          nbrs.computeIfAbsent(u,
-            _ => new scala.collection.mutable.ArrayBuffer[Long]()) += v
-        }
-        var labels = new java.util.HashMap[Long, Long]()
-        val ni = nbrs.keySet().iterator()
-        while (ni.hasNext) { val n = ni.next(); labels.put(n, n) }
-        var r = 0
-        while (r < rounds) {
-          r += 1
-          val next = new java.util.HashMap[Long, Long](labels.size)
-          val ui = nbrs.entrySet().iterator()
-          while (ui.hasNext) {
-            val kv = ui.next()
-            val votes = new java.util.HashMap[Long, Long]()
-            kv.getValue.foreach { v =>
-              votes.merge(labels.get(v), 1L, (a, b) => a + b)
+                                           rounds: Int): DataFrame =
+    LocalGraph.run(adj) { g =>
+      // labels are node indices: the smallest index is the smallest id
+      var labels = Array.range(0, g.n)
+      val votes = new Array[Long](g.n)
+      for (_ <- 1 to rounds) {
+        val prev = labels
+        labels = Array.tabulate(g.n) { u =>
+          var best = u
+          var bestCnt = -1L
+          (g.off(u) until g.off(u + 1)).foreach { k =>
+            val l = prev(g.nbr(k))
+            votes(l) += 1
+            if (votes(l) > bestCnt || (votes(l) == bestCnt && l < best)) {
+              bestCnt = votes(l); best = l
             }
-            var bestLab = Long.MaxValue
-            var bestCnt = -1L
-            val vi = votes.entrySet().iterator()
-            while (vi.hasNext) {
-              val e = vi.next()
-              if (e.getValue > bestCnt ||
-                  (e.getValue == bestCnt && e.getKey < bestLab)) {
-                bestCnt = e.getValue; bestLab = e.getKey
-              }
-            }
-            next.put(kv.getKey, bestLab)
           }
-          labels = next
+          (g.off(u) until g.off(u + 1)).foreach(k => votes(prev(g.nbr(k))) = 0L)
+          best
         }
-        val out = new scala.collection.mutable.ArrayBuffer[
-          (Long, Long)](labels.size)
-        val li = labels.entrySet().iterator()
-        while (li.hasNext) { val kv = li.next(); out += ((kv.getKey, kv.getValue)) }
-        out.iterator
-      }.toDF("node_id", "community")
-      .select(col("node_id").cast(idType).as("node_id"), col("community").cast(idType).as("community"))
-  }
+      }
+      (0 until g.n).iterator.filter(g.degree(_) > 0)
+        .map(u => (g.ids(u), g.ids(labels(u))))
+    }.toDF("node_id", "community")
+      .transform(castIds(adj.schema("u").dataType, "node_id", "community"))
 
   /** Local clustering coefficient per node, exact integer permille:
     * coeff_pm = 2000·n_tri div (deg·(deg−1)) over the simple undirected
@@ -763,22 +700,20 @@ object GraphOps {
     * Input: edges (src, dst), sources (node_id). Output: (node_id, hops)
     * with hops ∈ [0, maxHops]; unreached nodes are absent.
     *
-    * Strategy selection: a deduplicated edge list at or under
-    * [[LocalSweepEdges]] runs the whole BFS inside ONE task over an
-    * in-memory adjacency map ([[hopDistanceLocal]] — memory bounded by
-    * the edge budget, sources shipped executor-side via a tagged union,
-    * never collected to the driver) instead of paying one blocking
-    * frontier round per hop; larger graphs take the distributed loop
-    * unchanged. Same small/large split as the kNN family; parity spec'd.
+    * Strategy selection ([[LocalGraph.dispatchBySize]]): a small
+    * deduplicated edge list runs the whole BFS inside ONE task over a
+    * [[LocalGraph]] ([[hopDistanceLocal]] — memory bounded by the edge
+    * budget) instead of paying one blocking frontier round per hop;
+    * larger graphs take the distributed loop unchanged. Same small/large
+    * split as the kNN family; parity spec'd.
     */
   def hopDistance(edges: DataFrame, sources: DataFrame, maxHops: Int,
                   scope: CacheScope = CacheScope.global): DataFrame = {
     val e = scope.persist(edges.select(col("src"), col("dst")).distinct())
-    if (e.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType,
-          sources.schema("node_id").dataType))
-      hopDistanceLocal(e, sources, maxHops)
-    else hopDistanceLoop(e, sources, maxHops, scope)
+    dispatchBySize(e, LocalSweepEdges,
+        srcDst(edges) :+ sources.schema("node_id").dataType: _*)(
+      hopDistanceLocal(e, sources, maxHops))(
+      _ => hopDistanceLoop(e, sources, maxHops, scope))
   }
 
   /** The distributed frontier loop of [[hopDistance]] (spec-reachable
@@ -826,155 +761,71 @@ object GraphOps {
   private def prLocal(simple: DataFrame, seeds: Option[DataFrame],
                       iterations: Int,
                       idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val sess = simple.sparkSession
-    import sess.implicits._
-    val tagged = simple
-      .select(col("src").cast("long"), col("dst").cast("long"), lit(1).as("t"))
-      .unionByName(seeds.map(_.select(col("node_id").cast("long").as("src"))
-          .distinct().select(col("src"), lit(0L).as("dst"), lit(0).as("t")))
-        .getOrElse(sess.emptyDataset[(Long, Long, Int)].toDF("src", "dst", "t")))
     val personalized = seeds.isDefined
-    tagged.as[(Long, Long, Int)].coalesce(1).mapPartitions { it =>
-      val es = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-      val seedSet = new java.util.HashSet[Long]()
-      val outdeg = new java.util.HashMap[Long, Long]()
-      val nodes = new java.util.LinkedHashSet[Long]()
-      it.foreach { case (s, d, t) =>
-        if (t == 1) {
-          es += ((s, d)); nodes.add(s); nodes.add(d)
-          outdeg.merge(s, 1L, (a, b) => a + b)
-        } else seedSet.add(s)
-      }
+    LocalGraph.run(simple, seeds) { g =>
+      val seed = new Array[Boolean](g.n)
+      g.seeds.foreach(seed(_) = true)
       val base = (100L - DampingPct) * (RankScale / 100L)
-      val rank = new java.util.HashMap[Long, Long]()
-      val ni = nodes.iterator()
-      while (ni.hasNext) {
-        val n = ni.next()
-        rank.put(n,
-          if (!personalized) RankScale
-          else if (seedSet.contains(n)) RankScale else 0L)
-      }
-      var round = 0
-      while (round < iterations) {
-        round += 1
-        val inSum = new java.util.HashMap[Long, Long]()
-        es.foreach { case (s, d) =>
-          inSum.merge(d, rank.get(s) / outdeg.get(s), (a, b) => a + b)
+      val rank = Array.tabulate(g.n)(i =>
+        if (!personalized || seed(i)) RankScale else 0L)
+      for (_ <- 1 to iterations) {
+        val inSum = new Array[Long](g.n)
+        (0 until g.m).foreach { k =>
+          val s = g.src(k)
+          inSum(g.nbr(k)) += rank(s) / g.degree(s)
         }
-        val n2 = nodes.iterator()
-        while (n2.hasNext) {
-          val n = n2.next()
-          val b = if (!personalized) base
-            else if (seedSet.contains(n)) base else 0L
-          rank.put(n, b + DampingPct * inSum.getOrDefault(n, 0L) / 100L)
+        (0 until g.n).foreach { i =>
+          val b = if (!personalized || seed(i)) base else 0L
+          rank(i) = b + DampingPct * inSum(i) / 100L
         }
       }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](rank.size)
-      val ri = rank.entrySet().iterator()
-      while (ri.hasNext) { val kv = ri.next(); out += ((kv.getKey, kv.getValue)) }
-      out.iterator
-    }.toDF("node_id", "rank_e6")
-      .select(col("node_id").cast(idType).as("node_id"), col("rank_e6"))
+      // seeds outside the edge set are ignored: no links to diffuse over
+      (0 until g.n).iterator.filter(g.onEdge).map(i => (g.ids(i), rank(i)))
+    }.toDF("node_id", "rank_e6").transform(castIds(idType, "node_id"))
   }
 
   /** Single-shard twin of [[pageRankWeighted]] (⌊rank·w/sw⌋ contribs,
     * same exact-int64 contract) under the [[LocalSweepEdges]] budget.
     */
   private def pageRankWeightedLocal(e: DataFrame, iterations: Int,
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val sess = e.sparkSession
-    import sess.implicits._
-    e.select(col("src").cast("long"), col("dst").cast("long"),
-        col("w").cast("long"))
-      .as[(Long, Long, Long)].coalesce(1).mapPartitions { it =>
-        val es = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-        val sw = new java.util.HashMap[Long, Long]()
-        val nodes = new java.util.LinkedHashSet[Long]()
-        it.foreach { case (s, d, w) =>
-          es += ((s, d, w)); nodes.add(s); nodes.add(d)
-          sw.merge(s, w, (a, b) => a + b)
+      idType: org.apache.spark.sql.types.DataType): DataFrame =
+    LocalGraph.run(e) { g =>
+      val sw = new Array[Long](g.n)
+      (0 until g.m).foreach(k => sw(g.src(k)) += g.w(k))
+      val base = (100L - DampingPct) * (RankScale / 100L)
+      val rank = Array.fill(g.n)(RankScale)
+      for (_ <- 1 to iterations) {
+        val inSum = new Array[Long](g.n)
+        (0 until g.m).foreach { k =>
+          val s = g.src(k)
+          inSum(g.nbr(k)) += rank(s) * g.w(k) / sw(s)
         }
-        val base = (100L - DampingPct) * (RankScale / 100L)
-        val rank = new java.util.HashMap[Long, Long]()
-        val ni = nodes.iterator()
-        while (ni.hasNext) rank.put(ni.next(), RankScale)
-        var round = 0
-        while (round < iterations) {
-          round += 1
-          val inSum = new java.util.HashMap[Long, Long]()
-          es.foreach { case (s, d, w) =>
-            inSum.merge(d, rank.get(s) * w / sw.get(s), (a, b) => a + b)
-          }
-          val n2 = nodes.iterator()
-          while (n2.hasNext) {
-            val n = n2.next()
-            rank.put(n, base + DampingPct * inSum.getOrDefault(n, 0L) / 100L)
-          }
-        }
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](rank.size)
-        val ri = rank.entrySet().iterator()
-        while (ri.hasNext) { val kv = ri.next(); out += ((kv.getKey, kv.getValue)) }
-        out.iterator
-      }.toDF("node_id", "rank_e6")
-      .select(col("node_id").cast(idType).as("node_id"), col("rank_e6"))
-  }
+        (0 until g.n).foreach(i => rank(i) = base + DampingPct * inSum(i) / 100L)
+      }
+      (0 until g.n).iterator.map(i => (g.ids(i), rank(i)))
+    }.toDF("node_id", "rank_e6").transform(castIds(idType, "node_id"))
 
   /** Single-shard twin of [[hits]] (integer max-renormalized hub/auth
     * half-steps, qa/qh = max raw ÷ RankScale floor-divided — identical
     * scalars to the loop's two global maxes) under the budget.
     */
   private def hitsLocal(simple: DataFrame, iterations: Int,
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val sess = simple.sparkSession
-    import sess.implicits._
-    simple.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        val es = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-        val nodes = new java.util.LinkedHashSet[Long]()
-        it.foreach { case (s, d) => es += ((s, d)); nodes.add(s); nodes.add(d) }
-        val h = new java.util.HashMap[Long, Long]()
-        val a = new java.util.HashMap[Long, Long]()
-        val ni = nodes.iterator()
-        while (ni.hasNext) { val n = ni.next(); h.put(n, RankScale); a.put(n, RankScale) }
-        var round = 0
-        while (round < iterations) {
-          round += 1
-          val araw = new java.util.HashMap[Long, Long]()
-          es.foreach { case (s, d) => araw.merge(d, h.get(s), (x, y) => x + y) }
-          var maxA = 0L
-          val i1 = nodes.iterator()
-          while (i1.hasNext) {
-            val v = araw.getOrDefault(i1.next(), 0L); if (v > maxA) maxA = v
-          }
-          val qa = math.max(maxA / RankScale, 1L)
-          val i2 = nodes.iterator()
-          while (i2.hasNext) {
-            val n = i2.next(); a.put(n, araw.getOrDefault(n, 0L) / qa)
-          }
-          val hraw = new java.util.HashMap[Long, Long]()
-          es.foreach { case (s, d) => hraw.merge(s, a.get(d), (x, y) => x + y) }
-          var maxH = 0L
-          val i3 = nodes.iterator()
-          while (i3.hasNext) {
-            val v = hraw.getOrDefault(i3.next(), 0L); if (v > maxH) maxH = v
-          }
-          val qh = math.max(maxH / RankScale, 1L)
-          val i4 = nodes.iterator()
-          while (i4.hasNext) {
-            val n = i4.next(); h.put(n, hraw.getOrDefault(n, 0L) / qh)
-          }
-        }
-        val out = new scala.collection.mutable.ArrayBuffer[
-          (Long, Long, Long)](nodes.size)
-        val i5 = nodes.iterator()
-        while (i5.hasNext) {
-          val n = i5.next(); out += ((n, h.get(n), a.get(n)))
-        }
-        out.iterator
-      }.toDF("node_id", "hub_e6", "auth_e6")
-      .select(col("node_id").cast(idType).as("node_id"),
-        col("hub_e6"), col("auth_e6"))
-  }
+      idType: org.apache.spark.sql.types.DataType): DataFrame =
+    LocalGraph.run(simple) { g =>
+      val h = Array.fill(g.n)(RankScale)
+      val a = Array.fill(g.n)(RankScale)
+      for (_ <- 1 to iterations) {
+        val araw = new Array[Long](g.n)
+        (0 until g.m).foreach(k => araw(g.nbr(k)) += h(g.src(k)))
+        val qa = math.max(araw.foldLeft(0L)(math.max) / RankScale, 1L)
+        (0 until g.n).foreach(i => a(i) = araw(i) / qa)
+        val hraw = new Array[Long](g.n)
+        (0 until g.m).foreach(k => hraw(g.src(k)) += a(g.nbr(k)))
+        val qh = math.max(hraw.foldLeft(0L)(math.max) / RankScale, 1L)
+        (0 until g.n).foreach(i => h(i) = hraw(i) / qh)
+      }
+      (0 until g.n).iterator.map(i => (g.ids(i), h(i), a(i)))
+    }.toDF("node_id", "hub_e6", "auth_e6").transform(castIds(idType, "node_id"))
 
   /** Single-shard BFS for graphs under the [[LocalSweepEdges]] budget:
     * edges and sources ride one tagged union into a single partition
@@ -984,47 +835,12 @@ object GraphOps {
     * maxHops).
     */
   private[graft] def hopDistanceLocal(e: DataFrame, sources: DataFrame,
-                               maxHops: Int): DataFrame = {
-    val sess = e.sparkSession
-    import sess.implicits._
-    val idType = sources.schema("node_id").dataType
-    val tagged = e
-      .select(col("src").cast("long"), col("dst").cast("long"),
-        lit(1).as("t"))
-      .unionByName(sources.select(col("node_id").cast("long").as("src"))
-        .distinct()
-        .select(col("src"), lit(0L).as("dst"), lit(0).as("t")))
-    tagged.as[(Long, Long, Int)].coalesce(1).mapPartitions { it =>
-      val adj = new java.util.HashMap[
-        Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      val seeds = new scala.collection.mutable.ArrayBuffer[Long]()
-      it.foreach { case (s, d, t) =>
-        if (t == 1) adj.computeIfAbsent(s,
-          _ => new scala.collection.mutable.ArrayBuffer[Long]()) += d
-        else seeds += s
-      }
-      val dist = new java.util.HashMap[Long, Long]()
-      seeds.foreach(dist.put(_, 0L))
-      var frontier = seeds
-      var h = 0L
-      while (frontier.nonEmpty && h < maxHops) {
-        h += 1
-        val next = new scala.collection.mutable.ArrayBuffer[Long]()
-        frontier.foreach { n =>
-          val ns = adj.get(n)
-          if (ns != null) ns.foreach { m =>
-            if (!dist.containsKey(m)) { dist.put(m, h); next += m }
-          }
-        }
-        frontier = next
-      }
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](dist.size)
-      val ks = dist.entrySet().iterator()
-      while (ks.hasNext) { val kv = ks.next(); out += ((kv.getKey, kv.getValue)) }
-      out.iterator
+                                      maxHops: Int): DataFrame =
+    LocalGraph.run(e, Some(sources.select(col("node_id")).distinct())) { g =>
+      val dist = Array.fill(g.n)(-1)
+      g.bfs(g.seeds, maxHops, dist).iterator.map(i => (g.ids(i), dist(i).toLong))
     }.toDF("node_id", "hops")
-      .select(col("node_id").cast(idType).as("node_id"), col("hops"))
-  }
+      .transform(castIds(sources.schema("node_id").dataType, "node_id"))
 
   /** Deterministic RANDOM-WALK corpus (the DeepWalk/node2vec input):
     * `walksPerNode` walks from every node, each `steps` hops, where hop
@@ -1099,6 +915,19 @@ object GraphOps {
       .withColumn("recip_pm", expr("(mutual * 1000) div outdeg"))
   }
 
+  /** Edge budget of the single-shard graph twins: a prepared edge list
+    * at or under this many rows runs the whole algorithm inside ONE task
+    * over a [[LocalGraph]] (memory O(edges), bounded by this constant)
+    * instead of paying one blocking round of scheduler latency per
+    * iteration; above it the distributed loop runs unchanged. The rule is
+    * [[LocalGraph.dispatchBySize]]'s; the switch mirrors the kNN family's
+    * small/large strategy selection.
+    */
+  val LocalSweepEdges: Long = 1L << 22
+
+  private def srcDst(edges: DataFrame) =
+    Seq(edges.schema("src").dataType, edges.schema("dst").dataType)
+
   /** Double-sweep diameter estimation (the standard BFS heuristic whose
     * result is an exact LOWER bound and exact on trees): BFS from a
     * deterministic seed (the minimum node id), hop to the farthest node
@@ -1115,34 +944,6 @@ object GraphOps {
     * eager scalars, the same contract as knn's density probe. Output one
     * row: (seed, far_node, seed_ecc, peak_node, diameter_lb).
     */
-  /** Edge budget for the single-shard double-sweep path: a symmetrized
-    * graph at or under this many edges runs both BFS sweeps inside ONE
-    * task over an in-memory adjacency map (memory O(edges), bounded by
-    * this constant) instead of paying ~2·eccentricity blocking frontier
-    * rounds of scheduler latency. Above the budget the distributed
-    * [[hopDistance]] loop runs unchanged — the switch mirrors the kNN
-    * family's small/large strategy selection.
-    */
-  val LocalSweepEdges: Long = 1L << 22
-
-  /** The single-shard twins key their in-memory maps by Long, so the
-    * budget dispatch additionally requires integral node ids — operators
-    * called with string ids (e.g. TextRank's word graph) stay on the
-    * distributed loop at any size. The id columns must also share ONE
-    * type: twins cast output node ids to the first column's type, which
-    * would silently truncate ids from a WIDER second column (src INT,
-    * dst BIGINT), where the distributed loops widen via unionByName —
-    * mixed-width inputs therefore stay distributed too.
-    */
-  private[graft] def integralId(dts: org.apache.spark.sql.types.DataType*): Boolean =
-    dts.forall {
-      case _: org.apache.spark.sql.types.LongType => true
-      case _: org.apache.spark.sql.types.IntegerType => true
-      case _: org.apache.spark.sql.types.ShortType => true
-      case _: org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    } && dts.distinct.lengthCompare(1) <= 0
-
   def doubleSweepDiameter(edges: DataFrame, maxHops: Int,
                           scope: CacheScope = CacheScope.global): DataFrame = {
     val sess = edges.sparkSession
@@ -1150,47 +951,26 @@ object GraphOps {
     val sym = scope.persist(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct())
-    if (sym.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType)) {
+    dispatchBySize(sym, LocalSweepEdges, srcDst(edges): _*)(
       // both sweeps in one task: BFS level h's nodes are exactly the
       // distributed loop's hops==h rows, so far-node tie-break (max hops,
-      // then min node id) = min id of the last non-empty level
-      sym.as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        val adj = new java.util.HashMap[
-          Long, scala.collection.mutable.ArrayBuffer[Long]]()
-        var seed = Long.MaxValue
-        it.foreach { case (s, d) =>
-          adj.computeIfAbsent(s,
-            _ => new scala.collection.mutable.ArrayBuffer[Long]()) += d
-          if (s < seed) seed = s
+      // then min node id) = min id of the last level reached
+      LocalGraph.run(sym) { g =>
+        val dist = Array.fill(g.n)(-1)
+        def sweep(from: Int): (Int, Long) = {
+          val order = g.bfs(Array(from), maxHops, dist)
+          val ecc = dist(order.last)
+          val far = order.filter(dist(_) == ecc).min
+          order.foreach(dist(_) = -1)
+          (far, ecc.toLong)
         }
-        def sweep(from: Long): (Long, Long) = {
-          val dist = new java.util.HashMap[Long, Long]()
-          dist.put(from, 0L)
-          var frontier = scala.collection.mutable.ArrayBuffer(from)
-          var h = 0L; var far = from; var ecc = 0L
-          while (frontier.nonEmpty && h < maxHops) {
-            h += 1
-            val next = new scala.collection.mutable.ArrayBuffer[Long]()
-            frontier.foreach { n =>
-              val ns = adj.get(n)
-              if (ns != null) ns.foreach { m =>
-                if (!dist.containsKey(m)) { dist.put(m, h); next += m }
-              }
-            }
-            frontier = next
-            if (next.nonEmpty) { ecc = h; far = next.min }
-          }
-          (far, ecc)
-        }
-        if (seed == Long.MaxValue) Iterator.empty
+        if (g.n == 0) Iterator.empty
         else {
-          val (far, ecc1) = sweep(seed)
+          val (far, ecc1) = sweep(0)
           val (peak, ecc2) = sweep(far)
-          Iterator((seed, far, ecc1, peak, ecc2))
+          Iterator((g.ids(0), g.ids(far), ecc1, g.ids(peak), ecc2))
         }
-      }.toDF("seed", "far_node", "seed_ecc", "peak_node", "diameter_lb")
-    } else {
+      }.toDF("seed", "far_node", "seed_ecc", "peak_node", "diameter_lb")) { _ =>
       val seed = sym.agg(min(col("src"))).head().getLong(0)
       val d1 = hopDistance(sym, Seq(seed).toDF("node_id"), maxHops, scope)
       val f1 = d1.orderBy(col("hops").desc, col("node_id")).limit(1).head()
@@ -1250,10 +1030,9 @@ object GraphOps {
   def hits(edges: DataFrame, iterations: Int,
            scope: CacheScope = CacheScope.global): DataFrame = {
     val simple = scope.persist(edges.select(col("src"), col("dst")).distinct())
-    if (simple.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType))
-      hitsLocal(simple, iterations, edges.schema("src").dataType)
-    else hitsLoop(simple, iterations, scope)
+    dispatchBySize(simple, LocalSweepEdges, srcDst(edges): _*)(
+      hitsLocal(simple, iterations, edges.schema("src").dataType))(
+      _ => hitsLoop(simple, iterations, scope))
   }
 
   /** The distributed loop of [[hits]] (spec-reachable). */
@@ -1332,10 +1111,8 @@ object GraphOps {
       .filter(col("a") =!= col("b")).distinct()
     val ue = scope.persist(
       und.unionByName(und.select(col("b").as("a"), col("a").as("b"))))
-    if (ue.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType))
-      kCoreLocal(ue, k, maxRounds)
-    else kCoreLoop(ue, k, maxRounds, scope)
+    dispatchBySize(ue, LocalSweepEdges, srcDst(edges): _*)(
+      kCoreLocal(ue, k, maxRounds))(_ => kCoreLoop(ue, k, maxRounds, scope))
   }
 
   /** The distributed peel loop of [[kCore]] (spec-reachable directly).
@@ -1376,58 +1153,34 @@ object GraphOps {
     * every live node's degree within the live set, keep ≥ k, stop on
     * convergence or the round cap, emit final live degrees — nodes with
     * no surviving edge are absent, matching the loop's degrees-frame
-    * filter) over an in-memory symmetric adjacency in one task; parity
-    * spec'd.
+    * filter) over the symmetric adjacency as a [[LocalGraph]] in one
+    * task; parity spec'd.
     */
   private[graft] def kCoreLocal(ue: DataFrame, k: Int,
-                                maxRounds: Int): DataFrame = {
-    val sess = ue.sparkSession
-    import sess.implicits._
-    val idType = ue.schema("a").dataType
-    ue.select(col("a").cast("long"), col("b").cast("long"))
-      .as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        val nbrs = new java.util.HashMap[
-          Long, scala.collection.mutable.ArrayBuffer[Long]]()
-        it.foreach { case (a, b) =>
-          nbrs.computeIfAbsent(a,
-            _ => new scala.collection.mutable.ArrayBuffer[Long]()) += b
+                                maxRounds: Int): DataFrame =
+    LocalGraph.run(ue) { g =>
+      var alive = Array.tabulate(g.n)(g.degree(_) > 0)
+      def liveDeg(v: Int): Long =
+        (g.off(v) until g.off(v + 1)).count(j => alive(g.nbr(j))).toLong
+      var n = alive.count(identity)
+      var round = 0
+      var converged = false
+      while (round < maxRounds && !converged) {
+        round += 1
+        // the loop's degrees frame only carries nodes with >= 1 live
+        // edge, so deg-0 nodes drop regardless of k
+        val next = Array.tabulate(g.n) { v =>
+          alive(v) && { val d = liveDeg(v); d >= 1 && d >= k }
         }
-        var alive = new java.util.HashSet[Long](nbrs.keySet())
-        def liveDeg(n: Long): Long = {
-          var c = 0L
-          val ns = nbrs.get(n)
-          if (ns != null) ns.foreach { m => if (alive.contains(m)) c += 1 }
-          c
-        }
-        var n = alive.size.toLong
-        var round = 0
-        var converged = false
-        while (round < maxRounds && !converged) {
-          round += 1
-          val next = new java.util.HashSet[Long]()
-          val ai = alive.iterator()
-          while (ai.hasNext) {
-            val v = ai.next()
-            val d = liveDeg(v)
-            // the loop's degrees frame only carries nodes with >= 1 live
-            // edge, so deg-0 nodes drop regardless of k
-            if (d >= 1 && d >= k) next.add(v)
-          }
-          converged = next.size.toLong == n
-          n = next.size.toLong
-          alive = next
-        }
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-        val ai = alive.iterator()
-        while (ai.hasNext) {
-          val v = ai.next()
-          val d = liveDeg(v)
-          if (d >= 1) out += ((v, d))
-        }
-        out.iterator
-      }.toDF("node_id", "core_deg")
-      .select(col("node_id").cast(idType).as("node_id"), col("core_deg"))
-  }
+        val m = next.count(identity)
+        converged = m == n
+        n = m
+        alive = next
+      }
+      (0 until g.n).iterator.filter(alive).map(v => (g.ids(v), liveDeg(v)))
+        .filter(_._2 >= 1)
+    }.toDF("node_id", "core_deg")
+      .transform(castIds(ue.schema("a").dataType, "node_id"))
 
   /** Strongly connected components of a DIRECTED edge list — the crawl
     * "core" detector (mutual-link cliques, ring farms) that undirected
@@ -1457,96 +1210,64 @@ object GraphOps {
       scope: CacheScope = CacheScope.global): DataFrame = {
     val e = scope.persist(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct())
-    if (e.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType))
-      sccLocal(e)
-    else graft.core.LoopConf.withCoalescing(edges) { sccBody(e, scope) }
+    dispatchBySize(e, LocalSweepEdges, srcDst(edges): _*)(sccLocal(e))(
+      _ => graft.core.LoopConf.withCoalescing(edges) { sccBody(e, scope) })
   }
 
   /** Single-shard SCC for graphs under the [[LocalSweepEdges]] budget:
-    * iterative Kosaraju (forward finish order, reverse-graph peeling) in
-    * ONE task. The output contract is canonical — scc_id = min node id
-    * of the component over non-self-loop edge endpoints — so any correct
-    * SCC algorithm produces bit-identical rows to the distributed
-    * coloring loop (parity spec'd); the local path just skips the
-    * loop's data-dependent rounds of join latency.
+    * iterative Kosaraju (forward finish order, reverse-graph peeling) over a
+    * [[LocalGraph]] in ONE task. The output contract is canonical — scc_id =
+    * min node id of the component over non-self-loop edge endpoints — so any
+    * correct SCC algorithm produces bit-identical rows to the distributed
+    * coloring loop (parity spec'd); the local path just skips the loop's
+    * data-dependent rounds of join latency.
     */
-  private def sccLocal(e: DataFrame): DataFrame = {
-    val sess = e.sparkSession
-    import sess.implicits._
-    val idType = e.schema("src").dataType
-    e.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        val fwd = new java.util.HashMap[
-          Long, scala.collection.mutable.ArrayBuffer[Long]]()
-        val rev = new java.util.HashMap[
-          Long, scala.collection.mutable.ArrayBuffer[Long]]()
-        val nodes = new java.util.LinkedHashSet[Long]()
-        def add(m: java.util.HashMap[
-            Long, scala.collection.mutable.ArrayBuffer[Long]],
-            x: Long, y: Long): Unit =
-          m.computeIfAbsent(x,
-            _ => new scala.collection.mutable.ArrayBuffer[Long]()) += y
-        it.foreach { case (s, d) =>
-          add(fwd, s, d); add(rev, d, s); nodes.add(s); nodes.add(d)
-        }
-        // pass 1: forward DFS finish order (iterative, explicit stack)
-        val seen = new java.util.HashSet[Long]()
-        val order = new scala.collection.mutable.ArrayBuffer[Long](nodes.size)
-        val stack = new scala.collection.mutable.ArrayBuffer[(Long, Int)]()
-        val nit = nodes.iterator()
-        while (nit.hasNext) {
-          val start = nit.next()
-          if (!seen.contains(start)) {
-            seen.add(start); stack += ((start, 0))
-            while (stack.nonEmpty) {
-              val (n, i) = stack.remove(stack.length - 1)
-              val ns = fwd.get(n)
-              var j = i; var descended = false
-              while (!descended && ns != null && j < ns.length) {
-                val m = ns(j)
-                if (!seen.contains(m)) {
-                  seen.add(m)
-                  stack += ((n, j + 1)); stack += ((m, 0))
-                  descended = true
-                }
-                j += 1
-              }
-              if (!descended) order += n
+  private def sccLocal(e: DataFrame): DataFrame =
+    LocalGraph.run(e) { g =>
+      // pass 1: forward DFS finish order (iterative, explicit stack of
+      // (node, next edge slot))
+      val seen = new Array[Boolean](g.n)
+      val order = new scala.collection.mutable.ArrayBuilder.ofInt
+      val stackNode = new Array[Int](g.n)
+      val stackSlot = new Array[Int](g.n)
+      (0 until g.n).iterator.filterNot(seen).foreach { start =>
+        var top = 0
+        seen(start) = true; stackNode(0) = start; stackSlot(0) = g.off(start)
+        while (top >= 0) {
+          val u = stackNode(top)
+          val k = stackSlot(top)
+          if (k == g.off(u + 1)) { order += u; top -= 1 }
+          else {
+            stackSlot(top) = k + 1
+            val v = g.nbr(k)
+            if (!seen(v)) {
+              seen(v) = true; top += 1
+              stackNode(top) = v; stackSlot(top) = g.off(v)
             }
           }
         }
-        // pass 2: peel reverse graph in reverse finish order
-        val comp = new java.util.HashMap[Long, Long]()
-        var k = order.length - 1
-        val dfs2 = new scala.collection.mutable.ArrayBuffer[Long]()
-        while (k >= 0) {
-          val root = order(k)
-          if (!comp.containsKey(root)) {
-            var minId = root
-            val members = new scala.collection.mutable.ArrayBuffer[Long]()
-            dfs2 += root; comp.put(root, root)
-            while (dfs2.nonEmpty) {
-              val n = dfs2.remove(dfs2.length - 1)
-              members += n
-              if (n < minId) minId = n
-              val ns = rev.get(n)
-              if (ns != null) ns.foreach { m =>
-                if (!comp.containsKey(m)) { comp.put(m, root); dfs2 += m }
-              }
-            }
-            members.foreach(comp.put(_, minId))
-          }
-          k -= 1
+      }
+      // pass 2: peel the reverse graph in reverse finish order; a
+      // component's label is its smallest index, i.e. its smallest id
+      val rev = g.reversed
+      val comp = Array.fill(g.n)(-1)
+      order.result().reverseIterator.filter(comp(_) < 0).foreach { root =>
+        val members = new scala.collection.mutable.ArrayBuilder.ofInt
+        val stack = scala.collection.mutable.Stack(root)
+        comp(root) = root
+        while (stack.nonEmpty) {
+          val u = stack.pop()
+          members += u
+          (rev.off(u) until rev.off(u + 1)).map(rev.nbr).filter(comp(_) < 0)
+            .foreach { v => comp(v) = root; stack.push(v) }
         }
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](comp.size)
-        val ci = comp.entrySet().iterator()
-        while (ci.hasNext) { val kv = ci.next(); out += ((kv.getKey, kv.getValue)) }
-        out.iterator
-      }.toDF("node_id", "scc_id")
-      .select(col("node_id").cast(idType).as("node_id"),
-        col("scc_id").cast(idType).as("scc_id"))
-  }
+        val ms = members.result()
+        val label = ms.min
+        ms.foreach(comp(_) = label)
+      }
+      (0 until g.n).iterator.map(i => (g.ids(i), g.ids(comp(i))))
+    }.toDF("node_id", "scc_id")
+      .transform(castIds(e.schema("src").dataType, "node_id", "scc_id"))
 
   /** The distributed coloring loop (spec-reachable; `edges` must already
     * be the deduplicated non-self-loop (src, dst) list).
@@ -1700,109 +1421,61 @@ object GraphOps {
   def boruvkaMst(edges: DataFrame,
                  scope: CacheScope = CacheScope.global): DataFrame = {
     val e = scope.persist(edges.select(col("a"), col("b"), col("w")))
-    if (e.count() <= LocalSweepEdges &&
-        integralId(edges.schema("a").dataType, edges.schema("b").dataType,
-          edges.schema("w").dataType))
-      boruvkaLocal(e)
-    else graft.core.LoopConf.withCoalescing(edges) { boruvkaBody(e, scope) }
+    dispatchBySize(e, LocalSweepEdges, edges.schema("a").dataType,
+        edges.schema("b").dataType, edges.schema("w").dataType)(
+      boruvkaLocal(e))(
+      _ => graft.core.LoopConf.withCoalescing(edges) { boruvkaBody(e, scope) })
   }
 
   /** Single-shard twin of [[boruvkaMst]] under the [[LocalSweepEdges]]
-    * budget: the identical Borůvka schedule — per round every component
-    * picks its lexicographic-min (w, a, b) cross edge, the chosen set
-    * dedups, components merge to the MIN member label (the
-    * connectedComponents contract) — run over in-memory union-find in
-    * one task. Same chosen edges per round by construction; parity
-    * spec'd against the distributed rounds.
+    * budget: the identical Borůvka schedule — per round every component picks
+    * its lexicographic-min (w, a, b) cross edge, the chosen set dedups,
+    * components merge to the MIN member label (the connectedComponents
+    * contract) — run over a [[LocalGraph]] with a union-find on node indices
+    * in one task. Same chosen edges per round by construction; parity spec'd
+    * against the distributed rounds.
     */
-  private[graft] def boruvkaLocal(e: DataFrame): DataFrame = {
-    val sess = e.sparkSession
-    import sess.implicits._
-    val aType = e.schema("a").dataType
-    val wType = e.schema("w").dataType
-    e.select(col("a").cast("long"), col("b").cast("long"),
-        col("w").cast("long"))
-      .as[(Long, Long, Long)].coalesce(1).mapPartitions { it =>
-        val es = new scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-        val comp = new java.util.HashMap[Long, Long]()
-        it.foreach { case (a, b, w) =>
-          es += ((a, b, w))
-          comp.putIfAbsent(a, a); comp.putIfAbsent(b, b)
+  private[graft] def boruvkaLocal(e: DataFrame): DataFrame =
+    LocalGraph.run(e) { g =>
+      // edge slots compare by (w, a, b): indices order like ids
+      def lt(x: Int, y: Int): Boolean =
+        g.w(x) < g.w(y) || (g.w(x) == g.w(y) &&
+          (g.src(x) < g.src(y) || (g.src(x) == g.src(y) && g.nbr(x) < g.nbr(y))))
+      val comp = Array.range(0, g.n)
+      val mst = scala.collection.mutable.LinkedHashSet[(Int, Int, Long)]()
+      var done = false
+      while (!done) {
+        // per-component lexicographic-min (w, a, b) cross edge — the
+        // loop's min(struct(w, a, b)) per side
+        val best = Array.fill(g.n)(-1)
+        def offer(c: Int, k: Int): Unit =
+          if (best(c) < 0 || lt(k, best(c))) best(c) = k
+        (0 until g.m).foreach { k =>
+          val (ca, cb) = (comp(g.src(k)), comp(g.nbr(k)))
+          if (ca != cb) { offer(ca, k); offer(cb, k) }
         }
-        val mst = new java.util.LinkedHashSet[(Long, Long, Long)]()
-        var done = false
-        while (!done) {
-          // per-component lexicographic-min (w, a, b) cross edge —
-          // the loop's min(struct(w, a, b)) per side
-          val best = new java.util.HashMap[Long, (Long, Long, Long)]()
-          var any = false
-          es.foreach { case (a, b, w) =>
-            val ca = comp.get(a); val cb = comp.get(b)
-            if (ca != cb) {
-              any = true
-              val cand = (w, a, b)
-              def upd(c: Long): Unit = {
-                val cur = best.get(c)
-                if (cur == null ||
-                    Ordering[(Long, Long, Long)].lt(cand, cur))
-                  best.put(c, cand)
-              }
-              upd(ca); upd(cb)
-            }
-          }
-          if (!any) done = true
-          else {
-            val chosen = new java.util.HashSet[(Long, Long, Long)](best.values())
-            // merge chosen components to the min member label (union-find
-            // with min-root normalization = the WCC min-label contract)
-            val parent = new java.util.HashMap[Long, Long]()
-            def find(x: Long): Long = {
-              var r = x
-              while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-              var c = x
-              while (parent.getOrDefault(c, c) != c) {
-                val n = parent.get(c); parent.put(c, r); c = n
-              }
-              r
-            }
-            val ci = chosen.iterator()
-            while (ci.hasNext) {
-              val (w, a, b) = ci.next()
-              mst.add((a, b, w))
-              val ra = find(comp.get(a)); val rb = find(comp.get(b))
-              if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-            }
-            // normalize every touched root to the min comp id in its group
-            val minOf = new java.util.HashMap[Long, Long]()
-            val keys = new java.util.HashSet[Long](parent.keySet())
-            val c2 = chosen.iterator()
-            while (c2.hasNext) {
-              val (_, a, b) = c2.next()
-              keys.add(comp.get(a)); keys.add(comp.get(b))
-            }
-            val ki = keys.iterator()
-            while (ki.hasNext) {
-              val c = ki.next()
-              val r = find(c)
-              minOf.merge(r, c, (x, y) => math.min(x, y))
-            }
-            val ni = comp.entrySet().iterator()
-            while (ni.hasNext) {
-              val kv = ni.next()
-              if (keys.contains(kv.getValue))
-                kv.setValue(minOf.get(find(kv.getValue)))
-            }
-          }
+        val chosen = best.filter(_ >= 0)
+        done = chosen.isEmpty
+        // merge chosen components to the min member label: union-find
+        // whose root is always its group's smallest label (the WCC
+        // min-label contract)
+        val parent = Array.range(0, g.n)
+        def find(x: Int): Int = {
+          var r = x
+          while (parent(r) != r) r = parent(r)
+          r
         }
-        val out = new scala.collection.mutable.ArrayBuffer[
-          (Long, Long, Long)](mst.size)
-        val mi = mst.iterator()
-        while (mi.hasNext) out += mi.next()
-        out.iterator
-      }.toDF("a", "b", "w")
-      .select(col("a").cast(aType).as("a"), col("b").cast(aType).as("b"),
-        col("w").cast(wType).as("w"))
-  }
+        chosen.foreach { k =>
+          mst += ((g.src(k), g.nbr(k), g.w(k)))
+          val ra = find(comp(g.src(k))); val rb = find(comp(g.nbr(k)))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        (0 until g.n).foreach(i => comp(i) = find(comp(i)))
+      }
+      mst.iterator.map { case (a, b, w) => (g.ids(a), g.ids(b), w) }
+    }.toDF("a", "b", "w")
+      .transform(castIds(e.schema("a").dataType, "a", "b"))
+      .withColumn("w", col("w").cast(e.schema("w").dataType))
 
   private[graft] def boruvkaBody(edges: DataFrame, scope: CacheScope): DataFrame = {
     // localCheckpoint(eager) per round: the hook-and-contract rounds nest
@@ -1873,11 +1546,10 @@ object GraphOps {
   def landmarkCloseness(edges: DataFrame, landmarks: DataFrame, maxHops: Int,
                         scope: CacheScope = CacheScope.global): DataFrame = {
     val e = scope.persist(edges.select(col("src"), col("dst")).distinct())
-    if (e.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType,
-          landmarks.schema("node_id").dataType))
-      landmarkClosenessLocal(e, landmarks, maxHops)
-    else landmarkClosenessLoop(e, landmarks, maxHops, scope)
+    dispatchBySize(e, LocalSweepEdges,
+        srcDst(edges) :+ landmarks.schema("node_id").dataType: _*)(
+      landmarkClosenessLocal(e, landmarks, maxHops))(
+      _ => landmarkClosenessLoop(e, landmarks, maxHops, scope))
   }
 
   /** The distributed (landmark × node) frontier loop of
@@ -1919,68 +1591,30 @@ object GraphOps {
   }
 
   /** Single-shard twin of [[landmarkCloseness]] under the
-    * [[LocalSweepEdges]] budget: one BFS per landmark over an in-memory
-    * adjacency map in a single task (landmarks ride the tagged union),
+    * [[LocalSweepEdges]] budget: one BFS per landmark over a
+    * [[LocalGraph]] in a single task (landmarks ride the tagged union),
     * accumulating the identical integer harmonic terms ⌊10⁶/d⌋ — the
     * per-(landmark, node) distances equal the loop's visited frame by
     * BFS minimality, so the aggregated rows match bit-for-bit; parity
     * spec'd.
     */
   private[graft] def landmarkClosenessLocal(e: DataFrame,
-      landmarks: DataFrame, maxHops: Int): DataFrame = {
-    val sess = e.sparkSession
-    import sess.implicits._
-    val idType = landmarks.schema("node_id").dataType
-    val tagged = e
-      .select(col("src").cast("long"), col("dst").cast("long"), lit(1).as("t"))
-      .unionByName(landmarks.select(col("node_id").cast("long").as("src"))
-        .distinct()
-        .select(col("src"), lit(0L).as("dst"), lit(0).as("t")))
-    tagged.as[(Long, Long, Int)].coalesce(1).mapPartitions { it =>
-      val adj = new java.util.HashMap[
-        Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      val lms = new scala.collection.mutable.ArrayBuffer[Long]()
-      it.foreach { case (s, d, t) =>
-        if (t == 1) adj.computeIfAbsent(s,
-          _ => new scala.collection.mutable.ArrayBuffer[Long]()) += d
-        else lms += s
-      }
-      val nLm = new java.util.HashMap[Long, Long]()
-      val close = new java.util.HashMap[Long, Long]()
-      lms.foreach { lm =>
-        val seen = new java.util.HashSet[Long]()
-        seen.add(lm)
-        nLm.merge(lm, 1L, (a, b) => a + b)
-        var frontier = scala.collection.mutable.ArrayBuffer(lm)
-        var h = 0L
-        while (frontier.nonEmpty && h < maxHops) {
-          h += 1
-          val next = new scala.collection.mutable.ArrayBuffer[Long]()
-          frontier.foreach { n =>
-            val ns = adj.get(n)
-            if (ns != null) ns.foreach { m =>
-              if (!seen.contains(m)) {
-                seen.add(m); next += m
-                nLm.merge(m, 1L, (a, b) => a + b)
-                close.merge(m, 1000000L / h, (a, b) => a + b)
-              }
-            }
-          }
-          frontier = next
+      landmarks: DataFrame, maxHops: Int): DataFrame =
+    LocalGraph.run(e, Some(landmarks.select(col("node_id")).distinct())) { g =>
+      val nLm = new Array[Long](g.n)
+      val close = new Array[Long](g.n)
+      val dist = Array.fill(g.n)(-1)
+      g.seeds.foreach { lm =>
+        g.bfs(Array(lm), maxHops, dist).foreach { v =>
+          nLm(v) += 1L
+          if (dist(v) > 0) close(v) += 1000000L / dist(v)
+          dist(v) = -1
         }
       }
-      val out = new scala.collection.mutable.ArrayBuffer[
-        (Long, Long, Long)](nLm.size)
-      val ki = nLm.entrySet().iterator()
-      while (ki.hasNext) {
-        val kv = ki.next()
-        out += ((kv.getKey, kv.getValue, close.getOrDefault(kv.getKey, 0L)))
-      }
-      out.iterator
+      (0 until g.n).iterator.filter(nLm(_) > 0)
+        .map(v => (g.ids(v), nLm(v), close(v)))
     }.toDF("node_id", "n_lm", "close_e6")
-      .select(col("node_id").cast(idType).as("node_id"), col("n_lm"),
-        col("close_e6"))
-  }
+      .transform(castIds(landmarks.schema("node_id").dataType, "node_id"))
 
   /** Shortest-path COUNTING from a seed set — the σ table of Brandes
     * betweenness (how many distinct shortest paths from the seeds reach
@@ -2009,11 +1643,10 @@ object GraphOps {
   def shortestPathCounts(edges: DataFrame, sources: DataFrame, maxHops: Int,
                          scope: CacheScope = CacheScope.global): DataFrame = {
     val e = scope.persist(edges.select(col("src"), col("dst")).distinct())
-    if (e.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType,
-          sources.schema("node_id").dataType))
-      shortestPathCountsLocal(e, sources, maxHops)
-    else shortestPathCountsLoop(e, sources, maxHops, scope)
+    dispatchBySize(e, LocalSweepEdges,
+        srcDst(edges) :+ sources.schema("node_id").dataType: _*)(
+      shortestPathCountsLocal(e, sources, maxHops))(
+      _ => shortestPathCountsLoop(e, sources, maxHops, scope))
   }
 
   /** The distributed σ frontier loop of [[shortestPathCounts]]
@@ -2054,69 +1687,20 @@ object GraphOps {
   /** Single-shard twin of [[shortestPathCounts]] under the
     * [[LocalSweepEdges]] budget: the level-synchronous BFS-DAG σ
     * recurrence (first-arrival level, σ(v) = Σ σ(u) over hop-(h−1)
-    * predecessors) over an in-memory adjacency map in one task, sources
-    * on the tagged union. The σ table is algorithm-independent (the
+    * predecessors) over a [[LocalGraph]] in one task, sources on the
+    * tagged union. The σ table is algorithm-independent (the
     * textbook definition), so rows match the loop bit-for-bit; parity
     * spec'd.
     */
   private[graft] def shortestPathCountsLocal(e: DataFrame,
-      sources: DataFrame, maxHops: Int): DataFrame = {
-    val sess = e.sparkSession
-    import sess.implicits._
-    val idType = sources.schema("node_id").dataType
-    val tagged = e
-      .select(col("src").cast("long"), col("dst").cast("long"), lit(1).as("t"))
-      .unionByName(sources.select(col("node_id").cast("long").as("src"))
-        .distinct()
-        .select(col("src"), lit(0L).as("dst"), lit(0).as("t")))
-    tagged.as[(Long, Long, Int)].coalesce(1).mapPartitions { it =>
-      val adj = new java.util.HashMap[
-        Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      val seeds = new java.util.LinkedHashSet[Long]()
-      it.foreach { case (s, d, t) =>
-        if (t == 1) adj.computeIfAbsent(s,
-          _ => new scala.collection.mutable.ArrayBuffer[Long]()) += d
-        else seeds.add(s)
-      }
-      val hops = new java.util.HashMap[Long, Long]()
-      val sigma = new java.util.HashMap[Long, Long]()
-      var frontier = new scala.collection.mutable.ArrayBuffer[Long]()
-      val si = seeds.iterator()
-      while (si.hasNext) {
-        val n = si.next(); hops.put(n, 0L); sigma.put(n, 1L); frontier += n
-      }
-      var h = 0L
-      while (frontier.nonEmpty && h < maxHops) {
-        h += 1
-        val acc = new java.util.HashMap[Long, Long]()
-        frontier.foreach { n =>
-          val sn = sigma.get(n)
-          val ns = adj.get(n)
-          if (ns != null) ns.foreach { m =>
-            if (!hops.containsKey(m)) acc.merge(m, sn, (a, b) => a + b)
-          }
-        }
-        val next = new scala.collection.mutable.ArrayBuffer[Long](acc.size)
-        val ai = acc.entrySet().iterator()
-        while (ai.hasNext) {
-          val kv = ai.next()
-          hops.put(kv.getKey, h); sigma.put(kv.getKey, kv.getValue)
-          next += kv.getKey
-        }
-        frontier = next
-      }
-      val out = new scala.collection.mutable.ArrayBuffer[
-        (Long, Long, Long)](hops.size)
-      val ki = hops.entrySet().iterator()
-      while (ki.hasNext) {
-        val kv = ki.next()
-        out += ((kv.getKey, kv.getValue, sigma.get(kv.getKey)))
-      }
-      out.iterator
+      sources: DataFrame, maxHops: Int): DataFrame =
+    LocalGraph.run(e, Some(sources.select(col("node_id")).distinct())) { g =>
+      val hops = Array.fill(g.n)(-1)
+      val sigma = new Array[Long](g.n)
+      g.bfs(g.seeds, maxHops, hops, sigma).iterator
+        .map(v => (g.ids(v), hops(v).toLong, sigma(v)))
     }.toDF("node_id", "hops", "sigma")
-      .select(col("node_id").cast(idType).as("node_id"), col("hops"),
-        col("sigma"))
-  }
+      .transform(castIds(sources.schema("node_id").dataType, "node_id"))
 
   /** Landmark BETWEENNESS (Brandes): the σ forward pass of
     * [[shortestPathCounts]] plus the level-synchronous BACKWARD
@@ -2140,11 +1724,10 @@ object GraphOps {
     // levels.reduce below throw UnsupportedOperationException
     require(maxHops >= 1, s"landmarkBetweenness needs maxHops >= 1, got $maxHops")
     val e = scope.persist(edges.select(col("src"), col("dst")).distinct())
-    if (e.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType,
-          sources.schema("node_id").dataType))
-      landmarkBetweennessLocal(e, sources, maxHops)
-    else landmarkBetweennessLoop(e, sources, maxHops, scope)
+    dispatchBySize(e, LocalSweepEdges,
+        srcDst(edges) :+ sources.schema("node_id").dataType: _*)(
+      landmarkBetweennessLocal(e, sources, maxHops))(
+      _ => landmarkBetweennessLoop(e, sources, maxHops, scope))
   }
 
   /** The distributed Brandes passes of [[landmarkBetweenness]]
@@ -2192,97 +1775,24 @@ object GraphOps {
     * bit-for-bit; parity spec'd.
     */
   private[graft] def landmarkBetweennessLocal(e: DataFrame,
-      sources: DataFrame, maxHops: Int): DataFrame = {
-    val sess = e.sparkSession
-    import sess.implicits._
-    val idType = sources.schema("node_id").dataType
-    val tagged = e
-      .select(col("src").cast("long"), col("dst").cast("long"), lit(1).as("t"))
-      .unionByName(sources.select(col("node_id").cast("long").as("src"))
-        .distinct()
-        .select(col("src"), lit(0L).as("dst"), lit(0).as("t")))
-    tagged.as[(Long, Long, Int)].coalesce(1).mapPartitions { it =>
-      val es = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-      val adj = new java.util.HashMap[
-        Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      val seeds = new java.util.LinkedHashSet[Long]()
-      it.foreach { case (s, d, t) =>
-        if (t == 1) {
-          es += ((s, d))
-          adj.computeIfAbsent(s,
-            _ => new scala.collection.mutable.ArrayBuffer[Long]()) += d
-        } else seeds.add(s)
-      }
+      sources: DataFrame, maxHops: Int): DataFrame =
+    LocalGraph.run(e, Some(sources.select(col("node_id")).distinct())) { g =>
       // forward: first-arrival level + sigma (the shortestPathCounts twin)
-      val hops = new java.util.HashMap[Long, Long]()
-      val sigma = new java.util.HashMap[Long, Long]()
-      var frontier = new scala.collection.mutable.ArrayBuffer[Long]()
-      val si = seeds.iterator()
-      while (si.hasNext) {
-        val n = si.next(); hops.put(n, 0L); sigma.put(n, 1L); frontier += n
-      }
-      var h = 0L
-      while (frontier.nonEmpty && h < maxHops) {
-        h += 1
-        val acc = new java.util.HashMap[Long, Long]()
-        frontier.foreach { n =>
-          val sn = sigma.get(n)
-          val ns = adj.get(n)
-          if (ns != null) ns.foreach { m =>
-            if (!hops.containsKey(m)) acc.merge(m, sn, (a, b) => a + b)
+      val hops = Array.fill(g.n)(-1)
+      val sigma = new Array[Long](g.n)
+      val order = g.bfs(g.seeds, maxHops, hops, sigma)
+      // backward: deepest level first, over the BFS-DAG edges — δ terms
+      // identical to the loop's idiv2 floor
+      val delta = new Array[Long](g.n)
+      order.reverseIterator.foreach { v =>
+        (g.off(v) until g.off(v + 1)).map(g.nbr).filter(hops(_) == hops(v) + 1)
+          .foreach { w =>
+            delta(v) += sigma(v) * (1000000L + delta(w)) / sigma(w)
           }
-        }
-        val next = new scala.collection.mutable.ArrayBuffer[Long](acc.size)
-        val ai = acc.entrySet().iterator()
-        while (ai.hasNext) {
-          val kv = ai.next()
-          hops.put(kv.getKey, h); sigma.put(kv.getKey, kv.getValue)
-          next += kv.getKey
-        }
-        frontier = next
       }
-      // backward: DAG edges bucketed by the tail's level, accumulated
-      // level-descending — δ terms identical to the loop's idiv2 floor
-      val byLevel = new java.util.HashMap[
-        Long, scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
-      es.foreach { case (v, w) =>
-        if (hops.containsKey(v) && hops.containsKey(w) &&
-            hops.get(w) == hops.get(v) + 1L)
-          byLevel.computeIfAbsent(hops.get(v),
-            _ => new scala.collection.mutable.ArrayBuffer[(Long, Long)]()) +=
-              ((v, w))
-      }
-      val delta = new java.util.HashMap[Long, Long]()
-      var lvl = maxHops - 1L
-      while (lvl >= 0L) {
-        val le = byLevel.get(lvl)
-        if (le != null) {
-          val levelDelta = new java.util.HashMap[Long, Long]()
-          le.foreach { case (v, w) =>
-            val term = sigma.get(v) *
-              (1000000L + delta.getOrDefault(w, 0L)) / sigma.get(w)
-            levelDelta.merge(v, term, (a, b) => a + b)
-          }
-          val li = levelDelta.entrySet().iterator()
-          while (li.hasNext) {
-            val kv = li.next(); delta.put(kv.getKey, kv.getValue)
-          }
-        }
-        lvl -= 1L
-      }
-      val out = new scala.collection.mutable.ArrayBuffer[
-        (Long, Long, Long, Long)](hops.size)
-      val ki = hops.entrySet().iterator()
-      while (ki.hasNext) {
-        val kv = ki.next()
-        out += ((kv.getKey, kv.getValue, sigma.get(kv.getKey),
-          delta.getOrDefault(kv.getKey, 0L)))
-      }
-      out.iterator
+      order.iterator.map(v => (g.ids(v), hops(v).toLong, sigma(v), delta(v)))
     }.toDF("node_id", "hops", "sigma", "delta_e6")
-      .select(col("node_id").cast(idType).as("node_id"), col("hops"),
-        col("sigma"), col("delta_e6"))
-  }
+      .transform(castIds(sources.schema("node_id").dataType, "node_id"))
 
   /** Odd-cycle witness edges: BFS-parity conflicts on the SYMMETRIZED
     * graph. Runs [[hopDistance]] from the seed set over undirected
@@ -2329,8 +1839,8 @@ object GraphOps {
     * loop exits early when a round peels nothing (pure-cycle residue
     * reaches a fixpoint, which the unrolled oracle replays). Same
     * persist / count / unpersist / rebase hygiene as [[hopDistance]].
-    * Strategy selection: under [[LocalSweepEdges]] with integral ids
-    * the whole ladder runs in one task over in-degree counters
+    * Strategy selection ([[LocalGraph.dispatchBySize]]): a small graph
+    * runs the whole ladder in one task over in-degree counters
     * ([[topologicalLayersLocal]]); parity spec'd.
     *
     * Input: (src, dst). Output: (node_id, layer), layer ∈ [0, maxRounds)
@@ -2341,10 +1851,9 @@ object GraphOps {
     require(maxRounds >= 1, s"topologicalLayers needs maxRounds >= 1")
     val e = scope.persist(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct())
-    if (e.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType))
-      topologicalLayersLocal(e, maxRounds)
-    else topologicalLayersLoop(e, maxRounds, scope)
+    dispatchBySize(e, LocalSweepEdges, srcDst(edges): _*)(
+      topologicalLayersLocal(e, maxRounds))(
+      _ => topologicalLayersLoop(e, maxRounds, scope))
   }
 
   /** The distributed Kahn rounds of [[topologicalLayers]]
@@ -2391,58 +1900,28 @@ object GraphOps {
     (layers :+ leftover).reduce(_ unionByName _)
   }
 
-  /** Single-shard twin of [[topologicalLayers]] under the
-    * [[LocalSweepEdges]] budget: level-synchronous Kahn over in-memory
-    * in-degree counters in one task — identical layer assignment by the
+  /** Single-shard twin of [[topologicalLayers]] under the [[LocalSweepEdges]]
+    * budget: level-synchronous Kahn over a [[LocalGraph]]'s in-degree
+    * counters in one task — identical layer assignment by the
     * longest-predecessor-chain argument; parity spec'd.
     */
   private[graft] def topologicalLayersLocal(e: DataFrame,
-                                            maxRounds: Int): DataFrame = {
-    val sess = e.sparkSession
-    import sess.implicits._
-    val idType = e.schema("src").dataType
-    e.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        val adj = new java.util.HashMap[
-          Long, scala.collection.mutable.ArrayBuffer[Long]]()
-        val inDeg = new java.util.HashMap[Long, Long]()
-        it.foreach { case (s, d) =>
-          adj.computeIfAbsent(s,
-            _ => new scala.collection.mutable.ArrayBuffer[Long]()) += d
-          inDeg.merge(d, 1L, (a, b) => a + b)
-          inDeg.putIfAbsent(s, 0L)
-        }
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](
-          inDeg.size)
-        var frontier = new scala.collection.mutable.ArrayBuffer[Long]()
-        val ni = inDeg.entrySet().iterator()
-        while (ni.hasNext) {
-          val kv = ni.next(); if (kv.getValue == 0L) frontier += kv.getKey
-        }
-        val peeled = new java.util.HashSet[Long]()
-        var r = 0L
-        while (r < maxRounds && frontier.nonEmpty) {
-          val next = new scala.collection.mutable.ArrayBuffer[Long]()
-          frontier.foreach { n =>
-            out += ((n, r)); peeled.add(n)
-            val ns = adj.get(n)
-            if (ns != null) ns.foreach { m =>
-              val d2 = inDeg.merge(m, -1L, (a, b) => a + b)
-              if (d2 == 0L) next += m
-            }
-          }
-          frontier = next
-          r += 1
-        }
-        val li = inDeg.keySet().iterator()
-        while (li.hasNext) {
-          val n = li.next()
-          if (!peeled.contains(n)) out += ((n, -1L))
-        }
-        out.iterator
-      }.toDF("node_id", "layer")
-      .select(col("node_id").cast(idType).as("node_id"), col("layer"))
-  }
+                                            maxRounds: Int): DataFrame =
+    LocalGraph.run(e) { g =>
+      val inDeg = new Array[Int](g.n)
+      g.nbr.foreach(inDeg(_) += 1)
+      val layer = Array.fill(g.n)(-1L)
+      var frontier = (0 until g.n).filter(inDeg(_) == 0)
+      var r = 0L
+      while (r < maxRounds && frontier.nonEmpty) {
+        frontier.foreach(layer(_) = r)
+        frontier = frontier.flatMap(u => (g.off(u) until g.off(u + 1)).map(g.nbr))
+          .filter { v => inDeg(v) -= 1; inDeg(v) == 0 }
+        r += 1
+      }
+      (0 until g.n).iterator.map(v => (g.ids(v), layer(v)))
+    }.toDF("node_id", "layer")
+      .transform(castIds(e.schema("src").dataType, "node_id"))
 
   /** Deterministic LUBY maximal-independent-set rounds: each round every
     * remaining node draws priority mixId(node_id·mul + round) and joins
@@ -2488,17 +1967,16 @@ object GraphOps {
       edges.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .filter(col("a") =!= col("b")).distinct())
-    if (und.count() <= LocalSweepEdges &&
-        integralId(edges.schema("src").dataType, edges.schema("dst").dataType))
+    dispatchBySize(und, LocalSweepEdges, srcDst(edges): _*)(
       lubyRoundsLocal(und, rounds, prioMul, removeNeighbors,
-        edges.schema("src").dataType)
-    else lubyRoundsLoop(und, rounds, prioMul, removeNeighbors, scope)
+        edges.schema("src").dataType))(
+      _ => lubyRoundsLoop(und, rounds, prioMul, removeNeighbors, scope))
   }
 
   /** Single-shard twin of [[lubyRoundsLoop]] for graphs under the
     * [[LocalSweepEdges]] budget: the same deterministic priority race
     * (p = mixId(node·prioMul + round), lose to a (p, id)-smaller
-    * neighbor), simulated over an in-memory adjacency map in ONE task —
+    * neighbor), simulated over an undirected [[LocalGraph]] in ONE task —
     * one job instead of ~5 shuffling stages per round. Bit-identical by
     * construction: [[graft.core.TextHash.mixId]] is the spec'd scalar
     * kernel of the Column mixId, and the win/removal rules are the
@@ -2506,49 +1984,30 @@ object GraphOps {
     */
   private def lubyRoundsLocal(und: DataFrame, rounds: Int, prioMul: Long,
                               removeNeighbors: Boolean,
-                              idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val sess = und.sparkSession
-    import sess.implicits._
-    und.select(col("a").cast("long"), col("b").cast("long"))
-      .as[(Long, Long)].coalesce(1).mapPartitions { it =>
-        val adj = new java.util.HashMap[
-          Long, scala.collection.mutable.ArrayBuffer[Long]]()
-        def add(x: Long, y: Long): Unit =
-          adj.computeIfAbsent(x,
-            _ => new scala.collection.mutable.ArrayBuffer[Long]()) += y
-        it.foreach { case (a, b) => add(a, b); add(b, a) }
-        val active = new java.util.HashSet[Long](adj.keySet())
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-        var r = 0L
-        while (r < rounds && !active.isEmpty) {
-          r += 1
-          def prio(n: Long): Long =
-            graft.core.TextHash.mixId(n * prioMul + r)
-          val win = new scala.collection.mutable.ArrayBuffer[Long]()
-          val ai = active.iterator()
-          while (ai.hasNext) {
-            val n = ai.next(); val pa = prio(n)
-            var lost = false
-            val ns = adj.get(n); var i = 0
-            while (!lost && i < ns.length) {
-              val m = ns(i)
-              if (active.contains(m)) {
-                val pb = prio(m)
-                if (pb < pa || (pb == pa && m < n)) lost = true
-              }
-              i += 1
-            }
-            if (!lost) { win += n; out += ((n, r)) }
-          }
-          win.foreach { n =>
-            active.remove(n)
-            if (removeNeighbors) adj.get(n).foreach(active.remove(_))
-          }
+                              idType: org.apache.spark.sql.types.DataType): DataFrame =
+    LocalGraph.run(und) { g0 =>
+      val g = g0.undirected
+      val active = Array.tabulate(g.n)(g.degree(_) > 0)
+      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+      var r = 0L
+      while (r < rounds && active.contains(true)) {
+        r += 1
+        val prio = Array.tabulate(g.n)(i =>
+          graft.core.TextHash.mixId(g.ids(i) * prioMul + r))
+        // lose to an active neighbor with a (priority, id)-smaller key;
+        // index order is id order
+        val win = (0 until g.n).filter(u => active(u) &&
+          !(g.off(u) until g.off(u + 1)).map(g.nbr).exists(v => active(v) &&
+            (prio(v) < prio(u) || (prio(v) == prio(u) && v < u))))
+        win.foreach { u =>
+          out += ((g.ids(u), r))
+          active(u) = false
+          if (removeNeighbors)
+            (g.off(u) until g.off(u + 1)).foreach(k => active(g.nbr(k)) = false)
         }
-        out.iterator
-      }.toDF("node_id", "round")
-      .select(col("node_id").cast(idType).as("node_id"), col("round"))
-  }
+      }
+      out.iterator
+    }.toDF("node_id", "round").transform(castIds(idType, "node_id"))
 
   /** The distributed round loop of [[lubyMis]]/[[lubyColoring]]
     * (spec-reachable directly; `und` must be the distinct undirected

@@ -141,11 +141,10 @@ object SketchOps {
                 scope: graft.core.CacheScope =
                   graft.core.CacheScope.global): DataFrame = {
     val e = scope.persist(edges.select(col("src"), col("dst")).distinct())
-    if (e.count() <= LocalBallEdges &&
-        GraphOps.integralId(edges.schema("src").dataType,
-          edges.schema("dst").dataType, nodes.schema("node_id").dataType))
-      hyperBallLocal(nodes, e, rounds, m)
-    else hyperBallLoop(nodes, e, rounds, m, scope)
+    LocalGraph.dispatchBySize(e, LocalBallEdges, edges.schema("src").dataType,
+        edges.schema("dst").dataType, nodes.schema("node_id").dataType)(
+      hyperBallLocal(nodes, e, rounds, m))(
+      _ => hyperBallLoop(nodes, e, rounds, m, scope))
   }
 
   /** Edge budget for [[hyperBall]]'s single-shard twin: its in-memory
@@ -196,7 +195,8 @@ object SketchOps {
     * monotone) runs double-buffered over per-node byte arrays in ONE
     * task — initial registers still come from the distributed
     * `registers` aggregation (one shuffle, not a loop) and ride the
-    * tagged union with the edges. The task emits the exact integer
+    * tagged union with the edges as [[LocalGraph]] seed rows
+    * (node, reg, mrho). The task emits the exact integer
     * (n_regs, reg_sum) per (node, round); est_e3 is applied COLUMNAR
     * through the same [[graft.plans.HllExpressions.hllEstE3]]
     * expression as the loop's finish, so every row is bit-identical;
@@ -204,82 +204,48 @@ object SketchOps {
     */
   private[graft] def hyperBallLocal(nodes: DataFrame, e: DataFrame,
       rounds: Int, m: Int): DataFrame = {
-    val sess = e.sparkSession
-    import sess.implicits._
-    val idType = nodes.schema("node_id").dataType
     val init = registers(nodes, "node_id", col("fp"), m)
       .groupBy(col("node_id"), col("reg")).agg(max(col("rho")).as("mrho"))
-    val tagged = init
-      .select(col("node_id").cast("long").as("x"), col("reg").cast("long"),
-        col("mrho").cast("long"), lit(0).as("t"))
-      .unionByName(e.select(col("src").cast("long").as("x"),
-        col("dst").cast("long").as("reg"), lit(0L).as("mrho"),
-        lit(1).as("t")))
-    val mCap = m
-    val nRounds = rounds
-    tagged.as[(Long, Long, Long, Int)].coalesce(1).mapPartitions { it =>
-      val state = new java.util.HashMap[Long, Array[Byte]]()
-      val es = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-      it.foreach { case (x, r2, mr, t) =>
-        if (t == 0) {
-          val a = state.computeIfAbsent(x, _ => new Array[Byte](mCap))
-          if (mr > a(r2.toInt)) a(r2.toInt) = mr.toByte
-        } else es += ((x, r2))
+    LocalGraph.run(e, Some(init)) { g =>
+      // per-node registers; null = the node's ball holds no hash yet
+      var cur = new Array[Array[Byte]](g.n)
+      g.seeds.indices.foreach { r =>
+        val i = g.seeds(r)
+        if (cur(i) == null) cur(i) = new Array[Byte](m)
+        val reg = g.seedA(r).toInt
+        if (g.seedB(r) > cur(i)(reg)) cur(i)(reg) = g.seedB(r).toByte
       }
       val out = new scala.collection.mutable.ArrayBuffer[
         (Long, Long, Long, Long)]()
-      def emit(s: java.util.HashMap[Long, Array[Byte]], r: Int): Unit = {
-        val ni = s.entrySet().iterator()
-        while (ni.hasNext) {
-          val kv = ni.next()
-          val a = kv.getValue
-          var nRegs = 0L
-          var pop = 0L
-          var j = 0
-          while (j < mCap) {
-            if (a(j) != 0) {
-              nRegs += 1L
-              pop += 1L << (Hll.RhoCap - a(j))
-            }
-            j += 1
-          }
+      def emit(r: Int): Unit = cur.indices.foreach { i =>
+        if (cur(i) != null) {
+          val nRegs = cur(i).count(_ != 0).toLong
+          val pop = cur(i).filter(_ != 0).map(b => 1L << (Hll.RhoCap - b)).sum
           if (nRegs > 0)
-            out += ((kv.getKey, r.toLong, nRegs,
-              pop + (mCap.toLong - nRegs) * Hll.Scale))
+            out += ((g.ids(i), r.toLong, nRegs,
+              pop + (m.toLong - nRegs) * Hll.Scale))
         }
       }
-      emit(state, 0)
-      var cur = state
-      var r = 1
-      while (r <= nRounds) {
+      emit(0)
+      for (r <- 1 to rounds) {
         // double-buffer: round r's ball must merge round r-1 states only
-        val next = new java.util.HashMap[Long, Array[Byte]](cur.size)
-        val ci = cur.entrySet().iterator()
-        while (ci.hasNext) {
-          val kv = ci.next()
-          next.put(kv.getKey, kv.getValue.clone())
-        }
-        es.foreach { case (s, d) =>
-          val sd = cur.get(d)
+        val next = cur.map(a => if (a == null) null else a.clone())
+        (0 until g.m).foreach { k =>
+          val sd = cur(g.nbr(k))
           if (sd != null) {
-            val a = next.computeIfAbsent(s, _ => new Array[Byte](mCap))
-            var j = 0
-            while (j < mCap) {
-              if (sd(j) > a(j)) a(j) = sd(j)
-              j += 1
-            }
+            val s = g.src(k)
+            if (next(s) == null) next(s) = new Array[Byte](m)
+            (0 until m).foreach(j => if (sd(j) > next(s)(j)) next(s)(j) = sd(j))
           }
         }
-        emit(next, r)
         cur = next
-        r += 1
+        emit(r)
       }
       out.iterator
     }.toDF("node_id", "r", "n_regs", "reg_sum")
-      .select(col("node_id").cast(idType).as("node_id"), col("r"),
-        col("n_regs"), col("reg_sum"),
-        graft.plans.HllExpressions.hllEstE3(col("reg_sum"), col("n_regs"), m)
-          .as("est_e3"))
+      .transform(LocalGraph.castIds(nodes.schema("node_id").dataType, "node_id"))
+      .withColumn("est_e3",
+        graft.plans.HllExpressions.hllEstE3(col("reg_sum"), col("n_regs"), m))
   }
 
   /** The [[graft.plans.TextHashExpressions.docFingerprint]] hash domain

@@ -3256,7 +3256,7 @@ object SpatialOps {
     val kc = keys.map(col)
     val dedup = scope.persist(
       cells.select(kc :+ col("bx") :+ col("by"): _*).distinct())
-    val cellsIntegral = GraphOps.integralId(
+    val cellsIntegral = LocalGraph.integralId(
       dedup.schema("bx").dataType, dedup.schema("by").dataType)
     // the grouped path packs cells as (bx<<32)|by into a non-nullable
     // Long tuple encoder, so it additionally requires level <= 31
@@ -3266,7 +3266,7 @@ object SpatialOps {
       if (!cellsIntegral || level > 31) false
       else if (keys.isEmpty) dedup.count() <= CompactGroupCells
       else if (keys.size == 1 &&
-          GraphOps.integralId(dedup.schema(keys.head).dataType)) {
+          LocalGraph.integralId(dedup.schema(keys.head).dataType)) {
         val st = dedup.groupBy(col(keys.head)).agg(count(lit(1)).as("__c"))
           .agg(max(col("__c")).as("__mx"),
             max(when(col(keys.head).isNull, 1L).otherwise(0L)).as("__n"))
