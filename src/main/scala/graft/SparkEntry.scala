@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.functions.Fns
 import graft.operators._
+import graft.operators.SpatialOps.{KnnMetric, KnnStrategy}
 import graft.sources.{OsmSynth, Synth}
 
 /** Driver contract — one `queries` entry per implemented operator
@@ -50,21 +51,21 @@ object SparkEntry {
     * segments, plus the level derivation (smallest level in [6,10] with
     * 4^level >= n — integer while-loop == the oracle's CASE).
     */
-  /** The kNN entries' cell level, derived from the RAW lineitem row
-    * count (a metadata-speed count — no distinct exchange) instead of
-    * the distinct point count the operators would probe by default: the
-    * ~50-points-per-cell density rule only needs the order of magnitude
-    * (raw vs distinct differ by the ~1.3× dup factor, within rounding at
-    * every SF), the result is EXACT at any level (the per-query
-    * guarantee + brute-force fallback, and the oracles are level-free
-    * brute force), and skipping the probe removes one sequential
-    * scan+distinct job from each kNN entry's critical path.
+  /** The kNN entries' cell level: [[SpatialOps.knnLevel]] of the RAW
+    * lineitem row count (a metadata-speed count — no distinct exchange)
+    * instead of the distinct point count the operator would probe by
+    * default, which removes one sequential scan+distinct job from each
+    * kNN entry's critical path. The raw count exceeds the distinct one
+    * by the ~1.3x dup factor, a log4 shift of ~0.19. At the committed
+    * scale factors both counts round to the same level (3, 5 and 7 at
+    * sf0.001, sf0.01 and sf0.1), but that is a measurement, not a
+    * structural property: at some other scale the level can differ by
+    * one. The rows cannot change (the per-query guarantee + brute-force
+    * fallback make every level exact, and the oracles are level-free
+    * brute force); only the cost profile moves.
     */
-  private def knnDensityLevel(s: SparkSession, d: String): Int = {
-    val n = math.max(t(s, d, "lineitem").count(), 1L)
-    math.max(1, math.min(12,
-      math.round(math.log(n / 50.0) / math.log(4.0)).toInt))
-  }
+  private def knnDensityLevel(s: SparkSession, d: String): Int =
+    SpatialOps.knnLevel(t(s, d, "lineitem").count())
 
   private[graft] def crossWaySegs(s: SparkSession, d: String): (DataFrame, Int) = {
     val key = col("way_id") * lit(10L) + col("seq")
@@ -688,28 +689,28 @@ object SparkEntry {
 
     "q_knn" -> ((s, d) => {
       val pts = graft.core.CacheScope.global.persist(Synth.points(s, d))
-      SpatialOps.knn(pts, pts.filter(col("pid") % 997 === 0), 5,
-        levelIn = knnDensityLevel(s, d))
+      SpatialOps.knn(pts, pts.filter(col("pid") % 997 === 0), 5, KnnMetric.Planar,
+        knnDensityLevel(s, d), KnnStrategy.Broadcast)
     }),
 
     // large-query-set kNN: cell-bucket shuffle join, query side not broadcast
     "q_knn_large" -> ((s, d) => {
       val pts = graft.core.CacheScope.global.persist(Synth.points(s, d))
-      SpatialOps.knnShuffled(pts, pts.filter(col("pid") % 101 === 0), 5,
-        level = knnDensityLevel(s, d))
+      SpatialOps.knn(pts, pts.filter(col("pid") % 101 === 0), 5, KnnMetric.Planar,
+        knnDensityLevel(s, d), KnnStrategy.Shuffle)
     }),
 
     // geodesic kNN: haversine-ranked, lon cells wrap the antimeridian
     "q_knn_geo" -> ((s, d) => {
       val pts = graft.core.CacheScope.global.persist(Synth.points(s, d))
-      SpatialOps.knnGeo(pts, pts.filter(col("pid") % 997 === 0), 5,
-        levelIn = knnDensityLevel(s, d))
+      SpatialOps.knn(pts, pts.filter(col("pid") % 997 === 0), 5, KnnMetric.Geo,
+        knnDensityLevel(s, d), KnnStrategy.Broadcast)
     }),
 
     "q_knn_geo_large" -> ((s, d) => {
       val pts = graft.core.CacheScope.global.persist(Synth.points(s, d))
-      SpatialOps.knnGeoShuffled(pts, pts.filter(col("pid") % 101 === 0), 5,
-        level = knnDensityLevel(s, d))
+      SpatialOps.knn(pts, pts.filter(col("pid") % 101 === 0), 5, KnnMetric.Geo,
+        knnDensityLevel(s, d), KnnStrategy.Shuffle)
     }),
 
     // geodesic radius join: everything within 120 km, haversine-exact
@@ -1525,7 +1526,7 @@ object SparkEntry {
       // persist: the corpus feeds the size probe, the candidate join and
       // (via the filter) the query side — like the other kNN entries
       val pts = graft.core.CacheScope.global.persist(Synth.points(s, d))
-      SpatialOps.knnGeoAuto(pts, pts.filter(col("pid") % 499 === 0), 5)
+      SpatialOps.knn(pts, pts.filter(col("pid") % 499 === 0), 5, KnnMetric.Geo)
     }),
 
     // --- link-graph rank (fixed-point integer PageRank, 5 rounds) ---
@@ -3710,7 +3711,8 @@ object SparkEntry {
        | AND least(((p.lat_fix + 900000000) * $lvl) // 1800000000, ${lvl - 1}) = c.ccy""".stripMargin
 
   /** Brute-force geodesic kNN oracle (haversine millimetres, ties by pid)
-    * for the query set pid % m == 0 — twin of knnGeo/knnGeoShuffled.
+    * for the query set pid % m == 0 — twin of SpatialOps.knn under
+    * KnnMetric.Geo.
     */
   private def knnGeoSql(m: Int): String = {
     val dist = haversineSql("p.lon_fix / 10000000.0", "p.lat_fix / 10000000.0",

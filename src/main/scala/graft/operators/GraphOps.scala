@@ -1057,8 +1057,9 @@ object GraphOps {
       val aFull = nodes.join(aRaw, col("node_id") === col("dst"), "left")
         .select(col("node_id"), coalesce(col("araw"), lit(0L)).as("araw"))
         .persist()
-      val qa = math.max(
-        aFull.agg(max(col("araw"))).head.getLong(0) / RankScale, 1L)
+      // an empty graph has no max: coalesce to 0, so the divisor stays 1
+      val qa = math.max(aFull.agg(coalesce(max(col("araw")), lit(0L)))
+        .head.getLong(0) / RankScale, 1L)
       val aN = aFull.selectExpr("node_id", s"araw div $qa AS a")
       val hRaw = e.join(aN.select(col("node_id").as("__an"), col("a")),
           col("dst") === col("__an"))
@@ -1066,8 +1067,8 @@ object GraphOps {
       val hFull = nodes.join(hRaw, col("node_id") === col("src"), "left")
         .select(col("node_id"), coalesce(col("hraw"), lit(0L)).as("hraw"))
         .persist()
-      val qh = math.max(
-        hFull.agg(max(col("hraw"))).head.getLong(0) / RankScale, 1L)
+      val qh = math.max(hFull.agg(coalesce(max(col("hraw")), lit(0L)))
+        .head.getLong(0) / RankScale, 1L)
       val stepped = hFull.selectExpr("node_id", s"hraw div $qh AS h")
         .join(aN, "node_id")
       val next = stepped.persist()

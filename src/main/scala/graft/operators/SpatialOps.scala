@@ -190,21 +190,6 @@ object SpatialOps {
       .select(col("pid"), col("poly_id"))
   }
 
-  /** Query-count threshold below which knnAuto takes the broadcast path. */
-  val KnnBroadcastMaxQueries = 100000L
-
-  /** kNN facade: picks the physical strategy by query-set size — the
-    * broadcast 3x3-neighborhood path (zero shuffle of the point side) for
-    * small query sets, the cell shuffle equi-join (knnShuffled) when the
-    * query side is too large to ship to every task. One count() of the
-    * query side at plan-construction time (same eager-probe contract as
-    * the level heuristic both paths already use).
-    */
-  def knnAuto(points: DataFrame, queries: DataFrame, k: Int,
-              scope: CacheScope = CacheScope.global): DataFrame =
-    if (queries.count() <= KnnBroadcastMaxQueries) knn(points, queries, k, scope = scope)
-    else knnShuffled(points, queries, k, scope = scope)
-
   /** BBox range join: (pid, box_id) for every point inside an axis-aligned
     * box (boundary-inclusive, exact int64) — the third spatial-join
     * capability of SURVEY §2.3 alongside PIP and kNN. Same distributed
@@ -447,221 +432,241 @@ object SpatialOps {
       .agg(count(lit(1)).as("n_segs"))
   }
 
-  /** Exact brute-force kNN: broadcast the query set, score every point,
-    * window top-k. Distance is exact int64 squared euclid on fix coords
-    * (lon ±9e8, lat ±6e8 keep dx²+dy² < 2^63); ties broken by pid.
-    * Correct for any geometry; cost O(|points|·|queries|).
+  // ---- kNN: cell-ring candidate pruning, planar or geodesic metric ---------
+
+  /** Distance metric of [[knn]] / [[knnBruteForce]]: the distance column
+    * and its name, the lon neighbor rule of the 3x3 cell neighborhood,
+    * and the per-query exactness bound for a grid of n cells per axis.
     */
-  def knnBruteForce(points: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = broadcast(queries.select(col("pid").as("qid"),
-      col("lon_fix").as("qx"), col("lat_fix").as("qy")))
-    val dx = col("lon_fix") - col("qx")
-    val dy = col("lat_fix") - col("qy")
-    val joined = points.join(q, col("pid") =!= col("qid"))
-      .withColumn("d2", dx * dx + dy * dy)
-    val w = Window.partitionBy(col("qid")).orderBy(col("d2"), col("pid"))
-    joined.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("pid"), col("rank"), col("d2"))
+  sealed abstract class KnnMetric(val distCol: String) {
+    private[SpatialOps] def dist(px: Column, py: Column, qx: Column, qy: Column): Column
+    private[SpatialOps] def neighborX(cx: Column, n: Long): Column
+    private[SpatialOps] def bound(qy: Column, n: Long): Column
   }
 
-  /** Exact kNN via cell-ring candidate pruning (the scale path):
-    * candidates come only from the query's 3x3 cell neighborhood at
-    * `level`; a query's result is provably exact when its kth candidate
-    * distance is below the minimum separation to any point outside the
-    * neighborhood (one full cell span per axis, floor(width) because
-    * integer cell boundaries jitter by 1). Queries that fail the
-    * guarantee (sparse regions) fall back to the exact brute force —
-    * output is therefore always the exact kNN, but the heavy scoring
-    * touches ~9 cells instead of the whole table. level <= 0 (default)
-    * derives the cell level from the point density (~50 points/cell),
-    * like knnShuffled — the density probe costs one count() job at
-    * plan-construction time; pass an explicit level to stay lazy.
-    *
-    * Persist hygiene: intermediates the returned plan reads twice are
-    * registered in `scope`; the caller releases it after consuming the
-    * result (see [[graft.core.CacheScope]]).
-    */
-  def knn(points: DataFrame, queries: DataFrame, k: Int, levelIn: Int = 0,
-          scope: CacheScope = CacheScope.global): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val level = if (levelIn > 0) levelIn else {
-      val cnt = math.max(points.count(), 1L)
-      math.max(1, math.min(12,
-        math.round(math.log(cnt / 50.0) / math.log(4.0)).toInt))
-    }
-    val n = 1L << level
-    val wMin = 3600000000L / n - 1 // conservative min lon-cell span (fix units)
-    val hMin = 1800000000L / n - 1
-    val bound = math.min(wMin, hMin)
-    val bound2 = bound * bound
-
-    def cellOf(x: Column, y: Column): Column = Fns.cellIdFromXY(x, y, level)
-
-    // query side: explode the 3x3 neighborhood (both axes clamp: the
-    // distance metric is flat int64 euclid on fix coords, NOT cylindrical,
-    // so wrapping cells across the antimeridian would admit candidates that
-    // are far in this metric — and their dx could overflow dx*dx)
-    val q = queries.select(col("pid").as("qid"),
-      col("lon_fix").as("qx"), col("lat_fix").as("qy"),
-      Fns.cellX(col("lon_fix"), level).as("qcx"),
-      Fns.cellY(col("lat_fix"), level).as("qcy"))
-    val offsets = for (dx <- -1 to 1; dy <- -1 to 1) yield (dx, dy)
-    val qcells = q.withColumn("cell", explode(array(offsets.map { case (dx, dy) =>
-        val nx = least(greatest(col("qcx") + dx, lit(0L)), lit(n - 1))
-        val ny = least(greatest(col("qcy") + dy, lit(0L)), lit(n - 1))
-        cellOf(nx, ny)
-      }: _*))).dropDuplicates("qid", "cell")
-
-    val pts = points.withColumn("cell",
-      cellOf(Fns.cellX(col("lon_fix"), level), Fns.cellY(col("lat_fix"), level)))
-    val dx = col("lon_fix") - col("qx")
-    val dy = col("lat_fix") - col("qy")
-    val cand = pts.join(broadcast(qcells), "cell")
-      .filter(col("pid") =!= col("qid"))
-      .withColumn("d2", dx * dx + dy * dy)
-    val w = Window.partitionBy(col("qid")).orderBy(col("d2"), col("pid"))
-    // per-query exactness guarantee (k candidates found AND kth within
-    // bound) via a SECOND window over the SAME qid partitioning — the data
-    // is already partitioned and sorted by qid after the rank window, so
-    // this adds no exchange and no sort, where the former stats groupBy
-    // cost an exchange + its own persist + a broadcast join back.
-    // persisted (scope-released): feeds the guaranteed output and the
-    // fallback anti-join
-    val wq = Window.partitionBy(col("qid"))
-    val ranked = scope.persist(cand.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .withColumn("ok",
-        count(lit(1)).over(wq) === k && max(col("d2")).over(wq) <= bound2)
-      .select(col("qid"), col("pid"), col("rank"), col("d2"), col("ok")))
-
-    val guaranteed = ranked.filter(col("ok")).drop("ok")
-    val fallbackQueries = queries.join(
-      broadcast(guaranteed.select(col("qid").as("pid"))), Seq("pid"), "left_anti")
-    // common case: every query resolved — checking costs one pass over the
-    // (small, per the operator contract) query side and saves the
-    // brute-force plan's full point-table scan
-    if (fallbackQueries.isEmpty) guaranteed
-    else guaranteed.unionByName(knnBruteForce(points, fallbackQueries, k))
-  }
-
-  /** Exact kNN for LARGE query sets (|queries| ~ |points|): cell-bucket
-    * shuffle equi-join — the query side is NEVER broadcast, so the plan
-    * scales to corpus-vs-corpus workloads where the broadcast variant
-    * (knn) would ship the whole query table to every task.
-    *
-    * Round r joins points against the 3x3 clamped cell neighborhood of
-    * each still-unresolved query at level - r; a query resolves when its
-    * kth candidate provably beats anything outside the neighborhood (same
-    * bound as knn). Each coarsening doubles the guaranteed radius, so
-    * sparse regions need O(level) rounds; at level 1 the 3x3 neighborhood
-    * covers the whole 2x2 grid and the remaining queries get their exact
-    * answer unconditionally. Rounds after the first carry only the
-    * unresolved tail (counted eagerly; the loop stops when none remain),
-    * so the dominant cost is the single first pass.
-    *
-    * level <= 0 (default) picks the start level from the point density:
-    * ~50 points per cell (level = log4(n/50)), which minimizes round-0
-    * candidate volume while keeping most queries resolvable — measured
-    * 3.6x faster than a fixed level on the sf0.1 set.
-    *
-    * Persist hygiene: superseded per-round query frontiers are unpersisted
-    * inside the loop as soon as the next frontier materializes; the
-    * per-round top-k frames feed the returned plan and are registered in
-    * `scope` for the caller to release after consumption.
-    */
-  def knnShuffled(points: DataFrame, queries: DataFrame, k: Int, level: Int = 0,
-                  scope: CacheScope = CacheScope.global): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def cellOfAt(lv: Int)(x: Column, y: Column): Column = Fns.cellIdFromXY(x, y, lv)
-    val offsets = for (dx <- -1 to 1; dy <- -1 to 1) yield (dx, dy)
-
-    var remaining = queries.select(col("pid").as("qid"),
-      col("lon_fix").as("qx"), col("lat_fix").as("qy")).persist()
-    var out: DataFrame = null
-    var lv = if (level > 0) level else {
-      val n = math.max(points.count(), 1L)
-      math.max(1, math.min(12,
-        math.round(math.log(n / 50.0) / math.log(4.0)).toInt))
-    }
-    var done = false
-    while (!done) {
-      val terminal = lv <= 1
-      val n = 1L << lv
-      val wMin = 3600000000L / n - 1
-      val hMin = 1800000000L / n - 1
-      val bound = math.min(wMin, hMin)
-      val bound2 = bound * bound
-
-      val qcells = remaining
-        .withColumn("qcx", Fns.cellX(col("qx"), lv))
-        .withColumn("qcy", Fns.cellY(col("qy"), lv))
-        .withColumn("cell", explode(array(offsets.map { case (dx, dy) =>
-          val nx = least(greatest(col("qcx") + dx, lit(0L)), lit(n - 1))
-          val ny = least(greatest(col("qcy") + dy, lit(0L)), lit(n - 1))
-          cellOfAt(lv)(nx, ny)
-        }: _*)))
-        .dropDuplicates("qid", "cell")
-        .select("qid", "qx", "qy", "cell")
-      val pts = points.withColumn("cell",
-        cellOfAt(lv)(Fns.cellX(col("lon_fix"), lv), Fns.cellY(col("lat_fix"), lv)))
-      val dx = col("lon_fix") - col("qx")
-      val dy = col("lat_fix") - col("qy")
-      val cand = pts.join(qcells, "cell") // shuffle join — no broadcast hint
-        .filter(col("pid") =!= col("qid"))
-        .withColumn("d2", dx * dx + dy * dy)
-      val w = Window.partitionBy(col("qid")).orderBy(col("d2"), col("pid"))
-      // persisted (scope-released): the round's top-k feeds both the
-      // guarantee check and the emitted output — without it the heavy
-      // join+window runs twice
-      val base = cand.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col("qid"), col("pid"), col("rank"), col("d2"))
-
-      if (terminal) {
-        val ranked = scope.persist(base)
-        out = if (out == null) ranked else out.unionByName(ranked)
-        // the terminal round's top-k is not materialized until the caller
-        // acts, and it reads this frontier — release with the scope
-        scope.track(remaining)
-        done = true
-      } else {
-        // per-query guarantee via a second window over the SAME qid
-        // partitioning (no exchange, no sort — the rank window already
-        // established both), replacing the former stats groupBy + its
-        // persist + the join back
-        val wq = Window.partitionBy(col("qid"))
-        val ranked = scope.persist(base.withColumn("ok",
-          count(lit(1)).over(wq) === k && max(col("d2")).over(wq) <= bound2))
-        val emit = ranked.filter(col("ok")).drop("ok")
-        out = if (out == null) emit else out.unionByName(emit)
-        // count() (not isEmpty) fully materializes the next frontier, so the
-        // superseded one can be dropped immediately instead of leaking one
-        // persisted frame per coarsening round
-        val next = remaining.join(emit.select("qid"), Seq("qid"), "left_anti").persist()
-        val nLeft = next.count()
-        remaining.unpersist(blocking = false)
-        if (nLeft == 0L) { next.unpersist(blocking = false); done = true }
-        else { remaining = next; lv -= 1 }
+  object KnnMetric {
+    /** Exact int64 squared euclid on fix coords, `d2` (lon ±9e8, lat ±6e8
+      * keep dx²+dy² < 2^63). Both axes clamp: the metric is flat, NOT
+      * cylindrical, so cells wrapped across the antimeridian would admit
+      * candidates that are far in this metric — and their dx could
+      * overflow dx*dx. The bound is one full cell span per axis,
+      * floor(width) because integer cell boundaries jitter by 1.
+      */
+    case object Planar extends KnnMetric("d2") {
+      private[SpatialOps] def dist(px: Column, py: Column, qx: Column, qy: Column): Column = {
+        val dx = px - qx
+        val dy = py - qy
+        dx * dx + dy * dy
+      }
+      private[SpatialOps] def neighborX(cx: Column, n: Long): Column =
+        least(greatest(cx, lit(0L)), lit(n - 1))
+      private[SpatialOps] def bound(qy: Column, n: Long): Column = {
+        val b = math.min(3600000000L / n - 1, 1800000000L / n - 1)
+        lit(b * b)
       }
     }
-    out
+
+    /** round(haversine * 1000) in integer millimetres, `dist_e3`. The
+      * flat metric distorts at |lat| > 60 and is simply wrong near the
+      * antimeridian (the reference's only distance is great-circle
+      * haversine, reference/include/osmium/geometry/haversine.hpp:40-77),
+      * so the lon neighborhood WRAPS across the antimeridian and the
+      * bound is latitude-aware ([[geoBoundE3]]): it vanishes near the
+      * poles, where queries correctly fall back / coarsen.
+      */
+    case object Geo extends KnnMetric("dist_e3") {
+      private[SpatialOps] def dist(px: Column, py: Column, qx: Column, qy: Column): Column =
+        geoDistE3(px, py, qx, qy)
+      private[SpatialOps] def neighborX(cx: Column, n: Long): Column = pmod(cx, lit(n))
+      private[SpatialOps] def bound(qy: Column, n: Long): Column = geoBoundE3(qy, n)
+    }
   }
 
-  // ---- geodesic (haversine-metric) kNN --------------------------------------
-  //
-  // The flat-metric kNN above ranks by int64 squared euclid on fix coords —
-  // exact arithmetic, but at |lat| > 60 the metric itself distorts and near
-  // the antimeridian it is simply wrong (the reference's only distance is
-  // great-circle haversine, reference/include/osmium/geometry/
-  // haversine.hpp:40-77). The geo variants rank by round(haversine * 1000)
-  // (integer millimetres — deterministic ranking, DuckDB-parity) and differ
-  // structurally in two ways: the lon cell neighborhood WRAPS across the
-  // antimeridian instead of clamping, and the per-query exactness bound is
-  // latitude-aware — the meridian bound R*s_lat always holds, while the
-  // longitude bound shrinks with cos(lat) and vanishes near the poles,
-  // where the queries correctly fall back / coarsen.
+  /** Physical strategy of [[knn]]. */
+  sealed trait KnnStrategy
+  object KnnStrategy {
+    /** One round with the query cells broadcast (zero shuffle of the
+      * point side); unresolved queries go to [[knnBruteForce]]. For
+      * small query sets.
+      */
+    case object Broadcast extends KnnStrategy
+    /** Cell-bucket shuffle equi-join, the query side NEVER broadcast, with
+      * level coarsening for the unresolved tail. For corpus-vs-corpus
+      * query sets (|queries| ~ |points|).
+      */
+    case object Shuffle extends KnnStrategy
+    /** Broadcast up to [[KnnBroadcastMaxQueries]] queries, else Shuffle:
+      * one count() of the query side at plan-construction time.
+      */
+    case object BySize extends KnnStrategy
+  }
+
+  /** Query-count threshold up to which [[KnnStrategy.BySize]] broadcasts. */
+  val KnnBroadcastMaxQueries = 100000L
+
+  /** The kNN start level for `n` points: ~50 points per cell, level =
+    * round(log4(n / 50)) clamped to [1, 12], which keeps round-0
+    * candidate volume small while most queries resolve — measured 3.6x
+    * faster than a fixed level on the sf0.1 set. Any level gives the
+    * exact answer; the level only moves the cost.
+    */
+  def knnLevel(n: Long): Int =
+    math.max(1, math.min(12,
+      math.round(math.log(math.max(n, 1L) / 50.0) / math.log(4.0)).toInt))
+
+  /** Exact kNN under `metric`: (qid, pid, rank, `metric.distCol`), ties
+    * broken by pid. A query resolves in a round at grid level lv when
+    * its top-k candidates from its 3x3 cell neighborhood are provably the
+    * global top-k: k candidates found AND the kth within the metric's
+    * bound on the distance to anything outside the neighborhood. level
+    * <= 0 (default) derives the start level from the point density
+    * ([[knnLevel]]) — one count() job at plan-construction time; pass an
+    * explicit level to skip it.
+    *
+    * Broadcast: queries the round cannot resolve (sparse regions, polar
+    * caps) fall back to the brute force, so the heavy scoring touches ~9
+    * cells per query instead of the whole table.
+    *
+    * Shuffle: round r joins points against the 3x3 neighborhood of each
+    * still-unresolved query at level - r. Each coarsening doubles the
+    * guaranteed radius, so sparse regions need O(level) rounds; at level
+    * 1 the neighborhood covers the whole 2x2 grid and the remaining
+    * queries get their exact answer unconditionally. Rounds after the
+    * first carry only the unresolved tail (counted eagerly; the loop
+    * stops when none remain), so the dominant cost is the first pass.
+    *
+    * Persist hygiene: intermediates the returned plan reads twice are
+    * registered in `scope`, and the shuffle strategy unpersists each
+    * superseded query frontier as soon as the next one materializes; the
+    * caller releases `scope` after consuming the result (see
+    * [[graft.core.CacheScope]]).
+    */
+  def knn(points: DataFrame, queries: DataFrame, k: Int, metric: KnnMetric,
+          level: Int = 0, strategy: KnnStrategy = KnnStrategy.BySize,
+          scope: CacheScope = CacheScope.global): DataFrame = {
+    val broadcastQueries = strategy match {
+      case KnnStrategy.Broadcast => true
+      case KnnStrategy.Shuffle => false
+      case KnnStrategy.BySize => queries.count() <= KnnBroadcastMaxQueries
+    }
+    val lv0 = if (level > 0) level else knnLevel(points.count())
+    if (broadcastQueries) {
+      // persisted (scope-released): feeds the guaranteed output and the
+      // fallback anti-join
+      val ranked = scope.persist(
+        knnRound(points, knnQueries(queries), k, metric, lv0, broadcastQueries = true,
+          guarantee = true))
+      val guaranteed = ranked.filter(col("ok")).drop("ok")
+      val fallbackQueries = queries.join(
+        broadcast(guaranteed.select(col("qid").as("pid"))), Seq("pid"), "left_anti")
+      // common case: every query resolved — checking costs one pass over the
+      // (small, per the strategy) query side and saves the brute-force
+      // plan's full point-table scan
+      if (fallbackQueries.isEmpty) guaranteed
+      else guaranteed.unionByName(knnBruteForce(points, fallbackQueries, k, metric))
+    } else {
+      var frontier = knnQueries(queries).persist()
+      var remaining = frontier
+      var out: DataFrame = null
+      var lv = lv0
+      var done = false
+      while (!done) {
+        val terminal = lv <= 1
+        // persisted (scope-released): the round's top-k feeds both the
+        // guarantee check and the emitted output — without it the heavy
+        // join+window runs twice
+        val ranked = scope.persist(
+          knnRound(points, remaining, k, metric, lv, broadcastQueries = false,
+            guarantee = !terminal))
+        if (terminal) {
+          out = if (out == null) ranked else out.unionByName(ranked)
+          // the terminal round's top-k is not materialized until the caller
+          // acts, and it reads this frontier — release with the scope
+          scope.track(frontier)
+          done = true
+        } else {
+          val emit = ranked.filter(col("ok")).drop("ok")
+          out = if (out == null) emit else out.unionByName(emit)
+          // count() (not isEmpty) fully materializes the next frontier, so the
+          // superseded one can be dropped immediately instead of leaking one
+          // persisted frame per coarsening round
+          val next = remaining.join(emit.select("qid"), Seq("qid"), "left_anti").persist()
+          val nLeft = next.count()
+          frontier.unpersist(blocking = false)
+          if (nLeft == 0L) { next.unpersist(blocking = false); done = true }
+          else {
+            frontier = next
+            // plan rebase over the cached frontier: the next frontier reads
+            // this one twice (anti-join side and candidate side), so without
+            // the cut its plan — and every cached plan string — doubles per
+            // coarsening round
+            remaining = next.sparkSession.createDataFrame(next.rdd, next.schema)
+            lv -= 1
+          }
+        }
+      }
+      out
+    }
+  }
+
+  /** Exact brute-force kNN under `metric`: broadcast the query set, score
+    * every point, window top-k. Correct for any geometry; cost
+    * O(|points|·|queries|).
+    */
+  def knnBruteForce(points: DataFrame, queries: DataFrame, k: Int,
+                    metric: KnnMetric): DataFrame =
+    knnTopK(points.join(broadcast(knnQueries(queries)), col("pid") =!= col("qid")), k, metric)
+      .select(col("qid"), col("pid"), col("rank"), col(metric.distCol))
+
+  private def knnQueries(queries: DataFrame): DataFrame =
+    queries.select(col("pid").as("qid"), col("lon_fix").as("qx"), col("lat_fix").as("qy"))
+
+  /** Scores (point, query) candidate rows and keeps each query's top k. */
+  private def knnTopK(cand: DataFrame, k: Int, metric: KnnMetric): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col(metric.distCol), col("pid"))
+    cand.withColumn(metric.distCol,
+        metric.dist(col("lon_fix"), col("lat_fix"), col("qx"), col("qy")))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+  }
+
+  /** One cell-ring round at `level` for the (qid, qx, qy) query frame `q`:
+    * the 3x3 neighborhood cells of every query (lat clamps, lon per the
+    * metric), the candidate join (query cells broadcast or shuffled), the
+    * top-k window and, with `guarantee`, the per-query `ok` flag.
+    */
+  private def knnRound(points: DataFrame, q: DataFrame, k: Int, metric: KnnMetric,
+                       level: Int, broadcastQueries: Boolean,
+                       guarantee: Boolean): DataFrame = {
+    val n = 1L << level
+    def cellOf(x: Column, y: Column): Column = Fns.cellIdFromXY(x, y, level)
+    val offsets = for (dx <- -1 to 1; dy <- -1 to 1) yield (dx, dy)
+    val qcells = q
+      .withColumn("qcx", Fns.cellX(col("qx"), level))
+      .withColumn("qcy", Fns.cellY(col("qy"), level))
+      .withColumn("cell", explode(array(offsets.map { case (dx, dy) =>
+        cellOf(metric.neighborX(col("qcx") + dx, n),
+          least(greatest(col("qcy") + dy, lit(0L)), lit(n - 1)))
+      }: _*)))
+      .dropDuplicates("qid", "cell")
+      .select("qid", "qx", "qy", "cell")
+    val pts = points.withColumn("cell",
+      cellOf(Fns.cellX(col("lon_fix"), level), Fns.cellY(col("lat_fix"), level)))
+    val top = knnTopK(pts.join(if (broadcastQueries) broadcast(qcells) else qcells, "cell")
+      .filter(col("pid") =!= col("qid")), k, metric)
+    val out = Seq(col("qid"), col("pid"), col("rank"), col(metric.distCol))
+    if (!guarantee) top.select(out: _*)
+    else {
+      // the guarantee is a second window over the SAME qid partitioning —
+      // the rank window already established it, so this adds no exchange
+      // and no sort, where a stats groupBy would cost an exchange, its own
+      // persist and a join back
+      val wq = Window.partitionBy(col("qid"))
+      top.withColumn("ok", count(lit(1)).over(wq) === k &&
+          max(col(metric.distCol)).over(wq) <= metric.bound(col("qy"), n))
+        .select(out :+ col("ok"): _*)
+    }
+  }
 
   private val EarthR = 6372797.560856 // reference haversine.hpp:43
   private val DegToRad = 0.017453292519943295769236907684886
@@ -693,150 +698,11 @@ object SpatialOps {
     (floor(least(latBound, lonBound) * lit(1000.0)) - lit(1L)).cast("long")
   }
 
-  /** Exact geodesic brute force: broadcast query set, haversine-score every
-    * point, window top-k. Ties broken by pid. Output (qid, pid, rank,
-    * dist_e3).
-    */
-  def knnGeoBruteForce(points: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = broadcast(queries.select(col("pid").as("qid"),
-      col("lon_fix").as("qx"), col("lat_fix").as("qy")))
-    val joined = points.join(q, col("pid") =!= col("qid"))
-      .withColumn("dist_e3", geoDistE3(col("lon_fix"), col("lat_fix"), col("qx"), col("qy")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist_e3"), col("pid"))
-    joined.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("pid"), col("rank"), col("dist_e3"))
-  }
-
-  /** Exact geodesic kNN for small query sets: same 3x3-cell candidate
-    * pruning as [[knn]] but with the lon neighborhood WRAPPED across the
-    * antimeridian and the latitude-aware guarantee bound; queries the
-    * guarantee cannot resolve (sparse regions, polar caps) fall back to
-    * the geodesic brute force, so the output is always the exact
-    * haversine kNN.
-    */
-  def knnGeo(points: DataFrame, queries: DataFrame, k: Int, levelIn: Int = 0,
-             scope: CacheScope = CacheScope.global): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val level = if (levelIn > 0) levelIn else {
-      val cnt = math.max(points.count(), 1L)
-      math.max(1, math.min(12,
-        math.round(math.log(cnt / 50.0) / math.log(4.0)).toInt))
-    }
-    val n = 1L << level
-    def cellOf(x: Column, y: Column): Column = Fns.cellIdFromXY(x, y, level)
-
-    val q = queries.select(col("pid").as("qid"),
-      col("lon_fix").as("qx"), col("lat_fix").as("qy"),
-      Fns.cellX(col("lon_fix"), level).as("qcx"),
-      Fns.cellY(col("lat_fix"), level).as("qcy"))
-    val offsets = for (dx <- -1 to 1; dy <- -1 to 1) yield (dx, dy)
-    val qcells = q.withColumn("cell", explode(array(offsets.map { case (dx, dy) =>
-        val nx = pmod(col("qcx") + dx, lit(n)) // lon wraps; lat clamps
-        val ny = least(greatest(col("qcy") + dy, lit(0L)), lit(n - 1))
-        cellOf(nx, ny)
-      }: _*))).dropDuplicates("qid", "cell")
-
-    val pts = points.withColumn("cell",
-      cellOf(Fns.cellX(col("lon_fix"), level), Fns.cellY(col("lat_fix"), level)))
-    val cand = pts.join(broadcast(qcells), "cell")
-      .filter(col("pid") =!= col("qid"))
-      .withColumn("dist_e3", geoDistE3(col("lon_fix"), col("lat_fix"), col("qx"), col("qy")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist_e3"), col("pid"))
-    // per-query guarantee via a second window over the SAME qid
-    // partitioning (no exchange, no sort) — see [[knn]]; the
-    // latitude-aware bound reads qy straight off the row.
-    // persisted (scope-released): feeds the guaranteed output and the
-    // fallback anti-join
-    val wq = Window.partitionBy(col("qid"))
-    val ranked = scope.persist(cand.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .withColumn("ok", count(lit(1)).over(wq) === k &&
-        max(col("dist_e3")).over(wq) <= geoBoundE3(col("qy"), n))
-      .select(col("qid"), col("pid"), col("rank"), col("dist_e3"), col("ok")))
-
-    val guaranteed = ranked.filter(col("ok")).drop("ok")
-    val fallbackQueries = queries.join(
-      broadcast(guaranteed.select(col("qid").as("pid"))), Seq("pid"), "left_anti")
-    if (fallbackQueries.isEmpty) guaranteed
-    else guaranteed.unionByName(knnGeoBruteForce(points, fallbackQueries, k))
-  }
-
-  /** Exact geodesic kNN for LARGE query sets: the [[knnShuffled]] shape
-    * (cell-bucket shuffle equi-join, query side never broadcast, level
-    * coarsening for the unresolved tail) with the wrapped lon neighborhood
-    * and latitude-aware bound of [[knnGeo]]. At the terminal level the 3x3
-    * wrapped neighborhood covers the whole grid, so every query gets its
-    * exact haversine answer unconditionally.
-    */
-  def knnGeoShuffled(points: DataFrame, queries: DataFrame, k: Int, level: Int = 0,
-                     scope: CacheScope = CacheScope.global): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def cellOfAt(lv: Int)(x: Column, y: Column): Column = Fns.cellIdFromXY(x, y, lv)
-    val offsets = for (dx <- -1 to 1; dy <- -1 to 1) yield (dx, dy)
-
-    var remaining = queries.select(col("pid").as("qid"),
-      col("lon_fix").as("qx"), col("lat_fix").as("qy")).persist()
-    var out: DataFrame = null
-    var lv = if (level > 0) level else {
-      val n = math.max(points.count(), 1L)
-      math.max(1, math.min(12,
-        math.round(math.log(n / 50.0) / math.log(4.0)).toInt))
-    }
-    var done = false
-    while (!done) {
-      val terminal = lv <= 1
-      val n = 1L << lv
-      val qcells = remaining
-        .withColumn("qcx", Fns.cellX(col("qx"), lv))
-        .withColumn("qcy", Fns.cellY(col("qy"), lv))
-        .withColumn("cell", explode(array(offsets.map { case (dx, dy) =>
-          val nx = pmod(col("qcx") + dx, lit(n)) // lon wraps; lat clamps
-          val ny = least(greatest(col("qcy") + dy, lit(0L)), lit(n - 1))
-          cellOfAt(lv)(nx, ny)
-        }: _*)))
-        .dropDuplicates("qid", "cell")
-        .select("qid", "qx", "qy", "cell")
-      val pts = points.withColumn("cell",
-        cellOfAt(lv)(Fns.cellX(col("lon_fix"), lv), Fns.cellY(col("lat_fix"), lv)))
-      val cand = pts.join(qcells, "cell") // shuffle join — no broadcast hint
-        .filter(col("pid") =!= col("qid"))
-        .withColumn("dist_e3", geoDistE3(col("lon_fix"), col("lat_fix"), col("qx"), col("qy")))
-      val w = Window.partitionBy(col("qid")).orderBy(col("dist_e3"), col("pid"))
-      val base = cand.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
-
-      if (terminal) {
-        val ranked = scope.persist(
-          base.select(col("qid"), col("pid"), col("rank"), col("dist_e3")))
-        out = if (out == null) ranked else out.unionByName(ranked)
-        scope.track(remaining)
-        done = true
-      } else {
-        // per-round guarantee via a second window over the SAME qid
-        // partitioning (no exchange, no sort) — see [[knnShuffled]]
-        val wq = Window.partitionBy(col("qid"))
-        val ranked = scope.persist(base.withColumn("ok",
-            count(lit(1)).over(wq) === k &&
-              max(col("dist_e3")).over(wq) <= geoBoundE3(col("qy"), n))
-          .select(col("qid"), col("pid"), col("rank"), col("dist_e3"), col("ok")))
-        val emit = ranked.filter(col("ok")).drop("ok")
-        out = if (out == null) emit else out.unionByName(emit)
-        val next = remaining.join(emit.select("qid"), Seq("qid"), "left_anti").persist()
-        val nLeft = next.count()
-        remaining.unpersist(blocking = false)
-        if (nLeft == 0L) { next.unpersist(blocking = false); done = true }
-        else { remaining = next; lv -= 1 }
-      }
-    }
-    out
-  }
-
   /** Geodesic radius join: every (qid, pid) pair within `radiusMeters`
     * great-circle distance (boundary-inclusive on the rounded-millimetre
     * distance, so the DuckDB twin is an integer compare). The spatial
-    * sibling of [[knnGeo]] for "everything near X" workloads.
+    * sibling of [[knn]] under [[KnnMetric.Geo]] for "everything near X"
+    * workloads.
     *
     * Shape: the cell level derives from the radius (cell height ≈ the
     * radius' lat span, so a typical cover is ~3x3); each query explodes
@@ -846,7 +712,7 @@ object SpatialOps {
     * circle when the cap nears a pole — correct, and only polar queries
     * pay it); candidates ride a cell shuffle equi-join (no broadcast of
     * either side), refined by one haversine per candidate. Scales to
-    * corpus-vs-corpus query sets like knnGeoShuffled.
+    * corpus-vs-corpus query sets like the shuffle kNN.
     */
   def withinRadiusGeo(points: DataFrame, queries: DataFrame,
                       radiusMeters: Double): DataFrame = {
@@ -962,13 +828,6 @@ object SpatialOps {
       .select("qid", "qx", "qy", "cell")
     (qcells, level)
   }
-
-
-  /** Geodesic kNN facade: strategy by query-set size, like [[knnAuto]]. */
-  def knnGeoAuto(points: DataFrame, queries: DataFrame, k: Int,
-                 scope: CacheScope = CacheScope.global): DataFrame =
-    if (queries.count() <= KnnBroadcastMaxQueries) knnGeo(points, queries, k, scope = scope)
-    else knnGeoShuffled(points, queries, k, scope = scope)
 
   /** Web-mercator z/x/y tile density (generalizes the reference's
     * equirectangular node-density raster, examples/nodedensity.cpp:47-61,
@@ -2333,7 +2192,7 @@ object SpatialOps {
     * SQUARED fix-unit euclid — exact integers end-to-end, so the oracle
     * compares bit-for-bit (the flat metric is the documented contract at
     * candidate ranges ≪ 1°; geodesic callers go through
-    * [[SpatialOps.knnGeo]]'s metric instead).
+    * [[SpatialOps.KnnMetric.Geo]] instead).
     *
     * Candidate generation is the scale story: ways equi-join on the
     * `level` grid cell of their anchor point (the min-seq vertex — a

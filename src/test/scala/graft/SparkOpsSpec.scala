@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.CellId
 import graft.functions.Fns
 import graft.operators._
+import graft.operators.SpatialOps.{KnnMetric, KnnStrategy}
 import graft.sources.Synth
 
 /** Spark-side operator tests on sf0.001 — cross-checks the Column-API
@@ -106,7 +107,8 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("knn matches local brute force for one query") {
     val pts = Synth.points(spark, dir)
     val q = pts.filter(col("pid") % 997 === 0)
-    val knn = SpatialOps.knn(pts, q, 5).collect()
+    val knn = SpatialOps.knn(pts, q, 5, KnnMetric.Planar,
+        strategy = KnnStrategy.Broadcast).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val local = pts.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val qids = local.filter(_._1 % 997 == 0)
@@ -402,11 +404,11 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       // with auto-broadcast off, the plan must still work (no broadcast
       // hints anywhere) — the query side is joined by shuffle on cell
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val got = SpatialOps.knnShuffled(pts, pts, 3)
+      val got = SpatialOps.knn(pts, pts, 3, KnnMetric.Planar, strategy = KnnStrategy.Shuffle)
       assert(!got.queryExecution.sparkPlan.toString.contains("BroadcastExchange"),
         "query side must not be broadcast in the shuffled kNN plan")
       val gotSet = got.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val exact = SpatialOps.knnBruteForce(pts, pts, 3)
+      val exact = SpatialOps.knnBruteForce(pts, pts, 3, KnnMetric.Planar)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(gotSet === exact)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -425,12 +427,13 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val queries = pts.filter(col("pid").isin(100L, 101L, 200L, 201L, 310L))
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val exact = key(SpatialOps.knnGeoBruteForce(pts, queries, 3))
-    assert(key(SpatialOps.knnGeo(pts, queries, 3, levelIn = 4)) === exact)
-    assert(key(SpatialOps.knnGeoShuffled(pts, queries, 3, level = 4)) === exact)
+    val exact = key(SpatialOps.knnBruteForce(pts, queries, 3, KnnMetric.Geo))
+    assert(key(SpatialOps.knn(pts, queries, 3, KnnMetric.Geo, 4, KnnStrategy.Broadcast)) === exact)
+    assert(key(SpatialOps.knn(pts, queries, 3, KnnMetric.Geo, 4, KnnStrategy.Shuffle)) === exact)
     // the seam pair must be each other's nearest geodesic neighbor — the
     // flat metric would rank the whole mid-lat band closer
-    val top1 = SpatialOps.knnGeoBruteForce(pts, pts.filter(col("pid") === 200L), 1).collect()
+    val top1 = SpatialOps.knnBruteForce(pts, pts.filter(col("pid") === 200L), 1, KnnMetric.Geo)
+      .collect()
     assert(top1.head.getLong(1) === 201L)
     pts.unpersist()
   }
@@ -531,11 +534,11 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val got = SpatialOps.knnGeoShuffled(pts, pts, 3)
+      val got = SpatialOps.knn(pts, pts, 3, KnnMetric.Geo, strategy = KnnStrategy.Shuffle)
       assert(!got.queryExecution.sparkPlan.toString.contains("BroadcastExchange"),
         "query side must not be broadcast in the geodesic shuffled kNN plan")
       val gotSet = got.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val exact = SpatialOps.knnGeoBruteForce(pts, pts, 3)
+      val exact = SpatialOps.knnBruteForce(pts, pts, 3, KnnMetric.Geo)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(gotSet === exact)
     } finally {
@@ -544,14 +547,39 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("kNN fallback and coarsening: every metric and strategy equals brute force at a fine level") {
+    // at level 12 (cells ~0.09° by ~0.04°) a 3x3 neighborhood of these
+    // 400 points, spread over 180° by 120°, almost never holds k
+    // candidates: the broadcast round sends its queries to the
+    // brute-force fallback, and the shuffle strategy coarsens round by
+    // round until every query resolves
+    val pts = Synth.points(spark, dir).limit(400).persist()
+    try {
+      def key(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      for (metric <- Seq(KnnMetric.Planar, KnnMetric.Geo);
+           strategy <- Seq(KnnStrategy.Broadcast, KnnStrategy.Shuffle)) {
+        val scope = new graft.core.CacheScope
+        val got = SpatialOps.knn(pts, pts, 5, metric, 12, strategy, scope)
+        // the fallback (or a second round) is a union with the first round
+        assert(got.queryExecution.analyzed.exists(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]),
+          s"$metric $strategy resolved everything in one round")
+        assert(key(got) === key(SpatialOps.knnBruteForce(pts, pts, 5, metric)),
+          s"$metric $strategy")
+        scope.release()
+      }
+    } finally pts.unpersist()
+  }
+
   test("knnGeoAuto picks by query-set size and agrees with both variants") {
     val pts = Synth.points(spark, dir)
     val q = pts.filter(col("pid") % 997 === 0)
-    val auto = SpatialOps.knnGeoAuto(pts, q, 5)
+    val auto = SpatialOps.knn(pts, q, 5, KnnMetric.Geo)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val small = SpatialOps.knnGeo(pts, q, 5)
+    val small = SpatialOps.knn(pts, q, 5, KnnMetric.Geo, strategy = KnnStrategy.Broadcast)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val shuffled = SpatialOps.knnGeoShuffled(pts, q, 5)
+    val shuffled = SpatialOps.knn(pts, q, 5, KnnMetric.Geo, strategy = KnnStrategy.Shuffle)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(auto === small && auto === shuffled)
   }
@@ -968,12 +996,12 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("knnAuto picks the broadcast path for small query sets and agrees with both variants") {
     val pts = Synth.points(spark, dir)
     val q = pts.filter(col("pid") % 997 === 0)
-    val auto = SpatialOps.knnAuto(pts, q, 5)
+    val auto = SpatialOps.knn(pts, q, 5, KnnMetric.Planar)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val direct = SpatialOps.knn(pts, q, 5)
+    val direct = SpatialOps.knn(pts, q, 5, KnnMetric.Planar, strategy = KnnStrategy.Broadcast)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(auto === direct)
-    val shuffled = SpatialOps.knnShuffled(pts, q, 5)
+    val shuffled = SpatialOps.knn(pts, q, 5, KnnMetric.Planar, strategy = KnnStrategy.Shuffle)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(auto === shuffled) // both strategies are EXACT — same answer
   }
@@ -1003,9 +1031,14 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pts = Synth.points(spark, dir)
     val corpus = Synth.corpus(spark, dir)
     val runs: Seq[(String, graft.core.CacheScope => org.apache.spark.sql.DataFrame)] = Seq(
-      ("knn", sc => SpatialOps.knn(pts, pts.filter(col("pid") % 997 === 0), 5, scope = sc)),
-      ("knnShuffled", sc =>
-        SpatialOps.knnShuffled(pts, pts.filter(col("pid") % 101 === 0), 5, scope = sc)),
+      ("knn planar broadcast", sc => SpatialOps.knn(pts, pts.filter(col("pid") % 997 === 0), 5,
+        KnnMetric.Planar, strategy = KnnStrategy.Broadcast, scope = sc)),
+      ("knn planar shuffle", sc => SpatialOps.knn(pts, pts.filter(col("pid") % 101 === 0), 5,
+        KnnMetric.Planar, strategy = KnnStrategy.Shuffle, scope = sc)),
+      ("knn geo broadcast", sc => SpatialOps.knn(pts, pts.filter(col("pid") % 997 === 0), 5,
+        KnnMetric.Geo, strategy = KnnStrategy.Broadcast, scope = sc)),
+      ("knn geo shuffle", sc => SpatialOps.knn(pts, pts.filter(col("pid") % 101 === 0), 5,
+        KnnMetric.Geo, strategy = KnnStrategy.Shuffle, scope = sc)),
       ("minHashLshPairs", sc => DedupOps.minHashLshPairs(corpus, sc)),
       ("ngramJaccardPairs", sc => DedupOps.ngramJaccardPairs(corpus, 600, sc)),
       ("duplicateClusters", sc =>

@@ -238,23 +238,17 @@ class LocalGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Every twin on the graph with ids `id(i)` equals its loop run on the
     * same graph with ids `i`, the loop's ids mapped through `id` — the
     * twins depend on ids only through their order, and the loops' own
-    * int64 arithmetic stays clear of the range ends. Twins in `noRows`
-    * must return no rows instead.
+    * int64 arithmetic stays clear of the range ends.
     */
-  private def checkTwins(id: Int => Long, nEdges: Int,
-                         noRows: Set[String] = Set.empty): Unit = {
+  private def checkTwins(id: Int => Long, nEdges: Int): Unit = {
     val dense = graph(i => i.toLong, nEdges)
     val mapped = graph(id, nEdges)
     val toId = org.apache.spark.sql.functions.udf((x: java.lang.Long) =>
       if (x == null) null else java.lang.Long.valueOf(id(x.toInt)))
     twins.foreach { t =>
-      val want =
-        if (noRows(t.name)) Map.empty
-        else {
-          val loop = t.loop(dense)
-          rows(loop.select(loop.columns.toIndexedSeq.map(c =>
-            if (t.idCols.contains(c)) toId(col(c)).as(c) else col(c)): _*))
-        }
+      val loop = t.loop(dense)
+      val want = rows(loop.select(loop.columns.toIndexedSeq.map(c =>
+        if (t.idCols.contains(c)) toId(col(c)).as(c) else col(c)): _*))
       val got = t.op(mapped)
       assert(local(got), t.name)
       assert(rows(got) === want, t.name)
@@ -269,9 +263,7 @@ class LocalGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("an empty edge list: every twin matches its loop") {
-    // hitsLoop's per-round global max is NULL on an empty graph, so the
-    // loop fails there; the twin returns no rows, as every other loop does
-    checkTwins(_.toLong, 0, noRows = Set("hits"))
+    checkTwins(_.toLong, 0)
   }
 
   test("Luby rounds near the long range ends match the loop") {
