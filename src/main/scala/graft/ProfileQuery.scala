@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.operators.{MetricsOps, StageMetric}
 
 /** Dev tool: profile one SparkEntry query — runs it twice (pass 1 warms
   * JIT/codegen, pass 2 is measured) and prints a per-stage table with
@@ -10,24 +10,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * Usage: runMain graft.ProfileQuery <name> [sfDir].
   */
 object ProfileQuery {
-  case class Row(stageId: Int, wallMs: Long, tasks: Int, runMs: Long,
-                 cpuMs: Long, inRec: Long, shRead: Long, shWrite: Long,
-                 name: String)
-
-  class L extends SparkListener {
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val info = sc.stageInfo
-      val m = info.taskMetrics
-      val wallMs = (for { s <- info.submissionTime; c <- info.completionTime }
-        yield c - s).getOrElse(0L)
-      buf.add(Row(info.stageId, wallMs, info.numTasks, m.executorRunTime,
-        m.executorCpuTime / 1000000L, m.inputMetrics.recordsRead,
-        m.shuffleReadMetrics.recordsRead, m.shuffleWriteMetrics.recordsWritten,
-        info.name.takeWhile(_ != '\n')))
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = BenchScale.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
@@ -47,23 +29,22 @@ object ProfileQuery {
     // pass 2: profiled
     graft.core.CacheScope.releaseGlobal()
     spark.sharedState.cacheManager.clearCache()
-    val listener = new L
-    spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    val rows = SparkEntry.queries(name)(spark, sfDir).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-    spark.sparkContext.removeSparkListener(listener)
+    val ((rows, sec), metrics) = MetricsOps.withProgress(spark) {
+      val t0 = System.nanoTime()
+      val n = SparkEntry.queries(name)(spark, sfDir).count()
+      (n, (System.nanoTime() - t0) / 1e9)
+    }
     println(f"[profile] $name measured pass: $sec%.2f s ($rows rows)")
-    import scala.jdk.CollectionConverters._
-    val ms = listener.buf.asScala.toSeq.sortBy(_.stageId)
+    import spark.implicits._
+    val ms = metrics.as[StageMetric].collect().sortBy(_.stageId)
     println(f"${"stage"}%6s ${"wallMs"}%7s ${"tasks"}%5s ${"runMs"}%7s ${"cpuMs"}%7s ${"inRec"}%9s ${"shRead"}%9s ${"shWrite"}%9s  name")
     ms.foreach { r =>
-      println(f"${r.stageId}%6d ${r.wallMs}%7d ${r.tasks}%5d ${r.runMs}%7d " +
-        f"${r.cpuMs}%7d ${r.inRec}%9d ${r.shRead}%9d ${r.shWrite}%9d  ${r.name}")
+      println(f"${r.stageId}%6d ${r.wallMs}%7d ${r.tasks}%5d ${r.executorRunMs}%7d " +
+        f"${r.executorCpuMs}%7d ${r.inputRecords}%9d ${r.shuffleReadRecords}%9d " +
+        f"${r.shuffleWriteRecords}%9d  ${r.name}")
     }
     println(f"[profile] stages=${ms.length} sumWall=${ms.map(_.wallMs).sum} " +
-      f"sumRun=${ms.map(_.runMs).sum} sumCpu=${ms.map(_.cpuMs).sum} " +
+      f"sumRun=${ms.map(_.executorRunMs).sum} sumCpu=${ms.map(_.executorCpuMs).sum} " +
       f"(wall ${sec * 1000}%.0f ms)")
   }
 }

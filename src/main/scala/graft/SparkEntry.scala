@@ -3527,7 +3527,7 @@ object SparkEntry {
     (1 to 8).map(k => s"CAST(ascii(substr($e, $k, 1)) AS BIGINT)")
       .reduceLeft((a, b) => s"($a * 31 + $b)")
 
-  /** DuckDB twins of the 8 VecLshBuckets bucket values (12-bit sign-LSH
+  /** DuckDB twins of the 8 VecLshKernel.buckets values (12-bit sign-LSH
     * signatures) over expression `embExpr`: the deterministic hyperplane
     * weights (core.TextHash.lshWeight) are inlined as double literals, and
     * the dot product is the same ascending-index left-assoc sum the kernel

@@ -118,7 +118,7 @@ object Hll {
   /** Corrected estimate · 1000: linear counting m·lnDet(m/V) when zero
     * registers exist and the raw estimate is <= 2.5m, else raw.
     */
-  def estE3(regSum: Long, nRegs: Int, m: Int): Long = {
+  def estE3(regSum: Long, nRegs: Long, m: Int): Long = {
     val v = m - nRegs
     if (v > 0 && regSum >= lcThreshold(m))
       roundE3(m.toDouble * lnDet(m.toDouble / v.toDouble))

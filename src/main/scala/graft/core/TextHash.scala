@@ -1,7 +1,7 @@
 package graft.core
 
 /** Tight-loop text hashing kernel backing the native Catalyst expressions
-  * (graft.plans.ShingleMinHash / ShingleHashArray). Value-identical to the
+  * (graft.plans.TextHashKernel.minhash / shingles). Value-identical to the
   * Column-composed forms in graft.functions.Fns (shingleHashes/minHash) —
   * those serve as the executable spec; these run ~100x faster because the
   * interpreted higher-order-function path allocates and boxes per element.

@@ -86,15 +86,16 @@ object Fns {
 
   /** Equirectangular integer bin on fix coords at 2^level resolution —
     * exact int64 (generalizes reference/examples/nodedensity.cpp:47-54).
+    * Coordinates outside the domain clamp into the edge cells on both
+    * sides, as core.CellId.cellX/cellY do. The offset is clamped at 0
+    * before the division, so truncating `div` is floor division here.
     */
-  def cellX(lonFix: Column, level: Int): Column = {
-    val max = (1L << level) - 1
-    least(idiv((lonFix + lit(1800000000L)) * lit(1L << level), 3600000000L), lit(max))
-  }
-  def cellY(latFix: Column, level: Int): Column = {
-    val max = (1L << level) - 1
-    least(idiv((latFix + lit(900000000L)) * lit(1L << level), 1800000000L), lit(max))
-  }
+  def cellX(lonFix: Column, level: Int): Column = cellBin(lonFix, 1800000000L, level)
+  def cellY(latFix: Column, level: Int): Column = cellBin(latFix, 900000000L, level)
+
+  private def cellBin(fix: Column, half: Long, level: Int): Column =
+    least(call_function("div", greatest(fix + lit(half), lit(0L)) * lit(1L << level),
+      lit(2 * half)), lit((1L << level) - 1))
 
   /** Morton interleave of two sub-2^16 grid coordinates (magic-number
     * spreading — pure bit ops, exact in any engine).
@@ -342,7 +343,7 @@ object Fns {
 
   /** 64-bit SimHash spec form (4x16-bit bands, see core.TextHash.simHash64
     * for the layout and the recall guarantee). Interpreted and slow —
-    * parity spec for the native SimHash64 expression only.
+    * parity spec for the native TextHashExpressions.simHash64 only.
     */
   def simHash64(text: Column): Column = {
     val toks = regexp_extract_all(text, lit("[^ ]+"), lit(0))

@@ -29,7 +29,7 @@ object DedupOps {
 
   /** Cross-document boilerplate detection at sub-document granularity
     * (the CCNet/RefinedWeb line-dedup adapted to unbroken text): the doc
-    * is cut into non-overlapping `w`-token chunks (native WordChunkHashes
+    * is cut into non-overlapping `w`-token chunks (native TextHashKernel.wordChunks
     * — one codegen'd pass per row, no word explode), a chunk is
     * boilerplate when it occurs in >= `minDocs` DISTINCT documents, and
     * each doc reports how much of it is boilerplate.
@@ -69,7 +69,7 @@ object DedupOps {
   val ShingleLen = 10
 
   /** MinHash signatures (k = NumMinHashes) over character-10-gram shingles
-    * of the first ShingleCap chars, via the native ShingleMinHash
+    * of the first ShingleCap chars, via the native TextHashKernel.minhash
     * expression (the Column-composed Fns form is the executable spec but
     * evaluates interpreted lambdas per character — >100x slower).
     * Parameters tuned so band collisions on non-duplicates stay rare even
@@ -857,7 +857,7 @@ object DedupOps {
   val NearDupBits = 12
 
   /** Embedding-cosine near-duplicates: pairs with round(cos,4) >= threshold.
-    * Candidates from multi-table sign-projection LSH (VecLshBuckets,
+    * Candidates from multi-table sign-projection LSH (VecLshKernel.buckets,
     * 8 tables x 12 bits — the same family the ANN path uses): a pair is a
     * candidate iff some table assigns both vectors the same 12-bit bucket.
     * 4096 buckets per table bound the per-bucket self-join at scale (the

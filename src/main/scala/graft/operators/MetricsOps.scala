@@ -14,7 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 case class StageMetric(stageId: Int, name: String, tasks: Int,
                        inputRecords: Long, shuffleReadRecords: Long,
                        shuffleWriteRecords: Long, outputRecords: Long,
-                       wallMs: Long, recordsPerSec: Double)
+                       wallMs: Long, recordsPerSec: Double,
+                       executorRunMs: Long, executorCpuMs: Long)
 
 class ProgressListener extends SparkListener {
   private val buf = new java.util.concurrent.ConcurrentLinkedQueue[StageMetric]()
@@ -30,7 +31,7 @@ class ProgressListener extends SparkListener {
     buf.add(StageMetric(info.stageId, info.name.takeWhile(_ != '\n'),
       info.numTasks, in, m.shuffleReadMetrics.recordsRead,
       m.shuffleWriteMetrics.recordsWritten, m.outputMetrics.recordsWritten,
-      wallMs, rps))
+      wallMs, rps, m.executorRunTime, m.executorCpuTime / 1000000L))
   }
 
   def snapshot(spark: SparkSession): DataFrame = {

@@ -19,7 +19,7 @@ object SimilarityOps {
 
   /** Approximate cosine top-k via multi-table sign-projection LSH (the
     * scale path): candidates = vectors sharing any of `tables` bucket
-    * signatures with the query (native VecLshBuckets expression), exact
+    * signatures with the query (native [[graft.plans.VecLshKernel.buckets]]), exact
     * cosine reranks the candidate set. Same output schema as the exact
     * form; queries with fewer than k candidates return fewer rows (ANN
     * semantics). At the 10^12 posture the bucket join shuffles only

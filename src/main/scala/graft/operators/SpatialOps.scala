@@ -61,6 +61,12 @@ object SpatialOps {
 
   private lazy val hexagonCover = classifiedCover(Synth.hexagonPolys, CoverLevel)
 
+  /** The hexagons' sorted-interval index: FULL cells from level 4, PARTIAL
+    * cells at level 9.
+    */
+  private lazy val hexagonIndex =
+    graft.plans.PipIntervalKernel.build(Synth.hexagonPolys, 4, 9)
+
   /** Sorted-interval cell-list PIP — the north rule's named strategy, as a
     * pure MAP-stage alternative to the broadcast cell-cover join: an
     * adaptive multi-level cover (coarse FULL interior cells that skip the
@@ -71,13 +77,10 @@ object SpatialOps {
     * explode — so at 10^12 rows it is a single fan-out stage. Results are
     * bit-identical to [[pipJoinConvex]] (same boundary-inclusive kernel).
     */
-  def pipJoinIntervals(spark: SparkSession, points: DataFrame,
-                       minLevel: Int = 4, maxLevel: Int = 9): DataFrame = {
-    val idx = graft.plans.PipIntervalKernel.build(Synth.hexagonPolys, minLevel, maxLevel)
+  def pipJoinIntervals(spark: SparkSession, points: DataFrame): DataFrame =
     points.select(col("pid"),
       explode(graft.plans.PipIntervalHits(
-        spark, col("lon_fix"), col("lat_fix"), idx)).as("poly_id"))
-  }
+        spark, col("lon_fix"), col("lat_fix"), hexagonIndex)).as("poly_id"))
 
   /** PIP ANTI join — points inside NO polygon (the complement face of
     * the join family; the reference's handler fallthrough for objects no
@@ -87,13 +90,10 @@ object SpatialOps {
     * never shuffled and never joined, so the anti costs exactly one
     * codegen'd scan at any scale.
     */
-  def pipAntiJoin(spark: SparkSession, points: DataFrame,
-                  minLevel: Int = 4, maxLevel: Int = 9): DataFrame = {
-    val idx = graft.plans.PipIntervalKernel.build(Synth.hexagonPolys, minLevel, maxLevel)
+  def pipAntiJoin(spark: SparkSession, points: DataFrame): DataFrame =
     points.filter(size(graft.plans.PipIntervalHits(
-        spark, col("lon_fix"), col("lat_fix"), idx)) === 0)
+        spark, col("lon_fix"), col("lat_fix"), hexagonIndex)) === 0)
       .select(col("pid"))
-  }
 
   /** General-polygon PIP via the exact ray-cast kernel (concave rings,
     * holes): the same classified broadcast cover join as the convex path
@@ -150,10 +150,10 @@ object SpatialOps {
     * any polygon count; at 32 partitions AQE handles residual cell skew).
     * Ring geometry rides the cover rows (~100 B per covered cell for
     * admin-scale rings), so refinement — the native row-wise ray-cast
-    * expression PointInRings — runs inside the join's codegen stage with
-    * no second join to fetch geometry. Output (pid, poly_id) is distinct
-    * by construction: a point lies in exactly one cover cell and cover
-    * rows are unique per (poly_id, cell).
+    * kernel [[graft.plans.RingKernel.contains]] — runs inside the join's
+    * codegen stage with no second join to fetch geometry. Output
+    * (pid, poly_id) is distinct by construction: a point lies in exactly
+    * one cover cell and cover rows are unique per (poly_id, cell).
     *
     * Choose coverLevel so a typical polygon spans ~1-4 cells per axis
     * (cell width = 360/2^level degrees); the broadcast-map variants remain
@@ -226,7 +226,8 @@ object SpatialOps {
     * and lies in both covers whenever the bboxes overlap (same trick as
     * HistoryOps.intervalJoin's anchor bucket; no distinct, no shuffle-side
     * dedup state). Refinement is the native exact separating-axis
-    * predicate ConvexIntersects riding the join's codegen stage.
+    * predicate [[graft.plans.RingKernel.convexIntersects]] riding the
+    * join's codegen stage.
     *
     * Inputs: (poly_id, xs, ys) per side. Skew posture: a mega-cell (dense
     * urban extract) fans out through AQE skew-join splitting on the cell
@@ -311,7 +312,8 @@ object SpatialOps {
     * cell, one shuffle_hash equi-join on the cell — each pair appears at
     * most once by construction (B contributes one row), so no dedup pass
     * at all — and the native exact O(m·n) rolling-DP kernel
-    * ([[graft.plans.FrechetDf2]]) rides the join's codegen stage.
+    * ([[graft.plans.RingKernel.discreteFrechet2]]) rides the join's
+    * codegen stage.
     * Output: (way_a, way_b, df2).
     */
   def frechetJoin(tracksA: DataFrame, tracksB: DataFrame, thrFix: Long,
@@ -405,8 +407,9 @@ object SpatialOps {
     * Plan shape: segments cover the cells they CROSS ([[segmentCellCover]],
     * orient-corner test, not bbox), polygons cover their bbox cells
     * (distributed chained explodes — no broadcast); one equi-join on the
-    * cell, exact native refinement ([[graft.plans.SegIntersectsRing]]:
-    * endpoint ray-cast + per-edge straddle tests, all BigInt-exact). A
+    * cell, exact native refinement
+    * ([[graft.plans.RingKernel.segIntersectsRing]]: endpoint ray-cast +
+    * per-edge straddle tests, all BigInt-exact). A
     * (segment, polygon) pair found in several shared cells dedups by KEY
     * (way_id, seq, poly_id) — no tie-break cell needed because the hit
     * count per way is the output, not raw pairs. Candidate volume is
@@ -1179,7 +1182,7 @@ object SpatialOps {
     * coordinates too.
     *
     * Scale posture: a pure per-row array transform — no shuffle, no
-    * join; the native [[graft.plans.ChaikinAxis]] kernel runs the
+    * join; the native [[graft.plans.RingKernel.chaikin]] kernel runs the
     * round loop once per row (the earlier nested-`transform` SQL
     * formulation re-substituted the previous round's tree ~6× per round,
     * a 6^rounds plan blowup that dominated wall time). Output length per
@@ -1470,8 +1473,8 @@ object SpatialOps {
     * cover the cells they cross, one equi-join on the cell, then the
     * int64 [[straddleTest]] prefilter kills the non-crossing candidates
     * in pure codegen BEFORE the allocating BigInt kernel
-    * ([[graft.plans.SegIntersectionFix]], rationals + floor division)
-    * runs on the survivors — candidates outnumber true crossings by
+    * ([[graft.plans.RingKernel.segIntersectionFix]], rationals + floor
+    * division) runs on the survivors — candidates outnumber true crossings by
     * orders of magnitude, so the kernel cost follows the OUTPUT size,
     * not the candidate size. A pair sharing several cover cells yields
     * byte-identical rows — the distinct on the output key dedups them.
@@ -1547,16 +1550,15 @@ object SpatialOps {
   def snapSegCover(segs: DataFrame, radiusFix: Long, level: Int,
                    maxSpanFix: Long): DataFrame = {
     val r = lit(radiusFix)
-    def cl(c: Column) = greatest(lit(0L), c)
     val local = segs.filter(
       abs(col("x1") - col("x0")) <= maxSpanFix &&
       abs(col("y1") - col("y0")) <= maxSpanFix)
     local
-      .withColumn("cy0", cl(Fns.cellY(least(col("y0"), col("y1")) - r, level)))
-      .withColumn("cy1", cl(Fns.cellY(greatest(col("y0"), col("y1")) + r, level)))
+      .withColumn("cy0", Fns.cellY(least(col("y0"), col("y1")) - r, level))
+      .withColumn("cy1", Fns.cellY(greatest(col("y0"), col("y1")) + r, level))
       .withColumn("cell_x", explode(sequence(
-        cl(Fns.cellX(least(col("x0"), col("x1")) - r, level)),
-        cl(Fns.cellX(greatest(col("x0"), col("x1")) + r, level)))))
+        Fns.cellX(least(col("x0"), col("x1")) - r, level),
+        Fns.cellX(greatest(col("x0"), col("x1")) + r, level))))
       .withColumn("cell_y", explode(sequence(col("cy0"), col("cy1"))))
       .select(col("way_id"), col("seq"), col("cell_x"), col("cell_y"),
         col("x0"), col("y0"), col("x1"), col("y1"))
@@ -1817,7 +1819,7 @@ object SpatialOps {
       .select(col("way_id"),
         explode(graft.plans.GeomExpressions.simplifyPolyline(col("pts"), tolFix))
           .as("p"))
-      .select(col("way_id"), col("p.seq").as("seq"),
+      .select(col("way_id"), col("p.seq").cast(pts.schema("seq").dataType).as("seq"),
         col("p.x").as("x"), col("p.y").as("y"))
 
   /** Flat-top hexagonal binning on fix coordinates (axial q/r cells,
@@ -1990,7 +1992,7 @@ object SpatialOps {
   /** TRUE spherical polygon area (the lon-sum spherical-excess form,
     * areaₛ = |Σᵢ (λᵢ₊₁ − λᵢ)·(2 + sin φᵢ + sin φᵢ₊₁)|·R²/2) of a closed
     * fix-coordinate ring given as vertex arrays — the geodesic companion
-    * of the exact planar shoelace (plans.GeomExpressions.RingArea2):
+    * of the exact planar shoelace (plans.GeomExpressions.ringArea2):
     * planar fix² areas compare shapes, but "how many km² does this
     * polygon actually cover" needs the sphere (a fixed fix² area is ~37%
     * smaller in ground km² at 60° latitude than at the equator).
@@ -2252,7 +2254,7 @@ object SpatialOps {
     * (2*order - bucketShift) bits of the index — a contiguous RANGE of the
     * curve, i.e. a compact spatial blob, which is exactly what a
     * range-partitioned file layout assigns to one output file. The encode
-    * is the native codegen'd HilbertIndex over exact integer grid bins —
+    * is the native codegen'd core.CellId.hilbert over exact integer grid bins —
     * a zero-shuffle map stage; the density groupBy is the only exchange.
     */
   def hilbertDensity(points: DataFrame, order: Int, bucketShift: Int): DataFrame = {

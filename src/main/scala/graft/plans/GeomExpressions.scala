@@ -3,10 +3,11 @@ package graft.plans
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType, StructType}
 
 import graft.core.{Planar, TextHash}
 
@@ -175,281 +176,6 @@ object RingKernel {
   }
 }
 
-/** Native convex-hull stats of a point-set column: `[area2, n_vertices]`
-  * (exact integer extreme-edge rule, see [[RingKernel.hullStats]]) — the
-  * per-feature footprint scalar of a spatial pipeline (way extent class,
-  * sliver detection, hull-area/bbox-area compactness). The DuckDB twin is
-  * the same rule formulated relationally (pairs + NOT EXISTS witness).
-  */
-case class HullStats(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "hull_stats"
-
-  override def nullSafeEval(xs: Any, ys: Any): Any =
-    RingKernel.hullStats(xs.asInstanceOf[ArrayData], ys.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (xs, ys) =>
-      s"graft.plans.RingKernel.hullStats($xs, $ys)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Native Chaikin corner-cutting of one coordinate-array axis (exact
-  * integer, see [[RingKernel.chaikin]]) — replaces the nested-`transform`
-  * SQL formulation whose expression tree grew 6^rounds-fold.
-  */
-case class ChaikinAxis(child: Expression, rounds: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "chaikin_axis"
-
-  override def nullSafeEval(a: Any): Any =
-    RingKernel.chaikin(a.asInstanceOf[ArrayData], rounds)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.RingKernel.chaikin($c, $rounds)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native exact ring centroid: `[cx_fix, cy_fix]` of a fixed-point ring
-  * column (shoelace centroid, BigInt, floor-quantized to fix units) —
-  * the label-anchor / cluster-representative scalar of a polygon
-  * pipeline, exact so both engines agree to the last unit.
-  */
-case class RingCentroidFix(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "ring_centroid_fix"
-
-  override def nullSafeEval(xs: Any, ys: Any): Any =
-    RingKernel.centroidFix(xs.asInstanceOf[ArrayData], ys.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (xs, ys) =>
-      s"graft.plans.RingKernel.centroidFix($xs, $ys)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Native exact 2x-signed-area of a fixed-point ring column (shoelace,
-  * BigInt-accumulated). Reference capability: the ring-orientation test
-  * the assembler runs per ring, reference/include/osmium/multipolygon/
-  * builder.hpp (CCW/CW classification), exposed as a scalar.
-  */
-/** Native Hilbert-curve index of a grid cell — core.CellId.hilbert as a
-  * codegen'd scalar so range-partitioned layout writes (the Hilbert
-  * sibling of LayoutOps' z-order) stay a zero-shuffle map stage.
-  */
-case class HilbertIndex(left: Expression, right: Expression, order: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hilbert_index"
-
-  override def nullSafeEval(x: Any, y: Any): Any =
-    graft.core.CellId.hilbert(order, x.asInstanceOf[Long], y.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y) => s"graft.core.CellId.hilbert($order, $x, $y)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-case class RingArea2(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "ring_area2"
-
-  override def nullSafeEval(xs: Any, ys: Any): Any =
-    RingKernel.area2(xs.asInstanceOf[ArrayData], ys.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (xs, ys) => s"graft.plans.RingKernel.area2($xs, $ys)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Native exact convex-convex intersection predicate where BOTH rings are
-  * columns — the refinement of the polygon-polygon overlay join
-  * (SpatialOps.polyIntersectJoin): separating-axis over edge normals,
-  * every orientation test exact (see core.Planar.convexIntersects).
-  * CLOSED semantics (boundary contact intersects) to match the oracle's
-  * strict `cross < 0` separation rule. Geometry rides the joined row, so
-  * both polygon corpora stay fully distributed.
-  */
-case class ConvexIntersects(first: Expression, second: Expression,
-                            third: Expression, fourth: Expression)
-  extends QuaternaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "convex_intersects"
-
-  override def nullSafeEval(axs: Any, ays: Any, bxs: Any, bys: Any): Any =
-    RingKernel.convexIntersects(axs.asInstanceOf[ArrayData], ays.asInstanceOf[ArrayData],
-      bxs.asInstanceOf[ArrayData], bys.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (axs, ays, bxs, bys) =>
-      s"graft.plans.RingKernel.convexIntersects($axs, $ays, $bxs, $bys)")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression, newFourth: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
-}
-
-/** Native exact segment-vs-ring intersection predicate (CLOSED semantics:
-  * endpoint inside the ring, endpoint on the boundary, or any boundary
-  * edge touched/crossed all count) — the refinement of the way-in-polygon
-  * join (SpatialOps.wayPolyJoin). The segment rides as a packed
-  * `[x0,y0,x1,y1]` array (same convention as [[ClipSegRect]]); the ring is
-  * a pair of coordinate-array columns, so both the way corpus and the
-  * polygon corpus stay fully distributed. See core.Planar.segIntersectsRing.
-  */
-case class SegIntersectsRing(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "seg_intersects_ring"
-
-  override def nullSafeEval(seg: Any, xs: Any, ys: Any): Any =
-    RingKernel.segIntersectsRing(seg.asInstanceOf[ArrayData],
-      xs.asInstanceOf[ArrayData], ys.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (seg, xs, ys) =>
-      s"graft.plans.RingKernel.segIntersectsRing($seg, $xs, $ys)")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** Native exact segment-segment intersection POINT — the planarization
-  * kernel (SpatialOps.planarize): floor fix coords of the rational
-  * crossing point, empty array when parallel/collinear or disjoint.
-  * Both segments ride as packed `[x0,y0,x1,y1]` arrays (the
-  * [[SegIntersectsRing]]/[[ClipSegRect]] convention), so both way
-  * corpora stay fully distributed. See core.Planar.segIntersectionFix.
-  */
-case class SegIntersectionFix(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "seg_intersection_fix"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    RingKernel.segIntersectionFix(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.plans.RingKernel.segIntersectionFix($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Native squared discrete Fréchet distance between two coordinate-array
-  * polylines — the refinement kernel of the trajectory-similarity join
-  * (SpatialOps.frechetJoin). O(m·n) rolling-row DP, exact int64 minimax
-  * on fix coords; both track corpora ride the joined row, fully
-  * distributed. See core.Planar.discreteFrechet2.
-  */
-case class FrechetDf2(first: Expression, second: Expression,
-                      third: Expression, fourth: Expression)
-  extends QuaternaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "frechet_df2"
-
-  override def nullSafeEval(axs: Any, ays: Any, bxs: Any, bys: Any): Any =
-    RingKernel.discreteFrechet2(axs.asInstanceOf[ArrayData], ays.asInstanceOf[ArrayData],
-      bxs.asInstanceOf[ArrayData], bys.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (axs, ays, bxs, bys) =>
-      s"graft.plans.RingKernel.discreteFrechet2($axs, $ays, $bxs, $bys)")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression, newFourth: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
-}
-
-/** Native rolling-DP DTW cost on the joined row — the sum sibling of
-  * FrechetDf2 (min over monotone couplings of Σ d² instead of max).
-  * See core.Planar.dtw2.
-  */
-case class DtwD2(first: Expression, second: Expression,
-                 third: Expression, fourth: Expression)
-  extends QuaternaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "dtw_d2"
-
-  override def nullSafeEval(axs: Any, ays: Any, bxs: Any, bys: Any): Any =
-    RingKernel.dtw2(axs.asInstanceOf[ArrayData], ays.asInstanceOf[ArrayData],
-      bxs.asInstanceOf[ArrayData], bys.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (axs, ays, bxs, bys) =>
-      s"graft.plans.RingKernel.dtw2($axs, $ays, $bxs, $bys)")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression, newFourth: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
-}
-
-/** Native exact ray-cast point-in-ring test where the RING IS A COLUMN —
-  * the refinement predicate of the DataFrame-native polygon-corpus PIP join
-  * (SpatialOps.pipJoinPolygons). Unlike PointInPolygonSet (whose polygon
-  * set is a broadcast side table, right for small admin sets), the geometry
-  * here rides the joined row, so the polygon corpus can be arbitrarily
-  * large and fully distributed. Boundary-inclusive, exact int64 — on CCW
-  * convex rings it equals the half-plane conjunction the DuckDB oracle
-  * computes. Reference capability: PreparedPolygon::contains,
-  * reference/include/osmium/multipolygon/builder.hpp:707-711.
-  */
-case class PointInRings(first: Expression, second: Expression,
-                        third: Expression, fourth: Expression)
-  extends QuaternaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "point_in_rings"
-
-  override def nullSafeEval(x: Any, y: Any, xs: Any, ys: Any): Any =
-    RingKernel.contains(x.asInstanceOf[Long], y.asInstanceOf[Long],
-      xs.asInstanceOf[ArrayData], ys.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y, xs, ys) =>
-      s"graft.plans.RingKernel.contains($x, $y, $xs, $ys)")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression, newFourth: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
-}
-
 /** Row-wise Douglas-Peucker kernel over one way's ordered point array. */
 object PolylineKernel {
 
@@ -505,30 +231,6 @@ object PolylineKernel {
   }
 }
 
-/** Native Douglas-Peucker simplification of a way's ordered (seq, x, y)
-  * struct-array column — the vector-tile generalization step (ways keep
-  * their shape within tol at render scale). The geometry rides the row
-  * (no broadcast), so the way corpus is fully distributed; the array
-  * in/array out shape keeps the per-way recursion OFF the shuffle (one
-  * groupBy builds the array, the kernel runs map-side).
-  */
-case class SimplifyPolyline(child: Expression, tolFix: Long)
-  extends UnaryExpression {
-
-  override def dataType: DataType = child.dataType
-  override def prettyName: String = "simplify_polyline"
-
-  override def nullSafeEval(pts: Any): Any =
-    PolylineKernel.simplify(pts.asInstanceOf[ArrayData], tolFix)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, p =>
-      s"graft.plans.PolylineKernel.simplify($p, ${tolFix}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ClipKernel {
 
   /** Exact Liang-Barsky clip of segment [x0,y0,x1,y1] to the closed
@@ -568,29 +270,6 @@ object ClipKernel {
       x0 + Math.floorDiv(dx * n0, d0), y0 + Math.floorDiv(dy * n0, d0),
       x0 + Math.floorDiv(dx * n1, d1), y0 + Math.floorDiv(dy * n1, d1)))
   }
-}
-
-/** Native exact segment-to-rect clip (`[x0,y0,x1,y1] × [rx0,ry0,rx1,ry1]
-  * → [cx0,cy0,cx1,cy1]`, see [[ClipKernel.clipSegRect]]) — the vector-tile
-  * geometry cut. Both operands ride the row (no broadcast), so the plan
-  * stays a pure map stage over the (segment, cell) cover rows.
-  */
-case class ClipSegRect(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "clip_seg_rect"
-
-  override def nullSafeEval(seg: Any, rect: Any): Any =
-    ClipKernel.clipSegRect(seg.asInstanceOf[ArrayData], rect.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, r) =>
-      s"graft.plans.ClipKernel.clipSegRect($s, $r)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Broadcast-backed kernel for IVF coarse-quantizer assignment. */
@@ -954,26 +633,6 @@ case class PqDistTableRes(left: Expression, right: Expression,
     copy(left = newLeft, right = newRight)
 }
 
-/** Native ADC lookup-sum: long score of (distTable, codes) — pure, no
-  * broadcast, m array reads per row.
-  */
-case class PqAdcScore(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "pq_adc_score"
-
-  override def nullSafeEval(dtab: Any, codes: Any): Any =
-    PqKernel.adc(dtab.asInstanceOf[ArrayData], codes.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (d, c) => s"graft.plans.PqKernel.adc($d, $c)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Native IVF coarse-quantizer assignment: `array<long>` of the `top`
   * nearest centroid ids (cosine rounded to 1e-6 desc, ties by cid asc)
   * from a BROADCAST centroid table. The centroid table travels as a Spark
@@ -1005,62 +664,132 @@ case class VecNearestCentroids(child: Expression, top: Int,
 }
 
 object GeomExpressions {
+  private val LongArray = ArrayType(LongType, containsNull = false)
+
+  /** The (seq, x, y) point array [[PolylineKernel.simplify]] reads and
+    * returns; `seq` only orders the points.
+    */
+  private val PolylinePoints = ArrayType(new StructType()
+    .add("seq", LongType).add("x", LongType).add("y", LongType))
+
+  /** Native exact ray-cast point-in-ring test where the RING IS A COLUMN —
+    * the refinement predicate of the DataFrame-native polygon-corpus PIP join
+    * (SpatialOps.pipJoinPolygons). Unlike PointInPolygonSet (whose polygon
+    * set is a broadcast side table, right for small admin sets), the geometry
+    * here rides the joined row, so the polygon corpus can be arbitrarily
+    * large and fully distributed. Boundary-inclusive, exact int64 — on CCW
+    * convex rings it equals the half-plane conjunction the DuckDB oracle
+    * computes. Reference capability: PreparedPolygon::contains,
+    * reference/include/osmium/multipolygon/builder.hpp:707-711.
+    */
   def pointInRings(x: Column, y: Column, xs: Column, ys: Column): Column =
-    GraftColumnBridge.column(PointInRings(
-      GraftColumnBridge.expression(x), GraftColumnBridge.expression(y),
-      GraftColumnBridge.expression(xs), GraftColumnBridge.expression(ys)))
+    NativeCall(RingKernel, "contains", BooleanType, x, y, xs, ys)
 
   def vecNearestCentroids(vec: Column, top: Int,
                           bc: Broadcast[CentroidKernel.Cents]): Column =
     GraftColumnBridge.column(VecNearestCentroids(
       GraftColumnBridge.expression(vec), top, bc))
 
+  /** Native exact convex-convex intersection predicate where BOTH rings are
+    * columns — the refinement of the polygon-polygon overlay join
+    * (SpatialOps.polyIntersectJoin): separating-axis over edge normals,
+    * every orientation test exact (see core.Planar.convexIntersects).
+    * CLOSED semantics (boundary contact intersects) to match the oracle's
+    * strict `cross < 0` separation rule. Geometry rides the joined row, so
+    * both polygon corpora stay fully distributed.
+    */
   def convexIntersects(axs: Column, ays: Column, bxs: Column, bys: Column): Column =
-    GraftColumnBridge.column(ConvexIntersects(
-      GraftColumnBridge.expression(axs), GraftColumnBridge.expression(ays),
-      GraftColumnBridge.expression(bxs), GraftColumnBridge.expression(bys)))
+    NativeCall(RingKernel, "convexIntersects", BooleanType, axs, ays, bxs, bys)
 
+  /** Native exact segment-vs-ring intersection predicate (CLOSED semantics:
+    * endpoint inside the ring, endpoint on the boundary, or any boundary
+    * edge touched/crossed all count) — the refinement of the way-in-polygon
+    * join (SpatialOps.wayPolyJoin). The segment rides as a packed
+    * `[x0,y0,x1,y1]` array (same convention as [[clipSegRect]]); the ring is
+    * a pair of coordinate-array columns, so both the way corpus and the
+    * polygon corpus stay fully distributed. See core.Planar.segIntersectsRing.
+    */
   def segIntersectsRing(seg: Column, xs: Column, ys: Column): Column =
-    GraftColumnBridge.column(SegIntersectsRing(
-      GraftColumnBridge.expression(seg), GraftColumnBridge.expression(xs),
-      GraftColumnBridge.expression(ys)))
+    NativeCall(RingKernel, "segIntersectsRing", BooleanType, seg, xs, ys)
 
+  /** Native exact 2x-signed-area of a fixed-point ring column (shoelace,
+    * BigInt-accumulated, see [[RingKernel.area2]]). Reference capability:
+    * the ring-orientation test the assembler runs per ring,
+    * reference/include/osmium/multipolygon/builder.hpp (CCW/CW
+    * classification), exposed as a scalar.
+    */
   def ringArea2(xs: Column, ys: Column): Column =
-    GraftColumnBridge.column(RingArea2(
-      GraftColumnBridge.expression(xs), GraftColumnBridge.expression(ys)))
+    NativeCall(RingKernel, "area2", LongType, xs, ys)
 
+  /** Native exact segment-segment intersection POINT — the planarization
+    * kernel (SpatialOps.planarize): floor fix coords of the rational
+    * crossing point, empty array when parallel/collinear or disjoint.
+    * Both segments ride as packed `[x0,y0,x1,y1]` arrays (the
+    * [[segIntersectsRing]]/[[clipSegRect]] convention), so both way
+    * corpora stay fully distributed. See core.Planar.segIntersectionFix.
+    */
   def segIntersectionFix(segA: Column, segB: Column): Column =
-    GraftColumnBridge.column(SegIntersectionFix(
-      GraftColumnBridge.expression(segA), GraftColumnBridge.expression(segB)))
+    NativeCall(RingKernel, "segIntersectionFix", LongArray, segA, segB)
 
+  /** Native squared discrete Fréchet distance between two coordinate-array
+    * polylines — the refinement kernel of the trajectory-similarity join
+    * (SpatialOps.frechetJoin). O(m·n) rolling-row DP, exact int64 minimax
+    * on fix coords; both track corpora ride the joined row, fully
+    * distributed. See core.Planar.discreteFrechet2.
+    */
   def frechetDf2(axs: Column, ays: Column, bxs: Column, bys: Column): Column =
-    GraftColumnBridge.column(FrechetDf2(
-      GraftColumnBridge.expression(axs), GraftColumnBridge.expression(ays),
-      GraftColumnBridge.expression(bxs), GraftColumnBridge.expression(bys)))
+    NativeCall(RingKernel, "discreteFrechet2", LongType, axs, ays, bxs, bys)
 
+  /** Native rolling-DP DTW cost on the joined row — the sum sibling of
+    * [[frechetDf2]] (min over monotone couplings of Σ d² instead of max).
+    * See core.Planar.dtw2.
+    */
   def dtwD2(axs: Column, ays: Column, bxs: Column, bys: Column): Column =
-    GraftColumnBridge.column(DtwD2(
-      GraftColumnBridge.expression(axs), GraftColumnBridge.expression(ays),
-      GraftColumnBridge.expression(bxs), GraftColumnBridge.expression(bys)))
+    NativeCall(RingKernel, "dtw2", LongType, axs, ays, bxs, bys)
 
+  /** Native Hilbert-curve index of a grid cell — core.CellId.hilbert as a
+    * codegen'd scalar so range-partitioned layout writes (the Hilbert
+    * sibling of LayoutOps' z-order) stay a zero-shuffle map stage.
+    */
   def hilbertIndex(x: Column, y: Column, order: Int): Column =
-    GraftColumnBridge.column(HilbertIndex(
-      GraftColumnBridge.expression(x), GraftColumnBridge.expression(y), order))
+    NativeCall(graft.core.CellId, "hilbert", LongType, lit(order), x, y)
 
+  /** Native Douglas-Peucker simplification of a way's ordered (seq, x, y)
+    * struct-array column — the vector-tile generalization step (ways keep
+    * their shape within tol at render scale). The geometry rides the row
+    * (no broadcast), so the way corpus is fully distributed; the array
+    * in/array out shape keeps the per-way recursion OFF the shuffle (one
+    * groupBy builds the array, the kernel runs map-side). `pts` is cast to
+    * `array<struct<seq: bigint, x: bigint, y: bigint>>`, the result type.
+    */
   def simplifyPolyline(pts: Column, tolFix: Long): Column =
-    GraftColumnBridge.column(
-      SimplifyPolyline(GraftColumnBridge.expression(pts), tolFix))
+    NativeCall(PolylineKernel, "simplify", PolylinePoints,
+      pts.cast(PolylinePoints), lit(tolFix))
 
+  /** Native exact ring centroid: `[cx_fix, cy_fix]` of a fixed-point ring
+    * column (shoelace centroid, BigInt, floor-quantized to fix units, see
+    * [[RingKernel.centroidFix]]) — the label-anchor / cluster-representative
+    * scalar of a polygon pipeline, exact so both engines agree to the last
+    * unit.
+    */
   def ringCentroidFix(xs: Column, ys: Column): Column =
-    GraftColumnBridge.column(RingCentroidFix(
-      GraftColumnBridge.expression(xs), GraftColumnBridge.expression(ys)))
+    NativeCall(RingKernel, "centroidFix", LongArray, xs, ys)
 
+  /** Native convex-hull stats of a point-set column: `[area2, n_vertices]`
+    * (exact integer extreme-edge rule, see [[RingKernel.hullStats]]) — the
+    * per-feature footprint scalar of a spatial pipeline (way extent class,
+    * sliver detection, hull-area/bbox-area compactness). The DuckDB twin is
+    * the same rule formulated relationally (pairs + NOT EXISTS witness).
+    */
   def hullStats(xs: Column, ys: Column): Column =
-    GraftColumnBridge.column(HullStats(
-      GraftColumnBridge.expression(xs), GraftColumnBridge.expression(ys)))
+    NativeCall(RingKernel, "hullStats", LongArray, xs, ys)
 
+  /** Native Chaikin corner-cutting of one coordinate-array axis (exact
+    * integer, see [[RingKernel.chaikin]]) — replaces the nested-`transform`
+    * SQL formulation whose expression tree grew 6^rounds-fold.
+    */
   def chaikinAxis(a: Column, rounds: Int): Column =
-    GraftColumnBridge.column(ChaikinAxis(GraftColumnBridge.expression(a), rounds))
+    NativeCall(RingKernel, "chaikin", LongArray, a, lit(rounds))
 
   def pqEncode(vec: Column, bc: Broadcast[PqKernel.Book]): Column =
     GraftColumnBridge.column(PqEncode(GraftColumnBridge.expression(vec), bc))
@@ -1068,9 +797,11 @@ object GeomExpressions {
   def pqDistTable(vec: Column, bc: Broadcast[PqKernel.Book]): Column =
     GraftColumnBridge.column(PqDistTable(GraftColumnBridge.expression(vec), bc))
 
+  /** Native ADC lookup-sum: long score of (distTable, codes) — pure, no
+    * broadcast, m array reads per row.
+    */
   def pqAdcScore(dtab: Column, codes: Column): Column =
-    GraftColumnBridge.column(PqAdcScore(
-      GraftColumnBridge.expression(dtab), GraftColumnBridge.expression(codes)))
+    NativeCall(PqKernel, "adc", LongType, dtab, codes)
 
   def pqEncodeRes(vec: Column, cid: Column,
                   centsBc: Broadcast[CentroidKernel.Cents],
@@ -1084,7 +815,11 @@ object GeomExpressions {
     GraftColumnBridge.column(PqDistTableRes(GraftColumnBridge.expression(vec),
       GraftColumnBridge.expression(cid), centsBc, bookBc))
 
+  /** Native exact segment-to-rect clip (`[x0,y0,x1,y1] × [rx0,ry0,rx1,ry1]
+    * → [cx0,cy0,cx1,cy1]`, see [[ClipKernel.clipSegRect]]) — the vector-tile
+    * geometry cut. Both operands ride the row (no broadcast), so the plan
+    * stays a pure map stage over the (segment, cell) cover rows.
+    */
   def clipSegRect(seg: Column, rect: Column): Column =
-    GraftColumnBridge.column(ClipSegRect(
-      GraftColumnBridge.expression(seg), GraftColumnBridge.expression(rect)))
+    NativeCall(ClipKernel, "clipSegRect", LongArray, seg, rect)
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedExtractValue, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, LambdaFunction, Literal, UnresolvedNamedLambdaVariable}
@@ -67,95 +67,66 @@ object GraftExtensions {
           escaped(UnresolvedExtractValue(e, str("value")), escape),
           str(suffix)))))
 
+  private def sqlFn(name: String)(build: Seq[Expression] => Expression) =
+    (new FunctionIdentifier(name),
+      new ExpressionInfo(classOf[GraftExtensions].getName, name), build)
+
+  // a native kernel's SQL face calls its Column builder, so the kernel's
+  // method name and result type live in one place
+  private def native(name: String)(build: Seq[Expression] => Column) =
+    sqlFn(name)(args => GraftColumnBridge.tree(build(args)))
+  private def c(e: Expression): Column = GraftColumnBridge.column(e)
+
   /** (identifier, info, builder) triples — the injectFunction tuple shape,
     * also consumable by FunctionRegistry.registerFunction.
     */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (new FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashArray].getName, "shingle_hashes"),
-      (args: Seq[Expression]) =>
-        ShingleHashArray(args(0), intArg(args(1), "cap"), intArg(args(2), "len"))),
+    native("shingle_hashes")(a => TextHashExpressions.shingleHashes(c(a(0)),
+      intArg(a(1), "cap"), intArg(a(2), "len"))),
 
-    (new FunctionIdentifier("shingle_minhash"),
-      new ExpressionInfo(classOf[ShingleMinHash].getName, "shingle_minhash"),
-      (args: Seq[Expression]) =>
-        ShingleMinHash(args(0), intArg(args(1), "cap"),
-          intArg(args(2), "len"), intArg(args(3), "k"))),
+    native("shingle_minhash")(a => TextHashExpressions.shingleMinHash(c(a(0)),
+      intArg(a(1), "cap"), intArg(a(2), "len"), intArg(a(3), "k"))),
 
-    (new FunctionIdentifier("simhash16"),
-      new ExpressionInfo(classOf[SimHash16].getName, "simhash16"),
-      (args: Seq[Expression]) => SimHash16(args(0))),
+    native("simhash16")(a => TextHashExpressions.simHash16(c(a(0)))),
 
-    (new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (args: Seq[Expression]) => SimHash64(args(0))),
+    native("simhash64")(a => TextHashExpressions.simHash64(c(a(0)))),
 
-    (new FunctionIdentifier("vec_lsh_buckets"),
-      new ExpressionInfo(classOf[VecLshBuckets].getName, "vec_lsh_buckets"),
-      (args: Seq[Expression]) =>
-        VecLshBuckets(args(0), intArg(args(1), "tables"), intArg(args(2), "bits"))),
+    native("vec_lsh_buckets")(a => TextHashExpressions.vecLshBuckets(c(a(0)),
+      intArg(a(1), "tables"), intArg(a(2), "bits"))),
 
-    (new FunctionIdentifier("tags_kv"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "tags_kv"),
-      (args: Seq[Expression]) =>
-        tagsToString(args(0), "", "", "=", "", strArg(args(1), "join"))),
+    sqlFn("tags_kv")(a => tagsToString(a(0), "", "", "=", "", strArg(a(1), "join"))),
 
-    (new FunctionIdentifier("tags_hstore"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "tags_hstore"),
-      (args: Seq[Expression]) =>
-        tagsToString(args(0), "\\\"", "\"", "\"=>\"", "\"", ",")),
+    sqlFn("tags_hstore")(a => tagsToString(a(0), "\\\"", "\"", "\"=>\"", "\"", ",")),
 
-    (new FunctionIdentifier("url_norm_host"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "url_norm_host"),
-      (args: Seq[Expression]) => fn("lower", fn("regexp_extract", args(0),
-        str(graft.functions.Fns.UrlHostRegex), Literal(1)))),
+    sqlFn("url_norm_host")(a => fn("lower", fn("regexp_extract", a(0),
+      str(graft.functions.Fns.UrlHostRegex), Literal(1)))),
 
     // ---- geometry catalog (the reference's JS toWKT/geometry surface,
-    // wrapper/geometry.hpp:81-213, as SQL functions over native exprs) ----
+    // wrapper/geometry.hpp:81-213, as SQL functions over native kernels) ----
 
-    (new FunctionIdentifier("point_wkt"),
-      new ExpressionInfo(classOf[PointWkt].getName, "point_wkt"),
-      (args: Seq[Expression]) => PointWkt(args(0), args(1))),
+    native("point_wkt")(a => TextHashExpressions.pointWkt(c(a(0)), c(a(1)))),
 
-    (new FunctionIdentifier("ring_area2"),
-      new ExpressionInfo(classOf[RingArea2].getName, "ring_area2"),
-      (args: Seq[Expression]) => RingArea2(args(0), args(1))),
+    native("ring_area2")(a => GeomExpressions.ringArea2(c(a(0)), c(a(1)))),
 
-    (new FunctionIdentifier("point_in_rings"),
-      new ExpressionInfo(classOf[PointInRings].getName, "point_in_rings"),
-      (args: Seq[Expression]) =>
-        PointInRings(args(0), args(1), args(2), args(3))),
+    native("point_in_rings")(a =>
+      GeomExpressions.pointInRings(c(a(0)), c(a(1)), c(a(2)), c(a(3)))),
 
-    (new FunctionIdentifier("simplify_polyline"),
-      new ExpressionInfo(classOf[SimplifyPolyline].getName, "simplify_polyline"),
-      (args: Seq[Expression]) =>
-        SimplifyPolyline(args(0), intArg(args(1), "tol_fix").toLong)),
+    native("simplify_polyline")(a =>
+      GeomExpressions.simplifyPolyline(c(a(0)), intArg(a(1), "tol_fix").toLong)),
 
-    (new FunctionIdentifier("clip_seg_rect"),
-      new ExpressionInfo(classOf[ClipSegRect].getName, "clip_seg_rect"),
-      (args: Seq[Expression]) => ClipSegRect(args(0), args(1))),
+    native("clip_seg_rect")(a => GeomExpressions.clipSegRect(c(a(0)), c(a(1)))),
 
-    (new FunctionIdentifier("ln_e6"),
-      new ExpressionInfo(classOf[LnE6].getName, "ln_e6"),
-      (args: Seq[Expression]) => LnE6(args(0))),
+    native("ln_e6")(a => HllExpressions.lnE6(c(a(0)))),
 
-    (new FunctionIdentifier("haversine_m"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "haversine_m"),
-      (args: Seq[Expression]) => haversineTree(args(0), args(1), args(2), args(3))),
+    sqlFn("haversine_m")(a => haversineTree(a(0), a(1), a(2), a(3))),
 
-    (new FunctionIdentifier("geohash"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, "geohash"),
-      (args: Seq[Expression]) =>
-        geohashTree(args(0), args(1), intArg(args(2), "precision"))),
+    sqlFn("geohash")(a => geohashTree(a(0), a(1), intArg(a(2), "precision"))),
 
-    (new FunctionIdentifier("convex_intersects"),
-      new ExpressionInfo(classOf[ConvexIntersects].getName, "convex_intersects"),
-      (args: Seq[Expression]) =>
-        ConvexIntersects(args(0), args(1), args(2), args(3))),
+    native("convex_intersects")(a =>
+      GeomExpressions.convexIntersects(c(a(0)), c(a(1)), c(a(2)), c(a(3)))),
 
-    (new FunctionIdentifier("seg_intersects_ring"),
-      new ExpressionInfo(classOf[SegIntersectsRing].getName, "seg_intersects_ring"),
-      (args: Seq[Expression]) => SegIntersectsRing(args(0), args(1), args(2))))
+    native("seg_intersects_ring")(a =>
+      GeomExpressions.segIntersectsRing(c(a(0)), c(a(1)), c(a(2)))))
 
   /** [[graft.operators.SpatialOps.geohashCol]] as a parser-shaped tree —
     * the same exact-integer bins and bit interleave, each base32 char one

@@ -1,66 +1,29 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.LongType
 
 import graft.core.Hll
 
-/** Native HLL estimator finish: est_e3 from (reg_sum, n_regs) via the
-  * core.Hll kernel — raw estimator above the linear-counting threshold,
-  * m·lnDet(m/zeroRegs) below. A Column-composed twin of Hll.lnDet is
-  * possible but its range-reduction CASE and series subtrees duplicate
-  * ~26x through (t-1)/(t+1) and the Horner chain and blow the plan up;
-  * one codegen'd static call keeps the plan O(1) and the arithmetic
-  * bit-identical to the streaming kernel and (by fixed IEEE op order)
-  * the DuckDB oracle.
-  */
-case class HllEstE3(left: Expression, right: Expression, m: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hll_est_e3"
-
-  override def nullSafeEval(regSum: Any, nRegs: Any): Any =
-    Hll.estE3(regSum.asInstanceOf[Long], nRegs.asInstanceOf[Long].toInt, m)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (rs, nr) =>
-      s"graft.core.Hll.estE3($rs, (int) $nr, $m)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Native round(lnDet(x)·1e6) — one codegen'd call per row for the same
-  * plan-size reason as HllEstE3 (the Column-composed lnDet twin
-  * duplicates its range-reduction/series subtrees ~26x).
-  */
-case class LnE6(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "ln_e6"
-
-  override def nullSafeEval(x: Any): Any =
-    Hll.lnE6(x.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, x => s"graft.core.Hll.lnE6($x)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object HllExpressions {
-  /** est_e3 of (regSum: long, nRegs: long) at register count m. */
+  /** est_e3 of (regSum: long, nRegs: long) at register count m — the
+    * native HLL estimator finish via the core.Hll kernel: raw estimator
+    * above the linear-counting threshold, m·lnDet(m/zeroRegs) below. A
+    * Column-composed twin of Hll.lnDet is possible but its range-reduction
+    * CASE and series subtrees duplicate ~26x through (t-1)/(t+1) and the
+    * Horner chain and blow the plan up; one codegen'd static call keeps the
+    * plan O(1) and the arithmetic bit-identical to the streaming kernel and
+    * (by fixed IEEE op order) the DuckDB oracle.
+    */
   def hllEstE3(regSum: Column, nRegs: Column, m: Int): Column =
-    GraftColumnBridge.column(HllEstE3(GraftColumnBridge.expression(regSum),
-      GraftColumnBridge.expression(nRegs), m))
+    NativeCall(Hll, "estE3", LongType, regSum, nRegs, lit(m))
 
-  /** round(lnDet(x)·1e6) of a double column in [1, 2^21). */
+  /** round(lnDet(x)·1e6) of a double column in [1, 2^21) — one codegen'd
+    * call per row for the same plan-size reason as [[hllEstE3]] (the
+    * Column-composed lnDet twin duplicates its range-reduction/series
+    * subtrees ~26x).
+    */
   def lnE6(x: Column): Column =
-    GraftColumnBridge.column(LnE6(GraftColumnBridge.expression(x)))
+    NativeCall(Hll, "lnE6", LongType, x)
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.TextHash
@@ -41,6 +42,11 @@ object TextHashKernel {
 
   def slidingNgrams(s: UTF8String, n: Int): GenericArrayData =
     new GenericArrayData(TextHash.slidingNgramHashes(s.toString, n))
+
+  def simHash16(s: UTF8String): Long = TextHash.simHash16(s.toString)
+  def simHash64(s: UTF8String): Long = TextHash.simHash64(s.toString)
+  def docFingerprint(s: UTF8String): Long = TextHash.docFingerprint(s.toString)
+  def linearScore(s: UTF8String): Long = TextHash.linearScore(s.toString)
 }
 
 /** Broadcast-backed membership-count kernel (sorted long array +
@@ -151,213 +157,11 @@ case class CountInSortedSet(child: Expression, setBc: Broadcast[Array[Long]])
     copy(child = newChild)
 }
 
-/** Native `array<long>` of character n-gram shingle hashes. Replaces the
-  * Column-composed Fns.shingleHashes in hot paths: the interpreted
-  * higher-order-function form evaluates a boxed lambda per character and
-  * was measured >100x slower at sf0.1 (see DedupOps).
-  */
-case class ShingleHashArray(child: Expression, cap: Int, len: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "shingle_hashes"
-
-  override def nullSafeEval(text: Any): Any =
-    TextHashKernel.shingles(text.asInstanceOf[UTF8String], cap, len)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.plans.TextHashKernel.shingles($t, $cap, $len)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native `array<long>` of non-overlapping w-token chunk hashes — the
-  * per-row key array of the CCNet-style cross-document boilerplate dedup
-  * (DedupOps.boilerplateChunks). Kernel: TextHash.wordChunkHashes.
-  */
-case class WordChunkHashes(child: Expression, w: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "word_chunk_hashes"
-
-  override def nullSafeEval(text: Any): Any =
-    TextHashKernel.wordChunks(text.asInstanceOf[UTF8String], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.plans.TextHashKernel.wordChunks($t, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native `array<long>` of SLIDING n-token window hashes — the
-  * per-position key array of benchmark decontamination
-  * (DedupOps.decontaminate). Kernel: TextHash.slidingNgramHashes.
-  */
-case class SlidingNgramHashes(child: Expression, n: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "sliding_ngram_hashes"
-
-  override def nullSafeEval(text: Any): Any =
-    TextHashKernel.slidingNgrams(text.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.plans.TextHashKernel.slidingNgrams($t, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native `array<long>` MinHash signature over character n-gram shingles —
-  * one pass, no per-element boxing; value-identical to
-  * Fns.minHashArray(Fns.shingleHashes(...)) (property-tested).
-  */
-case class ShingleMinHash(child: Expression, cap: Int, len: Int, k: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "shingle_minhash"
-
-  override def nullSafeEval(text: Any): Any =
-    TextHashKernel.minhash(text.asInstanceOf[UTF8String], cap, len, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.plans.TextHashKernel.minhash($t, $cap, $len, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native 16-bit SimHash (long) — value-identical to Fns.simHash16. */
-case class SimHash16(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash16"
-
-  override def nullSafeEval(text: Any): Any =
-    TextHash.simHash16(text.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.core.TextHash.simHash16($t.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native 64-bit SimHash (4x16-bit bands) — value-identical to
-  * Fns.simHash64; band layout documented at core.TextHash.simHash64.
-  */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-
-  override def nullSafeEval(text: Any): Any =
-    TextHash.simHash64(text.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.core.TextHash.simHash64($t.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native document fingerprint (sum of token hashes mod 2^61-1) —
-  * value-identical to Fns.docFingerprint, replacing its interpreted
-  * aggregate-over-tokens lambda in hot ingest paths.
-  */
-case class DocFingerprint(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "doc_fingerprint"
-
-  override def nullSafeEval(text: Any): Any =
-    TextHash.docFingerprint(text.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.core.TextHash.docFingerprint($t.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Hashed-token linear classifier score — fastText-style inference as one
-  * codegen'd scalar (kernel: TextHash.linearScore), so classifier-based
-  * corpus filtering is a zero-shuffle map stage.
-  */
-case class LinearScore(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "linear_score"
-
-  override def nullSafeEval(text: Any): Any =
-    TextHash.linearScore(text.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.core.TextHash.linearScore($t.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Per-mille share of a document's most frequent n-gram shingle — the
-  * duplicate-n-gram repetition quality signal. A PURE PER-ROW function:
-  * computing it with explode + two groupBys shuffles rows*shingles rows
-  * for nothing; this kernel sorts the row's own shingle array and counts
-  * the longest run, so the whole query is one map stage.
-  */
-case class RepNgramPm(child: Expression, cap: Int, len: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "rep_ngram_pm"
-
-  override def nullSafeEval(text: Any): Any =
-    TextHashKernel.repNgramPm(text.asInstanceOf[UTF8String], cap, len)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t =>
-      s"graft.plans.TextHashKernel.repNgramPm($t, $cap, $len)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Codegen bridge for the cosine kernel (ArrayData float unwrap). */
 object VecCosineKernel {
   def cosine(a: org.apache.spark.sql.catalyst.util.ArrayData,
              b: org.apache.spark.sql.catalyst.util.ArrayData): Double =
     TextHash.cosine(a.toFloatArray(), b.toFloatArray())
-}
-
-/** Native cosine similarity over two `array<float>` embeddings —
-  * value-identical to the Column spec form Fns.cosineSim (same
-  * ascending-index double accumulation), but a tight primitive loop
-  * inside whole-stage codegen instead of interpreted zip_with/aggregate
-  * lambdas (the measured 10-100x HOF penalty).
-  */
-case class VecCosine(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def prettyName: String = "vec_cosine"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VecCosineKernel.cosine(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.VecCosineKernel.cosine($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Codegen bridge for the WKT point writer (C++ setprecision(10) parity
@@ -367,26 +171,6 @@ object WktKernel {
   def pointWkt(lonFix: Long, latFix: Long): UTF8String =
     UTF8String.fromString(
       s"POINT(${graft.core.Wkt.fmtG(lonFix / 1e7)} ${graft.core.Wkt.fmtG(latFix / 1e7)})")
-}
-
-/** Native WKT point formatter — keeps q_wkt-style exports inside
-  * whole-stage codegen where the equivalent Scala UDF would break the
-  * span (the reference's ostream writer, geometry/point.hpp:70-75).
-  */
-case class PointWkt(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-  override def prettyName: String = "point_wkt"
-
-  override def nullSafeEval(x: Any, y: Any): Any =
-    WktKernel.pointWkt(x.asInstanceOf[Long], y.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y) => s"graft.plans.WktKernel.pointWkt($x, $y)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Codegen bridge for the GeoJSON LineString feature writer (same fmtG
@@ -412,30 +196,6 @@ object GeoJsonKernel {
   }
 }
 
-/** Native GeoJSON Feature writer for fix-coordinate line geometries —
-  * the sibling sink format of the WKT/WKB writers, kept inside
-  * whole-stage codegen (a Scala UDF would break the span).
-  */
-case class LineGeoJson(first: Expression, second: Expression,
-                       third: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-  override def prettyName: String = "line_geojson"
-
-  override def nullSafeEval(id: Any, xs: Any, ys: Any): Any =
-    GeoJsonKernel.lineFeature(id.asInstanceOf[Long],
-      xs.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      ys.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b, c) => s"graft.plans.GeoJsonKernel.lineFeature($a, $b, $c)")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
 /** Codegen bridge for the LSH-bucket kernel (ArrayData float unwrap). */
 object VecLshKernel {
   def buckets(vec: org.apache.spark.sql.catalyst.util.ArrayData,
@@ -443,77 +203,102 @@ object VecLshKernel {
     new GenericArrayData(TextHash.lshBuckets(vec.toFloatArray(), tables, bits))
 }
 
-/** Native sign-projection LSH buckets over an `array<float>` embedding:
-  * `tables` independent `bits`-bit signatures from deterministic
-  * hyperplanes (core.TextHash.lshWeight). The ANN scale path for
-  * similarity search — candidates come from bucket equality, exact cosine
-  * reranks.
-  */
-case class VecLshBuckets(child: Expression, tables: Int, bits: Int)
-  extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "vec_lsh_buckets"
-
-  override def nullSafeEval(vec: Any): Any =
-    VecLshKernel.buckets(
-      vec.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], tables, bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v =>
-      s"graft.plans.VecLshKernel.buckets($v, $tables, $bits)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object TextHashExpressions {
+  private val LongArray = ArrayType(LongType, containsNull = false)
+
+  /** Native 16-bit SimHash (long) — value-identical to Fns.simHash16. */
   def simHash16(text: Column): Column =
-    GraftColumnBridge.column(SimHash16(GraftColumnBridge.expression(text)))
+    NativeCall(TextHashKernel, "simHash16", LongType, text)
 
+  /** Native 64-bit SimHash (4x16-bit bands) — value-identical to
+    * Fns.simHash64; band layout documented at core.TextHash.simHash64.
+    */
   def simHash64(text: Column): Column =
-    GraftColumnBridge.column(SimHash64(GraftColumnBridge.expression(text)))
+    NativeCall(TextHashKernel, "simHash64", LongType, text)
 
+  /** Native document fingerprint (sum of token hashes mod 2^61-1) —
+    * value-identical to Fns.docFingerprint, replacing its interpreted
+    * aggregate-over-tokens lambda in hot ingest paths.
+    */
   def docFingerprint(text: Column): Column =
-    GraftColumnBridge.column(DocFingerprint(GraftColumnBridge.expression(text)))
+    NativeCall(TextHashKernel, "docFingerprint", LongType, text)
 
+  /** Hashed-token linear classifier score — fastText-style inference as one
+    * codegen'd scalar (kernel: TextHash.linearScore), so classifier-based
+    * corpus filtering is a zero-shuffle map stage.
+    */
   def linearScore(text: Column): Column =
-    GraftColumnBridge.column(LinearScore(GraftColumnBridge.expression(text)))
+    NativeCall(TextHashKernel, "linearScore", LongType, text)
 
+  /** Native cosine similarity over two `array<float>` embeddings —
+    * value-identical to the Column spec form Fns.cosineSim (same
+    * ascending-index double accumulation), but a tight primitive loop
+    * inside whole-stage codegen instead of interpreted zip_with/aggregate
+    * lambdas (the measured 10-100x HOF penalty).
+    */
   def vecCosine(a: Column, b: Column): Column =
-    GraftColumnBridge.column(VecCosine(
-      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+    NativeCall(VecCosineKernel, "cosine", DoubleType, a, b)
 
+  /** Native WKT point formatter — keeps q_wkt-style exports inside
+    * whole-stage codegen where the equivalent Scala UDF would break the
+    * span (the reference's ostream writer, geometry/point.hpp:70-75).
+    */
   def pointWkt(lonFix: Column, latFix: Column): Column =
-    GraftColumnBridge.column(PointWkt(
-      GraftColumnBridge.expression(lonFix), GraftColumnBridge.expression(latFix)))
+    NativeCall(WktKernel, "pointWkt", StringType, lonFix, latFix)
 
+  /** Native GeoJSON Feature writer for fix-coordinate line geometries —
+    * the sibling sink format of the WKT/WKB writers, kept inside
+    * whole-stage codegen (a Scala UDF would break the span).
+    */
   def lineGeoJson(id: Column, xs: Column, ys: Column): Column =
-    GraftColumnBridge.column(LineGeoJson(GraftColumnBridge.expression(id),
-      GraftColumnBridge.expression(xs), GraftColumnBridge.expression(ys)))
+    NativeCall(GeoJsonKernel, "lineFeature", StringType, id, xs, ys)
 
+  /** Native sign-projection LSH buckets over an `array<float>` embedding:
+    * `tables` independent `bits`-bit signatures from deterministic
+    * hyperplanes (core.TextHash.lshWeight). The ANN scale path for
+    * similarity search — candidates come from bucket equality, exact cosine
+    * reranks.
+    */
   def vecLshBuckets(vec: Column, tables: Int, bits: Int): Column =
-    GraftColumnBridge.column(
-      VecLshBuckets(GraftColumnBridge.expression(vec), tables, bits))
+    NativeCall(VecLshKernel, "buckets", LongArray, vec, lit(tables), lit(bits))
 
+  /** Native `array<long>` of character n-gram shingle hashes. Replaces the
+    * Column-composed Fns.shingleHashes in hot paths: the interpreted
+    * higher-order-function form evaluates a boxed lambda per character and
+    * was measured >100x slower at sf0.1 (see DedupOps).
+    */
   def shingleHashes(text: Column, cap: Int, len: Int): Column =
-    GraftColumnBridge.column(
-      ShingleHashArray(GraftColumnBridge.expression(text), cap, len))
+    NativeCall(TextHashKernel, "shingles", LongArray, text, lit(cap), lit(len))
 
+  /** Native `array<long>` MinHash signature over character n-gram shingles —
+    * one pass, no per-element boxing; value-identical to
+    * Fns.minHashArray(Fns.shingleHashes(...)) (property-tested).
+    */
   def shingleMinHash(text: Column, cap: Int, len: Int, k: Int): Column =
-    GraftColumnBridge.column(
-      ShingleMinHash(GraftColumnBridge.expression(text), cap, len, k))
+    NativeCall(TextHashKernel, "minhash", LongArray, text, lit(cap), lit(len), lit(k))
 
+  /** Per-mille share of a document's most frequent n-gram shingle — the
+    * duplicate-n-gram repetition quality signal. A PURE PER-ROW function:
+    * computing it with explode + two groupBys shuffles rows*shingles rows
+    * for nothing; this kernel sorts the row's own shingle array and counts
+    * the longest run, so the whole query is one map stage.
+    */
   def repNgramPm(text: Column, cap: Int, len: Int): Column =
-    GraftColumnBridge.column(
-      RepNgramPm(GraftColumnBridge.expression(text), cap, len))
+    NativeCall(TextHashKernel, "repNgramPm", LongType, text, lit(cap), lit(len))
 
+  /** Native `array<long>` of non-overlapping w-token chunk hashes — the
+    * per-row key array of the CCNet-style cross-document boilerplate dedup
+    * (DedupOps.boilerplateChunks). Kernel: TextHash.wordChunkHashes.
+    */
   def wordChunkHashes(text: Column, w: Int): Column =
-    GraftColumnBridge.column(
-      WordChunkHashes(GraftColumnBridge.expression(text), w))
+    NativeCall(TextHashKernel, "wordChunks", LongArray, text, lit(w))
 
+  /** Native `array<long>` of SLIDING n-token window hashes — the
+    * per-position key array of benchmark decontamination
+    * (DedupOps.decontaminate). Kernel: TextHash.slidingNgramHashes.
+    */
   def slidingNgramHashes(text: Column, n: Int): Column =
-    GraftColumnBridge.column(
-      SlidingNgramHashes(GraftColumnBridge.expression(text), n))
+    NativeCall(TextHashKernel, "slidingNgrams", LongArray, text, lit(n))
 
   def countInSortedSet(hs: Column, bc: Broadcast[Array[Long]]): Column =
     GraftColumnBridge.column(

@@ -607,7 +607,7 @@ object StreamingOps {
           if (r > 0) { nRegs += 1; regSum += 1L << (Hll.RhoCap - r) }
           else regSum += Hll.Scale
         }
-        HllEstimate(group, nRegs, regSum, Hll.estE3(regSum, nRegs.toInt, Hll.M))
+        HllEstimate(group, nRegs, regSum, Hll.estE3(regSum, nRegs, Hll.M))
       })
   }
 

@@ -10,4 +10,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** The Column's whole Catalyst tree, nested Column nodes converted — for
+    * builders that run inside the analyzer (SQL functions), where the
+    * ColumnNode wrappers [[expression]] leaves would never be resolved.
+    */
+  def tree(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
 }

@@ -372,6 +372,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = metrics.collect()
     assert(rows.nonEmpty)
     assert(rows.map(_.getAs[Long]("inputRecords")).sum > 0)
+    assert(rows.map(_.getAs[Long]("executorCpuMs")).sum > 0)
   }
 
   test("salted count equals plain groupBy count") {

@@ -173,15 +173,16 @@ class PipCoverSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("points clamped into a domain-edge cell are ray cast, not accepted or dropped by the cover") {
-    // a square across the antimeridian, and one wholly beyond it: cell-id
-    // binning clamps lon > 180° into the easternmost cell of every level
-    val across: Rings = Array((Array(1750000000L, 1850000000L, 1850000000L, 1750000000L),
-      Array(0L, 0L, 100000000L, 100000000L)))
-    val beyond: Rings = Array((Array(1810000000L, 1850000000L, 1850000000L, 1810000000L),
-      Array(0L, 0L, 100000000L, 100000000L)))
-    val polys: PipKernel.Polys = Map(1 -> across, 2 -> beyond)
-    val pts = Seq(1890000000L, 1990000000L, 1830000000L, 1770000000L, 1799999999L)
-      .map(x => (x, 50000000L))
+    // a square across the antimeridian, and one wholly beyond it, on each
+    // side: cell-id binning clamps lon > 180° into the easternmost cell of
+    // every level and lon < -180° into the westernmost
+    def square(x0: Long, x1: Long): Rings =
+      Array((Array(x0, x1, x1, x0), Array(0L, 0L, 100000000L, 100000000L)))
+    val polys: PipKernel.Polys = Map(
+      1 -> square(1750000000L, 1850000000L), 2 -> square(1810000000L, 1850000000L),
+      3 -> square(-1850000000L, -1750000000L), 4 -> square(-1850000000L, -1810000000L))
+    val east = Seq(1890000000L, 1990000000L, 1830000000L, 1770000000L, 1799999999L)
+    val pts = (east ++ east.map(-_)).map(x => (x, 50000000L))
     val idx = PipIntervalKernel.build(polys, 4, 9)
     pts.foreach { case (x, y) =>
       val want = polys.collect { case (id, rings) if Planar.pointInPolygon(x, y, rings) => id }
