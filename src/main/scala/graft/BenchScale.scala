@@ -33,7 +33,7 @@ object BenchScale {
         .select((col("pid") * rep + col("r")).as("pid"), col("lon_fix"), col("lat_fix"))
     // coords ride through the PIP aggregation — no join-back shuffle of
     // the full point table
-    SpatialOps.pipJoinConvexTagged(spark, pts)
+    SpatialOps.pip(spark, pts)
       .select(
         Fns.tileX(8, Fns.fixToDeg(col("lon_fix"))).as("tx"),
         Fns.tileY(8, Fns.fixToDeg(col("lat_fix"))).as("ty"))

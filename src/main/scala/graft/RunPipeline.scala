@@ -90,7 +90,7 @@ object RunPipeline {
     val points = Synth.points(spark, sfDir)
     val nTiles = CheckpointOps.runResumable(spark, points, "pid",
       TileBuckets, s"$outDir/tiles", s"$outDir/lineage/tiles") { in =>
-      SpatialOps.pipJoinConvexTagged(spark, in)
+      SpatialOps.pip(spark, in)
         .select(col("poly_id"),
           Fns.tileX(7, Fns.fixToDeg(col("lon_fix"))).as("tx"),
           Fns.tileY(7, Fns.fixToDeg(col("lat_fix"))).as("ty"))

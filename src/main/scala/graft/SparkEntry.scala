@@ -142,7 +142,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
     val pts = Synth.points(spark, dir)
-    SpatialOps.pipJoinConvexTagged(spark, pts).select(
+    SpatialOps.pip(spark, pts).select(
       col("pid"), col("poly_id"),
       Fns.tileX(8, Fns.fixToDeg(col("lon_fix"))).as("tx"),
       Fns.tileY(8, Fns.fixToDeg(col("lat_fix"))).as("ty"))
@@ -637,15 +637,18 @@ object SparkEntry {
         .select(col("pid"), col("best.hub").as("hub"), col("best.mm").as("mm"))
     }),
 
-    "q_pip_join" -> ((s, d) => SpatialOps.pipJoinConvex(s, Synth.points(s, d))),
+    "q_pip_join" -> ((s, d) =>
+      SpatialOps.pip(s, Synth.points(s, d)).select(col("pid"), col("poly_id"))),
 
-    // sorted-interval cell-list PIP (north-rule strategy): zero-join map
-    // stage — binary search over broadcast disjoint cell-id ranges, FULL
-    // interior cells skip the ray cast
-    "q_pip_interval" -> ((s, d) => SpatialOps.pipJoinIntervals(s, Synth.points(s, d))),
+    // the same broadcast cell-cover join as q_pip_join under its own name:
+    // the engine has one broadcast PIP strategy
+    "q_pip_interval" -> ((s, d) =>
+      SpatialOps.pip(s, Synth.points(s, d)).select(col("pid"), col("poly_id"))),
 
-    // PIP anti join: points in NO polygon, zero-join interval-index scan
-    "q_pip_anti" -> ((s, d) => SpatialOps.pipAntiJoin(s, Synth.points(s, d))),
+    // PIP anti join: points in NO polygon, the cover join as a broadcast
+    // left-anti with the FULL-or-ray-cast refinement in its condition
+    "q_pip_anti" -> ((s, d) =>
+      SpatialOps.pip(s, Synth.points(s, d), anti = true).select(col("pid"))),
 
     // polygon-CORPUS PIP: 10k-hexagon DataFrame side, distributed cell
     // cover, shuffle equi-join (no polygon broadcast), native ray-cast
@@ -2267,7 +2270,7 @@ object SparkEntry {
       val pts = Synth.points(s, d)
       val ent = col("pid") % GeofenceEntities
       val track = pts.select(ent.as("entity"), col("pid").as("ts"))
-      val hits = SpatialOps.pipJoinConvex(s, pts)
+      val hits = SpatialOps.pip(s, pts)
         .select(ent.as("entity"), col("pid").as("ts"), col("poly_id"))
       SpatialOps.geofenceTransitions(track, hits)
     }),
@@ -4856,8 +4859,8 @@ object SparkEntry {
          |       count(*) AS cnt
          |FROM after GROUP BY 1, 2""".stripMargin,
 
-    // identical semantics to q_pip_join — the interval index is a physical
-    // strategy, not a different operator; one shared half-plane oracle
+    // identical semantics to q_pip_join — the same operator under a second
+    // name; one shared half-plane oracle
     "q_pip_interval" ->
       s"""WITH p AS ($P)
          |SELECT p.pid, pe.poly_id

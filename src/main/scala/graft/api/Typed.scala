@@ -48,14 +48,9 @@ object Typed {
   def points(spark: SparkSession, sfDir: String): Dataset[GeoPoint] =
     Synth.points(spark, sfDir).as[GeoPoint]
 
-  /** Broadcast cell-cover PIP join (see SpatialOps.pipJoinConvex). */
+  /** Broadcast cell-cover PIP join (see SpatialOps.pip). */
   def pipJoin(spark: SparkSession, pts: Dataset[GeoPoint]): Dataset[PipHit] =
-    SpatialOps.pipJoinConvex(spark, pts.toDF()).as[PipHit]
-
-  /** Sorted-interval cell-list PIP (see SpatialOps.pipJoinIntervals). */
-  def pipJoinIntervals(spark: SparkSession,
-                       pts: Dataset[GeoPoint]): Dataset[PipHit] =
-    SpatialOps.pipJoinIntervals(spark, pts.toDF()).as[PipHit]
+    SpatialOps.pip(spark, pts.toDF()).select(col("pid"), col("poly_id")).as[PipHit]
 
   /** Uncapped equirect tile histogram at `level` (the maintainable one —
     * see SpatialOps.applyTileDeltas for its incremental refresh).

@@ -5,9 +5,8 @@ package graft.core
   * the filter step of every classified PIP cover. A FULL cell accepts each
   * point that bins into it without a ray cast, a DISJOINT cell rejects it,
   * and only PARTIAL cells need the exact kernel (*Raster Intervals*,
-  * SIGMOD 2023). Used by the broadcast cell-cover join
-  * ([[graft.operators.SpatialOps.pipJoinGeneral]]) and the sorted-interval
-  * index ([[graft.plans.PipIntervalKernel]]).
+  * SIGMOD 2023). Builds the cover of the broadcast cell-cover join
+  * ([[graft.operators.SpatialOps.pip]]), the one broadcast PIP strategy.
   */
 object CellCover {
   val Full = 1

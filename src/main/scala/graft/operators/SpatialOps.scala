@@ -17,11 +17,10 @@ import graft.sources.Synth
   */
 object SpatialOps {
 
-  /** Cover level of the broadcast PIP joins ([[pipJoinConvexTagged]],
-    * [[pipJoinGeneral]]): a 256x256 grid, cells of ~1.4° lon by ~0.7° lat.
-    * Fine enough that most of an admin-sized polygon's cover cells are
-    * FULL and skip the ray cast: the 30 hexagons cover 2,299 cells, 1,261
-    * of them FULL.
+  /** Cover level of the broadcast PIP join ([[pip]]): a 256x256 grid,
+    * cells of ~1.4° lon by ~0.7° lat. Fine enough that most of an
+    * admin-sized polygon's cover cells are FULL and skip the ray cast: the
+    * 30 hexagons cover 2,299 cells, 1,261 of them FULL.
     */
   val CoverLevel = 8
 
@@ -32,80 +31,40 @@ object SpatialOps {
   val CorpusCoverLevel = 6
 
   /** Point-in-polygon join of a (pid, lon_fix, lat_fix) point table against
-    * the deterministic hexagon set: broadcast cell-cover equi-join, then
-    * exact refinement. For CCW convex rings the refinement is the exact
-    * half-plane conjunction bool_and(cross >= 0) — boundary-inclusive,
-    * identical to the ray-cast kernel (Planar.pointInRing) and exact in
-    * int64, so the DuckDB oracle can replicate it bit-for-bit.
+    * a broadcast-size polygon map (rings with holes, even-odd parity; the
+    * deterministic hexagon set by default): one broadcast hash join on the
+    * polygons' classified level-[[CoverLevel]] cover ([[pipCoverJoin]]),
+    * where a FULL cell accepts the pair and a PARTIAL cell runs the native
+    * boundary-inclusive ray cast (PointInPolygonSet). The point side is
+    * never shuffled: the plan is a single map stage until the consumer's
+    * aggregation. For CCW convex rings the ray cast equals the half-plane
+    * conjunction bool_and(cross >= 0), which is what the DuckDB oracle
+    * computes (property-tested in SparkOpsSpec and PipCoverSpec).
+    *
+    * Output (pid, poly_id, lon_fix, lat_fix, carryCols...): the point
+    * coordinates ride along, so downstream tiling needs no join back
+    * against the point table. With `anti` the output is the points inside
+    * NO polygon, (pid, lon_fix, lat_fix, carryCols...): the same join as a
+    * broadcast left-anti with the refinement inside the join condition.
     *
     * Reference capability: PreparedPolygon::contains use at
     * reference/include/osmium/multipolygon/builder.hpp:707-711, generalized
     * to an engine-level join per the north rule.
     */
-  def pipJoinConvex(spark: SparkSession, points: DataFrame): DataFrame =
-    pipJoinConvexTagged(spark, points).select(col("pid"), col("poly_id"))
+  def pip(spark: SparkSession, points: DataFrame,
+          polys: graft.plans.PipKernel.Polys = Synth.hexagonPolys,
+          anti: Boolean = false, carryCols: Seq[Column] = Nil): DataFrame = {
+    val cover = if (polys eq Synth.hexagonPolys) hexagonCover
+      else classifiedCover(polys, CoverLevel)
+    pipCoverJoin(spark, points, cover, polys, anti, carryCols)
+  }
 
-  /** pipJoinConvex carrying the point coordinates through, so downstream
-    * tiling needs NO join back against the full point table. Shape:
-    * one broadcast hash join on the hexagons' classified level-8 cover
-    * ([[pipCoverJoin]]) with the native ray cast (PointInPolygonSet) run
-    * for PARTIAL cells only — zero shuffles of the point side; the plan is
-    * a single map stage until the consumer's aggregation. For CCW convex
-    * rings the boundary-inclusive ray cast equals the half-plane
-    * conjunction bool_and(cross >= 0), which is what the DuckDB oracle
-    * computes (property-tested in SparkOpsSpec and PipCoverSpec).
-    */
+  /** [[pip]] against the hexagons; `perfbench` calls this name. */
   def pipJoinConvexTagged(spark: SparkSession, points: DataFrame,
                           carryCols: Seq[Column] = Nil): DataFrame =
-    pipCoverJoin(spark, points, hexagonCover, Synth.hexagonPolys, CoverLevel, carryCols)
+    pip(spark, points, carryCols = carryCols)
 
   private lazy val hexagonCover = classifiedCover(Synth.hexagonPolys, CoverLevel)
-
-  /** The hexagons' sorted-interval index: FULL cells from level 4, PARTIAL
-    * cells at level 9.
-    */
-  private lazy val hexagonIndex =
-    graft.plans.PipIntervalKernel.build(Synth.hexagonPolys, 4, 9)
-
-  /** Sorted-interval cell-list PIP — the north rule's named strategy, as a
-    * pure MAP-stage alternative to the broadcast cell-cover join: an
-    * adaptive multi-level cover (coarse FULL interior cells that skip the
-    * ray cast entirely, fine PARTIAL boundary cells) swept into disjoint
-    * sorted MaxLevel cell-id ranges, probed by ONE binary search per point
-    * inside whole-stage codegen ([[graft.plans.PipIntervalHits]]). The plan
-    * has NO join and NO shuffle of the point side — scan → project →
-    * explode — so at 10^12 rows it is a single fan-out stage. Results are
-    * bit-identical to [[pipJoinConvex]] (same boundary-inclusive kernel).
-    */
-  def pipJoinIntervals(spark: SparkSession, points: DataFrame): DataFrame =
-    points.select(col("pid"),
-      explode(graft.plans.PipIntervalHits(
-        spark, col("lon_fix"), col("lat_fix"), hexagonIndex)).as("poly_id"))
-
-  /** PIP ANTI join — points inside NO polygon (the complement face of
-    * the join family; the reference's handler fallthrough for objects no
-    * area claimed). Same zero-join map stage as [[pipJoinIntervals]]:
-    * the broadcast sorted-interval index evaluates every point's hit
-    * list per row, and the filter keeps the empty ones — the corpus is
-    * never shuffled and never joined, so the anti costs exactly one
-    * codegen'd scan at any scale.
-    */
-  def pipAntiJoin(spark: SparkSession, points: DataFrame): DataFrame =
-    points.filter(size(graft.plans.PipIntervalHits(
-        spark, col("lon_fix"), col("lat_fix"), hexagonIndex)) === 0)
-      .select(col("pid"))
-
-  /** General-polygon PIP via the exact ray-cast kernel (concave rings,
-    * holes): the same classified broadcast cover join as the convex path
-    * ([[pipCoverJoin]]). The convex variant above is the oracle-checked
-    * path.
-    */
-  def pipJoinGeneral(spark: SparkSession, points: DataFrame,
-                     polygons: Map[Int, Array[(Array[Long], Array[Long])]],
-                     coverLevel: Int = CoverLevel): DataFrame =
-    pipCoverJoin(spark, points, classifiedCover(polygons, coverLevel), polygons,
-        coverLevel, Nil)
-      .select(col("pid"), col("poly_id"))
 
   /** (cell, poly_id, full) rows of every polygon's classified cover at
     * `level` ([[graft.core.CellCover.classified]]): cells the polygon
@@ -117,31 +76,32 @@ object SpatialOps {
       CellCover.classified(rings, level).map { case (cell, full) => (cell, id, full) }
     }
 
-  /** The broadcast cell-cover PIP join: every point's level-`coverLevel`
+  /** The broadcast cell-cover PIP join: every point's level-[[CoverLevel]]
     * cell equi-joins the broadcast `cover`, a FULL cell accepts the pair
     * and a PARTIAL one runs the exact ray cast against the broadcast
     * `polys`. `Or` evaluates its right side only when the left is false,
-    * so FULL pairs never reach PointInPolygonSet. Output (pid, poly_id,
-    * lon_fix, lat_fix, carryCols...).
+    * so FULL pairs never reach PointInPolygonSet. Output as [[pip]].
     */
   private[graft] def pipCoverJoin(spark: SparkSession, points: DataFrame,
                                   cover: Seq[(Long, Int, Boolean)],
-                                  polys: graft.plans.PipKernel.Polys, coverLevel: Int,
+                                  polys: graft.plans.PipKernel.Polys, anti: Boolean,
                                   carryCols: Seq[Column]): DataFrame = {
     import spark.implicits._
-    points.withColumn("cell", Fns.cellId(col("lon_fix"), col("lat_fix"), coverLevel))
-      .join(broadcast(cover.toDF("cell", "poly_id", "full")), "cell")
-      .filter(col("full") || graft.plans.PointInPolygonSet(
-        spark, col("poly_id"), col("lon_fix"), col("lat_fix"), polys))
-      .select(Seq(col("pid"), col("poly_id"), col("lon_fix"), col("lat_fix"))
-        ++ carryCols: _*)
+    val pts = points.withColumn("cell", Fns.cellId(col("lon_fix"), col("lat_fix"), CoverLevel))
+    val cells = broadcast(cover.toDF("cell", "poly_id", "full"))
+    val hit = col("full") || graft.plans.PointInPolygonSet(
+      spark, col("poly_id"), col("lon_fix"), col("lat_fix"), polys)
+    if (anti) pts.join(cells, pts("cell") === cells("cell") && hit, "left_anti")
+      .select(Seq(col("pid"), col("lon_fix"), col("lat_fix")) ++ carryCols: _*)
+    else pts.join(cells, "cell").filter(hit)
+      .select(Seq(col("pid"), col("poly_id"), col("lon_fix"), col("lat_fix")) ++ carryCols: _*)
   }
 
   /** Point-in-polygon join against a polygon CORPUS held as a DataFrame
     * (poly_id, xs, ys — one CCW ring per row, int64 fix coords): the scale
     * path when the polygon side is itself large (millions of parcels /
     * buildings / assembled areas fed back as a join side), where
-    * pipJoinGeneral's driver-built broadcast map has no room.
+    * pip's driver-built broadcast map has no room.
     *
     * Plan shape: the cell cover is computed DISTRIBUTIVELY — two chained
     * explodes of the bbox cell ranges (pure built-ins, no driver pass) —
@@ -156,8 +116,9 @@ object SpatialOps {
     * one cover cell and cover rows are unique per (poly_id, cell).
     *
     * Choose coverLevel so a typical polygon spans ~1-4 cells per axis
-    * (cell width = 360/2^level degrees); the broadcast-map variants remain
-    * the right plan for SMALL polygon sets (zero shuffle of the points).
+    * (cell width = 360/2^level degrees); the broadcast map ([[pip]])
+    * remains the right plan for SMALL polygon sets (zero shuffle of the
+    * points).
     */
   /** Distributed cell cover of per-row bboxes — two chained range explodes
     * (pure built-ins, no driver pass), one "cell" column appended to the
@@ -1687,7 +1648,7 @@ object SpatialOps {
     *
     * Inputs: `track` (entity, ts, ...) one row per observed position;
     * `hits` (entity, ts, poly_id) the positions inside each polygon
-    * (e.g. from [[pipJoinConvex]]). Output: (entity, ts, poly_id, kind)
+    * (e.g. from [[pip]]). Output: (entity, ts, poly_id, kind)
     * with kind ∈ {enter, exit} at every membership flip (first
     * observation emits nothing — no prior state to compare).
     *

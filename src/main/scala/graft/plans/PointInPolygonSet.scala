@@ -35,6 +35,11 @@ object PipKernel {
   * counterpart of PreparedPolygon::contains at
   * reference/include/osmium/multipolygon/builder.hpp:707-711).
   *
+  * It is the PARTIAL-cell refinement of the one broadcast PIP strategy,
+  * [[graft.operators.SpatialOps.pip]]: the filter after its inner cell
+  * join, and the join condition of its left-anti form (a FULL cell
+  * short-circuits the `Or` before this expression runs).
+  *
   * Implements doGenCode so the predicate stays inside whole-stage codegen
   * (a Scala UDF here would break the codegen span around the broadcast
   * cell-cover join). The polygon set travels as a Spark broadcast

@@ -53,7 +53,7 @@ object StreamingOps {
   def pipCountsStream(points: DataFrame, tsCol: String,
                       windowLen: String, watermark: String): DataFrame =
     graft.operators.SpatialOps
-      .pipJoinConvexTagged(points.sparkSession,
+      .pip(points.sparkSession,
         points.withWatermark(tsCol, watermark), carryCols = Seq(col(tsCol)))
       .groupBy(window(col(tsCol), windowLen), col("poly_id"))
       .count()

@@ -42,7 +42,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pipJoinConvex equals brute-force kernel PIP") {
     val pts = Synth.points(spark, dir)
-    val sparkHits = SpatialOps.pipJoinConvex(spark, pts)
+    val sparkHits = SpatialOps.pip(spark, pts)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     val local = pts.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val expect = (for {
@@ -55,39 +55,28 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pipJoinIntervals: parity with broadcast-join path, FULL fast path real, zero-join plan") {
     val pts = Synth.points(spark, dir)
-    val viaIntervals = SpatialOps.pipJoinIntervals(spark, pts)
+    val got = SpatialOps.pip(spark, pts)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val viaJoin = SpatialOps.pipJoinConvex(spark, pts)
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(viaIntervals === viaJoin)
-    // the adaptive cover actually produces FULL (interior) cells — the
-    // ray-cast-free fast path exists for every admin-sized hexagon
-    val idx = graft.plans.PipIntervalKernel.build(Synth.hexagonPolys, 4, 9)
-    assert(idx.fullRefs > 0, "expected interior FULL cells in the index")
-    // disjointness + order invariants of the swept segment list
-    (1 until idx.segmentCount).foreach { i =>
-      assert(idx.starts(i) > idx.ends(i - 1))
-      assert(idx.ends(i) >= idx.starts(i))
-    }
-    // a point deep inside the largest hexagon resolves via a FULL ref:
-    // kernel returns the hit even if geometry were absent
-    val h = Synth.hexagons.maxBy(_.polyId)
-    val noGeom = new graft.plans.PipIntervalKernel.Index(
-      idx.starts, idx.ends, idx.payloads,
-      idx.polys.map { case (k, _) => k -> Array.empty[(Array[Long], Array[Long])] })
-    val hits = graft.plans.PipIntervalKernel.hits(noGeom, h.cx, h.cy)
-    assert(hits.toIntArray().contains(h.polyId))
-    // physical plan: pure map stage — no join operator anywhere
-    val plan = SpatialOps.pipJoinIntervals(spark, pts)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), s"interval PIP must not plan a join:\n$plan")
+    val expect = pts.collect().flatMap { r =>
+      Synth.hexagonPolys.collect { case (id, rings)
+        if graft.core.Planar.pointInPolygon(r.getLong(1), r.getLong(2), rings) => (r.getLong(0), id)
+      }
+    }.toSet
+    assert(expect.nonEmpty && got === expect)
+    // physical plan: one broadcast hash join, and no shuffle of the point
+    // side beyond the DISTINCT of the Synth.points source itself
+    def shuffles(plan: String): Int = "(?<!Broadcast)Exchange ".r.findAllIn(plan).size
+    val plan = SpatialOps.pip(spark, pts).queryExecution.executedPlan.toString
+    assert("BroadcastHashJoin".r.findAllIn(plan).size === 1, plan)
+    val source = Synth.points(spark, dir).queryExecution.executedPlan.toString
+    assert(shuffles(plan) === shuffles(source), plan)
   }
 
   test("pipJoinGeneral (native Expression) agrees with convex path and handles concave rings") {
     val pts = Synth.points(spark, dir)
-    val general = SpatialOps.pipJoinGeneral(spark, pts, Synth.hexagonPolys)
+    val general = SpatialOps.pip(spark, pts, Synth.hexagonPolys)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val convex = SpatialOps.pipJoinConvex(spark, pts)
+    val convex = SpatialOps.pip(spark, pts)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(general === convex)
     // concave C-shape + hole: compare against the kernel brute force
@@ -96,7 +85,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cY = Array(-500000000L, -500000000L, -200000000L, -200000000L,
       200000000L, 200000000L, 500000000L, 500000000L)
     val concave = Map(99 -> Array((cX, cY)))
-    val got = SpatialOps.pipJoinGeneral(spark, pts, concave)
+    val got = SpatialOps.pip(spark, pts, concave)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     val expect = pts.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .filter { case (_, x, y) => graft.core.Planar.pointInRing(x, y, cX, cY) }
@@ -606,7 +595,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(big < small * 2, s"expression grew with polygons: $small -> $big bytes")
     // and the predicate still evaluates correctly through the broadcast
     val pts = Synth.points(spark, dir)
-    val viaBc = SpatialOps.pipJoinConvex(spark, pts).count()
+    val viaBc = SpatialOps.pip(spark, pts).count()
     assert(viaBc > 0)
   }
 

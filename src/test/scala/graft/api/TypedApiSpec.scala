@@ -1,6 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,7 +29,7 @@ class TypedApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // .as[T] adds no operators: the typed view of ONE DataFrame instance
     // optimizes to the identical plan (separate operator calls differ
     // only in exprIds/broadcast handles, so compare over a shared frame)
-    val df = graft.operators.SpatialOps.pipJoinConvex(spark, pts.toDF())
+    val df = graft.operators.SpatialOps.pip(spark, pts.toDF()).select(col("pid"), col("poly_id"))
     import Typed.hitEnc
     assert(df.as[PipHit].queryExecution.optimizedPlan.toString ===
       df.queryExecution.optimizedPlan.toString)
@@ -47,10 +48,6 @@ class TypedApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hist = Typed.tileHistogram(pts, 8)
     val total = hist.collect().map(_.cnt).sum
     assert(total === pts.count())
-    // interval PIP agrees with the join PIP through the typed surface too
-    val a = Typed.pipJoinIntervals(spark, pts).collect().toSet
-    val b = Typed.pipJoin(spark, pts).collect().toSet
-    assert(a === b)
   }
 
   test("pages source is the BASELINE shape and text round-trips through html") {

@@ -5,14 +5,14 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{CellCover, CellId, Planar}
-import graft.plans.{PipIntervalKernel, PipKernel}
+import graft.plans.PipKernel
 import graft.sources.Synth
 
-/** The classified broadcast PIP cover (SpatialOps.pipCoverJoin over
-  * CellCover) against the brute-force ray cast, on random convex and
-  * concave-with-hole polygons and on the points where a cover can go
-  * wrong: polygon vertices, points exactly on edges, and the edges and
-  * corners of every level-8 bbox cell.
+/** The classified broadcast PIP cover (SpatialOps.pip over CellCover),
+  * join and anti join, against the brute-force ray cast and its
+  * complement, on random convex and concave-with-hole polygons and on the
+  * points where a cover can go wrong: polygon vertices, points exactly on
+  * edges, and the edges and corners of every level-8 bbox cell.
   */
 class PipCoverSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
@@ -98,6 +98,21 @@ class PipCoverSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def pairs(df: DataFrame): Set[(Long, Int)] =
     df.collect().map(r => (r.getLong(0), r.getInt(1))).toSet
 
+  /** The join and the anti join of `pip` against the brute force: the
+    * anti join returns exactly the points no polygon contains, with their
+    * coordinates.
+    */
+  private def assertPip(pts: DataFrame, polys: PipKernel.Polys): Set[(Long, Int)] = {
+    val want = bruteForce(pts, polys)
+    assert(pairs(SpatialOps.pip(spark, pts, polys)) === want)
+    val outside = pts.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .filterNot(p => want.exists(_._1 == p._1)).toSet
+    val anti = SpatialOps.pip(spark, pts, polys, anti = true)
+    assert(anti.columns.toSeq === Seq("pid", "lon_fix", "lat_fix"))
+    assert(anti.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet === outside)
+    want
+  }
+
   private val random: PipKernel.Polys = {
     val r = new scala.util.Random(61)
     (0 until 16).map { k =>
@@ -113,15 +128,15 @@ class PipCoverSpec extends AnyFunSuite with BeforeAndAfterAll {
       val r = new scala.util.Random(67)
       Seq.fill(4000)((r.between(-1800000000L, 1800000000L), r.between(-900000000L, 900000000L)))
     })
-    val want = bruteForce(pts, random)
+    val want = assertPip(pts, random)
     assert(want.size > 1000, s"vacuous: only ${want.size} hits")
-    assert(pairs(SpatialOps.pipJoinGeneral(spark, pts, random)) === want)
+    assert(want.map(_._1).size < pts.count() - 1000, "vacuous: few points outside")
   }
 
   test("pipJoinConvex equals the brute-force ray cast on hexagon vertices, edges and cell-rect edges") {
     val pts = pointsDf(Synth.hexagonPolys.values.toSeq.flatMap(probes))
     val want = bruteForce(pts, Synth.hexagonPolys)
-    assert(pairs(SpatialOps.pipJoinConvex(spark, pts)) === want)
+    assert(pairs(SpatialOps.pip(spark, pts)) === want)
   }
 
   test("no ring edge touches a FULL cell's rect, and every hexagon has FULL cells") {
@@ -154,7 +169,7 @@ class PipCoverSpec extends AnyFunSuite with BeforeAndAfterAll {
       Synth.hexagonPolys.map { case (k, _) => k -> Array.empty[(Array[Long], Array[Long])] }
     val cover = SpatialOps.classifiedCover(Synth.hexagonPolys, L)
     val pts = pointsDf(Synth.hexagons.flatMap(h => Seq((h.cx, h.cy), (h.xs(0), h.ys(0)))))
-    val got = pairs(SpatialOps.pipCoverJoin(spark, pts, cover, noGeom, L, Nil))
+    val got = pairs(SpatialOps.pipCoverJoin(spark, pts, cover, noGeom, anti = false, Nil))
     // without geometry exactly the pairs in FULL cells survive: every
     // hexagon's center, and no vertex of its own (a PARTIAL cell)
     val full = cover.collect { case (cell, id, true) => (cell, id) }.toSet
@@ -183,12 +198,12 @@ class PipCoverSpec extends AnyFunSuite with BeforeAndAfterAll {
       3 -> square(-1850000000L, -1750000000L), 4 -> square(-1850000000L, -1810000000L))
     val east = Seq(1890000000L, 1990000000L, 1830000000L, 1770000000L, 1799999999L)
     val pts = (east ++ east.map(-_)).map(x => (x, 50000000L))
-    val idx = PipIntervalKernel.build(polys, 4, 9)
-    pts.foreach { case (x, y) =>
-      val want = polys.collect { case (id, rings) if Planar.pointInPolygon(x, y, rings) => id }
-      assert(PipIntervalKernel.hits(idx, x, y).toIntArray().toSet === want.toSet, s"interval index at x=$x")
-    }
-    val df = pointsDf(pts)
-    assert(pairs(SpatialOps.pipJoinGeneral(spark, df, polys)) === bruteForce(df, polys))
+    assertPip(pointsDf(pts), polys)
+  }
+
+  test("an empty polygon map: the join returns no rows, the anti join every point") {
+    val df = pointsDf(Seq((0L, 0L), (1799999999L, 50000000L), (-1890000000L, -899999999L)))
+    assert(assertPip(df, Map.empty).isEmpty)
+    assert(SpatialOps.pip(spark, df, Map.empty, anti = true).count() === 3)
   }
 }

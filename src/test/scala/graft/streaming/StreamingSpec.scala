@@ -327,7 +327,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val got = spark.sql("SELECT poly_id, count FROM pipwins").collect()
         .map(r => r.getInt(0) -> r.getLong(1)).groupBy(_._1)
         .view.mapValues(_.map(_._2).sum).toMap
-      val expect = graft.operators.SpatialOps.pipJoinConvex(spark,
+      val expect = graft.operators.SpatialOps.pip(spark,
           stamped.toSeq.toDF("ts", "pid", "lon_fix", "lat_fix"))
         .groupBy("poly_id").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
