@@ -28,9 +28,8 @@ final class CacheScope {
     ds.persist()
   }
 
-  /** Register an already-persisted dataset for release (loop operators that
-    * materialize and unpersist superseded rounds themselves hand over only
-    * the surviving round).
+  /** Register an already-persisted dataset for release (a
+    * [[LoopFrame]] hands over only its surviving round).
     */
   def track[T](ds: Dataset[T]): Dataset[T] = synchronized { tracked += ds; ds }
 

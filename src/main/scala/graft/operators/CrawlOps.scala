@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.LoopFrame
 import graft.functions.Fns
 
 /** Crawl-scheduling operators over capture logs (url, warc_ts). */
@@ -47,8 +48,8 @@ object CrawlOps {
     * ⌈log₂ n⌉ + 1 rounds of ONE self equi-join each (f ← f∘f), the
     * doubling trick that replaces O(chain-length) sequential hops —
     * chain length is unbounded on a crawl graph (pagination chains), so
-    * per-hop walking is not an option. Each round persists + rebases per
-    * the house loop hygiene. Terminal-ness is decided by the TERMINAL
+    * per-hop walking is not an option. Each round moves through a
+    * [[graft.core.LoopFrame]]. Terminal-ness is decided by the TERMINAL
     * RULE (membership in the redirect map), not by fixpoint-ness, so
     * self-redirects correctly report as cycles. Input: redirects
     * (src, dst) — at most ONE outgoing edge per src (functional graph;
@@ -58,7 +59,6 @@ object CrawlOps {
   def resolveRedirects(redirects: DataFrame,
                        scope: graft.core.CacheScope =
                          graft.core.CacheScope.global): DataFrame = {
-    val spark = redirects.sparkSession
     val edges = scope.persist(redirects.select(col("src"), col("dst")))
     // the size probe also sets the distributed loop's doubling depth
     LocalGraph.dispatchBySize(edges, GraphOps.LocalSweepEdges,
@@ -71,27 +71,20 @@ object CrawlOps {
     */
   private[graft] def resolveRedirectsLoop(edges: DataFrame, n: Long,
       scope: graft.core.CacheScope): DataFrame = {
-    val spark = edges.sparkSession
     val rounds = 64 - java.lang.Long.numberOfLeadingZeros(math.max(n, 1L)) + 1
     // successor map over ALL nodes: terminals point to themselves
     val terms = edges.select(col("dst").as("src"))
       .join(edges.select(col("src")), Seq("src"), "left_anti").distinct()
       .select(col("src"), col("src").as("nxt"))
-    var cached = edges.select(col("src"), col("dst").as("nxt"))
-      .unionByName(terms).persist()
-    var f = spark.createDataFrame(cached.rdd, cached.schema)
-    var r = 0
-    while (r < rounds) {
-      r += 1
-      val next = f.join(f.select(col("src").as("nxt"), col("nxt").as("nxt2")),
+    val succ = new LoopFrame(edges.select(col("src"), col("dst").as("nxt"))
+      .unionByName(terms))
+    for (_ <- 1 to rounds) {
+      val f = succ.frame
+      succ.advance(f.join(f.select(col("src").as("nxt"), col("nxt").as("nxt2")),
           Seq("nxt"))
-        .select(col("src"), col("nxt2").as("nxt")).persist()
-      next.count() // materialize before dropping the previous round
-      cached.unpersist(blocking = false)
-      cached = next
-      f = spark.createDataFrame(next.rdd, next.schema)
+        .select(col("src"), col("nxt2").as("nxt")))
     }
-    scope.track(cached)
+    val f = succ.keep(scope)
     val nonTerm = edges.select(col("src")).distinct()
       .select(col("src").as("nxt"), lit(0L).as("nonterm"))
     edges.select(col("src")).distinct().join(f, Seq("src"))

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.CacheScope
+import org.apache.spark.sql.GraftPlanBridge.cut
+import graft.core.{CacheScope, LoopFrame}
 import graft.functions.Fns
 
 /** Training-data-pipeline deduplication operators over a (doc_id, text)
@@ -162,9 +163,6 @@ object DedupOps {
       .agg(count(lit(1)).as("n_bands"))
   }
 
-  /** Rounds between plan-lineage rebases in duplicateClusters. */
-  val ClusterRebaseEvery = 3
-
   /** Rounds of plain min-label propagation before pointer jumping kicks
     * in: dup-pair graphs are usually shallow (a handful of near-copies per
     * component), where the jump's extra self-join per round is pure
@@ -196,12 +194,11 @@ object DedupOps {
     * label is carried through), so each round is exactly one materializing
     * count with no extra comparison join.
     *
-    * Scale hygiene (the round-2 verdict's leak): the superseded label
-    * frame is unpersisted as soon as the next round's materializes, and
-    * every ClusterRebaseEvery rounds the plan is rebased through the
-    * cached RDD, so Catalyst never re-optimizes an ever-deeper join chain.
-    * Only the final label frame survives, registered in `scope` for the
-    * caller to release after consuming the result.
+    * Scale hygiene: the label frame moves through a
+    * [[graft.core.LoopFrame]] (the round's changed-label count is its
+    * materializing measure), so only the final label frame survives,
+    * registered in `scope` for the caller to release after consuming the
+    * result, and Catalyst never re-optimizes an ever-deeper join chain.
     */
   private[graft] def duplicateClustersCounted(pairs: DataFrame,
       scope: CacheScope): (DataFrame, Int) = {
@@ -371,30 +368,24 @@ object DedupOps {
 
   private[graft] def duplicateClustersLoop(pairs: DataFrame,
                                            scope: CacheScope): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val symRaw = scope.persist(edges.unionByName(
-      edges.select(col("dst").as("src"), col("src").as("dst"))))
-    // ENTRY-side plan rebase: the caller's pair plan can be arbitrarily
-    // deep (an LSH candidate tree, a radius-join cover tree), and EVERY
-    // round references sym twice plus labels (which also descends from
-    // sym) — without cutting the lineage here, Catalyst re-analyzes the
-    // multiplied caller tree on every round's action (measured 22 s/round
-    // driver CPU on q_dbscan's 2k-edge graph vs <1 s of actual compute).
-    // The rebase wraps the persisted frame's RDD, so data still comes
-    // from cache and the loop's plans start from a leaf.
-    val sym = spark.createDataFrame(symRaw.rdd, symRaw.schema)
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-    var prev: DataFrame = null
+    // cut at entry: the caller's pair plan can be arbitrarily deep (an LSH
+    // candidate tree, a radius-join cover tree) and every round reads sym
+    // twice (measured 22 s/round driver CPU on q_dbscan's 2k-edge graph
+    // without the cut, vs <1 s of actual compute)
+    val sym = cut(scope.persist(edges.unionByName(
+      edges.select(col("dst").as("src"), col("src").as("dst")))))
+    val labels = new LoopFrame(sym.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
     var changed = 1L
     var rounds = 0
     while (changed > 0) {
       rounds += 1
+      val cur = labels.frame
       val prop = sym.join(
-          labels.select(col("id").as("dst"), col("label").as("nbl")), "dst")
+          cur.select(col("id").as("dst"), col("label").as("nbl")), "dst")
         .groupBy(col("src").as("id")).agg(min("nbl").as("nbr"))
-      val stepped = labels.select(col("id"), col("label").as("old"))
+      val stepped = cur.select(col("id"), col("label").as("old"))
         .join(prop, Seq("id"), "left")
         .select(col("id"), col("old"),
           least(col("old"), coalesce(col("nbr"), col("old"))).as("label"))
@@ -410,27 +401,12 @@ object DedupOps {
               col("label") === col("lid"))
             .select(col("id"), col("old"), least(col("label"), col("llabel")).as("label"))
         }
-      val next = roundOut.persist()
-      changed = next.filter(col("label") =!= col("old")).count()
+      changed = labels.advance(roundOut,
+        _.filter(col("label") =!= col("old")).count())
       if (roundCache != null) roundCache.unpersist(blocking = false)
-      if (prev != null) prev.unpersist(blocking = false)
-      prev = next
-      val lbl = next.select(col("id"), col("label"))
-      // plan-lineage rebase: every ClusterRebaseEvery-th plain round, and
-      // EVERY jump round — the shortcut self-join DOUBLES the logical plan
-      // per round, and without a per-round cut the analyzer/optimizer walk
-      // of the exponentially nested tree dominates wall time by round ~6
-      // (measured ~20 s of driver CPU on a 10k-node graph) even though all
-      // data comes from cache. The rebase wraps the cached RDD — no
-      // recompute, no shuffle.
-      labels =
-        if (changed > 0 &&
-            (rounds >= ClusterJumpAfter || rounds % ClusterRebaseEvery == 0))
-          spark.createDataFrame(lbl.toDF().rdd, lbl.schema)
-        else lbl
     }
-    scope.track(prev)
-    (prev.select(col("id").as("doc_id"), col("label").as("cluster_id")), rounds)
+    (labels.keep(scope)
+      .select(col("id").as("doc_id"), col("label").as("cluster_id")), rounds)
   }
 
   /** Durable, resumable duplicate clustering — the same min-label
@@ -439,9 +415,9 @@ object DedupOps {
     * to `stateDir` through [[CheckpointOps.iterateResumable]]: a
     * pre-empted clustering job over a 10^12-doc candidate graph restarts
     * from its last durable round, not from scratch. The parquet
-    * round-trip doubles as the plan-lineage rebase (each round's plan is
-    * reborn from a scan), so this variant needs none of the in-memory
-    * loop's unpersist/rebase hygiene; its cost is one write+read barrier
+    * round-trip doubles as the plan cut (each round's plan is reborn
+    * from a scan), so this variant needs no [[graft.core.LoopFrame]]; its
+    * cost is one write+read barrier
     * per round, plus one re-evaluation of the round for the durable
     * write after the convergence count (bounded: each evaluation is the
     * round's two joins over the previous DURABLE frame). Use the

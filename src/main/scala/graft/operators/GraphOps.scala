@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.CacheScope
+import org.apache.spark.sql.GraftPlanBridge.cut
+
+import graft.core.{CacheScope, LoopFrame}
 import graft.functions.Fns
 import LocalGraph.{castIds, dispatchBySize}
 
@@ -31,11 +33,9 @@ object GraphOps {
     * Scale posture: per iteration exactly one shuffle join of the edge
     * list with the rank frame on `src` plus one aggregation shuffle on
     * `dst` — the canonical distributed PageRank shape. The degree-joined
-    * edge list is computed once and persisted; the rank frame is
-    * persisted per round, the superseded round unpersisted, and the plan
-    * is REBASED through the cached RDD every round so the analyzer never
-    * walks a depth-`iterations` join chain (the pointer-jumping lesson
-    * from [[DedupOps.duplicateClusters]]). Overflow headroom: total mass
+    * edge list is computed once and persisted; the rank frame moves
+    * through a [[graft.core.LoopFrame]], so the analyzer never walks a
+    * depth-`iterations` join chain. Overflow headroom: total mass
     * is n·RankScale ≤ 2^63 for n up to ~9·10^12 nodes; the damping
     * product multiplies a per-node in-sum by 85, ANSI mode fails loudly
     * (not silently wraps) if a single node ever concentrates > 2^63/85
@@ -57,7 +57,6 @@ object GraphOps {
     */
   private[graft] def pageRankLoop(simple: DataFrame, iterations: Int,
       scope: CacheScope): DataFrame = {
-    val spark = simple.sparkSession
     val nodes = scope.persist(
       simple.select(col("src").as("node_id"))
         .unionByName(simple.select(col("dst").as("node_id"))).distinct())
@@ -65,30 +64,20 @@ object GraphOps {
     // degree-annotated edges: the loop's only join input, persisted once
     val e = scope.persist(simple.join(deg, "src"))
 
-    var cached = nodes.withColumn("rank", lit(RankScale)).persist()
-    var ranks: DataFrame = cached
+    val ranks = new LoopFrame(nodes.withColumn("rank", lit(RankScale)))
     val base = (100L - DampingPct) * (RankScale / 100L)
-    var round = 0
-    while (round < iterations) {
-      round += 1
+    for (_ <- 1 to iterations) {
       // `div` = IntegralDivide: exact long division at full int64 range
       // (Column./ on longs routes through doubles, inexact past 2^53)
-      val contrib = e.join(ranks, col("src") === col("node_id"))
+      val contrib = e.join(ranks.frame, col("src") === col("node_id"))
         .groupBy(col("dst"))
         .agg(sum(expr("rank div outdeg")).cast("long").as("in_sum"))
-      val stepped = nodes.join(contrib, col("node_id") === col("dst"), "left")
+      ranks.advance(nodes.join(contrib, col("node_id") === col("dst"), "left")
         .select(col("node_id"), coalesce(col("in_sum"), lit(0L)).as("in_sum"))
         .selectExpr("node_id",
-          s"$base + ($DampingPct * in_sum) div 100 AS rank")
-      val next = stepped.persist()
-      next.count() // materialize before dropping the previous round
-      cached.unpersist(blocking = false)
-      cached = next
-      // rebase: cut the logical plan to the cached RDD every round
-      ranks = spark.createDataFrame(next.toDF().rdd, next.schema)
+          s"$base + ($DampingPct * in_sum) div 100 AS rank"))
     }
-    scope.track(cached)
-    ranks.select(col("node_id"), col("rank").as("rank_e6"))
+    ranks.keep(scope).select(col("node_id"), col("rank").as("rank_e6"))
   }
 
   /** PERSONALIZED PageRank: the restart mass teleports to a SEED set
@@ -101,11 +90,11 @@ object GraphOps {
     *
     * Same exact-int64 arithmetic and scale posture as [[pageRank]]: one
     * degree-annotated-edge join + one agg shuffle per iteration, the
-    * seed flag rides the persisted node frame, per-round persist/
-    * unpersist + RDD rebase. Seeds outside the edge set are ignored
-    * (they have no links to diffuse over). Input: edges(src, dst),
-    * seeds(node_id). Output: (node_id, rank_e6) over all linked nodes —
-    * nodes unreachable from any seed report 0.
+    * seed flag rides the persisted node frame, the rank frame moves
+    * through a [[graft.core.LoopFrame]]. Seeds outside the edge set are
+    * ignored (they have no links to diffuse over). Input:
+    * edges(src, dst), seeds(node_id). Output: (node_id, rank_e6) over
+    * all linked nodes — nodes unreachable from any seed report 0.
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            iterations: Int,
@@ -121,7 +110,6 @@ object GraphOps {
   /** The distributed loop of [[personalizedPageRank]] (spec-reachable). */
   private[graft] def personalizedPageRankLoop(simple: DataFrame,
       seeds: DataFrame, iterations: Int, scope: CacheScope): DataFrame = {
-    val spark = simple.sparkSession
     val nodes = scope.persist(
       simple.select(col("src").as("node_id"))
         .unionByName(simple.select(col("dst").as("node_id"))).distinct()
@@ -130,28 +118,20 @@ object GraphOps {
         .select(col("node_id"), coalesce(col("__s"), lit(0L)).as("seed")))
     val deg = simple.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val e = scope.persist(simple.join(deg, "src"))
-    var cached = nodes
-      .select(col("node_id"), (col("seed") * RankScale).as("rank")).persist()
-    cached.count()
-    var ranks = spark.createDataFrame(cached.rdd, cached.schema)
+    val ranks = new LoopFrame(nodes
+      .select(col("node_id"), (col("seed") * RankScale).as("rank")))
     val base = (100L - DampingPct) * (RankScale / 100L)
     for (_ <- 1 to iterations) {
-      val contrib = e.join(ranks, col("src") === col("node_id"))
+      val contrib = e.join(ranks.frame, col("src") === col("node_id"))
         .groupBy(col("dst"))
         .agg(sum(expr("rank div outdeg")).cast("long").as("in_sum"))
-      val next = nodes.join(contrib, col("node_id") === col("dst"), "left")
+      ranks.advance(nodes.join(contrib, col("node_id") === col("dst"), "left")
         .select(col("node_id"), col("seed"),
           coalesce(col("in_sum"), lit(0L)).as("in_sum"))
         .selectExpr("node_id",
-          s"seed * $base + ($DampingPct * in_sum) div 100 AS rank")
-        .persist()
-      next.count()
-      cached.unpersist(blocking = false)
-      cached = next
-      ranks = spark.createDataFrame(next.toDF().rdd, next.schema)
+          s"seed * $base + ($DampingPct * in_sum) div 100 AS rank"))
     }
-    scope.track(cached)
-    ranks.select(col("node_id"), col("rank").as("rank_e6"))
+    ranks.keep(scope).select(col("node_id"), col("rank").as("rank_e6"))
   }
 
   /** WEIGHTED PageRank, same fixed-point integer contract as
@@ -164,9 +144,9 @@ object GraphOps {
     * weights, and ANSI mode fails loudly, not wraps.
     *
     * Scale posture identical to [[pageRank]] (one join + one agg shuffle
-    * per iteration, persisted weighted-degree frame, per-round persist/
-    * unpersist/rebase). Input: (src, dst, w) with w ≥ 1, one row per
-    * directed edge. Output: (node_id, rank_e6).
+    * per iteration, persisted weighted-degree frame, rank frame through
+    * a [[graft.core.LoopFrame]]). Input: (src, dst, w) with w ≥ 1, one
+    * row per directed edge. Output: (node_id, rank_e6).
     */
   def pageRankWeighted(edges: DataFrame, iterations: Int,
                        scope: CacheScope = CacheScope.global): DataFrame = {
@@ -179,33 +159,24 @@ object GraphOps {
   /** The distributed loop of [[pageRankWeighted]] (spec-reachable). */
   private[graft] def pageRankWeightedLoop(e: DataFrame, iterations: Int,
       scope: CacheScope): DataFrame = {
-    val spark = e.sparkSession
     val sw = e.groupBy("src").agg(sum(col("w")).as("sw"))
     val ew = scope.persist(e.join(sw, "src"))
     // persisted (scope-released): re-joined every round for dangling nodes
     val nodes = scope.persist(ew.select(col("src").as("node_id"))
       .unionByName(ew.select(col("dst").as("node_id"))).distinct())
-    var cached = nodes.withColumn("rank", lit(RankScale)).persist()
-    cached.count()
-    var ranks = spark.createDataFrame(cached.rdd, cached.schema)
+    val ranks = new LoopFrame(nodes.withColumn("rank", lit(RankScale)))
     val base = (100L - DampingPct) * (RankScale / 100L)
     for (_ <- 1 to iterations) {
-      val inSum = ew.join(ranks.withColumnRenamed("node_id", "src"), "src")
+      val inSum = ew.join(ranks.frame.withColumnRenamed("node_id", "src"), "src")
         .select(col("dst").as("node_id"),
           expr("(rank * w) div sw").as("c"))
         .groupBy("node_id").agg(sum(col("c")).as("in_sum"))
-      val next = nodes.join(inSum, Seq("node_id"), "left")
+      ranks.advance(nodes.join(inSum, Seq("node_id"), "left")
         .select(col("node_id"),
           (lit(base) + expr(
-            s"($DampingPct * coalesce(in_sum, 0L)) div 100")).as("rank"))
-        .persist()
-      next.count()
-      cached.unpersist(blocking = false)
-      cached = next
-      ranks = spark.createDataFrame(next.rdd, next.schema)
+            s"($DampingPct * coalesce(in_sum, 0L)) div 100")).as("rank")))
     }
-    scope.track(cached)
-    ranks.select(col("node_id"), col("rank").as("rank_e6"))
+    ranks.keep(scope).select(col("node_id"), col("rank").as("rank_e6"))
   }
 
   /** Weighted multi-source shortest paths, distributed Bellman-Ford:
@@ -224,9 +195,8 @@ object GraphOps {
     * node: `min(struct(dist, r))` merges candidates exactly (ties keep
     * the EARLIER round, so an equal re-derivation never re-activates a
     * node), and `r == round` recovers the next frontier without a
-    * second materialization. Same loop hygiene as [[pageRank]]: persist
-    * per round, unpersist the superseded round, rebase the plan through
-    * the cached RDD every round.
+    * second materialization. The state moves through a
+    * [[graft.core.LoopFrame]].
     *
     * Input: edges (src, dst, w) with w a non-negative long; sources
     * (node_id). Output: (node_id, dist); unreached nodes are absent.
@@ -252,12 +222,9 @@ object GraphOps {
     */
   private[graft] def weightedDistanceLoop(e: DataFrame, sources: DataFrame,
       maxRounds: Int, scope: CacheScope = CacheScope.global): DataFrame = {
-    val spark = e.sparkSession
-    var cached = sources.select(col("node_id")).distinct()
-      .withColumn("dist", lit(0L)).withColumn("r", lit(0)).persist()
-    cached.count()
-    var state = spark.createDataFrame(cached.rdd, cached.schema)
-    var frontier = state
+    val state = new LoopFrame(sources.select(col("node_id")).distinct()
+      .withColumn("dist", lit(0L)).withColumn("r", lit(0)))
+    var frontier = state.frame
     var round = 0
     var drained = false
     while (round < maxRounds && !drained) {
@@ -265,19 +232,13 @@ object GraphOps {
       val cand = e.join(frontier, col("src") === col("node_id"))
         .select(col("dst").as("node_id"), (col("dist") + col("w")).as("dist"),
           lit(round).as("r"))
-      val merged = state.unionByName(cand)
+      state.advance(state.frame.unionByName(cand)
         .groupBy("node_id").agg(min(struct(col("dist"), col("r"))).as("m"))
-        .select(col("node_id"), col("m.dist").as("dist"), col("m.r").as("r"))
-        .persist()
-      merged.count() // materialize before dropping the previous round
-      cached.unpersist(blocking = false)
-      cached = merged
-      state = spark.createDataFrame(merged.rdd, merged.schema)
-      frontier = state.filter(col("r") === round)
+        .select(col("node_id"), col("m.dist").as("dist"), col("m.r").as("r")))
+      frontier = state.frame.filter(col("r") === round)
       drained = frontier.count() == 0
     }
-    scope.track(cached)
-    state.select(col("node_id"), col("dist"))
+    state.keep(scope).select(col("node_id"), col("dist"))
   }
 
   /** Single-shard twin of [[weightedDistance]] under the
@@ -415,8 +376,8 @@ object GraphOps {
     * Scale posture: per round ONE oriented-wedge triangle enumeration
     * (O(m^{3/2}) work, hub-safe via [[orientedTriangles]]) feeding a
     * per-edge support count and a semi-join filter; the edge set only
-    * shrinks, so rounds get cheaper. Persist / count / unpersist /
-    * RDD-rebase per round. Output: surviving edges (a, b, sup) with
+    * shrinks, so rounds get cheaper; it moves through a
+    * [[graft.core.LoopFrame]]. Output: surviving edges (a, b, sup) with
     * support RECOMPUTED inside the surviving set.
     */
   def kTruss(edges: DataFrame, k: Int, rounds: Int,
@@ -436,24 +397,17 @@ object GraphOps {
     */
   private[graft] def kTrussLoop(ec0: DataFrame, k: Int, rounds: Int,
       scope: CacheScope = CacheScope.global): DataFrame = {
-    val spark = ec0.sparkSession
-    var cached = ec0.persist()
-    var e = spark.createDataFrame(cached.rdd, cached.schema)
-    var n = cached.count()
+    val alive = new LoopFrame(ec0)
     var r = 0
     var stable = false
     while (r < rounds && !stable) {
       r += 1
-      val keep = e.join(edgeSupport(e, scope).filter(col("sup") >= k - 2),
-        Seq("a", "b"), "left_semi").persist()
-      val kn = keep.count()
-      stable = kn == n
-      n = kn
-      cached.unpersist(blocking = false)
-      cached = keep
-      e = spark.createDataFrame(keep.rdd, keep.schema)
+      val e = alive.frame
+      val n = alive.rows
+      stable = alive.advance(e.join(edgeSupport(e, scope)
+        .filter(col("sup") >= k - 2), Seq("a", "b"), "left_semi")) == n
     }
-    scope.track(cached)
+    val e = alive.keep(scope)
     e.join(edgeSupport(e, scope), Seq("a", "b"), "left")
       .select(col("a"), col("b"), coalesce(col("sup"), lit(0L)).as("sup"))
   }
@@ -512,9 +466,8 @@ object GraphOps {
     * Scale posture: per round ONE shuffle join of the persisted doubled
     * adjacency with the label frame plus one two-level aggregation
     * ((node, label) counts, then argmax via max(struct(cnt, −label)) —
-    * both map-side combinable). Same loop hygiene as [[pageRank]]:
-    * persist per round, unpersist the superseded round, rebase the plan
-    * through the cached RDD. Fixed `rounds` is the documented contract
+    * both map-side combinable); the labels move through a
+    * [[graft.core.LoopFrame]]. Fixed `rounds` is the documented contract
     * (convergence detection would add a per-round comparison job for no
     * semantic gain — oscillating bipartite cliques never converge).
     *
@@ -539,28 +492,19 @@ object GraphOps {
     */
   private[graft] def labelPropagationLoop(adj: DataFrame, rounds: Int,
       scope: CacheScope = CacheScope.global): DataFrame = {
-    val spark = adj.sparkSession
-    var cached = adj.select(col("u").as("node_id"))
-      .distinct().withColumn("lab", col("node_id")).persist()
-    cached.count()
-    var labels = spark.createDataFrame(cached.rdd, cached.schema)
+    val labels = new LoopFrame(adj.select(col("u").as("node_id"))
+      .distinct().withColumn("lab", col("node_id")))
     for (_ <- 1 to rounds) {
       val votes = adj
-        .join(labels.withColumnRenamed("node_id", "v"), "v")
+        .join(labels.frame.withColumnRenamed("node_id", "v"), "v")
         .groupBy(col("u").as("node_id"), col("lab"))
         .agg(count(lit(1)).as("c"))
-      val next = votes
+      labels.advance(votes
         .groupBy("node_id")
         .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
-        .select(col("node_id"), (-col("m.nl")).as("lab"))
-        .persist()
-      next.count()
-      cached.unpersist(blocking = false)
-      cached = next
-      labels = spark.createDataFrame(next.rdd, next.schema)
+        .select(col("node_id"), (-col("m.nl")).as("lab")))
     }
-    scope.track(cached)
-    labels.select(col("node_id"), col("lab").as("community"))
+    labels.keep(scope).select(col("node_id"), col("lab").as("community"))
   }
 
   /** Single-shard twin of [[labelPropagation]] under the [[LocalSweepEdges]]
@@ -691,11 +635,9 @@ object GraphOps {
     * shuffle join of the (persisted, deduplicated) edge list with the
     * current frontier plus an anti-join against the visited set — no
     * all-pairs reachability, no per-node path enumeration; rounds stop
-    * early when the frontier drains. The visited frame is persisted per
-    * round, the superseded round unpersisted, and the plan rebased
-    * through the cached RDD every round (same loop hygiene as
-    * [[pageRank]] / DedupOps.duplicateClusters — the analyzer never walks
-    * a depth-`maxHops` union chain).
+    * early when the frontier drains. The visited frame moves through a
+    * [[graft.core.LoopFrame]], so the analyzer never walks a
+    * depth-`maxHops` union chain.
     *
     * Input: edges (src, dst), sources (node_id). Output: (node_id, hops)
     * with hops ∈ [0, maxHops]; unreached nodes are absent.
@@ -722,32 +664,24 @@ object GraphOps {
     */
   private[graft] def hopDistanceLoop(e: DataFrame, sources: DataFrame,
       maxHops: Int, scope: CacheScope = CacheScope.global): DataFrame = {
-    val spark = e.sparkSession
-    var cached = sources.select(col("node_id")).distinct()
-      .withColumn("hops", lit(0L)).persist()
-    var prevTotal = cached.count()
-    var visited: DataFrame = spark.createDataFrame(cached.rdd, cached.schema)
-    var frontier = visited
+    val visited = new LoopFrame(sources.select(col("node_id")).distinct()
+      .withColumn("hops", lit(0L)))
+    var frontier = visited.frame
     var h = 0L
     var drained = false
     while (h < maxHops && !drained) {
       h += 1
+      val seen = visited.frame
+      val prevTotal = visited.rows
       val next = e.join(frontier.select(col("node_id")),
           col("src") === col("node_id"))
         .select(col("dst").as("node_id")).distinct()
-        .join(visited.select(col("node_id")), Seq("node_id"), "left_anti")
+        .join(seen.select(col("node_id")), Seq("node_id"), "left_anti")
         .withColumn("hops", lit(h))
-      val grown = visited.unionByName(next).persist()
-      val total = grown.count() // materialize before dropping the old round
-      drained = total == prevTotal
-      prevTotal = total
-      cached.unpersist(blocking = false)
-      cached = grown
-      visited = spark.createDataFrame(grown.rdd, grown.schema)
-      frontier = visited.filter(col("hops") === h)
+      drained = visited.advance(seen.unionByName(next)) == prevTotal
+      frontier = visited.frame.filter(col("hops") === h)
     }
-    scope.track(cached)
-    visited
+    visited.keep(scope)
   }
 
   /** Single-shard twin of the [[pageRank]] / [[personalizedPageRank]]
@@ -855,14 +789,14 @@ object GraphOps {
     * otherwise be a gigabyte row, and production walk engines cap or
     * alias-sample exactly here), then `steps` equi-join shuffles of the
     * walk frontier against it — the canonical distributed walk shape;
-    * per-round persist/unpersist + plan rebase as in [[pageRank]]. Walks
-    * reaching a node with no out-edges stop (the join drops them).
+    * the output reads every round, so each round is held in `scope` and
+    * cut. Walks reaching a node with no out-edges stop (the join drops
+    * them).
     * Input: edges(src, dst). Output: (walk_id, step, node).
     */
   def randomWalks(edges: DataFrame, walksPerNode: Int, steps: Int,
                   maxDeg: Int = 1024,
                   scope: CacheScope = CacheScope.global): DataFrame = {
-    val spark = edges.sparkSession
     val simple = edges.select(col("src"), col("dst")).distinct()
     val nbrs = scope.persist(simple.groupBy("src")
       .agg(slice(sort_array(collect_list(col("dst"))), 1, maxDeg).as("ns")))
@@ -876,7 +810,7 @@ object GraphOps {
       .select(explode(sequence(lit(0L), lit(w - 1L))).as("wi"), col("node"))
       .select((col("node") * w + col("wi")).as("walk_id"), col("node").as("cur")))
     frontier.count()
-    frontier = spark.createDataFrame(frontier.rdd, frontier.schema)
+    frontier = cut(frontier)
     var out = frontier.select(col("walk_id"), lit(0L).as("step"),
       col("cur").as("node"))
     for (t <- 1 to steps) {
@@ -886,7 +820,7 @@ object GraphOps {
             (Fns.mixId(col("walk_id") * (steps + 1) + t) % size(col("ns"))
               + 1).cast("int")).as("cur")))
       next.count()
-      frontier = spark.createDataFrame(next.rdd, next.schema)
+      frontier = cut(next)
       out = out.unionByName(frontier.select(col("walk_id"),
         lit(t.toLong).as("step"), col("cur").as("node")))
     }
@@ -938,11 +872,11 @@ object GraphOps {
     * treated as undirected (symmetrized here).
     *
     * Scale posture: two [[hopDistance]] frontier loops (each O(diameter)
-    * rounds of one join + one distinct, frontier-sized state, per-round
-    * persist/unpersist + rebase) plus three driver-side single-value
-    * probes (the seed min, and each sweep's argmax row) — documented
-    * eager scalars, the same contract as knn's density probe. Output one
-    * row: (seed, far_node, seed_ecc, peak_node, diameter_lb).
+    * rounds of one join + one distinct, frontier-sized state) plus three
+    * driver-side single-value probes (the seed min, and each sweep's
+    * argmax row) — documented eager scalars, the same contract as knn's
+    * density probe. Output one row: (seed, far_node, seed_ecc,
+    * peak_node, diameter_lb).
     */
   def doubleSweepDiameter(edges: DataFrame, maxHops: Int,
                           scope: CacheScope = CacheScope.global): DataFrame = {
@@ -992,8 +926,7 @@ object GraphOps {
     * [[DedupOps.duplicateClusters]] (edges are symmetrized there), so a
     * chain-shaped component of diameter d — the adversarial case for
     * plain label propagation, and common in paginated crawl graphs —
-    * converges in O(log d) rounds of two shuffles each, with the per-round
-    * unpersist + plan-rebase hygiene already audited on the dedup path.
+    * converges in O(log d) rounds of two shuffles each.
     * Nodes with no edges don't appear (components are defined over the
     * edge list; union isolated nodes in as self-labeled if needed).
     */
@@ -1020,9 +953,8 @@ object GraphOps {
     * ANSI mode fails loudly beyond. Scale posture: per iteration two
     * edge-list shuffle joins + two key aggregations (the pageRank shape
     * twice); the two global maxes are single-scalar actions (documented
-    * eager contract, same as the loop's per-round materialize). Same
-    * loop hygiene as [[pageRank]]: persist per round, unpersist the
-    * superseded frame, rebase the plan through the cached RDD.
+    * eager contract, same as the loop's per-round materialize). The
+    * state moves through a [[graft.core.LoopFrame]].
     *
     * Input: (src, dst) long edge ids (parallel edges collapse). Output:
     * (node_id, hub_e6, auth_e6).
@@ -1038,20 +970,15 @@ object GraphOps {
   /** The distributed loop of [[hits]] (spec-reachable). */
   private[graft] def hitsLoop(simple: DataFrame, iterations: Int,
       scope: CacheScope): DataFrame = {
-    val spark = simple.sparkSession
     val nodes = scope.persist(
       simple.select(col("src").as("node_id"))
         .unionByName(simple.select(col("dst").as("node_id"))).distinct())
     val e = scope.persist(simple)
 
-    var cached = nodes
-      .withColumn("h", lit(RankScale)).withColumn("a", lit(RankScale))
-      .persist()
-    var st: DataFrame = cached
-    var round = 0
-    while (round < iterations) {
-      round += 1
-      val aRaw = e.join(st.select(col("node_id"), col("h")),
+    val st = new LoopFrame(nodes
+      .withColumn("h", lit(RankScale)).withColumn("a", lit(RankScale)))
+    for (_ <- 1 to iterations) {
+      val aRaw = e.join(st.frame.select(col("node_id"), col("h")),
           col("src") === col("node_id"))
         .groupBy(col("dst")).agg(sum(col("h")).cast("long").as("araw"))
       val aFull = nodes.join(aRaw, col("node_id") === col("dst"), "left")
@@ -1069,18 +996,13 @@ object GraphOps {
         .persist()
       val qh = math.max(hFull.agg(coalesce(max(col("hraw")), lit(0L)))
         .head.getLong(0) / RankScale, 1L)
-      val stepped = hFull.selectExpr("node_id", s"hraw div $qh AS h")
-        .join(aN, "node_id")
-      val next = stepped.persist()
-      next.count() // materialize before dropping the inputs
+      st.advance(hFull.selectExpr("node_id", s"hraw div $qh AS h")
+        .join(aN, "node_id"))
       aFull.unpersist(blocking = false)
       hFull.unpersist(blocking = false)
-      cached.unpersist(blocking = false)
-      cached = next
-      st = spark.createDataFrame(next.toDF().rdd, next.schema)
     }
-    scope.track(cached)
-    st.select(col("node_id"), col("h").as("hub_e6"), col("a").as("auth_e6"))
+    st.keep(scope)
+      .select(col("node_id"), col("h").as("hub_e6"), col("a").as("auth_e6"))
   }
 
   /** k-core: the maximal subgraph in which every node has ≥ k neighbors
@@ -1100,10 +1022,10 @@ object GraphOps {
     *
     * Scale posture: per round the edge list is semi-joined against the
     * alive set on BOTH endpoints (two hash shuffles) and degree-counted
-    * (one agg); edges only shrink. Same loop hygiene as [[pageRank]]:
-    * persist per round, unpersist superseded, rebase through the cached
-    * RDD. Input: (src, dst). Output: (node_id, core_deg) for core
-    * members, core_deg = degree within the core.
+    * (one agg); edges only shrink. The alive set moves through a
+    * [[graft.core.LoopFrame]]. Input: (src, dst). Output:
+    * (node_id, core_deg) for core members, core_deg = degree within the
+    * core.
     */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int,
             scope: CacheScope = CacheScope.global): DataFrame = {
@@ -1121,32 +1043,22 @@ object GraphOps {
     */
   private[graft] def kCoreLoop(ue: DataFrame, k: Int, maxRounds: Int,
       scope: CacheScope = CacheScope.global): DataFrame = {
-    val spark = ue.sparkSession
-
     def degrees(alive: DataFrame): DataFrame =
       ue.join(alive.select(col("node_id").as("__s")), col("a") === col("__s"))
         .join(alive.select(col("node_id").as("__t")), col("b") === col("__t"))
         .groupBy(col("a").as("node_id"))
         .agg(count(lit(1)).as("core_deg"))
 
-    var cached = ue.select(col("a").as("node_id")).distinct().persist()
-    var alive: DataFrame = cached
-    var n = alive.count()
+    val alive = new LoopFrame(ue.select(col("a").as("node_id")).distinct())
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
       round += 1
-      val next = degrees(alive).filter(col("core_deg") >= k)
-        .select(col("node_id")).persist()
-      val m = next.count()
-      cached.unpersist(blocking = false)
-      cached = next
-      alive = spark.createDataFrame(next.toDF().rdd, next.schema)
-      converged = m == n
-      n = m
+      val n = alive.rows
+      converged = alive.advance(degrees(alive.frame)
+        .filter(col("core_deg") >= k).select(col("node_id"))) == n
     }
-    scope.track(cached)
-    degrees(alive)
+    degrees(alive.keep(scope))
   }
 
   /** Single-shard twin of [[kCore]] under the [[LocalSweepEdges]]
@@ -1200,8 +1112,8 @@ object GraphOps {
     * equi-join + key agg. Rounds are data-dependent (every color class
     * resolves its root SCC per round; random crawl-ish graphs converge
     * in a handful), the documented trade of the coloring algorithm.
-    * Loop hygiene as elsewhere: persist per round, unpersist superseded,
-    * rebase through the cached RDD, convergence gates are count/isEmpty
+    * Every loop frame is `localCheckpoint`ed, which truncates the RDD
+    * lineage as well as the plan; convergence gates are count/isEmpty
     * actions (documented eager contract).
     *
     * Input: (src, dst). Output: (node_id, scc_id) over edge endpoints,
@@ -1412,9 +1324,8 @@ object GraphOps {
     * loop runs on a frame that halves every round). Component count at
     * least halves per round ⇒ ≤ ⌈log₂ n⌉ rounds of a few hash shuffles
     * each — no sequential Kruskal sort, no quadratic step anywhere.
-    * Per-round persist/unpersist + RDD plan rebase (the hopDistance loop
-    * hygiene); the round gate is one isEmpty action (documented eager
-    * contract).
+    * Every round's frames are `localCheckpoint`ed (lineage truncated);
+    * the round gate is one isEmpty action (documented eager contract).
     *
     * Input: (a, b, w) with a < b, distinct w. Output: the forest's
     * (a, b, w) edges.
@@ -1539,10 +1450,8 @@ object GraphOps {
     *
     * Scale posture: BFS state is (landmark × visited-node) pairs —
     * bounded by |landmarks| · |V|, LINEAR in graph size at the fixed
-    * landmark count, never all-pairs. Same per-round loop hygiene as
-    * [[hopDistance]]: persisted visited set, superseded round
-    * unpersisted, plan rebased through the cached RDD, early exit on a
-    * drained frontier.
+    * landmark count, never all-pairs. The visited set moves through a
+    * [[graft.core.LoopFrame]]; early exit on a drained frontier.
     */
   def landmarkCloseness(edges: DataFrame, landmarks: DataFrame, maxHops: Int,
                         scope: CacheScope = CacheScope.global): DataFrame = {
@@ -1559,33 +1468,24 @@ object GraphOps {
     */
   private[graft] def landmarkClosenessLoop(e: DataFrame, landmarks: DataFrame,
       maxHops: Int, scope: CacheScope = CacheScope.global): DataFrame = {
-    val spark = e.sparkSession
-    var cached = landmarks.select(col("node_id")).distinct()
-      .select(col("node_id").as("lm"), col("node_id"), lit(0L).as("hops"))
-      .persist()
-    var prevTotal = cached.count()
-    var visited = spark.createDataFrame(cached.rdd, cached.schema)
-    var frontier = visited
+    val visited = new LoopFrame(landmarks.select(col("node_id")).distinct()
+      .select(col("node_id").as("lm"), col("node_id"), lit(0L).as("hops")))
+    var frontier = visited.frame
     var h = 0L
     var drained = false
     while (h < maxHops && !drained) {
       h += 1
+      val seen = visited.frame
+      val prevTotal = visited.rows
       val next = e.join(frontier.select(col("lm"), col("node_id")),
           col("src") === col("node_id"))
         .select(col("lm"), col("dst").as("node_id")).distinct()
-        .join(visited.select("lm", "node_id"), Seq("lm", "node_id"), "left_anti")
+        .join(seen.select("lm", "node_id"), Seq("lm", "node_id"), "left_anti")
         .withColumn("hops", lit(h))
-      val grown = visited.unionByName(next).persist()
-      val total = grown.count()
-      drained = total == prevTotal
-      prevTotal = total
-      cached.unpersist(blocking = false)
-      cached = grown
-      visited = spark.createDataFrame(grown.rdd, grown.schema)
-      frontier = visited.filter(col("hops") === h)
+      drained = visited.advance(seen.unionByName(next)) == prevTotal
+      frontier = visited.frame.filter(col("hops") === h)
     }
-    scope.track(cached)
-    visited.groupBy("node_id")
+    visited.keep(scope).groupBy("node_id")
       .agg(count(lit(1)).as("n_lm"),
         sum(when(col("hops") > 0, expr("1000000 div hops")).otherwise(0L))
           .as("close_e6"))
@@ -1628,11 +1528,11 @@ object GraphOps {
     * Scale posture: per round ONE shuffle join of the persisted edge
     * list with the current frontier plus one `dst` aggregation and an
     * anti-join against the visited set — [[hopDistance]]'s shape with a
-    * summed payload instead of DISTINCT; same per-round persist /
-    * unpersist / RDD-rebase hygiene, early exit when the frontier
-    * drains. σ grows at most by the max out-degree factor per hop, so
-    * int64 holds for any realistic (maxHops, degree) envelope; ANSI mode
-    * fails loudly on overflow rather than wrapping.
+    * summed payload instead of DISTINCT; the visited set moves through
+    * a [[graft.core.LoopFrame]], early exit when the frontier drains. σ
+    * grows at most by the max out-degree factor per hop, so int64 holds
+    * for any realistic (maxHops, degree) envelope; ANSI mode fails
+    * loudly on overflow rather than wrapping.
     *
     * Input: edges (src, dst), sources (node_id). Output
     * (node_id, hops, sigma) for every node within `maxHops`; seeds carry
@@ -1656,33 +1556,25 @@ object GraphOps {
     */
   private[graft] def shortestPathCountsLoop(e: DataFrame, sources: DataFrame,
       maxHops: Int, scope: CacheScope = CacheScope.global): DataFrame = {
-    val spark = e.sparkSession
-    var cached = sources.select(col("node_id")).distinct()
-      .withColumn("hops", lit(0L)).withColumn("sigma", lit(1L)).persist()
-    var prevTotal = cached.count()
-    var visited = spark.createDataFrame(cached.rdd, cached.schema)
-    var frontier = visited
+    val visited = new LoopFrame(sources.select(col("node_id")).distinct()
+      .withColumn("hops", lit(0L)).withColumn("sigma", lit(1L)))
+    var frontier = visited.frame
     var h = 0L
     var drained = false
     while (h < maxHops && !drained) {
       h += 1
+      val seen = visited.frame
+      val prevTotal = visited.rows
       val next = e.join(frontier.select(col("node_id"), col("sigma")),
           col("src") === col("node_id"))
         .groupBy(col("dst")).agg(sum(col("sigma")).as("sigma"))
         .withColumnRenamed("dst", "node_id")
-        .join(visited.select(col("node_id")), Seq("node_id"), "left_anti")
+        .join(seen.select(col("node_id")), Seq("node_id"), "left_anti")
         .select(col("node_id"), lit(h).as("hops"), col("sigma"))
-      val grown = visited.unionByName(next).persist()
-      val total = grown.count()
-      drained = total == prevTotal
-      prevTotal = total
-      cached.unpersist(blocking = false)
-      cached = grown
-      visited = spark.createDataFrame(grown.rdd, grown.schema)
-      frontier = visited.filter(col("hops") === h)
+      drained = visited.advance(seen.unionByName(next)) == prevTotal
+      frontier = visited.frame.filter(col("hops") === h)
     }
-    scope.track(cached)
-    visited
+    visited.keep(scope)
   }
 
   /** Single-shard twin of [[shortestPathCounts]] under the
@@ -1838,8 +1730,8 @@ object GraphOps {
     * dst side, one anti-join for the zero-in-degree slice, and one
     * anti-join shrinking the edge list — all keyed, no global sort; the
     * loop exits early when a round peels nothing (pure-cycle residue
-    * reaches a fixpoint, which the unrolled oracle replays). Same
-    * persist / count / unpersist / rebase hygiene as [[hopDistance]].
+    * reaches a fixpoint, which the unrolled oracle replays). Nodes and
+    * edges each move through a [[graft.core.LoopFrame]].
     * Strategy selection ([[LocalGraph.dispatchBySize]]): a small graph
     * runs the whole ladder in one task over in-degree counters
     * ([[topologicalLayersLocal]]); parity spec'd.
@@ -1863,41 +1755,28 @@ object GraphOps {
     */
   private[graft] def topologicalLayersLoop(e: DataFrame, maxRounds: Int,
       scope: CacheScope = CacheScope.global): DataFrame = {
-    val spark = e.sparkSession
-    var cachedN = e.select(col("src").as("node_id"))
-      .unionByName(e.select(col("dst").as("node_id"))).distinct().persist()
-    var nodes = spark.createDataFrame(cachedN.rdd, cachedN.schema)
-    var cachedE = e
-    var alive = spark.createDataFrame(e.rdd, e.schema)
+    val nodes = new LoopFrame(e.select(col("src").as("node_id"))
+      .unionByName(e.select(col("dst").as("node_id"))).distinct())
+    val alive = new LoopFrame(e)
     val layers = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var r = 0
     var stuck = false
     while (r < maxRounds && !stuck) {
-      val blocked = alive.select(col("dst").as("node_id")).distinct()
-      val zero = nodes.join(blocked, Seq("node_id"), "left_anti").persist()
-      if (zero.count() == 0) {
-        zero.unpersist(blocking = false)
-        stuck = true
-      } else {
-        scope.track(zero)
+      val blocked = alive.frame.select(col("dst").as("node_id")).distinct()
+      // each layer is part of the result: held until the scope releases
+      val zero = scope.persist(
+        nodes.frame.join(blocked, Seq("node_id"), "left_anti"))
+      if (zero.count() == 0) stuck = true
+      else {
         layers += zero.withColumn("layer", lit(r.toLong))
-        val nextN = blocked.persist()
-        nextN.count()
-        cachedN.unpersist(blocking = false)
-        cachedN = nextN
-        nodes = spark.createDataFrame(nextN.rdd, nextN.schema)
-        val nextE = alive.join(zero.select(col("node_id").as("src")),
-          Seq("src"), "left_anti").persist()
-        nextE.count()
-        if (cachedE ne e) cachedE.unpersist(blocking = false)
-        cachedE = nextE
-        alive = spark.createDataFrame(nextE.rdd, nextE.schema)
+        nodes.advance(blocked)
+        alive.advance(alive.frame.join(zero.select(col("node_id").as("src")),
+          Seq("src"), "left_anti"))
         r += 1
       }
     }
-    scope.track(cachedN)
-    if (cachedE ne e) scope.track(cachedE)
-    val leftover = nodes.withColumn("layer", lit(-1L))
+    alive.keep(scope)
+    val leftover = nodes.keep(scope).withColumn("layer", lit(-1L))
     (layers :+ leftover).reduce(_ unionByName _)
   }
 
@@ -1939,9 +1818,10 @@ object GraphOps {
     * global sort; the remaining graph shrinks geometrically (each edge's
     * lower-priority endpoint either wins or has a neighbor that does).
     * Round loop capped at `rounds` (the oracle unrolls exactly that many;
-    * extra rounds after the graph drains are no-ops on both sides), with
-    * the per-round persist / count / unpersist / RDD-rebase hygiene of
-    * [[hopDistance]]. Output (node_id, round) for every MIS member.
+    * extra rounds after the graph drains are no-ops on both sides); the
+    * remaining nodes and edges each move through a
+    * [[graft.core.LoopFrame]]. Output (node_id, round) for every MIS
+    * member.
     */
   def lubyMis(edges: DataFrame, rounds: Int, prioMul: Long,
               scope: CacheScope = CacheScope.global): DataFrame =
@@ -1963,7 +1843,6 @@ object GraphOps {
   private def lubyRounds(edges: DataFrame, rounds: Int, prioMul: Long,
                          removeNeighbors: Boolean,
                          scope: CacheScope): DataFrame = {
-    val spark = edges.sparkSession
     val und = scope.persist(
       edges.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
@@ -2017,19 +1896,17 @@ object GraphOps {
   private[graft] def lubyRoundsLoop(und: DataFrame, rounds: Int, prioMul: Long,
                                     removeNeighbors: Boolean,
                                     scope: CacheScope): DataFrame = {
-    val spark = und.sparkSession
     val sym = und.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-    var cachedN = sym.select(col("src").as("node_id")).distinct().persist()
-    var cachedE = sym.persist()
-    var remN = spark.createDataFrame(cachedN.rdd, cachedN.schema)
-    var remE = spark.createDataFrame(cachedE.rdd, cachedE.schema)
-    var empty = cachedN.isEmpty
+    val nodes = new LoopFrame(sym.select(col("src").as("node_id")).distinct())
+    val edges = new LoopFrame(sym)
     // schema-typed empty seed so an edgeless input still returns a frame
-    var out = List(remN.select(col("node_id"), lit(0L).as("round")).limit(0))
+    var out =
+      List(nodes.frame.select(col("node_id"), lit(0L).as("round")).limit(0))
     var r = 0L
-    while (r < rounds && !empty) {
+    while (r < rounds && nodes.rows > 0) {
       r += 1
+      val (remN, remE) = (nodes.frame, edges.frame)
       val prio = remN.withColumn("p",
         Fns.mixId(col("node_id") * lit(prioMul) + lit(r)))
       val lose = remE
@@ -2038,29 +1915,24 @@ object GraphOps {
         .filter(col("pb") < col("pa") ||
           (col("pb") === col("pa") && col("dst") < col("src")))
         .select(col("src").as("node_id")).distinct()
-      val win = remN.join(lose, Seq("node_id"), "left_anti")
-        .select(col("node_id"), lit(r).as("round")).persist()
-      scope.track(win)
-      out ::= spark.createDataFrame(win.rdd, win.schema)
+      // each round's winners are part of the result: held until the scope
+      // releases
+      val win = scope.persist(remN.join(lose, Seq("node_id"), "left_anti")
+        .select(col("node_id"), lit(r).as("round")))
+      out ::= cut(win)
       val del =
         if (removeNeighbors) win.select("node_id").unionByName(
             remE.join(win.select(col("node_id").as("src")), "src")
               .select(col("dst").as("node_id"))).distinct()
         else win.select("node_id")
-      val newN = remN.join(del, Seq("node_id"), "left_anti").persist()
-      val newE = remE
+      nodes.advance(remN.join(del, Seq("node_id"), "left_anti"))
+      val newN = nodes.frame
+      edges.advance(remE
         .join(newN.select(col("node_id").as("src")), "src")
         .join(newN.select(col("node_id").as("dst")), "dst")
-        .select("src", "dst").persist()
-      empty = newN.isEmpty
-      newE.count() // materialize before dropping the previous round
-      cachedN.unpersist(blocking = false)
-      cachedE.unpersist(blocking = false)
-      cachedN = newN; cachedE = newE
-      remN = spark.createDataFrame(newN.rdd, newN.schema)
-      remE = spark.createDataFrame(newE.rdd, newE.schema)
+        .select("src", "dst"))
     }
-    scope.track(cachedN); scope.track(cachedE)
+    nodes.keep(scope); edges.keep(scope)
     out.reduce(_ unionByName _)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.CacheScope
+import graft.core.{CacheScope, LoopFrame}
 import graft.functions.Fns
 import graft.plans.{HllExpressions, TextHashExpressions}
 
@@ -309,7 +309,7 @@ object LmOps {
     * whose single row is the round's broadcast decision (the one
     * documented driver probe — a tokenizer trainer is sequential in its
     * merge list by definition), and a narrow map applying the merge.
-    * Round state persists/unpersists with RDD rebase per round. Output:
+    * Round state moves through a [[graft.core.LoopFrame]]. Output:
     * (round, sym_a, sym_b, cnt) — the learned merge table.
     */
   def bpeTrain(corpus: DataFrame, rounds: Int,
@@ -361,8 +361,9 @@ object LmOps {
       .select(col("w"), col("wc"), concat(lit(" "),
         array_join(regexp_extract_all(col("w"), lit("."), lit(0)), " "),
         lit(" ")).as("s")))
-    if (words0.count() <= LocalVocabWords) bpeTrainLocal(words0, rounds, scope)
-    else bpeTrainLoop(words0, rounds, scope)
+    LocalGraph.dispatchBySize(words0, LocalVocabWords)(
+      bpeTrainLocal(words0, rounds, scope))(
+      _ => bpeTrainLoop(words0, rounds, scope))
   }
 
   /** Single-shard twin of the BPE trainer under [[LocalVocabWords]]:
@@ -455,14 +456,13 @@ object LmOps {
       scope: CacheScope = CacheScope.global): (DataFrame, DataFrame) = {
     val spark = words0.sparkSession
     import spark.implicits._
-    var cached = words0.persist()
-    var state = spark.createDataFrame(cached.rdd, cached.schema)
+    val state = new LoopFrame(words0)
     val merges = scala.collection.mutable.ListBuffer.empty[(Long, String, String, Long)]
     var r = 0L
     var done = false
     while (r < rounds && !done) {
       r += 1
-      val top = state
+      val top = state.frame
         .select(col("wc"), split(trim(col("s")), " ").as("a"))
         .filter(size(col("a")) >= 2)
         .select(col("wc"), explode(expr(
@@ -484,16 +484,10 @@ object LmOps {
               element_at(acc, -1) === lit(x) && sym === lit(y),
               concat(slice(acc, lit(1), size(acc) - 1), array(lit(x + y))))
             .otherwise(concat(acc, array(sym))))
-        val next = state.select(col("w"), col("wc"),
-          concat(lit(" "), array_join(folded, " "), lit(" ")).as("s"))
-          .persist()
-        next.count() // materialize before dropping the previous round
-        cached.unpersist(blocking = false)
-        cached = next
-        state = spark.createDataFrame(next.rdd, next.schema)
+        state.advance(state.frame.select(col("w"), col("wc"),
+          concat(lit(" "), array_join(folded, " "), lit(" ")).as("s")))
       }
     }
-    scope.track(cached)
-    (merges.toSeq.toDF("round", "sym_a", "sym_b", "cnt"), state)
+    (merges.toSeq.toDF("round", "sym_a", "sym_b", "cnt"), state.keep(scope))
   }
 }

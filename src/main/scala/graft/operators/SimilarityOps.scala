@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftPlanBridge.cut
 import graft.core.CacheScope
 import graft.functions.Fns
 
@@ -244,18 +245,17 @@ object SimilarityOps {
   def pqTopK(emb: DataFrame, queries: DataFrame, k: Int,
              ksub: Int = PqKsub, m: Int = 8): DataFrame = {
     import graft.plans.GeomExpressions.{pqAdcScore, pqDistTable, pqEncode}
-    val spark = emb.sparkSession
     val bc = pqCodebook(emb, ksub, m)
 
-    // the RDD rebase is a deliberate codegen BARRIER, not lineage hygiene:
+    // the cut is a deliberate codegen BARRIER, not lineage hygiene:
     // BroadcastNestedLoopJoin's whole-stage codegen defers streamed-side
     // projections to their point of use INSIDE the per-build-row loop, so
     // without the barrier pq_encode runs once per PAIR (measured 7x on the
     // oracle query; at corpus x query scale it re-creates the exact n*d
-    // cost PQ exists to avoid). The rebase materializes codes once per
-    // corpus row — no shuffle, stays fully distributed.
-    val codes0 = emb.select(col("vec_id"), pqEncode(col("embedding"), bc).as("codes"))
-    val codes = spark.createDataFrame(codes0.rdd, codes0.schema)
+    // cost PQ exists to avoid). The cut encodes once per corpus row — no
+    // shuffle, stays fully distributed.
+    val codes =
+      cut(emb.select(col("vec_id"), pqEncode(col("embedding"), bc).as("codes")))
     val q = broadcast(queries.select(col("vec_id").as("qid"),
       pqDistTable(col("embedding"), bc).as("dtab")))
     val scored = codes.join(q, col("vec_id") =!= col("qid"))
@@ -313,7 +313,7 @@ object SimilarityOps {
     *
     * Plan: both broadcasts are O(K)+O(ksub); the candidate join is a cid
     * equi-join (shuffle or broadcast-hash by size); assignment passes
-    * through an RDD rebase barrier so the n·K nearest-centroid scan runs
+    * through a plan cut (codegen barrier) so the n·K nearest-centroid scan runs
     * once per corpus row (not re-inlined into both its consumers by
     * CollapseProject), and the codes side through a second barrier like
     * pqTopK. Output: (qid, nid, rank, adist_e6), ANN semantics (possibly
@@ -323,23 +323,21 @@ object SimilarityOps {
                 maxCentroids: Int = IvfMaxCentroids, nprobe: Int = 4,
                 ksub: Int = PqKsub, m: Int = 8): DataFrame = {
     import graft.plans.GeomExpressions.{pqAdcScore, pqDistTableRes, pqEncodeRes, vecNearestCentroids}
-    val spark = emb.sparkSession
     // one count() sizes both builders (the documented eager probe, paid once)
     val n = emb.count()
     val bcCents = coarseQuantizer(emb, maxCentroids, n)
     val bcBook = pqResCodebook(emb, bcCents, ksub, m, n)
 
-    val assigned0 = emb.select(col("vec_id"), col("embedding"),
-      element_at(vecNearestCentroids(col("embedding"), 1, bcCents), 1).as("cid"))
-    val assigned = spark.createDataFrame(assigned0.rdd, assigned0.schema)
-    val codes0 = assigned.select(col("vec_id"), col("cid"),
-      pqEncodeRes(col("embedding"), col("cid"), bcCents, bcBook).as("codes"))
-    val codes = spark.createDataFrame(codes0.rdd, codes0.schema)
+    val assigned = cut(emb.select(col("vec_id"), col("embedding"),
+      element_at(vecNearestCentroids(col("embedding"), 1, bcCents), 1)
+        .as("cid")))
+    val codes = cut(assigned.select(col("vec_id"), col("cid"),
+      pqEncodeRes(col("embedding"), col("cid"), bcCents, bcBook).as("codes")))
     // the probe list is computed BEFORE the explode (once per query); the
     // residual dtab is per (query, probe) BY DESIGN — see scaladoc
-    val probes0 = queries.select(col("vec_id").as("qid"), col("embedding").as("qemb"),
-      vecNearestCentroids(col("embedding"), nprobe, bcCents).as("cids"))
-    val probes = spark.createDataFrame(probes0.rdd, probes0.schema)
+    val probes = cut(queries.select(col("vec_id").as("qid"),
+        col("embedding").as("qemb"),
+        vecNearestCentroids(col("embedding"), nprobe, bcCents).as("cids")))
       .select(col("qid"), col("qemb"), explode(col("cids")).as("cid"))
       .select(col("qid"), col("cid"),
         pqDistTableRes(col("qemb"), col("cid"), bcCents, bcBook).as("dtab"))

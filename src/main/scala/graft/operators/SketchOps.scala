@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftPlanBridge.cut
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Hll
@@ -132,7 +133,8 @@ object SketchOps {
     * Scale posture: per round ONE edge-list equi-join against the sparse
     * register frame and one map-side-combined (node, reg) max; rounds
     * are the query's radius bound (small by definition — web diameters
-    * are ~20). Persist / count / unpersist / RDD-rebase per round.
+    * are ~20). The output reads every round, so each round is held in
+    * `scope` and cut ([[org.apache.spark.sql.GraftPlanBridge.cut]]).
     * Input: nodes (node_id, fp — nonnegative hash), edges (src, dst).
     * Output: (node_id, r, n_regs, reg_sum, est_e3) for r in 0..rounds.
     */
@@ -163,30 +165,29 @@ object SketchOps {
       rounds: Int, m: Int = Hll.M,
       scope: graft.core.CacheScope =
         graft.core.CacheScope.global): DataFrame = {
-    val spark = e.sparkSession
     def finishRound(state: DataFrame, r: Int): DataFrame =
       finish(state, "node_id", Nil, m)
         .select(col("node_id"), lit(r.toLong).as("r"),
           col("n_regs"), col("reg_sum"), col("est_e3"))
-    var cached = registers(nodes, "node_id", col("fp"), m)
-      .groupBy(col("node_id"), col("reg")).agg(max(col("rho")).as("mrho"))
-      .persist()
-    var state = spark.createDataFrame(cached.rdd, cached.schema)
+    // every round's registers stay persisted until the scope releases:
+    // the output union reads all of them, so releasing one mid-loop
+    // would recompute its rounds when the result is evaluated
+    def hold(round: DataFrame): DataFrame = {
+      val held = scope.persist(round)
+      held.count()
+      cut(held)
+    }
+    var state = hold(registers(nodes, "node_id", col("fp"), m)
+      .groupBy(col("node_id"), col("reg")).agg(max(col("rho")).as("mrho")))
     val outs = scala.collection.mutable.ListBuffer(finishRound(state, 0))
     for (r <- 1 to rounds) {
       val prop = e
         .join(state.withColumnRenamed("node_id", "dst"), "dst")
         .select(col("src").as("node_id"), col("reg"), col("mrho"))
-      val next = state.unionByName(prop)
-        .groupBy(col("node_id"), col("reg")).agg(max(col("mrho")).as("mrho"))
-        .persist()
-      next.count() // materialize before dropping the previous round
-      cached.unpersist(blocking = false)
-      cached = next
-      state = spark.createDataFrame(next.rdd, next.schema)
+      state = hold(state.unionByName(prop)
+        .groupBy(col("node_id"), col("reg")).agg(max(col("mrho")).as("mrho")))
       outs += finishRound(state, r)
     }
-    scope.track(cached)
     outs.reduce(_ unionByName _)
   }
 

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{CacheScope, CellCover, CellId, Planar}
+import org.apache.spark.sql.GraftPlanBridge.cut
+import graft.core.{CacheScope, CellCover, CellId, LoopFrame, Planar}
 import graft.functions.Fns
 import graft.sources.Synth
 
@@ -500,10 +501,9 @@ object SpatialOps {
     * stops when none remain), so the dominant cost is the first pass.
     *
     * Persist hygiene: intermediates the returned plan reads twice are
-    * registered in `scope`, and the shuffle strategy unpersists each
-    * superseded query frontier as soon as the next one materializes; the
-    * caller releases `scope` after consuming the result (see
-    * [[graft.core.CacheScope]]).
+    * registered in `scope`, and the shuffle strategy moves its query
+    * frontier through a [[graft.core.LoopFrame]]; the caller releases
+    * `scope` after consuming the result (see [[graft.core.CacheScope]]).
     */
   def knn(points: DataFrame, queries: DataFrame, k: Int, metric: KnnMetric,
           level: Int = 0, strategy: KnnStrategy = KnnStrategy.BySize,
@@ -529,13 +529,15 @@ object SpatialOps {
       if (fallbackQueries.isEmpty) guaranteed
       else guaranteed.unionByName(knnBruteForce(points, fallbackQueries, k, metric))
     } else {
-      var frontier = knnQueries(queries).persist()
-      var remaining = frontier
+      // the next frontier reads this one twice (anti-join side and
+      // candidate side): uncut, its plan would double per coarsening round
+      val frontier = new LoopFrame(knnQueries(queries))
       var out: DataFrame = null
       var lv = lv0
       var done = false
       while (!done) {
         val terminal = lv <= 1
+        val remaining = frontier.frame
         // persisted (scope-released): the round's top-k feeds both the
         // guarantee check and the emitted output — without it the heavy
         // join+window runs twice
@@ -544,31 +546,18 @@ object SpatialOps {
             guarantee = !terminal))
         if (terminal) {
           out = if (out == null) ranked else out.unionByName(ranked)
-          // the terminal round's top-k is not materialized until the caller
-          // acts, and it reads this frontier — release with the scope
-          scope.track(frontier)
           done = true
         } else {
           val emit = ranked.filter(col("ok")).drop("ok")
           out = if (out == null) emit else out.unionByName(emit)
-          // count() (not isEmpty) fully materializes the next frontier, so the
-          // superseded one can be dropped immediately instead of leaking one
-          // persisted frame per coarsening round
-          val next = remaining.join(emit.select("qid"), Seq("qid"), "left_anti").persist()
-          val nLeft = next.count()
-          frontier.unpersist(blocking = false)
-          if (nLeft == 0L) { next.unpersist(blocking = false); done = true }
-          else {
-            frontier = next
-            // plan rebase over the cached frontier: the next frontier reads
-            // this one twice (anti-join side and candidate side), so without
-            // the cut its plan — and every cached plan string — doubles per
-            // coarsening round
-            remaining = next.sparkSession.createDataFrame(next.rdd, next.schema)
-            lv -= 1
-          }
+          done = frontier.advance(
+            remaining.join(emit.select("qid"), Seq("qid"), "left_anti")) == 0L
+          lv -= 1
         }
       }
+      // the terminal round's top-k is not materialized until the caller
+      // acts, and it reads the last frontier — release with the scope
+      frontier.keep(scope)
       out
     }
   }
@@ -716,11 +705,9 @@ object SpatialOps {
     val pts = scope.persist(points.select("pid", "lon_fix", "lat_fix"))
     val pairsRaw = scope.persist(withinRadiusGeo(pts, pts, epsMeters)
       .select(col("qid"), col("pid").as("nid")))
-    // plan rebase over the cached radius join: pairs feeds core counting,
-    // core-core edges, borders AND the cluster loop — without cutting the
-    // cover-tree lineage here every downstream action re-analyzes it
-    // (driver CPU, not compute; see duplicateClustersCounted)
-    val pairs = pts.sparkSession.createDataFrame(pairsRaw.rdd, pairsRaw.schema)
+    // pairs feeds core counting, core-core edges, borders AND the cluster
+    // loop: cut, so no downstream action re-analyzes the cover-tree plan
+    val pairs = cut(pairsRaw)
     val cores = scope.persist(pairs.groupBy("qid")
       .agg(count(lit(1)).as("n_nbrs"))
       .filter(col("n_nbrs") >= minPts - 1).select(col("qid").as("pid")))

@@ -1020,6 +1020,10 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
     val pts = Synth.points(spark, dir)
     val corpus = Synth.corpus(spark, dir)
+    val s = spark; import s.implicits._
+    // a 60-node ring with chords: (i, i+1) and (i, i+7)
+    val ring = (0L until 60L).flatMap(i => Seq((i, (i + 1) % 60), (i, (i + 7) % 60)))
+      .toDF("src", "dst")
     val runs: Seq[(String, graft.core.CacheScope => org.apache.spark.sql.DataFrame)] = Seq(
       ("knn planar broadcast", sc => SpatialOps.knn(pts, pts.filter(col("pid") % 997 === 0), 5,
         KnnMetric.Planar, strategy = KnnStrategy.Broadcast, scope = sc)),
@@ -1032,7 +1036,24 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("minHashLshPairs", sc => DedupOps.minHashLshPairs(corpus, sc)),
       ("ngramJaccardPairs", sc => DedupOps.ngramJaccardPairs(corpus, 600, sc)),
       ("duplicateClusters", sc =>
-        DedupOps.duplicateClusters(DedupOps.minHashLshPairs(corpus, sc), sc)))
+        DedupOps.duplicateClusters(DedupOps.minHashLshPairs(corpus, sc), sc)),
+      // the distributed loops, called past their size dispatch
+      ("pageRankLoop", sc => GraphOps.pageRankLoop(ring.distinct(), 3, sc)),
+      ("topologicalLayersLoop", sc => GraphOps.topologicalLayersLoop(
+        ring.filter(col("src") < col("dst")), 4, sc)),
+      ("lubyRoundsLoop", sc => GraphOps.lubyRoundsLoop(
+        ring.select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b")).distinct(),
+        4, 1L, removeNeighbors = true, sc)),
+      ("hyperBallLoop", sc => SketchOps.hyperBallLoop(
+        ring.select(col("src").as("node_id"), col("src").as("fp")).distinct(),
+        ring, 3, scope = sc)),
+      ("bpeTrainLoop", sc => LmOps.bpeTrainLoop(
+        Seq(("lower", 3L, " l o w e r "), ("lowest", 2L, " l o w e s t "))
+          .toDF("w", "wc", "s"), 3, sc)._1),
+      ("resolveRedirectsLoop", sc => CrawlOps.resolveRedirectsLoop(
+        ring.filter(col("dst") === (col("src") + 1) % 60 && col("src") % 5 =!= 0),
+        48L, sc)))
     runs.foreach { case (name, run) =>
       val scope = new graft.core.CacheScope
       assert(run(scope).count() > 0, name)

@@ -91,6 +91,24 @@ class HyperBallSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(viaLocal === viaLoop)
   }
 
+  test("the distributed loop holds every round until the scope releases") {
+    val s = spark; import s.implicits._
+    spark.sharedState.cacheManager.clearCache()
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    val edges = (0L until 40L).map(i => (i, (i + 1) % 40))
+    val nodes = (0L until 40L).map(n => (n, graft.core.TextHash.mixId(n) >>> 1))
+      .toDF("node_id", "fp")
+    val scope = new graft.core.CacheScope
+    val out = SketchOps.hyperBallLoop(nodes, edges.toDF("src", "dst"), 3,
+      scope = scope)
+    // the output union reads round 0 and each of the 3 merged rounds
+    assert(spark.sparkContext.getPersistentRDDs.size === 4)
+    assert(out.count() === 4L * 40)
+    assert(spark.sparkContext.getPersistentRDDs.size === 4)
+    scope.release()
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
   test("estimates are monotone in radius (balls only grow)") {
     val s = spark; import s.implicits._
     val edges = (0L until 30L).map(i => (i, (i + 1) % 30)) // a 30-cycle
