@@ -68,10 +68,18 @@ object CellId {
     d >= 0 && (cell >> (2 * d)) == ancestor
   }
 
-  def cellX(lonFix: Long, lvl: Int): Long =
-    clamp(((lonFix + 1800000000L) << lvl) / 3600000000L, lvl)
-  def cellY(latFix: Long, lvl: Int): Long =
-    clamp(((latFix + 900000000L) << lvl) / 1800000000L, lvl)
+  /** Grid x / y of a fix coordinate at `lvl`. Coordinates outside the
+    * domain clamp into the edge cells on both sides; the offset is clamped
+    * at 0 before the multiply, so truncating division is floor division.
+    * An offset whose product with 2^lvl leaves int64 throws
+    * ArithmeticException, as Spark's ANSI arithmetic does.
+    */
+  def cellX(lonFix: Long, lvl: Int): Long = bin(lonFix, 1800000000L, lvl)
+  def cellY(latFix: Long, lvl: Int): Long = bin(latFix, 900000000L, lvl)
+
+  private def bin(fix: Long, half: Long, lvl: Int): Long =
+    math.min(Math.multiplyExact(math.max(Math.addExact(fix, half), 0L), 1L << lvl) / (2 * half),
+      (1L << lvl) - 1)
 
   def fromFix(lonFix: Long, latFix: Long, lvl: Int): Long =
     fromXY(cellX(lonFix, lvl), cellY(latFix, lvl), lvl)
@@ -121,10 +129,6 @@ object CellId {
   }
 
   private def wrap(v: Long, n: Long): Long = ((v % n) + n) % n
-  private def clamp(v: Long, lvl: Int): Long = {
-    val max = (1L << lvl) - 1
-    if (v < 0) 0L else if (v > max) max else v
-  }
 
   /** Hilbert-curve index of grid cell (x, y) on the 2^order x 2^order
     * grid — the classic rotate-and-accumulate walk (d=0 at (0,0), first

@@ -2,13 +2,24 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+
+import graft.core.{CellId, TextHash}
+import graft.plans.NativeCall
 
 /** Column-level function catalog — the engine's scalar layer.
   *
-  * Everything here composes built-in `org.apache.spark.sql.functions`
+  * Most builders compose built-in `org.apache.spark.sql.functions`
   * (whole-stage-codegen'd Catalyst expressions); no Scala UDFs in the hot
   * path. Where a query needs an exact DuckDB-oracle twin, the math is pure
   * int64 so both engines agree bit-for-bit.
+  *
+  * The cell builders and [[mixId]] are native calls into their `core`
+  * kernels ([[CellId]], [[TextHash.mixId]]) through
+  * [[graft.plans.NativeCall]]: one definition serves the driver and the
+  * executors, and a static call stays one expression node where a
+  * built-in composition that reads its input twice per step is copied
+  * into every consumer by CollapseProject.
   */
 object Fns {
 
@@ -84,42 +95,29 @@ object Fns {
     least(greatest(raw, lit(0L)), lit(n - 1))
   }
 
-  /** Equirectangular integer bin on fix coords at 2^level resolution —
-    * exact int64 (generalizes reference/examples/nodedensity.cpp:47-54).
-    * Coordinates outside the domain clamp into the edge cells on both
-    * sides, as core.CellId.cellX/cellY do. The offset is clamped at 0
-    * before the division, so truncating `div` is floor division here.
+  // ---- cell ids -------------------------------------------------------------
+
+  /** Equirectangular grid x / y of fix coords at 2^level resolution
+    * (generalizes reference/examples/nodedensity.cpp:47-54): exact int64,
+    * clamped into the edge cells on both sides, ANSI overflow errors — the
+    * kernel [[CellId.cellX]] / [[CellId.cellY]] that builds the driver-side
+    * covers.
     */
-  def cellX(lonFix: Column, level: Int): Column = cellBin(lonFix, 1800000000L, level)
-  def cellY(latFix: Column, level: Int): Column = cellBin(latFix, 900000000L, level)
+  def cellX(lonFix: Column, level: Int): Column =
+    NativeCall(CellId, "cellX", LongType, lonFix.cast("long"), lit(level))
+  def cellY(latFix: Column, level: Int): Column =
+    NativeCall(CellId, "cellY", LongType, latFix.cast("long"), lit(level))
 
-  private def cellBin(fix: Column, half: Long, level: Int): Column =
-    least(call_function("div", greatest(fix + lit(half), lit(0L)) * lit(1L << level),
-      lit(2 * half)), lit((1L << level) - 1))
-
-  /** Morton interleave of two sub-2^16 grid coordinates (magic-number
-    * spreading — pure bit ops, exact in any engine).
-    */
-  def mortonSpread(v: Column): Column = {
-    val s1 = v.bitwiseOR(shiftleft(v, 8)).bitwiseAND(lit(0x00FF00FF00FF00FFL))
-    val s2 = s1.bitwiseOR(shiftleft(s1, 4)).bitwiseAND(lit(0x0F0F0F0F0F0F0F0FL))
-    val s3 = s2.bitwiseOR(shiftleft(s2, 2)).bitwiseAND(lit(0x3333333333333333L))
-    s3.bitwiseOR(shiftleft(s3, 1)).bitwiseAND(lit(0x5555555555555555L))
-  }
-
-  /** Sentinel-bit morton cell id from grid coordinates — the ONE site
-    * encoding the bit layout (level sentinel | spread(cx) | spread(cy)<<1);
-    * every operator that buckets by cell goes through this or cellId
-    * (the from-fix-coords form below; see graft.core.CellId — parent is a
-    * plain >> 2, so interval containment joins need no recursion).
+  /** Sentinel-bit morton cell id from grid coordinates ([[CellId.fromXY]]:
+    * level sentinel | spread(cx) | spread(cy)<<1, parent = id >> 2) — every
+    * operator that buckets by cell goes through this or [[cellId]], the
+    * from-fix-coords form.
     */
   def cellIdFromXY(cx: Column, cy: Column, level: Int): Column =
-    lit(1L << (2 * level))
-      .bitwiseOR(mortonSpread(cx))
-      .bitwiseOR(shiftleft(mortonSpread(cy), 1))
+    NativeCall(CellId, "fromXY", LongType, cx.cast("long"), cy.cast("long"), lit(level))
 
   def cellId(lonFix: Column, latFix: Column, level: Int): Column =
-    cellIdFromXY(cellX(lonFix, level), cellY(latFix, level), level)
+    NativeCall(CellId, "fromFix", LongType, lonFix.cast("long"), latFix.cast("long"), lit(level))
 
   // ---- text analysis --------------------------------------------------------
 
@@ -285,21 +283,12 @@ object Fns {
     array_min(transform(shingles, h => (h * lit(a) + lit(b)) % lit(1000000007L)))
   }
 
-  /** Column twin of core.TextHash.mixId — the BIGINT-safe id scatter used
-    * by the IVF/PQ residue samplers (and their DuckDB oracles) so that
-    * clustered id spaces still sample uniformly. Bit-for-bit the kernel:
-    * two LCG-mod-(2^31-1) rounds with xor-shift folds.
+  /** BIGINT-safe id scatter ([[TextHash.mixId]]: two LCG-mod-(2^31-1)
+    * rounds with xor-shift folds) used by the IVF/PQ residue samplers (and
+    * their DuckDB oracles) so that clustered id spaces still sample
+    * uniformly.
     */
-  def mixId(c: Column): Column = {
-    // plain subtree duplication (no bindOnce): every piece is a handful of
-    // codegen'd integer ops, and interpreted HOF lambdas cost far more
-    // than re-evaluating them
-    def xs16(z: Column): Column = z.bitwiseXOR(shiftright(z, 16))
-    val z0 = (c % MixM + MixM) % MixM
-    val z1 = xs16((z0 * lit(1103515245L) + lit(12345L)) % MixM)
-    xs16((z1 * lit(69069L) + lit(1L)) % MixM)
-  }
-  private val MixM = lit(2147483647L)
+  def mixId(c: Column): Column = NativeCall(TextHash, "mixId", LongType, c.cast("long"))
 
   /** Let-binding for collection expressions: evaluates `v` exactly once and
     * exposes it to `body` as a lambda variable. Without this, k references

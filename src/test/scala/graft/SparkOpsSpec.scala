@@ -32,11 +32,39 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("Fns.cellId (Column) agrees with CellId.fromFix (kernel)") {
-    val rows = Synth.points(spark, dir).limit(500)
-      .select(col("lon_fix"), col("lat_fix"), Fns.cellId(col("lon_fix"), col("lat_fix"), 12))
-      .collect()
+    val ss = spark; import ss.implicits._
+    val levels = Seq(0, 8, 12, 16, 17, 20, 30)
+    // the domain edges and their neighbours, points past ±180° and ±90°,
+    // and every level's cell boundaries (the first fix of cells 1, n/2 and
+    // n-1, and its neighbours)
+    val lons = Seq(-1800000001L, -1800000000L, -1799999999L, 1799999999L, 1800000000L,
+      1800000001L, -2500000000L, -1900000000L, 1900000000L, 2500000000L, 0L)
+    val lats = Seq(-900000001L, -900000000L, -899999999L, 899999999L, 900000000L,
+      900000001L, -1000000000L, 1000000000L, 0L)
+    def bounds(half: Long): Seq[Long] = levels.flatMap { l =>
+      val n = 1L << l
+      Seq(1L, n / 2, n - 1).distinct.flatMap { k =>
+        val b = k * 2 * half / n - half
+        Seq(b - 1, b, b + 1, b + 2)
+      }
+    }
+    val synth = Synth.points(spark, dir).limit(500).select("lon_fix", "lat_fix")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val pts = synth ++ (lons ++ bounds(1800000000L)).flatMap(x => lats.map(x -> _)) ++
+      (lats ++ bounds(900000000L)).flatMap(y => lons.map(_ -> y))
+    // an RDD-backed frame: the projection runs on the executors, generated
+    val frame = spark.sparkContext.parallelize(pts, 4).toDF("lon_fix", "lat_fix")
+    val rows = frame.select(col("lon_fix") +: col("lat_fix") +: levels.flatMap { l =>
+      Seq(Fns.cellId(col("lon_fix"), col("lat_fix"), l),
+        Fns.cellIdFromXY(Fns.cellX(col("lon_fix"), l), Fns.cellY(col("lat_fix"), l), l))
+    }: _*).collect()
+    assert(rows.length === pts.length)
     rows.foreach { r =>
-      assert(r.getLong(2) === CellId.fromFix(r.getLong(0), r.getLong(1), 12))
+      levels.zipWithIndex.foreach { case (l, i) =>
+        val want = CellId.fromFix(r.getLong(0), r.getLong(1), l)
+        assert(r.getLong(2 + 2 * i) === want, s"cellId at level $l of $r")
+        assert(r.getLong(3 + 2 * i) === want, s"cellIdFromXY at level $l of $r")
+      }
     }
   }
 

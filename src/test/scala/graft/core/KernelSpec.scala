@@ -161,6 +161,23 @@ class KernelSpec extends AnyFunSuite {
     assert(cover.contains(id))
   }
 
+  test("cell x/y: an offset whose product with 2^level overflows throws, kernel and Column alike") {
+    import org.apache.spark.sql.{Column, GraftColumnBridge}
+    import org.apache.spark.sql.functions.lit
+    import graft.functions.Fns
+    def eval(c: Column): Any = GraftColumnBridge.tree(c).eval()
+    // (9e9 + 1.8e9) * 2^30 and (9e9 + 0.9e9) * 2^30 both exceed Long.MaxValue
+    val fix = 9000000000L
+    intercept[ArithmeticException](CellId.cellX(fix, 30))
+    intercept[ArithmeticException](eval(Fns.cellX(lit(fix), 30)))
+    intercept[ArithmeticException](CellId.cellY(fix, 30))
+    intercept[ArithmeticException](eval(Fns.cellY(lit(fix), 30)))
+    intercept[ArithmeticException](CellId.cellX(Long.MaxValue, 0))
+    // one level lower the product fits, and the cell clamps to the edge
+    assert(CellId.cellX(fix, 29) === (1L << 29) - 1)
+    assert(eval(Fns.cellX(lit(fix), 29)) === (1L << 29) - 1)
+  }
+
   // --- tiles ---------------------------------------------------------------
   test("web-mercator tile assignment") {
     assert(Tiles.tileX(0, 0.0) === 0)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,6 +33,10 @@ class PipCoverSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private type Rings = Array[(Array[Long], Array[Long])]
   private val L = SpatialOps.CoverLevel
+  // bound on the expression nodes in the optimized plan of `pip` over a
+  // bare point frame: 34 with the cell key as one native call, 537 when it
+  // was a built-in tree copied into the plan
+  private val PipPlanNodes = 40
   // vertices on a 2^10 lattice, so every edge has integer points inside it
   private val Grid = 1024L
   private def snap(v: Double): Long = math.round(v / Grid) * Grid
@@ -199,6 +204,16 @@ class PipCoverSpec extends AnyFunSuite with BeforeAndAfterAll {
     val east = Seq(1890000000L, 1990000000L, 1830000000L, 1770000000L, 1799999999L)
     val pts = (east ++ east.map(-_)).map(x => (x, 50000000L))
     assertPip(pointsDf(pts), polys)
+  }
+
+  test("the optimized pip plan stays small: the cell key is one native call, not a copied tree") {
+    // a range-backed frame, so the optimizer cannot fold the projection into
+    // a local relation
+    val pts = spark.range(4).select(col("id").as("pid"), (col("id") * 1000).as("lon_fix"),
+      col("id").as("lat_fix"))
+    val plan = SpatialOps.pip(spark, pts).queryExecution.optimizedPlan
+    val nodes = plan.collect { case p => p.expressions.map(_.collect { case e => e }.size).sum }.sum
+    assert(nodes < PipPlanNodes, s"$nodes expression nodes in\n$plan")
   }
 
   test("an empty polygon map: the join returns no rows, the anti join every point") {

@@ -12,6 +12,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{CellId, Hll, TextHash}
+import graft.functions.Fns
 
 /** Every native kernel builder, run generated (whole-stage codegen,
   * CODEGEN_ONLY) and interpreted (NO_CODEGEN, whole-stage off): both
@@ -43,6 +44,7 @@ class NativeCallSpec extends AnyFunSuite with BeforeAndAfterAll {
       .add("seq", LongType).add("x", LongType).add("y", LongType)))
     .add("dtab", longs).add("codes", ArrayType(IntegerType))
     .add("reg_sum", LongType).add("n_regs", LongType)
+    .add("lon", LongType).add("lat", LongType)
 
   private def row(vs: Any*): Row = new GenericRowWithSchema(vs.toArray, schema)
   private def pts(ps: (Long, Long, Long)*) = ps.map { case (s, x, y) => Row(s, x, y) }
@@ -55,12 +57,13 @@ class NativeCallSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the quick brown fox jumps over the lazy dog the quick brown fox",
       Seq(0.5f, -0.25f, 1.0f), Seq(0.1f, 0.2f, 0.3f), 7.0,
       pts((0, 0, 0), (1, 5, 1), (2, 10, 0), (3, 15, 8), (4, 20, 0)),
-      Seq(1L, 2L, 3L, 4L, 5L, 6L), Seq(2, 1), 1000L, 10L),
+      Seq(1L, 2L, 3L, 4L, 5L, 6L), Seq(2, 1), 1000L, 10L, 1799999999L, -900000000L),
     row(7L, 1L, Seq(0L, 20L, 25L, 3L, -4L), Seq(0L, -2L, 14L, 18L, 9L),
       Seq(100L, 110L, 110L, 100L), Seq(0L, 0L, 10L, 10L),
       Seq(1L, 1L, 2L, 2L), Seq(1L, 2L, 2L, 1L), Seq(-10L, -10L, 10L, 10L),
       "aaaa aaaa aaaa bbbb", Seq(1.0f, 0.0f, 0.0f), Seq(0.0f, 1.0f, 0.0f), 1.5,
-      pts((0, 0, 0), (1, 1, 1)), Seq(10L, 20L, 30L, 40L), Seq(1, 0), 70000L, 16L),
+      pts((0, 0, 0), (1, 1, 1)), Seq(10L, 20L, 30L, 40L), Seq(1, 0), 70000L, 16L,
+      -1900000000L, 123456789L),
     row(Seq.fill(schema.length)(null): _*))
 
   // row values as the kernel's Catalyst-side arguments
@@ -136,7 +139,15 @@ class NativeCallSpec extends AnyFunSuite with BeforeAndAfterAll {
       r => out(TextHashKernel.slidingNgrams(u(r), 2))),
     ("hllEstE3", HllExpressions.hllEstE3(col("reg_sum"), col("n_regs"), 16),
       r => Hll.estE3(l(r, "reg_sum"), l(r, "n_regs"), 16)),
-    ("lnE6", HllExpressions.lnE6(col("d")), r => Hll.lnE6(r.getAs[Double]("d"))))
+    ("lnE6", HllExpressions.lnE6(col("d")), r => Hll.lnE6(r.getAs[Double]("d"))),
+    ("cellX", Fns.cellX(col("lon"), 17), r => CellId.cellX(l(r, "lon"), 17)),
+    ("cellY", Fns.cellY(col("lat"), 30), r => CellId.cellY(l(r, "lat"), 30)),
+    // an int column is cast to the kernel's long parameter
+    ("cellIdFromXY", Fns.cellIdFromXY(col("x").cast("int"), col("y"), 20),
+      r => CellId.fromXY(l(r, "x"), l(r, "y"), 20)),
+    ("cellId", Fns.cellId(col("lon"), col("lat"), 24),
+      r => CellId.fromFix(l(r, "lon"), l(r, "lat"), 24)),
+    ("mixId", Fns.mixId(col("lat")), r => TextHash.mixId(l(r, "lat"))))
 
   private def run(frame: DataFrame, wholeStage: Boolean, factoryMode: String): Seq[Row] = {
     spark.conf.set("spark.sql.codegen.wholeStage", wholeStage.toString)
