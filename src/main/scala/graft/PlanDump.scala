@@ -5,6 +5,7 @@ package graft
   * optimization rounds (the judge cannot run Spark; these files are the
   * check against plan claims). Runs at sf0.1 (the bench scale) so
   * size-dispatched operators take the same code path the bench times.
+  * Runs at local[SPARK_GRAFT_CPUS], default the host's core count.
   * Usage: runMain graft.PlanDump <suffix> <query> [query...]
   */
 object PlanDump {
@@ -12,7 +13,8 @@ object PlanDump {
     val suffix = args(0)
     val names = args.drop(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = BenchScale.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = BenchScale.session(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors))
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get("plans/r06"))
     for (name <- names) {

@@ -7,12 +7,15 @@ import graft.operators.{MetricsOps, StageMetric}
   * wall ms, task count, executor run/CPU ms and shuffle record counts.
   * executorCpuMs is the contention-robust compute metric on this noisy
   * shared host: external load inflates wall and run time, not CPU time.
-  * Usage: runMain graft.ProfileQuery <name> [sfDir].
+  * Runs at local[SPARK_GRAFT_CPUS], default the host's core count, over
+  * SPARK_GRAFT_SF_DIR (default sf0.1).
+  * Usage: runMain graft.ProfileQuery <name> [name...].
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = BenchScale.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = BenchScale.session(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors))
     spark.sparkContext.setLogLevel("WARN")
     args.foreach(profileOne(spark, sfDir, _))
     spark.stop()

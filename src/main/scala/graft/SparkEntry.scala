@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import graft.functions.Fns
 import graft.operators._
 import graft.operators.SpatialOps.{KnnMetric, KnnStrategy}
+import graft.operators.SimilarityOps.{VecCandidates, VecScore}
 import graft.sources.{OsmSynth, Synth}
 
 /** Driver contract — one `queries` entry per implemented operator
@@ -67,6 +68,25 @@ object SparkEntry {
   private def knnDensityLevel(s: SparkSession, d: String): Int =
     SpatialOps.knnLevel(t(s, d, "lineitem").count())
 
+  /** The smallest grid level in [lo, hi] with at least `n` cells (4^level
+    * >= n), so per-cell occupancy stays bounded as the data grows.
+    */
+  private def densityLevel(n: Long, lo: Int, hi: Int): Int = {
+    var level = lo
+    while (level < hi && n > (1L << (2 * level))) level += 1
+    level
+  }
+
+  /** One row per way of [[wayPoints]]: its points ordered by seq as
+    * `xs`/`ys` coordinate arrays.
+    */
+  private def wayTracks(li: DataFrame): DataFrame =
+    wayPoints(li).groupBy("way_id").agg(
+        array_sort(collect_list(struct(col("seq"), col("x"), col("y")))).as("p"))
+      .select(col("way_id"),
+        expr("transform(p, q -> q.x)").as("xs"),
+        expr("transform(p, q -> q.y)").as("ys"))
+
   private[graft] def crossWaySegs(s: SparkSession, d: String): (DataFrame, Int) = {
     val key = col("way_id") * lit(10L) + col("seq")
     val x = functions.Fns.mixId(col("way_id") * lit(2L)) - lit(1073741824L) +
@@ -99,9 +119,7 @@ object SparkEntry {
     var spanLevel = 0
     while ((3600000000L >> spanLevel) > WayCrossSpan && spanLevel < 12)
       spanLevel += 1
-    var dens = 6
-    while (dens < 12 && n > (1L << (2 * dens))) dens += 1
-    (segs, math.max(spanLevel, dens - 2))
+    (segs, math.max(spanLevel, densityLevel(n, 6, 12) - 2))
   }
 
   /** The q_tile_clip/q_way_len_tile input: jittered way segments clipped
@@ -292,8 +310,7 @@ object SparkEntry {
     "q_moran" -> ((s, d) => {
       val pts = Synth.points(s, d)
       val n = pts.count()
-      var level = 6
-      while (level < 12 && n > (1L << (2 * level))) level += 1
+      val level = densityLevel(n, 6, 12)
       StatsOps.moranI(SpatialOps.equirectDensity(pts, level)
         .select(col("bx"), col("by"), col("cnt").as("v")))
     }),
@@ -313,8 +330,7 @@ object SparkEntry {
     "q_gi" -> ((s, d) => {
       val pts = Synth.points(s, d)
       val n = pts.count()
-      var level = 6
-      while (level < 12 && n > (1L << (2 * level))) level += 1
+      val level = densityLevel(n, 6, 12)
       StatsOps.getisOrd(SpatialOps.equirectDensity(pts, level)
         .select(col("bx"), col("by"), col("cnt").as("v")))
     }),
@@ -327,8 +343,7 @@ object SparkEntry {
       // (cell set + 9x scatter) — uncached it would run three times
       val pts = graft.core.CacheScope.global.persist(Synth.points(s, d))
       val n = pts.count()
-      var level = 8
-      while (level < 12 && n > (1L << (2 * level))) level += 1
+      val level = densityLevel(n, 8, 12)
       SpatialOps.idwGrid(pts.select(col("lon_fix").as("x"),
         col("lat_fix").as("y"), (col("pid") % 1000 + 1).as("v")), level)
     }),
@@ -338,8 +353,7 @@ object SparkEntry {
     "q_hausdorff" -> ((s, d) => {
       val pts = wayPoints(t(s, d, "lineitem"))
       val n = pts.select("way_id").distinct().count()
-      var level = 6
-      while (level < 10 && n > (1L << (2 * level))) level += 1
+      val level = densityLevel(n, 6, 10)
       SpatialOps.hausdorffPairs(pts, level, HausdorffMaxSq)
     }),
 
@@ -347,13 +361,8 @@ object SparkEntry {
     // bbox cover candidates (A side expanded by thr), anchor-cell pair
     // dedup, native O(m·n) rolling-DP kernel on the joined row
     "q_frechet" -> ((s, d) => {
-      val wp = wayPoints(t(s, d, "lineitem"))
       // persist: the threshold-pick count() and both join sides read it
-      val tracks = graft.core.CacheScope.global.persist(wp.groupBy("way_id").agg(
-          array_sort(collect_list(struct(col("seq"), col("x"), col("y")))).as("p"))
-        .select(col("way_id"),
-          expr("transform(p, q -> q.x)").as("xs"),
-          expr("transform(p, q -> q.y)").as("ys")))
+      val tracks = graft.core.CacheScope.global.persist(wayTracks(t(s, d, "lineitem")))
       val thr = if (tracks.count() <= FrechetSmallN) FrechetThrSmall
         else FrechetThr
       SpatialOps.frechetJoin(tracks, tracks, thr,
@@ -364,18 +373,12 @@ object SparkEntry {
     // components (route-variant grouping; the components engine is the
     // contraction-accelerated dedup loop)
     "q_traj_cluster" -> ((s, d) => {
-      val wp = wayPoints(t(s, d, "lineitem"))
       // persist BOTH the track build (the threshold-pick count() would
       // otherwise throw it away and frechetJoin would recompute the full
       // wayPoints→groupBy chain) and the pair graph (duplicateClusters'
       // O(log d) pointer-jumping rounds each re-read their input — an
       // unpersisted pair frame re-runs the whole cover+DP join per round)
-      val tracks = graft.core.CacheScope.global.persist(
-        wp.groupBy("way_id").agg(
-          array_sort(collect_list(struct(col("seq"), col("x"), col("y")))).as("p"))
-        .select(col("way_id"),
-          expr("transform(p, q -> q.x)").as("xs"),
-          expr("transform(p, q -> q.y)").as("ys")))
+      val tracks = graft.core.CacheScope.global.persist(wayTracks(t(s, d, "lineitem")))
       val thr = if (tracks.count() <= FrechetSmallN) FrechetThrSmall
         else FrechetThr
       val pairs = graft.core.CacheScope.global.persist(
@@ -389,13 +392,8 @@ object SparkEntry {
     // DTW trajectory-similarity join: the cumulative-cost sibling of
     // q_frechet (Σ d² over the best monotone coupling, not the max)
     "q_dtw" -> ((s, d) => {
-      val wp = wayPoints(t(s, d, "lineitem"))
       // persist: the threshold-pick count() and both join sides read it
-      val tracks = graft.core.CacheScope.global.persist(wp.groupBy("way_id").agg(
-          array_sort(collect_list(struct(col("seq"), col("x"), col("y")))).as("p"))
-        .select(col("way_id"),
-          expr("transform(p, q -> q.x)").as("xs"),
-          expr("transform(p, q -> q.y)").as("ys")))
+      val tracks = graft.core.CacheScope.global.persist(wayTracks(t(s, d, "lineitem")))
       val thr = if (tracks.count() <= FrechetSmallN) FrechetThrSmall
         else FrechetThr
       SpatialOps.dtwJoin(tracks, tracks, 2L * thr * thr,
@@ -856,38 +854,40 @@ object SparkEntry {
     // --- similarity search ---
     "q_sim_topk" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      SimilarityOps.cosineTopK(e, e.filter(col("vec_id") % 25 === 0), 10)
+      SimilarityOps.topK(e, e.filter(col("vec_id") % 25 === 0), 10)
     }),
 
     // hard-negative mining over the near-dup-planted corpus: top-k below
     // the duplicate ceiling, exclusion BEFORE the rank
     "q_negatives" -> ((s, d) => {
       val e = Synth.embCorpus(s, d)
-      SimilarityOps.hardNegatives(e, e.filter(col("vec_id") % 25 === 0),
-        10, 990000L)
+      SimilarityOps.topK(e, e.filter(col("vec_id") % 25 === 0), 10,
+        score = VecScore.Cosine(below = Some(990000L)))
     }),
 
     "q_sim_ann" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      SimilarityOps.cosineTopKAnn(e, e.filter(col("vec_id") % 25 === 0), 10)
+      SimilarityOps.topK(e, e.filter(col("vec_id") % 25 === 0), 10, VecCandidates.Lsh())
     }),
 
     // IVF-Flat scale path (deterministic coarse centroids, nprobe lists)
     "q_sim_ivf" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      SimilarityOps.cosineTopKIvf(e, e.filter(col("vec_id") % 25 === 0), 10)
+      SimilarityOps.topK(e, e.filter(col("vec_id") % 25 === 0), 10, VecCandidates.Ivf())
     }),
 
     // PQ/ADC compressed-corpus scale path (codes + per-query dist table)
     "q_sim_pq" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      SimilarityOps.pqTopK(e, e.filter(col("vec_id") % 25 === 0), 10)
+      SimilarityOps.topK(e, e.filter(col("vec_id") % 25 === 0), 10,
+        score = VecScore.Pq())
     }),
 
     // IVF-PQ: inverted-list candidate restriction + compressed ADC rerank
     "q_sim_ivfpq" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      SimilarityOps.pqTopKIvf(e, e.filter(col("vec_id") % 25 === 0), 10)
+      SimilarityOps.topK(e, e.filter(col("vec_id") % 25 === 0), 10,
+        VecCandidates.Ivf(), VecScore.Pq())
     }),
 
     // IVF nprobe auto-tuning: per-nprobe recall vs the exact top-k on the
@@ -1403,8 +1403,7 @@ object SparkEntry {
     "q_vectorize" -> ((s, d) => {
       val pts = graft.core.CacheScope.global.persist(Synth.points(s, d))
       val n = pts.count()
-      var level = 6
-      while (level < 12 && n > (1L << (2 * level))) level += 1
+      val level = densityLevel(n, 6, 12)
       SpatialOps.vectorizeRaster(
         SpatialOps.equirectDensity(pts, level).filter(col("cnt") >= 3))
     }),
@@ -1915,8 +1914,7 @@ object SparkEntry {
           abs(col("x1") - col("x0")) <= WayCrossSpan &&
           abs(col("y1") - col("y0")) <= WayCrossSpan))
       val n = segs.count()
-      var level = 6
-      while (level < 9 && n > (1L << (2 * level))) level += 1
+      val level = densityLevel(n, 6, 9)
       SpatialOps.snapToWays(pts, segs, SnapRadius, level, WayCrossSpan)
     }),
 
@@ -2092,12 +2090,7 @@ object SparkEntry {
 
     // --- Chaikin corner-cutting smoothing (rendering generalization) ---
     "q_chaikin" -> ((s, d) => {
-      val wp = wayPoints(t(s, d, "lineitem"))
-      val tracks = wp.groupBy("way_id").agg(
-          array_sort(collect_list(struct(col("seq"), col("x"), col("y")))).as("p"))
-        .select(col("way_id"),
-          expr("transform(p, q -> q.x)").as("xs"),
-          expr("transform(p, q -> q.y)").as("ys"))
+      val tracks = wayTracks(t(s, d, "lineitem"))
       SpatialOps.chaikinSmooth(tracks.filter(col("way_id") % ChaikinSample === 0),
         ChaikinRounds)
     }),
@@ -3483,7 +3476,8 @@ object SparkEntry {
     s"CAST(round($dot / ($na * $nb) * 1000000) AS BIGINT)"
   }
 
-  /** DuckDB twin of PqKernel's rounded squared-L2 between 8-dim subspace
+  /** DuckDB twin of PqKernel's rounded squared-L2 against the zero
+    * centroid (raw PQ: residual v − 0.0 is v) between 8-dim subspace
     * j slices of `a` and `b` — shared by the PQ oracles.
     */
   private def pqSubDistSql(a: String, b: String): String = {
@@ -5535,7 +5529,7 @@ object SparkEntry {
       // LSH-banded ANN with exact rerank, replicated end-to-end: the bucket
       // bank (literal hyperplanes), the distinct candidate pairs, the
       // cosine rerank and the per-query top-k window all mirror
-      // SimilarityOps.cosineTopKAnn.
+      // SimilarityOps.topK over VecCandidates.Lsh.
       val dot = "(SELECT sum(CAST(q.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)) " +
         "FROM unnest(range(1, 1 + len(e.embedding))) AS t(i))"
       val nq = "sqrt((SELECT sum(CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE)) FROM unnest(range(1, 1 + len(q.embedding))) AS t(i)))"
@@ -5594,7 +5588,7 @@ object SparkEntry {
       def cosE6(a: String, b: String): String = cosE6Sql(a, b)
       // bounded coarse quantizer: K = min(IvfMaxCentroids, ceil(sqrt(n)))
       // target centroids via the residue rule mixId(vec_id) % mod == 3 % mod —
-      // the EXACT rule cosineTopKIvf computes from its count() (floor
+      // the EXACT rule the IVF quantizer computes from its count() (floor
       // division both sides; 3 % mod keeps small corpora non-empty)
       s"""WITH n AS (SELECT count(*) AS c FROM embeddings),
          |md AS (SELECT greatest(c // greatest(least(${SimilarityOps.IvfMaxCentroids},
@@ -5647,7 +5641,7 @@ object SparkEntry {
     "q_sim_pq" -> {
       def de6(a: String, b: String): String = pqSubDistSql(a, b)
       // codebook = first 16 vectors (by vec_id) of the residue class —
-      // the EXACT rule pqTopK computes from its count(); ci is the code
+      // the EXACT rule the PQ codebook computes from its count(); ci is the code
       s"""WITH n AS (SELECT count(*) AS cnt FROM embeddings),
          |p AS (SELECT greatest(cnt // ${SimilarityOps.PqKsub}, 1) AS md FROM n),
          |samp AS (
@@ -5680,10 +5674,10 @@ object SparkEntry {
       def cosE6(a: String, b: String): String = cosE6Sql(a, b)
       def rde6(a: String, ca: String, b: String, cb: String): String =
         pqResSubDistSql(a, ca, b, cb)
-      // coarse quantizer = cosineTopKIvf's rule; codebook = RESIDUALS of
+      // coarse quantizer = the IVF rule; codebook = RESIDUALS of
       // the sampled vectors against their own assigned centroid; codes and
       // the per-(query, probed-list) distance tables are residual
-      // sub-distances — exactly pqTopKIvf's residual encoding
+      // sub-distances — exactly topK's Ivf x Pq residual encoding
       s"""WITH n AS (SELECT count(*) AS cnt FROM embeddings),
          |cmod AS (SELECT greatest(cnt // greatest(least(${SimilarityOps.IvfMaxCentroids},
          |  CAST(ceil(sqrt(cnt)) AS BIGINT)), 1), 1) AS cm FROM n),

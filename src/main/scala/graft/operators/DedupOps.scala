@@ -851,10 +851,8 @@ object DedupOps {
                         scope: CacheScope = CacheScope.global): DataFrame = {
     // persisted (scope-released): feeds the bucket-size filter and both
     // sides of the candidate self-join
-    val e = scope.persist(emb.select(col("vec_id"), col("embedding"),
-      posexplode(graft.plans.TextHashExpressions
-        .vecLshBuckets(col("embedding"), NearDupTables, NearDupBits))
-        .as(Seq("table", "bucket"))))
+    val e = scope.persist(SimilarityOps.lshBands(emb, "embedding", NearDupTables, NearDupBits,
+      "vec_id", "embedding"))
     val kept = capBuckets(e, Seq("table", "bucket"))
     val a = kept.as("a"); val b = kept.as("b")
     a.join(b, col("a.table") === col("b.table") &&

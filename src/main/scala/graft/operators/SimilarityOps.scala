@@ -1,95 +1,233 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.GraftPlanBridge.cut
 import graft.core.CacheScope
 import graft.functions.Fns
+import graft.plans.{CentroidKernel, PqKernel}
+import graft.plans.GeomExpressions.{pqAdcScore, pqDistTableRes, pqEncodeRes, vecNearestCentroids}
+import graft.plans.TextHashExpressions.{vecCosine, vecLshBuckets}
 
-/** Approximate-nearest-neighbor search over an embedding column.
+/** Nearest-neighbor search over an embedding column.
   *
-  * Baseline: brute-force cosine top-k with a broadcast query set — the
-  * exact reference answer and the right physical plan when |queries| is
-  * small (one broadcast, no shuffle of the big side, window top-k per
-  * query). Scale path: sign-LSH bucketing (see DedupOps.embeddingNearDups)
-  * or an IVF-style cell restriction; both reuse this exact scorer for the
-  * final rerank.
+  * Every top-k is one candidate step times one scorer ([[topK]]): the
+  * candidates are every corpus vector, the vectors sharing a sign-LSH
+  * bucket with the query, or the vectors on the query's nearest IVF
+  * lists; the score is exact cosine or product-quantized squared-L2.
+  * Every candidate step shares the one rank tail, so each pairing has
+  * the same output contract.
   */
 object SimilarityOps {
-
-  /** Approximate cosine top-k via multi-table sign-projection LSH (the
-    * scale path): candidates = vectors sharing any of `tables` bucket
-    * signatures with the query (native [[graft.plans.VecLshKernel.buckets]]), exact
-    * cosine reranks the candidate set. Same output schema as the exact
-    * form; queries with fewer than k candidates return fewer rows (ANN
-    * semantics). At the 10^12 posture the bucket join shuffles only
-    * (tables x rows) narrow rows instead of scoring the full table per
-    * query.
-    */
-  def cosineTopKAnn(emb: DataFrame, queries: DataFrame, k: Int,
-                    tables: Int = 8, bits: Int = 12,
-                    broadcastQueries: Boolean = true): DataFrame = {
-    import graft.plans.TextHashExpressions.vecLshBuckets
-    def banded(df: DataFrame, idCol: String, embCol: String): DataFrame =
-      df.select(col(idCol), col(embCol),
-          posexplode(vecLshBuckets(col(embCol), tables, bits)).as(Seq("table", "bucket")))
-    val e = banded(emb, "vec_id", "embedding")
-    // corpus-vs-corpus workloads (|queries| ~ |emb|) pass
-    // broadcastQueries = false: the candidate join becomes a plain shuffle
-    // equi-join on (table, bucket) and nothing ships the query table whole
-    val qb = banded(
-      queries.select(col("vec_id").as("qid"), col("embedding").as("qemb")), "qid", "qemb")
-    val q = if (broadcastQueries) broadcast(qb) else qb
-    val cand = e.join(q, Seq("table", "bucket"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"), col("embedding"), col("qemb"))
-      .dropDuplicates("qid", "nid")
-    val scored = cand.select(col("qid"), col("nid"),
-      round(graft.plans.TextHashExpressions.vecCosine(col("embedding"), col("qemb")) * lit(1000000.0), 0)
-        .cast("long").as("cos_e6"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_e6").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank"), col("cos_e6"))
-  }
 
   /** Number of centroids the IVF coarse quantizer is bounded by. */
   val IvfMaxCentroids = 4096
 
-  /** IVF-Flat approximate cosine top-k (the inverted-file scale path,
-    * complementing the LSH path). The coarse quantizer is a deterministic
-    * BOUNDED sample: K = min(IvfMaxCentroids, ceil(sqrt(n))) target
-    * centroids selected by mixId(vec_id) % max(n/K, 1) == 3 % max(n/K, 1) — K never exceeds
-    * 4096 no matter the corpus size, so the centroid table is a true O(K)
-    * broadcast and assignment costs n·K cosines (a single map stage), not
-    * the n²/mod of a corpus-proportional centroid set. Every vector joins
-    * its nearest centroid's inverted list (cosine rounded to 1e-6, ties by
-    * centroid id); a query probes its `nprobe` nearest centroids and exact
-    * cosine reranks the union of those lists. ANN semantics: queries may
-    * return fewer than k rows.
-    *
-    * Plan shape: assignment is the native VecNearestCentroids expression
-    * over a broadcast variable — no crossJoin row explosion, no window
-    * shuffle; the only shuffles are the candidate equi-join on cid and the
-    * per-query top-k. Eager cost at plan-construction: one count() (sizes
-    * the quantizer) and one O(K)-row collect (builds the broadcast) —
-    * documented trade-off, same contract as knn's density probe.
+  /** Number of codebook entries per PQ subspace. */
+  val PqKsub = 16
+
+  /** Where [[topK]]'s candidate pairs come from. No generator pairs a
+    * query with its own vec_id.
     */
-  /** Build the bounded coarse quantizer (shared by cosineTopKIvf and
-    * pqTopKIvf): K = min(maxCentroids, ceil(sqrt(n))) target centroids by
-    * the residue rule mixId(vec_id) % max(n/K,1) == 3 % max(n/K,1),
-    * broadcast as an O(K) table. One count() + one bounded collect — the
-    * documented eager trade-off.
+  sealed trait VecCandidates
+  object VecCandidates {
+    /** Every corpus vector against a BROADCAST query set: no shuffle of
+      * the corpus, the exact answer. For small query sets.
+      */
+    case object All extends VecCandidates
+
+    /** Multi-table sign-projection LSH: a corpus vector is a candidate of
+      * a query when they share any of `tables` `bits`-bit bucket
+      * signatures (native [[graft.plans.VecLshKernel.buckets]]). The
+      * bucket join shuffles (tables × rows) narrow rows instead of
+      * scoring the full corpus per query. Corpus-vs-corpus workloads
+      * (|queries| ~ |emb|) pass `broadcastQueries = false`: the join
+      * becomes a plain shuffle equi-join on (table, bucket). Cosine
+      * scoring only — the banding reads the raw embedding on both sides.
+      */
+    final case class Lsh(tables: Int = 8, bits: Int = 12,
+                         broadcastQueries: Boolean = true) extends VecCandidates
+
+    /** IVF inverted lists: every corpus vector joins its nearest
+      * centroid's list (cosine rounded to 1e-6, ties by centroid id) and a
+      * query probes its `nprobe` nearest lists. The coarse quantizer is a
+      * bounded deterministic sample of K = min(maxCentroids, ⌈√n⌉)
+      * vectors ([[coarseQuantizer]]); assignment is one map stage over
+      * its broadcast, and the only shuffles are the candidate equi-join
+      * on cid and the per-query rank.
+      */
+    final case class Ivf(nprobe: Int = 4,
+                         maxCentroids: Int = IvfMaxCentroids) extends VecCandidates
+  }
+
+  /** How [[topK]] scores and orders a candidate pair. */
+  sealed trait VecScore
+  object VecScore {
+    /** Exact cosine, `cos_e6` = round(cos·1e6), best first. With `below`,
+      * pairs at or above that `cos_e6` are dropped BEFORE the rank — hard
+      * negatives for contrastive training: a post-filtered top-k would
+      * under-fill exactly for the queries with many duplicates.
+      */
+    final case class Cosine(below: Option[Long] = None) extends VecScore
+
+    /** Product-quantized asymmetric squared-L2 (ADC), `adist_e6`, nearest
+      * first: every corpus vector is stored as m codes (each an index
+      * into a `ksub`-entry codebook per subspace) of its residual
+      * v − centroid, and a query scores a pair with m lookups into its
+      * per-(query, list) distance table. Under [[VecCandidates.Ivf]] the
+      * centroid is the vector's coarse centroid (IVF-PQ); under
+      * [[VecCandidates.All]] it is the one all-zero centroid, i.e. raw PQ.
+      */
+    final case class Pq(ksub: Int = PqKsub, m: Int = 8) extends VecScore
+  }
+
+  /** Top-k nearest corpus vectors per query: (qid, nid, rank, score) with
+    * `rank` dense 1..k by (score, nid) and the score column named by the
+    * scorer (`cos_e6` or `adist_e6`). Scores are integers, so ranks are
+    * deterministic. Approximate candidate steps may return fewer than k
+    * rows for a query. Eager cost: at most one count() of `emb`, taken
+    * when a quantizer or codebook is built, plus their bounded collects.
     */
-  private def coarseQuantizer(emb: DataFrame, maxCentroids: Int,
-                              nKnown: Long = -1L)
-      : org.apache.spark.broadcast.Broadcast[graft.plans.CentroidKernel.Cents] = {
-    val spark = emb.sparkSession
-    val n = math.max(if (nKnown >= 0L) nKnown else emb.count(), 1L)
+  def topK(emb: DataFrame, queries: DataFrame, k: Int,
+           candidates: VecCandidates = VecCandidates.All,
+           score: VecScore = VecScore.Cosine()): DataFrame = {
+    require(!(candidates.isInstanceOf[VecCandidates.Lsh] && score.isInstanceOf[VecScore.Pq]),
+      "LSH candidates band the raw embeddings, PQ scoring reads codes: Lsh x Pq is not supported")
+    lazy val n = emb.count()
+    val quantizer = candidates match {
+      case VecCandidates.Ivf(_, maxCentroids) => Some(coarseQuantizer(emb, maxCentroids, n))
+      case _ => None
+    }
+    val scorer = score match {
+      case VecScore.Cosine(_) => cosineScorer
+      case VecScore.Pq(ksub, m) => pqScorer(emb, quantizer, ksub, m, n)
+    }
+    val scored = pairs(emb, queries, candidates, quantizer, scorer)
+      .select(col("qid"), col("nid"), scorer.column.as(scorer.name))
+    rankTail(score match {
+      case VecScore.Cosine(Some(ceilE6)) => scored.filter(col(scorer.name) < ceilE6)
+      case _ => scored
+    }, k, scorer)
+  }
+
+  /** A scorer bound to its broadcasts: how each side is prepared before
+    * the candidate join (corpus rows carry `embedding`, query rows
+    * `qemb`, both `cid` on the IVF path) and the score of a joined pair.
+    * `readsCid`: the scorer reads the list id beside the join key.
+    */
+  private final case class Scorer(name: String, descending: Boolean, readsCid: Boolean,
+                                  corpusSide: DataFrame => DataFrame,
+                                  querySide: DataFrame => DataFrame,
+                                  column: Column)
+
+  private def cosineScorer: Scorer =
+    Scorer("cos_e6", descending = true, readsCid = false, df => df, df => df,
+      cosE6(col("embedding"), col("qemb")))
+
+  /** round(cos(a, b)·1e6) as a long. */
+  private def cosE6(a: Column, b: Column): Column =
+    round(vecCosine(a, b) * lit(1000000.0), 0).cast("long")
+
+  private def pqScorer(emb: DataFrame,
+                       quantizer: Option[Broadcast[CentroidKernel.Cents]],
+                       ksub: Int, m: Int, n: Long): Scorer = {
+    val (cents, book) = pqResCodebook(emb, quantizer, ksub, m, n)
+    val cid = if (quantizer.isDefined) col("cid") else lit(PqKernel.ZeroCid)
+    def replace(df: DataFrame, vec: String, by: Column): DataFrame =
+      df.select(df.columns.filter(_ != vec).map(col) :+ by: _*)
+    // the corpus-side cut is a deliberate codegen BARRIER:
+    // BroadcastNestedLoopJoin's whole-stage codegen defers streamed-side
+    // projections to their point of use INSIDE the per-build-row loop, so
+    // without it pq_encode_res runs once per PAIR (measured 7x on the
+    // oracle query). The cut encodes once per corpus row — no shuffle.
+    Scorer("adist_e6", descending = false, readsCid = quantizer.isDefined,
+      df => cut(replace(df, "embedding",
+        pqEncodeRes(col("embedding"), cid, cents, book).as("codes"))),
+      df => replace(df, "qemb", pqDistTableRes(col("qemb"), cid, cents, book).as("dtab")),
+      pqAdcScore(col("dtab"), col("codes")))
+  }
+
+  /** Candidate pairs (qid, nid, …) carrying the scorer's side columns.
+    * `probeRank` keeps the IVF probe position `prn` (1 = nearest list):
+    * every vector lives on exactly one list, so a pair's `prn` is the
+    * smallest nprobe that finds it.
+    */
+  private def pairs(emb: DataFrame, queries: DataFrame, candidates: VecCandidates,
+                    quantizer: Option[Broadcast[CentroidKernel.Cents]],
+                    scorer: Scorer, probeRank: Boolean = false): DataFrame = {
+    val e = emb.select(col("vec_id"), col("embedding"))
+    val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qemb"))
+    candidates match {
+      case VecCandidates.All =>
+        scorer.corpusSide(e).join(broadcast(scorer.querySide(q)), col("vec_id") =!= col("qid"))
+          .withColumnRenamed("vec_id", "nid")
+      case VecCandidates.Lsh(tables, bits, broadcastQueries) =>
+        val qb = lshBands(q, "qemb", tables, bits, "qid", "qemb")
+        lshBands(e, "embedding", tables, bits, "vec_id", "embedding")
+          .join(if (broadcastQueries) broadcast(qb) else qb, Seq("table", "bucket"))
+          .filter(col("vec_id") =!= col("qid"))
+          .select(col("qid"), col("vec_id").as("nid"), col("embedding"), col("qemb"))
+          .dropDuplicates("qid", "nid")
+      case VecCandidates.Ivf(nprobe, _) =>
+        val bc = quantizer.get
+        // a scorer that reads cid would have CollapseProject inline the
+        // n·K nearest-centroid scan into both cid consumers; the cut runs
+        // it once per corpus row
+        val a = e.select(col("vec_id"), col("embedding"),
+          nearestCentroid(col("embedding"), bc).as("cid"))
+        val assigned = if (scorer.readsCid) cut(a) else a
+        val lists = vecNearestCentroids(col("qemb"), nprobe, bc)
+        val probes =
+          if (scorer.readsCid) cut(q.select(col("qid"), col("qemb"), lists.as("cids")))
+            .select(col("qid"), col("qemb"), explode(col("cids")).as("cid"))
+          else if (probeRank) q.select(col("qid"), col("qemb"), posexplode(lists))
+            .select(col("qid"), col("qemb"), (col("pos") + 1).as("prn"), col("col").as("cid"))
+          else q.select(col("qid"), col("qemb"), explode(lists).as("cid"))
+        // (qid, nid) pairs are unique by construction: each vector is on
+        // exactly one list and a query's probed cids are distinct
+        scorer.querySide(probes).join(scorer.corpusSide(assigned), "cid")
+          .filter(col("vec_id") =!= col("qid"))
+          .withColumnRenamed("vec_id", "nid")
+    }
+  }
+
+  /** The k best rows per query, rank dense 1..k by (score, nid). */
+  private def rankTail(scored: DataFrame, k: Int, scorer: Scorer): DataFrame = {
+    val s = if (scorer.descending) col(scorer.name).desc else col(scorer.name).asc
+    scored.withColumn("rank",
+        row_number().over(Window.partitionBy(col("qid")).orderBy(s, col("nid"))).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("qid"), col("nid"), col("rank"), col(scorer.name))
+  }
+
+  /** Sign-LSH banding: one row per (`keep` columns, table, bucket) of the
+    * `vec` column's `tables` bucket signatures of `bits` bits.
+    */
+  private[operators] def lshBands(df: DataFrame, vec: String, tables: Int, bits: Int,
+                                  keep: String*): DataFrame =
+    df.select(keep.map(col) :+
+      posexplode(vecLshBuckets(col(vec), tables, bits)).as(Seq("table", "bucket")): _*)
+
+  /** The id of `vec`'s nearest centroid. */
+  private def nearestCentroid(vec: Column, bc: Broadcast[CentroidKernel.Cents]): Column =
+    element_at(vecNearestCentroids(vec, 1, bc), 1)
+
+  /** The bounded coarse quantizer of an `n`-row corpus: K =
+    * min(maxCentroids, ⌈√n⌉) target centroids by the residue rule
+    * mixId(vec_id) % max(n/K,1) == 3 % max(n/K,1), sorted by id and
+    * broadcast as an O(K) table. K never exceeds `maxCentroids` whatever
+    * the corpus size, so assignment costs n·K cosines in one map stage,
+    * not the n²/mod of a corpus-proportional centroid set. One bounded
+    * collect.
+    */
+  private def coarseQuantizer(emb: DataFrame, maxCentroids: Int, n: Long)
+      : Broadcast[CentroidKernel.Cents] = {
+    val n1 = math.max(n, 1L)
     val kTarget = math.max(1L,
-      math.min(maxCentroids.toLong, math.ceil(math.sqrt(n.toDouble)).toLong))
-    val mod = math.max(n / kTarget, 1L)
+      math.min(maxCentroids.toLong, math.ceil(math.sqrt(n1.toDouble)).toLong))
+    val mod = math.max(n1 / kTarget, 1L)
     // the residue is taken of mixId(vec_id), not the raw id: a clustered
     // id space (snowflake ids; all ids = r mod 1000) would otherwise make
     // one residue class hold most of the corpus and abort the build. The
@@ -98,39 +236,54 @@ object SimilarityOps {
     // subsets). 3 % mod (not a bare 3) keeps the rule non-empty when a
     // small corpus makes mod <= 3.
     val cap = 4 * math.max(maxCentroids, 1)
-    val cents: graft.plans.CentroidKernel.Cents =
+    val cents: CentroidKernel.Cents =
       emb.filter(Fns.mixId(col("vec_id")) % mod === (3L % mod))
         .select(col("vec_id"), col("embedding"))
         .limit(cap + 1).collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
         .sortBy(_._1)
-    require(cents.nonEmpty, s"no mixId(vec_id) % $mod == ${3L % mod} in the corpus (n=$n)")
+    require(cents.nonEmpty, s"no mixId(vec_id) % $mod == ${3L % mod} in the corpus (n=$n1)")
     require(cents.length <= cap,
       s"mixId(vec_id) residue class $mod/${3L % mod} selects > $cap centroids " +
         "(statistically impossible for the uniform mixer; indicates duplicate vec_ids)")
-    spark.sparkContext.broadcast(cents)
+    emb.sparkSession.sparkContext.broadcast(cents)
   }
 
-  def cosineTopKIvf(emb: DataFrame, queries: DataFrame, k: Int,
-                    maxCentroids: Int = IvfMaxCentroids, nprobe: Int = 4): DataFrame = {
-    import graft.plans.GeomExpressions.vecNearestCentroids
-    val bc = coarseQuantizer(emb, maxCentroids)
-
-    val assigned = emb.withColumn("cid",
-      element_at(vecNearestCentroids(col("embedding"), 1, bc), 1))
-    val probes = queries.select(col("vec_id").as("qid"), col("embedding").as("qemb"))
-      .withColumn("cid", explode(vecNearestCentroids(col("qemb"), nprobe, bc)))
-    // (qid, nid) pairs are unique by construction — each vector is on
-    // exactly one inverted list and a query's probed cids are distinct
-    val cand = probes.join(assigned, "cid")
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        round(graft.plans.TextHashExpressions.vecCosine(col("embedding"), col("qemb")) * lit(1000000.0), 0)
-          .cast("long").as("cos_e6"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_e6").desc, col("nid"))
-    cand.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank"), col("cos_e6"))
+  /** The PQ codebook of an `n`-row corpus: the first `ksub` vectors (by
+    * vec_id) of the residue class mixId(vec_id) % max(n/ksub,1) ==
+    * 3 % max(n/ksub,1), each stored as its residual v − centroid against
+    * its nearest `quantizer` centroid (the distributed assignment's rank
+    * rule); entry index IS the code. Without a quantizer the centroid
+    * table is the one all-zero centroid [[PqKernel.ZeroCid]], and the
+    * residual is v itself. Residual training is where IVF-PQ earns its
+    * recall at high compression: within an inverted list vectors share a
+    * centroid, so the codewords quantize the small differences that
+    * actually rank the list instead of the common offset. Sub-distances
+    * are rounded to 1e-6 BEFORE argmin/summing, so encode ties and ADC
+    * totals are exact integer arithmetic (oracle parity by construction).
+    * Driver cost: one O(ksub)-row collect + ksub·K kernel cosines.
+    * Returns the centroid table the residuals are taken against and the
+    * codebook.
+    */
+  private def pqResCodebook(emb: DataFrame,
+                            quantizer: Option[Broadcast[CentroidKernel.Cents]],
+                            ksub: Int, m: Int, n: Long)
+      : (Broadcast[CentroidKernel.Cents], Broadcast[PqKernel.ResBook]) = {
+    val sc = emb.sparkSession.sparkContext
+    val n1 = math.max(n, 1L)
+    val mod = math.max(n1 / ksub, 1L)
+    val vecs = emb.filter(Fns.mixId(col("vec_id")) % mod === (3L % mod))
+      .select(col("vec_id"), col("embedding"))
+      .orderBy(col("vec_id")).limit(ksub).collect()
+      .map(_.getSeq[Float](1).toArray)
+    require(vecs.nonEmpty, s"no mixId(vec_id) % $mod == ${3L % mod} in the corpus (n=$n1)")
+    require(vecs.head.length % m == 0,
+      s"embedding dim ${vecs.head.length} not divisible by m=$m subspaces")
+    val centsBc = quantizer.getOrElse(sc.broadcast(PqKernel.zeroCentroid(vecs.head.length)))
+    val cents = centsBc.value
+    val res = vecs.map(v =>
+      PqKernel.residual(v, CentroidKernel.byId(cents, CentroidKernel.nearestId(cents, v))))
+    (centsBc, sc.broadcast(PqKernel.ResBook(res, m)))
   }
 
   /** Per-cluster all-pairs bound for [[semDedupPairs]]: clusters at or
@@ -165,22 +318,17 @@ object SimilarityOps {
                     maxCentroids: Int = IvfMaxCentroids,
                     maxClusterSize: Int = MaxSemCluster,
                     scope: CacheScope = CacheScope.global): DataFrame = {
-    import graft.plans.GeomExpressions.vecNearestCentroids
-    val bc = coarseQuantizer(emb, maxCentroids)
+    val bc = coarseQuantizer(emb, maxCentroids, emb.count())
     val sized = scope.persist(emb.select(col("vec_id"), col("embedding"))
-      .withColumn("cid",
-        element_at(vecNearestCentroids(col("embedding"), 1, bc), 1))
+      .withColumn("cid", nearestCentroid(col("embedding"), bc))
       .withColumn("__csz", count(lit(1)).over(Window.partitionBy("cid"))))
     val small = sized.filter(col("__csz") <= maxClusterSize)
     val smallPairs = small.select(col("cid"), col("vec_id").as("vec_a"))
       .join(small.select(col("cid"), col("vec_id").as("vec_b")), "cid")
       .filter(col("vec_a") < col("vec_b"))
       .select("vec_a", "vec_b")
-    val big = sized.filter(col("__csz") > maxClusterSize)
-      .select(col("vec_id"), col("cid"),
-        posexplode(graft.plans.TextHashExpressions.vecLshBuckets(
-          col("embedding"), DedupOps.NearDupTables, DedupOps.NearDupBits))
-          .as(Seq("table", "bucket")))
+    val big = lshBands(sized.filter(col("__csz") > maxClusterSize), "embedding",
+      DedupOps.NearDupTables, DedupOps.NearDupBits, "vec_id", "cid")
     val bigKept = DedupOps.capBuckets(big, Seq("cid", "table", "bucket"))
     val bigPairs = bigKept.as("a")
       .join(bigKept.as("b"), col("a.cid") === col("b.cid") &&
@@ -193,202 +341,8 @@ object SimilarityOps {
     val eb = e.select(col("vec_id").as("vec_b"), col("embedding").as("__eb"))
     smallPairs.unionByName(bigPairs)
       .join(ea, "vec_a").join(eb, "vec_b")
-      .select(col("vec_a"), col("vec_b"),
-        round(graft.plans.TextHashExpressions.vecCosine(
-          col("__ea"), col("__eb")) * lit(1000000.0), 0)
-          .cast("long").as("cos_e6"))
+      .select(col("vec_a"), col("vec_b"), cosE6(col("__ea"), col("__eb")).as("cos_e6"))
       .filter(col("cos_e6") >= thresholdE6)
-  }
-
-  /** Number of codebook entries per PQ subspace. */
-  val PqKsub = 16
-
-  /** Product-quantization top-k by asymmetric squared-L2 distance (ADC) —
-    * the COMPRESSED-corpus scale path: every vector is stored as m small
-    * codes (m bytes at ksub<=256) instead of d floats, and scoring a pair
-    * is m table lookups instead of d multiplies. At the 10^12-vector
-    * posture the corpus scan reads codes only — a 64-dim float corpus
-    * shrinks 32x — and per-query cost is one O(m·ksub) distance table
-    * plus m adds per candidate.
-    *
-    * Codebook: deterministic bounded sample — the first `ksub` vectors
-    * (by vec_id) of the residue class mixId(vec_id) % max(n/ksub,1) ==
-    * 3 % max(n/ksub,1); entry index IS the code. Sub-distances are rounded to
-    * 1e-6 BEFORE argmin/summing, so encode ties and ADC totals are exact
-    * integer arithmetic (oracle-parity by construction). Eager cost at
-    * plan time: one count() + one O(ksub)-row collect, the same
-    * documented trade-off as cosineTopKIvf.
-    *
-    * Output: (qid, nid, rank, adist_e6), rank by (adist_e6 asc, nid asc),
-    * k rows per query (approximate distances — PQ semantics).
-    */
-  /** Build the PQ codebook (shared by pqTopK and pqTopKIvf): the first
-    * `ksub` vectors (by vec_id) of the residue class mixId(vec_id) %
-    * max(n/ksub,1) == 3 % max(n/ksub,1); entry index IS the code.
-    */
-  private def pqCodebook(emb: DataFrame, ksub: Int, m: Int)
-      : org.apache.spark.broadcast.Broadcast[graft.plans.PqKernel.Book] = {
-    val spark = emb.sparkSession
-    val n = math.max(emb.count(), 1L)
-    val mod = math.max(n / ksub, 1L)
-    val cents: Array[Array[Float]] =
-      emb.filter(Fns.mixId(col("vec_id")) % mod === (3L % mod))
-        .select(col("vec_id"), col("embedding"))
-        .orderBy(col("vec_id")).limit(ksub).collect()
-        .map(_.getSeq[Float](1).toArray)
-    require(cents.nonEmpty, s"no mixId(vec_id) % $mod == ${3L % mod} in the corpus (n=$n)")
-    require(cents.head.length % m == 0,
-      s"embedding dim ${cents.head.length} not divisible by m=$m subspaces")
-    spark.sparkContext.broadcast(graft.plans.PqKernel.Book(cents, m))
-  }
-
-  def pqTopK(emb: DataFrame, queries: DataFrame, k: Int,
-             ksub: Int = PqKsub, m: Int = 8): DataFrame = {
-    import graft.plans.GeomExpressions.{pqAdcScore, pqDistTable, pqEncode}
-    val bc = pqCodebook(emb, ksub, m)
-
-    // the cut is a deliberate codegen BARRIER, not lineage hygiene:
-    // BroadcastNestedLoopJoin's whole-stage codegen defers streamed-side
-    // projections to their point of use INSIDE the per-build-row loop, so
-    // without the barrier pq_encode runs once per PAIR (measured 7x on the
-    // oracle query; at corpus x query scale it re-creates the exact n*d
-    // cost PQ exists to avoid). The cut encodes once per corpus row — no
-    // shuffle, stays fully distributed.
-    val codes =
-      cut(emb.select(col("vec_id"), pqEncode(col("embedding"), bc).as("codes")))
-    val q = broadcast(queries.select(col("vec_id").as("qid"),
-      pqDistTable(col("embedding"), bc).as("dtab")))
-    val scored = codes.join(q, col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        pqAdcScore(col("dtab"), col("codes")).as("adist_e6"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adist_e6"), col("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank"), col("adist_e6"))
-  }
-
-  /** Build the RESIDUAL PQ codebook (pqTopKIvf): the deterministic
-    * mixId-residue sample of ksub vectors, each encoded as its residual
-    * v − centroid (the sample vector's own nearest coarse centroid, same
-    * rank rule as the distributed assignment). Residual training is where
-    * IVF-PQ earns its recall at high compression: within an inverted list
-    * vectors share a centroid, so the codewords quantize the small
-    * differences that actually rank the list instead of the common offset.
-    * Driver cost: one O(ksub)-row collect + ksub·K kernel cosines.
-    */
-  private def pqResCodebook(emb: DataFrame,
-                            centsBc: org.apache.spark.broadcast.Broadcast[graft.plans.CentroidKernel.Cents],
-                            ksub: Int, m: Int, nKnown: Long = -1L)
-      : org.apache.spark.broadcast.Broadcast[graft.plans.PqKernel.ResBook] = {
-    import graft.plans.{CentroidKernel, PqKernel}
-    val spark = emb.sparkSession
-    val n = math.max(if (nKnown >= 0L) nKnown else emb.count(), 1L)
-    val mod = math.max(n / ksub, 1L)
-    val rows = emb.filter(Fns.mixId(col("vec_id")) % mod === (3L % mod))
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(col("vec_id")).limit(ksub).collect()
-    require(rows.nonEmpty, s"no mixId(vec_id) % $mod == ${3L % mod} in the corpus (n=$n)")
-    val cents = centsBc.value
-    val res: Array[Array[Double]] = rows.map { r =>
-      val v = r.getSeq[Float](1).toArray
-      PqKernel.residual(v, CentroidKernel.byId(cents, CentroidKernel.nearestId(cents, v)))
-    }
-    require(res.head.length % m == 0,
-      s"embedding dim ${res.head.length} not divisible by m=$m subspaces")
-    spark.sparkContext.broadcast(PqKernel.ResBook(res, m))
-  }
-
-  /** IVF-PQ top-k — the full large-corpus ANN architecture (inverted
-    * lists for CANDIDATE RESTRICTION, product quantization for COMPRESSED
-    * SCORING, the composition used at billion-vector scale): every vector
-    * is stored as (coarse list id, m RESIDUAL PQ codes — codes of
-    * v − centroid, the production IVF-PQ encoding); a query probes its
-    * `nprobe` nearest coarse lists (cosine, like cosineTopKIvf) and ranks
-    * ONLY those candidates by residual ADC squared-L2. Because residuals
-    * are taken against the PROBED list's centroid, the query builds one
-    * small distance table per probe (nprobe·m·ksub subdists) instead of
-    * one per query — the structural cost of residual quantization, still
-    * independent of candidate count. Per query the scan touches
-    * n·nprobe/K candidates at m lookups each.
-    *
-    * Plan: both broadcasts are O(K)+O(ksub); the candidate join is a cid
-    * equi-join (shuffle or broadcast-hash by size); assignment passes
-    * through a plan cut (codegen barrier) so the n·K nearest-centroid scan runs
-    * once per corpus row (not re-inlined into both its consumers by
-    * CollapseProject), and the codes side through a second barrier like
-    * pqTopK. Output: (qid, nid, rank, adist_e6), ANN semantics (possibly
-    * < k rows).
-    */
-  def pqTopKIvf(emb: DataFrame, queries: DataFrame, k: Int,
-                maxCentroids: Int = IvfMaxCentroids, nprobe: Int = 4,
-                ksub: Int = PqKsub, m: Int = 8): DataFrame = {
-    import graft.plans.GeomExpressions.{pqAdcScore, pqDistTableRes, pqEncodeRes, vecNearestCentroids}
-    // one count() sizes both builders (the documented eager probe, paid once)
-    val n = emb.count()
-    val bcCents = coarseQuantizer(emb, maxCentroids, n)
-    val bcBook = pqResCodebook(emb, bcCents, ksub, m, n)
-
-    val assigned = cut(emb.select(col("vec_id"), col("embedding"),
-      element_at(vecNearestCentroids(col("embedding"), 1, bcCents), 1)
-        .as("cid")))
-    val codes = cut(assigned.select(col("vec_id"), col("cid"),
-      pqEncodeRes(col("embedding"), col("cid"), bcCents, bcBook).as("codes")))
-    // the probe list is computed BEFORE the explode (once per query); the
-    // residual dtab is per (query, probe) BY DESIGN — see scaladoc
-    val probes = cut(queries.select(col("vec_id").as("qid"),
-        col("embedding").as("qemb"),
-        vecNearestCentroids(col("embedding"), nprobe, bcCents).as("cids")))
-      .select(col("qid"), col("qemb"), explode(col("cids")).as("cid"))
-      .select(col("qid"), col("cid"),
-        pqDistTableRes(col("qemb"), col("cid"), bcCents, bcBook).as("dtab"))
-    val cand = probes.join(codes, "cid")
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        pqAdcScore(col("dtab"), col("codes")).as("adist_e6"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adist_e6"), col("nid"))
-    cand.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank"), col("adist_e6"))
-  }
-
-  /** Exact cosine top-k: (qid, nid, rank, cos_e6). Deterministic — scores
-    * rounded to 1e-6 before ranking, ties broken by neighbor id.
-    */
-  /** HARD-NEGATIVE mining for contrastive training: for each query, the
-    * top-k most-similar corpus vectors whose cosine stays strictly BELOW
-    * `ceilE6` — vectors at or above the ceiling are positives/duplicates
-    * (the pair you'd train TOWARD, not away from), so they are excluded
-    * BEFORE the rank, which is what makes this a distinct operator: a
-    * post-filtered top-k would under-fill exactly for the queries with
-    * many duplicates, i.e. the ones that need negatives most. Same
-    * physical shape as [[cosineTopK]] (broadcast query set, no corpus
-    * shuffle, per-query window) — compose with the IVF path when the
-    * query set is corpus-sized. Output (qid, nid, rank, cos_e6).
-    */
-  def hardNegatives(emb: DataFrame, queries: DataFrame, k: Int,
-                    ceilE6: Long): DataFrame = {
-    val q = broadcast(queries.select(col("vec_id").as("qid"), col("embedding").as("qemb")))
-    val scored = emb.join(q, col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        round(graft.plans.TextHashExpressions.vecCosine(col("embedding"), col("qemb")) * lit(1000000.0), 0)
-          .cast("long").as("cos_e6"))
-      .filter(col("cos_e6") < ceilE6)
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_e6").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank"), col("cos_e6"))
-  }
-
-  def cosineTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = broadcast(queries.select(col("vec_id").as("qid"), col("embedding").as("qemb")))
-    val scored = emb.join(q, col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        round(graft.plans.TextHashExpressions.vecCosine(col("embedding"), col("qemb")) * lit(1000000.0), 0)
-          .cast("long").as("cos_e6"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_e6").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank"), col("cos_e6"))
   }
 
   /** IVF nprobe AUTO-TUNING — the calibration harness production ANN
@@ -402,7 +356,7 @@ object SimilarityOps {
     * fan-out against recall, and what [[cosineTopKIvfAuto]] consumes.
     *
     * All-integer and deterministic: the corpus is probed ONCE at
-    * max(candidates) with each candidate's probe RANK kept (every vector
+    * max(candidates) with each pair's probe RANK kept (every vector
     * lives on exactly one inverted list, so a candidate's rank is the
     * probe position of its list — no dedup needed), and each smaller
     * nprobe is a FILTER on that rank, not a re-run; recall_pm =
@@ -424,31 +378,19 @@ object SimilarityOps {
                   candidates: Seq[Int] = Seq(1, 2, 4, 8),
                   maxCentroids: Int = IvfMaxCentroids,
                   scope: CacheScope = CacheScope.global): DataFrame = {
-    import graft.plans.GeomExpressions.vecNearestCentroids
     require(candidates.nonEmpty && candidates == candidates.sorted,
       s"candidates must be ascending and non-empty: $candidates")
     val spark = emb.sparkSession
     import spark.implicits._
-    val maxNp = candidates.last
-    val bc = coarseQuantizer(emb, maxCentroids)
-    val assigned = emb.withColumn("cid",
-      element_at(vecNearestCentroids(col("embedding"), 1, bc), 1))
-    val probes = queries.select(col("vec_id").as("qid"), col("embedding").as("qemb"))
-      .select(col("qid"), col("qemb"),
-        posexplode(vecNearestCentroids(col("qemb"), maxNp, bc)))
-      .select(col("qid"), col("qemb"), (col("pos") + 1).as("prn"), col("col").as("cid"))
-    val cand = scope.persist(probes.join(assigned, "cid")
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"), col("prn"),
-        round(graft.plans.TextHashExpressions.vecCosine(col("embedding"), col("qemb")) * lit(1000000.0), 0)
-          .cast("long").as("cos_e6")))
-    val exact = scope.persist(cosineTopK(emb, queries, k).select("qid", "nid"))
+    val bc = coarseQuantizer(emb, maxCentroids, emb.count())
+    val s = cosineScorer
+    val cand = scope.persist(pairs(emb, queries,
+        VecCandidates.Ivf(candidates.last, maxCentroids), Some(bc), s, probeRank = true)
+      .select(col("qid"), col("nid"), col("prn"), s.column.as(s.name)))
+    val exact = scope.persist(topK(emb, queries, k).select("qid", "nid"))
     val total = math.max(exact.count(), 1L)
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_e6").desc, col("nid"))
     val recalls = candidates.map { np =>
-      val hits = cand.filter(col("prn") <= np)
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
+      val hits = rankTail(cand.filter(col("prn") <= np), k, s)
         .join(exact, Seq("qid", "nid"), "left_semi")
         .count()
       (np.toLong, hits * 1000L / total)
@@ -460,19 +402,16 @@ object SimilarityOps {
       .withColumn("chosen", col("nprobe") === chosen)
   }
 
-  /** The tuned search: run [[ivfAutotune]]'s calibration, then the IVF
-    * top-k at the chosen nprobe — the end-to-end auto-tuned path for
-    * pipelines that want the knob picked from data rather than config.
+  /** The tuned search: [[ivfAutotune]]'s calibration, then the IVF
+    * cosine top-k at the chosen nprobe.
     */
   def cosineTopKIvfAuto(emb: DataFrame, queries: DataFrame, k: Int,
                         calibration: DataFrame, targetRecallPm: Long = 950L,
                         candidates: Seq[Int] = Seq(1, 2, 4, 8),
-                        maxCentroids: Int = IvfMaxCentroids): DataFrame = {
-    val tuned = ivfAutotune(emb, calibration, k, targetRecallPm, candidates,
-        maxCentroids)
-      .filter(col("chosen")).select("nprobe").collect()(0).getLong(0).toInt
-    cosineTopKIvf(emb, queries, k, maxCentroids, tuned)
-  }
+                        maxCentroids: Int = IvfMaxCentroids): DataFrame =
+    topK(emb, queries, k, VecCandidates.Ivf(
+      ivfAutotune(emb, calibration, k, targetRecallPm, candidates, maxCentroids)
+        .filter(col("chosen")).head().getLong(0).toInt, maxCentroids))
 
   /** SPARSE-vector cosine-similarity pairs via an inverted index — the
     * "related hosts/sites by content" join, where each key is a bag of

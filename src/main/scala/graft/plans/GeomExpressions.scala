@@ -360,77 +360,16 @@ object CentroidKernel {
 }
 
 /** Broadcast-backed kernels for product-quantization (PQ) encode and
-  * asymmetric-distance (ADC) scoring. The codebook is `ksub` sample
-  * vectors; subspace j of sample ci is its slice [j*subDim, (j+1)*subDim).
-  * All distances are squared-L2 accumulated in double in ascending index
-  * order and rounded to 1e-6 (CentroidKernel.roundE6) BEFORE any compare
-  * or sum, so argmin ties and ADC totals are exact integer arithmetic on
-  * both engines.
+  * asymmetric-distance (ADC) scoring of residuals v − centroid. The
+  * codebook is `ksub` sample residuals; subspace j of entry ci is its
+  * slice [j*subDim, (j+1)*subDim). All distances are squared-L2
+  * accumulated in double in ascending index order and rounded to 1e-6
+  * (CentroidKernel.roundE6) BEFORE any compare or sum, so argmin ties and
+  * ADC totals are exact integer arithmetic on both engines. Raw PQ is
+  * residual PQ against [[zeroCentroid]]: float-to-double widening is
+  * exact and x − 0.0 == x, so every double op is the raw one.
   */
 object PqKernel {
-  /** `cents` sorted by source vec_id ascending; index IS the code. */
-  case class Book(cents: Array[Array[Float]], m: Int) {
-    val subDim: Int = if (cents.isEmpty) 0 else cents(0).length / m
-  }
-
-  def unwrap(bc: AnyRef): AnyRef = bc.asInstanceOf[Broadcast[Book]].value
-
-  private def subDistE6(v: Array[Float], cent: Array[Float],
-                        off: Int, subDim: Int): Long = {
-    var s = 0.0
-    var i = 0
-    while (i < subDim) {
-      val d = v(off + i).toDouble - cent(off + i).toDouble
-      s += d * d
-      i += 1
-    }
-    CentroidKernel.roundE6(s)
-  }
-
-  /** PQ code: per subspace, the index of the codebook entry with minimal
-    * rounded squared-L2 sub-distance (first index on ties).
-    */
-  def encode(bookRef: AnyRef, vec: ArrayData): GenericArrayData = {
-    val book = bookRef.asInstanceOf[Book]
-    val v = vec.toFloatArray()
-    val out = new Array[Int](book.m)
-    var j = 0
-    while (j < book.m) {
-      var best = Long.MaxValue
-      var bi = 0
-      var ci = 0
-      while (ci < book.cents.length) {
-        val d = subDistE6(v, book.cents(ci), j * book.subDim, book.subDim)
-        if (d < best) { best = d; bi = ci }
-        ci += 1
-      }
-      out(j) = bi
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Flattened per-query ADC distance table: entry j*ksub + ci is the
-    * rounded sub-distance of query subspace j to codebook entry ci.
-    * Computed ONCE per query row, so scoring a pair is m array lookups.
-    */
-  def distTable(bookRef: AnyRef, vec: ArrayData): GenericArrayData = {
-    val book = bookRef.asInstanceOf[Book]
-    val v = vec.toFloatArray()
-    val ksub = book.cents.length
-    val out = new Array[Long](book.m * ksub)
-    var j = 0
-    while (j < book.m) {
-      var ci = 0
-      while (ci < ksub) {
-        out(j * ksub + ci) = subDistE6(v, book.cents(ci), j * book.subDim, book.subDim)
-        ci += 1
-      }
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
-
   /** Residual codebook — entry i is sample i's residual (v − coarse
     * centroid) as EXACT doubles (float-to-double widening is exact; the
     * double subtraction is the op both engines evaluate). Production
@@ -444,6 +383,14 @@ object PqKernel {
   }
 
   def unwrapRes(bc: AnyRef): AnyRef = bc.asInstanceOf[Broadcast[ResBook]].value
+
+  /** Centroid id of [[zeroCentroid]]. */
+  val ZeroCid = 0L
+
+  /** The one-entry centroid table whose centroid is the `dim`-dim zero
+    * vector: residuals against it are the raw vectors.
+    */
+  def zeroCentroid(dim: Int): CentroidKernel.Cents = Array((ZeroCid, new Array[Float](dim)))
 
   /** v − c in double (the oracle's CAST(... AS DOUBLE) subtraction). */
   def residual(v: Array[Float], c: Array[Float]): Array[Double] = {
@@ -465,7 +412,10 @@ object PqKernel {
     CentroidKernel.roundE6(s)
   }
 
-  /** Residual PQ code of `vec` given its coarse centroid id. */
+  /** Residual PQ code of `vec` given its coarse centroid id: per
+    * subspace, the index of the codebook entry with minimal rounded
+    * squared-L2 sub-distance (first index on ties).
+    */
   def encodeRes(centsRef: AnyRef, bookRef: AnyRef, vec: ArrayData,
                 cid: Long): GenericArrayData = {
     val book = bookRef.asInstanceOf[ResBook]
@@ -523,53 +473,6 @@ object PqKernel {
     }
     s
   }
-}
-
-/** Native PQ encode: `array<int>` of per-subspace codebook indices from a
-  * broadcast codebook (same broadcast-unwrap caching as
-  * VecNearestCentroids).
-  */
-case class PqEncode(child: Expression, bookBc: Broadcast[PqKernel.Book])
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "pq_encode"
-
-  override def nullSafeEval(vec: Any): Any =
-    PqKernel.encode(bookBc.value, vec.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("pqBookBc", bookBc, "java.lang.Object")
-    val cached = ctx.addMutableState("java.lang.Object", "pqBook", v => s"$v = null;")
-    nullSafeCodeGen(ctx, ev, vec =>
-      s"""if ($cached == null) { $cached = graft.plans.PqKernel.unwrap($bcRef); }
-         |${ev.value} = graft.plans.PqKernel.encode($cached, $vec);""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native per-query ADC distance table (`array<long>`, flattened m×ksub). */
-case class PqDistTable(child: Expression, bookBc: Broadcast[PqKernel.Book])
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "pq_dist_table"
-
-  override def nullSafeEval(vec: Any): Any =
-    PqKernel.distTable(bookBc.value, vec.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("pqBookBc", bookBc, "java.lang.Object")
-    val cached = ctx.addMutableState("java.lang.Object", "pqBookT", v => s"$v = null;")
-    nullSafeCodeGen(ctx, ev, vec =>
-      s"""if ($cached == null) { $cached = graft.plans.PqKernel.unwrap($bcRef); }
-         |${ev.value} = graft.plans.PqKernel.distTable($cached, $vec);""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Native residual-PQ encode: codes of (vec − centroid[cid]) against the
@@ -636,7 +539,7 @@ case class PqDistTableRes(left: Expression, right: Expression,
 /** Native IVF coarse-quantizer assignment: `array<long>` of the `top`
   * nearest centroid ids (cosine rounded to 1e-6 desc, ties by cid asc)
   * from a BROADCAST centroid table. The centroid table travels as a Spark
-  * broadcast variable (O(K), K bounded — see SimilarityOps.cosineTopKIvf),
+  * broadcast variable (O(K), K bounded — see SimilarityOps.VecCandidates.Ivf),
   * and the generated code caches the unwrapped array in a mutable member
   * so the hot loop never touches the Broadcast lazy val (the contended
   * volatile read measured 2x at 32 threads on the PIP path).
@@ -790,12 +693,6 @@ object GeomExpressions {
     */
   def chaikinAxis(a: Column, rounds: Int): Column =
     NativeCall(RingKernel, "chaikin", LongArray, a, lit(rounds))
-
-  def pqEncode(vec: Column, bc: Broadcast[PqKernel.Book]): Column =
-    GraftColumnBridge.column(PqEncode(GraftColumnBridge.expression(vec), bc))
-
-  def pqDistTable(vec: Column, bc: Broadcast[PqKernel.Book]): Column =
-    GraftColumnBridge.column(PqDistTable(GraftColumnBridge.expression(vec), bc))
 
   /** Native ADC lookup-sum: long score of (distTable, codes) — pure, no
     * broadcast, m array reads per row.

@@ -9,6 +9,7 @@ import graft.core.CellId
 import graft.functions.Fns
 import graft.operators._
 import graft.operators.SpatialOps.{KnnMetric, KnnStrategy}
+import graft.operators.SimilarityOps.{VecCandidates, VecScore}
 import graft.sources.Synth
 
 /** Spark-side operator tests on sf0.001 — cross-checks the Column-API
@@ -725,7 +726,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ANN cosine top-k: recall vs exact baseline on near-duplicates") {
     val e = Synth.embCorpus(spark, dir)
     val q = e.filter(col("vec_id") >= 1000000L)
-    val ann = SimilarityOps.cosineTopKAnn(e, q, 1)
+    val ann = SimilarityOps.topK(e, q, 1, VecCandidates.Lsh())
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val nQueries = q.count()
     // injected near-copies differ in one component by 0.01 — the LSH
@@ -733,9 +734,9 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hits = ann.count { case (qid, nid) => nid == qid - 1000000L }
     assert(hits >= (nQueries * 0.9).toInt, s"recall@1 = $hits/$nQueries")
     // ANN never invents scores: every reported pair matches the exact score
-    val exact = SimilarityOps.cosineTopK(e, q, 10)
+    val exact = SimilarityOps.topK(e, q, 10)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(3))).toMap
-    SimilarityOps.cosineTopKAnn(e, q, 1).collect().foreach { r =>
+    SimilarityOps.topK(e, q, 1, VecCandidates.Lsh()).collect().foreach { r =>
       exact.get((r.getLong(0), r.getLong(1))).foreach(s => assert(s === r.getLong(3)))
     }
   }
@@ -746,10 +747,10 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val shuffled = SimilarityOps.cosineTopKAnn(e, q, 1, broadcastQueries = false)
+      val shuffled = SimilarityOps.topK(e, q, 1, VecCandidates.Lsh(broadcastQueries = false))
       assert(!shuffled.queryExecution.sparkPlan.toString.contains("BroadcastExchange"))
       val a = shuffled.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
-      val b = SimilarityOps.cosineTopKAnn(e, q, 1)
+      val b = SimilarityOps.topK(e, q, 1, VecCandidates.Lsh())
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
       assert(a === b)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -852,7 +853,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("IVF cosine: never invents pairs or scores (subset of exact scorer)") {
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val q = e.filter(col("vec_id") % 25 === 0)
-    val ivfDf = SimilarityOps.cosineTopKIvf(e, q, 5)
+    val ivfDf = SimilarityOps.topK(e, q, 5, VecCandidates.Ivf())
     // assignment is a map stage over the broadcast VARIABLE: no crossJoin
     // row explosion and exactly ONE window (the per-query rerank top-k)
     val plan = ivfDf.queryExecution.executedPlan.toString
@@ -863,11 +864,11 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // small corpora make mod <= 3 where a bare residue-3 rule selects
     // nothing; the 3 % mod rule must keep the quantizer non-empty
     val small = e.filter(col("vec_id") < 10)
-    assert(SimilarityOps.cosineTopKIvf(small, small.filter(col("vec_id") === 0), 3)
+    assert(SimilarityOps.topK(small, small.filter(col("vec_id") === 0), 3, VecCandidates.Ivf())
       .count() > 0)
     val ivf = ivfDf.collect()
     assert(ivf.nonEmpty)
-    val exact = SimilarityOps.cosineTopK(e, q, 1000)
+    val exact = SimilarityOps.topK(e, q, 1000)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(3))).toMap
     ivf.foreach { r =>
       val s = exact.get((r.getLong(0), r.getLong(1)))
@@ -896,7 +897,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // end-to-end tuned search == the IVF path at the chosen nprobe
     val viaAuto = SimilarityOps.cosineTopKIvfAuto(e, q, 5, q)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val direct = SimilarityOps.cosineTopKIvf(e, q, 5, nprobe = expectNp.toInt)
+    val direct = SimilarityOps.topK(e, q, 5, VecCandidates.Ivf(nprobe = expectNp.toInt))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(viaAuto === direct)
   }
@@ -904,7 +905,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("cosine top-1 of an injected near-duplicate is its source") {
     val e = Synth.embCorpus(spark, dir)
     val q = e.filter(col("vec_id") >= 1000000L).limit(5)
-    val top = SimilarityOps.cosineTopK(e, q, 1).collect()
+    val top = SimilarityOps.topK(e, q, 1).collect()
     top.foreach { r =>
       assert(r.getLong(1) === r.getLong(0) - 1000000L) // nearest = original vector
       assert(r.getLong(3) > 999000L) // cos > 0.999
@@ -938,11 +939,11 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
       .withColumn("vec_id", col("vec_id") * 1000L + 3L)
     val q = e.filter(col("vec_id") % 25000 === 3)
-    val got = SimilarityOps.cosineTopKIvf(e, q, 5).collect()
+    val got = SimilarityOps.topK(e, q, 5, VecCandidates.Ivf()).collect()
     assert(got.nonEmpty)
     assert(got.groupBy(_.getLong(0)).forall(_._2.length <= 5))
     // and the PQ codebook path too
-    assert(SimilarityOps.pqTopK(e, q.limit(3), 5).count() > 0)
+    assert(SimilarityOps.topK(e, q.limit(3), 5, score = VecScore.Pq()).count() > 0)
   }
 
   test("VecNearestCentroids kernel matches a brute-force (roundE6 desc, cid) ranking") {
@@ -1094,14 +1095,17 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // kernel: adc(distTable(q), encode(v)) == brute-force per-subspace sum
     val cents = Array(
       Array.fill(8)(0.0f), Array.fill(8)(1.0f), Array.tabulate(8)(i => i * 0.5f))
-    val book = graft.plans.PqKernel.Book(cents, 2) // 2 subspaces x 4 dims
+    // raw PQ: residuals against the one all-zero centroid
+    import graft.plans.PqKernel
+    val zero = PqKernel.zeroCentroid(8)
+    val book = PqKernel.ResBook(cents.map(PqKernel.residual(_, zero(0)._2)), 2) // 2 subspaces x 4 dims
     val v = Array(0.1f, 0.2f, 0.1f, 0.0f, 0.9f, 1.1f, 1.0f, 0.8f)
     val q = Array(0.0f, 0.1f, 0.3f, 0.2f, 1.0f, 1.0f, 0.7f, 1.2f)
     import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val codes = graft.plans.PqKernel.encode(book, new GenericArrayData(v))
+    val codes = PqKernel.encodeRes(zero, book, new GenericArrayData(v), PqKernel.ZeroCid)
     assert(codes.toIntArray().toSeq === Seq(0, 1)) // sub0 near zeros, sub1 near ones
-    val dtab = graft.plans.PqKernel.distTable(book, new GenericArrayData(q))
-    val got = graft.plans.PqKernel.adc(dtab, codes)
+    val dtab = PqKernel.distTableRes(zero, book, new GenericArrayData(q), PqKernel.ZeroCid)
+    val got = PqKernel.adc(dtab, codes)
     def sub(a: Array[Float], c: Array[Float], off: Int): Long = {
       val s = (0 until 4).map(i => math.pow(a(off + i).toDouble - c(off + i).toDouble, 2)).sum
       graft.plans.CentroidKernel.roundE6(s)
@@ -1112,7 +1116,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // own codes; injected near-dups rank their source first
     val e = Synth.embCorpus(spark, dir)
     val qs = e.filter(col("vec_id") >= 1000000L).limit(5)
-    val top = SimilarityOps.pqTopK(e, qs, 1).collect()
+    val top = SimilarityOps.topK(e, qs, 1, score = VecScore.Pq()).collect()
     top.foreach { r =>
       assert(r.getLong(1) === r.getLong(0) - 1000000L, "PQ top-1 should be the source vector")
     }
@@ -1142,8 +1146,8 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
           .intersect(truth(q)).size.toDouble / k
       }.sum / qids.length
     }
-    val rIvfpq = recall(SimilarityOps.pqTopKIvf(e, qs, k).collect())
-    val rRawPq = recall(SimilarityOps.pqTopK(e, qs, k).collect())
+    val rIvfpq = recall(SimilarityOps.topK(e, qs, k, VecCandidates.Ivf(), VecScore.Pq()).collect())
+    val rRawPq = recall(SimilarityOps.topK(e, qs, k, score = VecScore.Pq()).collect())
     info(f"recall: residual IVF-PQ $rIvfpq%.3f vs raw full-scan PQ $rRawPq%.3f")
     // residual codewords quantize within-list differences, which buys back
     // (and here exceeds) what the nprobe/K list restriction costs vs a
@@ -1668,8 +1672,8 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
           .intersect(truth(q)).size.toDouble / k
       }.sum / qids.length
     }
-    val rRes = recall(SimilarityOps.pqTopKIvf(e, qs, k).collect())
-    val rRaw = recall(SimilarityOps.pqTopK(e, qs, k).collect())
+    val rRes = recall(SimilarityOps.topK(e, qs, k, VecCandidates.Ivf(), VecScore.Pq()).collect())
+    val rRaw = recall(SimilarityOps.topK(e, qs, k, score = VecScore.Pq()).collect())
     info(f"clustered recall: residual IVF-PQ $rRes%.3f vs raw full-scan PQ $rRaw%.3f")
     assert(rRes > rRaw,
       f"residuals must beat raw PQ on clustered data ($rRes%.3f vs $rRaw%.3f)")

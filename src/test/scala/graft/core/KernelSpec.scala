@@ -339,4 +339,53 @@ class KernelSpec extends AnyFunSuite {
     // order-independent (bag of words): permutations score identically
     assert(TextHash.linearScore("a b c") === TextHash.linearScore("c a b"))
   }
+
+  // --- product quantization: raw PQ is residual PQ against the zero centroid ---
+  test("PQ: residual encode/dist table against the zero centroid equals the raw formulas") {
+    import graft.plans.{CentroidKernel, PqKernel}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    // the raw formulas: squared L2 of float components widened to double,
+    // rounded to 1e-6 per subspace; the code is the first argmin
+    def rawSub(v: Array[Float], c: Array[Float], off: Int, subDim: Int): Long = {
+      var s = 0.0
+      var i = 0
+      while (i < subDim) {
+        val d = v(off + i).toDouble - c(off + i).toDouble
+        s += d * d
+        i += 1
+      }
+      CentroidKernel.roundE6(s)
+    }
+    def rawTable(v: Array[Float], cents: Array[Array[Float]], m: Int): Seq[Long] = {
+      val subDim = v.length / m
+      for (j <- 0 until m; c <- cents) yield rawSub(v, c, j * subDim, subDim)
+    }
+    def rawEncode(v: Array[Float], cents: Array[Array[Float]], m: Int): Seq[Int] = {
+      val subDim = v.length / m
+      (0 until m).map { j =>
+        val d = cents.map(rawSub(v, _, j * subDim, subDim))
+        d.indexOf(d.min)
+      }
+    }
+    val special = Array(-0.0f, 0.0f, Float.MaxValue, -Float.MaxValue, Float.MaxValue / 3,
+      Float.MinPositiveValue, -Float.MinPositiveValue, 1e-30f, -1e30f)
+    forSeeded(300) { rnd =>
+      val dim = 8
+      val m = Seq(1, 2, 4, 8)(rnd.nextInt(4))
+      def value(): Float =
+        if (rnd.nextInt(4) == 0) special(rnd.nextInt(special.length))
+        else (rnd.nextFloat() * 2 - 1) * math.pow(10, rnd.nextInt(7) - 3).toFloat
+      def vec(): Array[Float] = Array.fill(dim)(value())
+      val raw = Array.fill(1 + rnd.nextInt(16))(vec())
+      // a repeated codeword forces a tie: the first index must win
+      if (raw.length > 1 && rnd.nextBoolean()) raw(raw.length - 1) = raw(0).clone()
+      val zero = PqKernel.zeroCentroid(dim)
+      val book = PqKernel.ResBook(raw.map(PqKernel.residual(_, zero(0)._2)), m)
+      val v = if (rnd.nextInt(5) == 0) raw(rnd.nextInt(raw.length)).clone() else vec()
+      val codes = PqKernel.encodeRes(zero, book, new GenericArrayData(v), PqKernel.ZeroCid)
+      assert(codes.toIntArray().toSeq === rawEncode(v, raw, m), v.mkString(","))
+      val dtab = PqKernel.distTableRes(zero, book, new GenericArrayData(v), PqKernel.ZeroCid)
+      assert(dtab.toLongArray().toSeq === rawTable(v, raw, m), v.mkString(","))
+    }
+  }
 }

@@ -100,8 +100,8 @@ class Round4SessionSevenSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     val emb = rows.toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    val got = SimilarityOps.hardNegatives(emb,
-        emb.filter(col("vec_id") === 0L), 3, 999000L)
+    val got = SimilarityOps.topK(emb, emb.filter(col("vec_id") === 0L), 3,
+        score = SimilarityOps.VecScore.Cosine(below = Some(999000L)))
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got.forall(_._3 < 999000L), got.mkString(","))
     // the 3 near-copies are excluded BEFORE ranking, so ranks 1..3 are

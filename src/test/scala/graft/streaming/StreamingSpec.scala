@@ -786,7 +786,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         val qids = batch.collect().map(_.getLong(0))
         if (qids.nonEmpty) {
           val queries = corpus.filter(corpus("vec_id").isin(qids: _*))
-          val top = graft.operators.SimilarityOps.cosineTopK(corpus, queries, 1)
+          val top = graft.operators.SimilarityOps.topK(corpus, queries, 1)
           results.synchronized {
             results ++= top.collect().map(r => (r.getLong(0), r.getLong(1)))
           }

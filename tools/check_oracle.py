@@ -1,13 +1,17 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: run Verify's parquet
 dumps against DuckDB executions of oracle_sql.json and compare row sets
-(columns sorted by name, rows sorted, values stringified)."""
+(columns sorted by name, rows sorted, values stringified).
+
+Usage: check_oracle.py [out_dir [sf_dir [query ...]]]
+With query names, only those queries are checked."""
 import sys, json, glob, os
 import duckdb
 import pandas as pd
 
 out_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/verify_out"
 sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
+only = set(sys.argv[3:])
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -16,6 +20,11 @@ for t in TABLES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+unknown = only - set(oracle)
+if unknown:
+    sys.exit(f"no oracle for: {sorted(unknown)}")
+if only:
+    oracle = {name: oracle[name] for name in only}
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
@@ -59,7 +68,8 @@ for name in sorted(oracle):
         fails.append(name); continue
     print(f"{name:22s} OK ({len(a)} rows)")
 
-extra = [os.path.basename(p) for p in glob.glob(f"{out_dir}/q_*") if os.path.basename(p) not in oracle]
+extra = [] if only else [os.path.basename(p) for p in glob.glob(f"{out_dir}/q_*")
+                         if os.path.basename(p) not in oracle]
 if extra:
     print("rows-only (no oracle):", extra)
 print("FAILED:" if fails else "ALL OK", fails if fails else "")
