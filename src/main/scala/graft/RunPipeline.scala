@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
-import graft.operators.{CheckpointOps, DedupOps, SpatialOps}
+import graft.operators.{CheckpointOps, DedupOps, GraphOps, SpatialOps}
 import graft.sources.Synth
 
 /** Production entrypoint (the spark-submit surface of the north rule):
@@ -14,8 +14,8 @@ import graft.sources.Synth
   * previous stage's parquet, exactly how production pipelines compose),
   * and a re-run executes ONLY what is missing: row-local stages resume at
   * bucket granularity, the global clustering loop resumes at ROUND
-  * granularity (duplicateClustersResumable), and a completed pipeline
-  * re-runs as a no-op. `main` takes (sfDir, outDir).
+  * granularity (GraphOps.connectedComponentsResumable), and a completed
+  * pipeline re-runs as a no-op. `main` takes (sfDir, outDir).
   *
   * Stage layout (buckets are deterministic key residues):
   *   gate      doc-bucketed : quality/length gate + fingerprint + split
@@ -71,8 +71,12 @@ object RunPipeline {
     val pairs = spark.read.parquet(s"$outDir/pairs")
     val hadPairRows = pairs.limit(1).count() > 0
     val (labels, _, roundsRun) =
-      if (hadPairRows) DedupOps.duplicateClustersResumable(pairs, s"$outDir/cc")
-      else (pairs.select(col("doc_a").as("doc_id"), col("doc_b").as("cluster_id")), 0, 0)
+      if (hadPairRows) {
+        val (cc, total, run) = GraphOps.connectedComponentsResumable(
+          pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")), s"$outDir/cc")
+        (cc.select(col("node_id").as("doc_id"), col("component").as("cluster_id")),
+          total, run)
+      } else (pairs.select(col("doc_a").as("doc_id"), col("doc_b").as("cluster_id")), 0, 0)
 
     // ---- survivors: one join + struct-min agg, single lineage unit --------
     val nSurv = CheckpointOps.runResumable(spark,

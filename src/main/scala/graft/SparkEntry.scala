@@ -370,12 +370,11 @@ object SparkEntry {
     }),
 
     // trajectory clustering: Fréchet-threshold pair graph → connected
-    // components (route-variant grouping; the components engine is the
-    // contraction-accelerated dedup loop)
+    // components (route-variant grouping)
     "q_traj_cluster" -> ((s, d) => {
       // persist BOTH the track build (the threshold-pick count() would
       // otherwise throw it away and frechetJoin would recompute the full
-      // wayPoints→groupBy chain) and the pair graph (duplicateClusters'
+      // wayPoints→groupBy chain) and the pair graph (connectedComponents'
       // O(log d) pointer-jumping rounds each re-read their input — an
       // unpersisted pair frame re-runs the whole cover+DP join per round)
       val tracks = graft.core.CacheScope.global.persist(wayTracks(t(s, d, "lineitem")))
@@ -384,9 +383,9 @@ object SparkEntry {
       val pairs = graft.core.CacheScope.global.persist(
         SpatialOps.frechetJoin(tracks, tracks, thr,
           coverLevel = TrackCoverLevel, selfJoin = true)
-          .select(col("way_a").as("doc_a"), col("way_b").as("doc_b")))
-      DedupOps.duplicateClusters(pairs)
-        .groupBy("cluster_id").agg(count(lit(1)).as("n_tracks"))
+          .select(col("way_a").as("src"), col("way_b").as("dst")))
+      GraphOps.connectedComponents(pairs)
+        .groupBy(col("component").as("cluster_id")).agg(count(lit(1)).as("n_tracks"))
     }),
 
     // DTW trajectory-similarity join: the cumulative-cost sibling of

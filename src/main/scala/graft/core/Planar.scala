@@ -386,22 +386,13 @@ object Planar {
       i += 1
     }
 
-    // union-find over ring-nodes and point-nodes; a duplicate connection
-    // is a cycle = disconnected interior
-    val parent = scala.collection.mutable.Map.empty[Any, Any]
-    def find(x: Any): Any = {
-      var r: Any = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      r
-    }
-    var ok = true
-    incidences.toSeq.sortBy(_.toString).foreach { case (r, p) =>
-      if (ok) {
-        val a = find(("ring", r)); val b = find(("pt", p))
-        if (a == b) ok = false else parent(a) = b
-      }
-    }
-    ok
+    // union-find over ring nodes 0 until nR and touch-point nodes after
+    // them; an incidence joining two connected nodes closes a cycle =
+    // disconnected interior (in any incidence order)
+    val pointNode = scala.collection.mutable.HashMap.empty[P, Int]
+    incidences.foreach { case (_, p) => pointNode.getOrElseUpdate(p, nR + pointNode.size) }
+    val uf = new UnionFind(nR + pointNode.size)
+    incidences.forall { case (r, p) => uf.union(r, pointNode(p)) }
   }
 
   /** Segments (a,b) and (c,d) collinear and overlapping in more than one

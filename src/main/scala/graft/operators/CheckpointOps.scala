@@ -19,19 +19,24 @@ import org.apache.spark.sql.functions._
   */
 object CheckpointOps {
 
-  /** Buckets already recorded in the lineage table (empty on first run —
-    * only a missing table maps to "nothing done"; other read failures
-    * surface instead of silently forcing a full recompute).
+  /** The parquet table at `path`, or None when no table is there yet.
+    * Only a missing path maps to None: any other read failure (IO,
+    * permissions, a corrupt footer) throws, so a broken table is never
+    * mistaken for a fresh start that recomputes or re-appends history.
     */
-  def completedBuckets(spark: SparkSession, lineageDir: String): Set[Int] =
-    try spark.read.parquet(lineageDir).select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
+  def readIfExists(spark: SparkSession, path: String): Option[DataFrame] =
+    try Some(spark.read.parquet(path))
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getMessage.contains("PATH_NOT_FOUND") ||
              e.getMessage.toLowerCase.contains("path does not exist") =>
-        Set.empty
+        None
     }
+
+  /** Buckets already recorded in the lineage table (empty on first run). */
+  def completedBuckets(spark: SparkSession, lineageDir: String): Set[Int] =
+    readIfExists(spark, lineageDir).fold(Set.empty[Int])(
+      _.select("bucket").distinct().collect().map(_.getInt(0)).toSet)
 
   /** Run `job` over every not-yet-completed bucket of `input` keyed by
     * pmod(keyCol, numBuckets). Returns the number of buckets executed.
@@ -80,7 +85,7 @@ object CheckpointOps {
     * from it; a round recorded with changed = 0 short-circuits to done.
     * Because every round re-reads parquet, the logical plan is reborn
     * each round — the iterative-loop plan-explosion hazard (see
-    * DedupOps.duplicateClustersCounted) cannot arise, which is exactly
+    * GraphOps.componentsLoop) cannot arise, which is exactly
     * the trade: one write+read barrier of round latency buys exact
     * resumability AND a flat analyzer cost.
     *
@@ -95,18 +100,9 @@ object CheckpointOps {
                       (step: (DataFrame, Int) => (DataFrame, Long)): (DataFrame, Int, Int) = {
     import spark.implicits._
     val lineageDir = s"$stateDir/lineage"
-    // only a MISSING lineage table means "fresh start" — any other read
-    // failure (IO, permissions, corrupt footer) must surface rather than
-    // silently discarding completed rounds and appending a second history
-    val prior =
-      try spark.read.parquet(lineageDir).select("round", "changed")
-        .collect().map(r => (r.getInt(0), r.getLong(1)))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND") ||
-               e.getMessage.toLowerCase.contains("path does not exist") =>
-          Array.empty[(Int, Long)]
-      }
+    // only a MISSING lineage table means "fresh start" (readIfExists)
+    val prior = readIfExists(spark, lineageDir).fold(Array.empty[(Int, Long)])(
+      _.select("round", "changed").collect().map(r => (r.getInt(0), r.getLong(1))))
     var round = if (prior.isEmpty) 0 else prior.map(_._1).max
     var changed = if (prior.isEmpty) Long.MaxValue
       else prior.filter(_._1 == round).map(_._2).min

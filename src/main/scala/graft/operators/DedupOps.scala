@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.GraftPlanBridge.cut
-import graft.core.{CacheScope, LoopFrame}
+import graft.core.CacheScope
 import graft.functions.Fns
 
 /** Training-data-pipeline deduplication operators over a (doc_id, text)
@@ -163,297 +162,17 @@ object DedupOps {
       .agg(count(lit(1)).as("n_bands"))
   }
 
-  /** Rounds of plain min-label propagation before pointer jumping kicks
-    * in: dup-pair graphs are usually shallow (a handful of near-copies per
-    * component), where the jump's extra self-join per round is pure
-    * overhead — it pays only on deep chains that survive the first rounds.
-    */
-  val ClusterJumpAfter = 3
-
-  /** Duplicate-cluster assignment: connected components over the pair
-    * graph, cluster id = smallest doc_id in the component — the step a
-    * dedup pipeline runs after pair generation to pick one canonical
-    * representative per group of transitively-linked near-duplicates.
+  /** Duplicate-cluster assignment: [[GraphOps.connectedComponents]] over
+    * the (doc_a, doc_b) pair graph, as (doc_id, cluster_id) with cluster
+    * id = smallest doc_id in the component — the step a dedup pipeline
+    * runs after pair generation to pick one canonical representative per
+    * group of transitively-linked near-duplicates.
     */
   def duplicateClusters(pairs: DataFrame,
                         scope: CacheScope = CacheScope.global): DataFrame =
-    duplicateClustersCounted(pairs, scope)._1
-
-  /** duplicateClusters exposing the round count (spec'd convergence bound).
-    *
-    * Min-label propagation with ADAPTIVE POINTER JUMPING: each round every
-    * node adopts the minimum label over its closed neighborhood; from
-    * round ClusterJumpAfter+1 on, it additionally shortcuts to its label's
-    * label (labels are always node ids, so the lookup is a complete
-    * self-join). The shortcut halves the remaining distance to the
-    * component minimum, so a component of diameter d converges in
-    * O(ClusterJumpAfter + log d) rounds — a 10^6-link boilerplate chain
-    * (common in crawl data: paginated near-copies) costs ~25 rounds, not
-    * 10^6 — while the common shallow graph never pays the jump's extra
-    * self-join. Convergence is detected on the round's own frame (the old
-    * label is carried through), so each round is exactly one materializing
-    * count with no extra comparison join.
-    *
-    * Scale hygiene: the label frame moves through a
-    * [[graft.core.LoopFrame]] (the round's changed-label count is its
-    * materializing measure), so only the final label frame survives,
-    * registered in `scope` for the caller to release after consuming the
-    * result, and Catalyst never re-optimizes an ever-deeper join chain.
-    */
-  private[graft] def duplicateClustersCounted(pairs: DataFrame,
-      scope: CacheScope): (DataFrame, Int) = {
-    val e = scope.persist(pairs.select(col("doc_a"), col("doc_b")))
-    LocalGraph.dispatchBySize(e, GraphOps.LocalSweepEdges,
-        pairs.schema("doc_a").dataType, pairs.schema("doc_b").dataType)(
-      (duplicateClustersLocal(e), 0))(
-      _ => duplicateClustersContractedLoop(e, scope))
-  }
-
-  /** The distributed contraction + pointer-jump machinery of
-    * [[duplicateClusters]] (spec-reachable directly — the convergence
-    * and contraction specs exercise it below the dispatch budget).
-    */
-  private[graft] def duplicateClustersContractedLoop(pairs: DataFrame,
-      scope: CacheScope): (DataFrame, Int) =
-    graft.core.LoopConf.withCoalescing(pairs) {
-      val (nodeRoot, contracted) = contractPairs(pairs, scope)
-      val (rootLabels, rounds) = duplicateClustersLoop(contracted, scope)
-      val idType = pairs.schema("doc_a").dataType
-      val out = nodeRoot.join(
-          rootLabels.withColumnRenamed("doc_id", "mroot"), Seq("mroot"), "left")
-        .select(col("node").cast(idType).as("doc_id"),
-          coalesce(col("cluster_id"), col("mroot")).cast(idType)
-            .as("cluster_id"))
-      (out, rounds)
-    }
-
-  /** Single-shard twin of [[duplicateClusters]] under
-    * [[GraphOps.LocalSweepEdges]]: one union-find task over the whole pair
-    * list as a [[LocalGraph]]. Unions always direct the larger root at the
-    * smaller, so find(x) IS the component's minimum member — the same label
-    * contract as the contraction + jump path (and the same kernel as
-    * [[contractPairs]]' per-partition pass, here seeing every edge); parity
-    * spec'd.
-    */
-  private[graft] def duplicateClustersLocal(e: DataFrame): DataFrame =
-    LocalGraph.run(e) { g =>
-      // union by min index: index order is id order
-      val parent = Array.range(0, g.n)
-      def find(x: Int): Int = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (c != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      (0 until g.m).foreach { k =>
-        val ra = find(g.src(k)); val rb = find(g.nbr(k))
-        parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      (0 until g.n).iterator.map(i => (g.ids(i), g.ids(find(i))))
-    }.toDF("doc_id", "cluster_id").transform(
-      LocalGraph.castIds(e.schema("doc_a").dataType, "doc_id", "cluster_id"))
-
-  /** Per-partition edge budget for one cascaded-contraction pass: a
-    * union-find pass is allowed to see at most ~this many edges per
-    * partition (the in-memory map is O(nodes), nodes ≤ 2·edges), so the
-    * cascade's partition count is always derived from the REMAINING edge
-    * count and executor memory stays bounded no matter how the graph
-    * shrinks.
-    */
-  val SingleShotEdges: Long = 1L << 20
-
-  /** CASCADED partition-local union-find CONTRACTION: collapse the pair
-    * graph as far as repeated local passes can before the global round
-    * loop ever runs. One pass: each partition's edges go through an
-    * in-memory union-find (union by MIN id, path-compressed find —
-    * memory is O(nodes in the partition), which the pass's partition
-    * count bounds), emitting (node, local root). A node whose edges are
-    * spread over several partitions gets several local roots — each such
-    * multi-membership IS a cross-partition merge, so the groupBy(node)
-    * that follows emits the CONTRACTED graph: one edge
-    * (root, min root of the node) per extra membership.
-    *
-    * A single hash-partitioned pass contracts chain-shaped graphs badly
-    * (a path's edges scatter over P partitions, so ~(1−1/P) of them
-    * span partitions — measured 7% shrink on the trajectory pair graph,
-    * leaving a 42-round pointer-jump loop). So the pass CASCADES: after
-    * each pass the surviving contracted edges are re-counted and
-    * re-sharded into ceil(edges / [[SingleShotEdges]]) partitions — a
-    * strictly smaller partition count, each partition still
-    * memory-bounded — and contracted again. The partition count shrinks
-    * geometrically, so the cascade runs ≤ log(P) passes, and once the
-    * remaining graph fits one [[SingleShotEdges]] shard the final pass
-    * resolves every component exactly and the round loop sees an EMPTY
-    * graph (one convergence-check round, no propagation). Graphs too
-    * large to cascade to one shard (cross-partition edges still above
-    * the per-pass budget × current shard count) stop early and hand the
-    * remainder to the pointer-jump loop — the cascade never regresses
-    * the loop's asymptotics, it only shrinks the loop's input.
-    *
-    * Labels are unchanged by any number of passes: the global component
-    * minimum m is its own local root wherever it appears, every local
-    * root is a component member ≥ m, and roots chain to m through the
-    * contracted edges — so the loop's min-label output on the final
-    * roots, mapped back through the COMPOSED (node → min root) mapping,
-    * reproduces exactly the labels the plain loop assigns (spec'd parity
-    * on random graphs). Returns (node→mroot mapping over every node in
-    * `pairs`, contracted edges as (doc_a, doc_b) — possibly empty).
-    */
-  private[graft] def contractPairs(pairs: DataFrame,
-      scope: CacheScope): (DataFrame, DataFrame) = {
-    val sess = pairs.sparkSession
-    import sess.implicits._
-
-    def unionFindPass(edges: org.apache.spark.sql.Dataset[(Long, Long)]): DataFrame = edges
-      .mapPartitions { it =>
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.get(r) != r) r = parent.get(r)
-          var c = x
-          while (c != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
-          r
-        }
-        it.foreach { case (a, b) =>
-          if (!parent.containsKey(a)) parent.put(a, a)
-          if (!parent.containsKey(b)) parent.put(b, b)
-          val ra = find(a); val rb = find(b)
-          if (ra < rb) parent.put(rb, ra)
-          else if (rb < ra) parent.put(ra, rb)
-        }
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-        val ks = parent.keySet().iterator()
-        while (ks.hasNext) { val k = ks.next(); out += ((k, find(k))) }
-        out.iterator
-      }
-      .toDF("node", "root")
-
-    var edges: org.apache.spark.sql.Dataset[(Long, Long)] = pairs
-      .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .as[(Long, Long)]
-    var mapping: DataFrame = null
-    var contracted: DataFrame = null
-    var lastParts = -1 // first pass rides the caller's partitioning
-    var continue = true
-    while (continue) {
-      val nr = scope.persist(unionFindPass(edges).groupBy("node")
-        .agg(min("root").as("mroot"), collect_set("root").as("roots")))
-      val m = nr.select(col("node"), col("mroot"))
-      // compose this pass's root mapping onto the cumulative one: only
-      // roots that still had cross-partition edges re-appear in the next
-      // pass, so absent roots keep their current mroot (left + coalesce)
-      mapping = if (mapping == null) m
-        else scope.persist(mapping.join(
-            m.select(col("node").as("mroot"), col("mroot").as("mroot2")),
-          Seq("mroot"), "left")
-          .select(col("node"),
-            coalesce(col("mroot2"), col("mroot")).as("mroot")))
-      contracted = scope.persist(nr
-        .select(col("mroot"), explode(col("roots")).as("r"))
-        .filter(col("r") =!= col("mroot"))
-        .select(col("r").as("doc_a"), col("mroot").as("doc_b"))
-        .distinct())
-      val n = contracted.count()
-      val cur = if (lastParts > 0) lastParts else contracted.rdd.getNumPartitions
-      val target = math.max(1L, (n + SingleShotEdges - 1) / SingleShotEdges).toInt
-      if (n == 0 || target >= cur) continue = false
-      else {
-        lastParts = target
-        edges = contracted.repartition(target).as[(Long, Long)]
-      }
-    }
-    (mapping, contracted)
-  }
-
-  private[graft] def duplicateClustersLoop(pairs: DataFrame,
-                                           scope: CacheScope): (DataFrame, Int) = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    // cut at entry: the caller's pair plan can be arbitrarily deep (an LSH
-    // candidate tree, a radius-join cover tree) and every round reads sym
-    // twice (measured 22 s/round driver CPU on q_dbscan's 2k-edge graph
-    // without the cut, vs <1 s of actual compute)
-    val sym = cut(scope.persist(edges.unionByName(
-      edges.select(col("dst").as("src"), col("src").as("dst")))))
-    val labels = new LoopFrame(sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0) {
-      rounds += 1
-      val cur = labels.frame
-      val prop = sym.join(
-          cur.select(col("id").as("dst"), col("label").as("nbl")), "dst")
-        .groupBy(col("src").as("id")).agg(min("nbl").as("nbr"))
-      val stepped = cur.select(col("id"), col("label").as("old"))
-        .join(prop, Seq("id"), "left")
-        .select(col("id"), col("old"),
-          least(col("old"), coalesce(col("nbr"), col("old"))).as("label"))
-      var roundCache: DataFrame = null
-      val roundOut =
-        if (rounds <= ClusterJumpAfter) stepped
-        else {
-          // persisted for this round only: the shortcut self-join reads it
-          // on both sides (shuffled by different keys, no exchange reuse)
-          roundCache = stepped.persist()
-          roundCache.join(
-              roundCache.select(col("id").as("lid"), col("label").as("llabel")),
-              col("label") === col("lid"))
-            .select(col("id"), col("old"), least(col("label"), col("llabel")).as("label"))
-        }
-      changed = labels.advance(roundOut,
-        _.filter(col("label") =!= col("old")).count())
-      if (roundCache != null) roundCache.unpersist(blocking = false)
-    }
-    (labels.keep(scope)
-      .select(col("id").as("doc_id"), col("label").as("cluster_id")), rounds)
-  }
-
-  /** Durable, resumable duplicate clustering — the same min-label
-    * propagation with adaptive pointer jumping as
-    * [[duplicateClustersCounted]], but every round's label frame commits
-    * to `stateDir` through [[CheckpointOps.iterateResumable]]: a
-    * pre-empted clustering job over a 10^12-doc candidate graph restarts
-    * from its last durable round, not from scratch. The parquet
-    * round-trip doubles as the plan cut (each round's plan is reborn
-    * from a scan), so this variant needs no [[graft.core.LoopFrame]]; its
-    * cost is one write+read barrier
-    * per round, plus one re-evaluation of the round for the durable
-    * write after the convergence count (bounded: each evaluation is the
-    * round's two joins over the previous DURABLE frame). Use the
-    * in-memory loop for latency, this one for long jobs on pre-emptible
-    * capacity. Returns (labels like duplicateClusters, total completed
-    * rounds, rounds executed this invocation — 0 on a full resume); pass
-    * `maxRounds` to budget an invocation and call again to continue.
-    */
-  def duplicateClustersResumable(pairs: DataFrame, stateDir: String,
-                                 maxRounds: Int = Int.MaxValue): (DataFrame, Int, Int) = {
-    val spark = pairs.sparkSession
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val sym = edges.unionByName(
-      edges.select(col("dst").as("src"), col("src").as("dst"))).persist()
-    val init = sym.select(col("src").as("id")).distinct()
-      .withColumn("old", col("id")).withColumn("label", col("id"))
-    val (state, rounds, executed) = CheckpointOps.iterateResumable(spark, init, stateDir,
-      maxRounds) { (labels, round) =>
-      val prop = sym.join(
-          labels.select(col("id").as("dst"), col("label").as("nbl")), "dst")
-        .groupBy(col("src").as("id")).agg(min("nbl").as("nbr"))
-      val stepped = labels.select(col("id"), col("label").as("old"))
-        .join(prop, Seq("id"), "left")
-        .select(col("id"), col("old"),
-          least(col("old"), coalesce(col("nbr"), col("old"))).as("label"))
-      val out =
-        if (round <= ClusterJumpAfter) stepped
-        else stepped.join(
-            stepped.select(col("id").as("lid"), col("label").as("llabel")),
-            col("label") === col("lid"))
-          .select(col("id"), col("old"), least(col("label"), col("llabel")).as("label"))
-      (out, out.filter(col("label") =!= col("old")).count())
-    }
-    sym.unpersist(blocking = false)
-    (state.select(col("id").as("doc_id"), col("label").as("cluster_id")), rounds, executed)
-  }
+    GraphOps.connectedComponents(
+        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")), scope)
+      .select(col("node_id").as("doc_id"), col("component").as("cluster_id"))
 
   /** Final dedup-pipeline step: one survivor per near-duplicate cluster —
     * the longest text wins, ties broken by smallest doc_id; documents in

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.GraftPlanBridge.cut
 
-import graft.core.{CacheScope, LoopFrame}
+import graft.core.{CacheScope, LoopFrame, UnionFind}
 import graft.functions.Fns
 import LocalGraph.{castIds, dispatchBySize}
 
@@ -918,23 +918,201 @@ object GraphOps {
 
   /** Undirected connected components over an (src, dst) edge list:
     * node_id → component, where the component label is the smallest node
-    * id reachable from the node. The crawl use: carving a host/link graph
-    * into independent crawl universes (mirror farms, link islands) before
-    * per-component scheduling or dedup.
-    *
-    * Delegates to the adaptive pointer-jumping min-label loop of
-    * [[DedupOps.duplicateClusters]] (edges are symmetrized there), so a
-    * chain-shaped component of diameter d — the adversarial case for
-    * plain label propagation, and common in paginated crawl graphs —
-    * converges in O(log d) rounds of two shuffles each.
+    * id reachable from the node. The one components operator: near-dup
+    * clusters ([[DedupOps.duplicateClusters]] renames its columns),
+    * overlap dissolves, way chains, raster regions, DBSCAN cores,
+    * trajectory clusters and Borůvka merges all label through it, and
+    * [[connectedComponentsResumable]] is its durable form. The crawl use:
+    * carving a host/link graph into independent crawl universes (mirror
+    * farms, link islands) before per-component scheduling or dedup.
     * Nodes with no edges don't appear (components are defined over the
     * edge list; union isolated nodes in as self-labeled if needed).
+    *
+    * Size dispatch ([[LocalGraph.dispatchBySize]] under
+    * [[LocalSweepEdges]]): a small edge list is one [[graft.core.UnionFind]]
+    * pass in one task ([[LocalGraph.componentMins]]); a larger one runs
+    * [[componentsLoop]]. Both give the same labels (parity spec'd).
     */
   def connectedComponents(edges: DataFrame,
-                          scope: CacheScope = CacheScope.global): DataFrame =
-    DedupOps.duplicateClusters(
-        edges.select(col("src").as("doc_a"), col("dst").as("doc_b")), scope)
-      .select(col("doc_id").as("node_id"), col("cluster_id").as("component"))
+                          scope: CacheScope = CacheScope.global): DataFrame = {
+    val e = scope.persist(edges.select(col("src"), col("dst")))
+    dispatchBySize(e, LocalSweepEdges, srcDst(edges): _*)(
+      LocalGraph.run(e)(_.componentMins).toDF("node_id", "component")
+        .transform(castIds(edges.schema("src").dataType, "node_id", "component")))(
+      _ => componentsLoop(e, scope)._1)
+  }
+
+  /** Rounds of plain min-label propagation before pointer jumping kicks
+    * in: pair graphs are usually shallow (a handful of near-copies per
+    * component), where the jump's extra self-join per round is pure
+    * overhead — it pays only on deep chains that survive the first rounds.
+    */
+  val ClusterJumpAfter = 3
+
+  /** The distributed path of [[connectedComponents]] over its persisted
+    * (src, dst) list `e`. Returns the labels and the number of
+    * pointer-jump rounds (spec'd convergence bound).
+    *
+    * First a CASCADED union-find CONTRACTION collapses the graph as far
+    * as shard-local passes can. One pass loads each partition's edges as
+    * a [[LocalGraph]] and emits (node, shard-local min root)
+    * ([[LocalGraph.componentMins]]; memory O(edges in the partition)). A
+    * node whose edges span several partitions gets several local roots —
+    * each such multi-membership IS a cross-partition merge, so the
+    * groupBy(node) that follows emits the CONTRACTED graph: one edge
+    * (root, min root of the node) per extra membership. A single
+    * hash-partitioned pass contracts chains badly (a path's edges scatter
+    * over P partitions — measured 7% shrink on the trajectory pair graph,
+    * leaving a 42-round loop), so the pass CASCADES: the surviving edges
+    * are re-counted and re-sharded into ceil(edges / [[LocalSweepEdges]])
+    * partitions — the single-task twin's budget, strictly fewer
+    * partitions each pass — and contracted again, at most log(P) passes.
+    * Once the remainder fits one shard the last pass resolves every
+    * component and the loop below sees an EMPTY graph (one convergence
+    * round, no propagation); a remainder that cannot shrink further goes
+    * to the loop as is, so the cascade never worsens its asymptotics.
+    *
+    * Then the POINTER-JUMP LOOP over the contracted remainder: rounds of
+    * [[jumpRound]] until no label changes, each materialized by its
+    * changed-label count through a [[graft.core.LoopFrame]], so only the
+    * final label frame survives (registered in `scope`) and Catalyst never
+    * re-optimizes an ever-deeper join chain. A component of diameter d
+    * converges in O(ClusterJumpAfter + log d) rounds — a 10^6-link
+    * boilerplate chain costs ~25 rounds, not 10^6.
+    *
+    * Labels do not depend on how many passes run: the component minimum
+    * m is its own local root wherever it appears, every local root is a
+    * member ≥ m, and roots chain to m through the contracted edges, so
+    * the loop's labels on the final roots, mapped back through the
+    * COMPOSED (node → min root) mapping, are exactly the plain loop's
+    * (spec'd parity on random graphs).
+    */
+  private[graft] def componentsLoop(e: DataFrame,
+      scope: CacheScope): (DataFrame, Int) =
+    graft.core.LoopConf.withCoalescing(e) {
+      val sess = e.sparkSession
+      import sess.implicits._
+      var edges = e.select(col("src").cast("long"), col("dst").cast("long"))
+        .as[(Long, Long)]
+      var mapping: DataFrame = null
+      var contracted: DataFrame = null
+      var lastParts = -1 // first pass rides the caller's partitioning
+      var continue = true
+      while (continue) {
+        val nr = scope.persist(edges
+          .mapPartitions(it => LocalGraph.load(
+            it.map(p => (p._1, p._2, 0L, 1)), weighted = false).componentMins)
+          .toDF("node", "root").groupBy("node")
+          .agg(min("root").as("mroot"), collect_set("root").as("roots")))
+        val m = nr.select(col("node"), col("mroot"))
+        // compose this pass's root mapping onto the cumulative one: only
+        // roots that still had cross-partition edges re-appear in the next
+        // pass, so absent roots keep their current mroot (left + coalesce)
+        mapping = if (mapping == null) m
+          else scope.persist(mapping.join(
+              m.select(col("node").as("mroot"), col("mroot").as("mroot2")),
+            Seq("mroot"), "left")
+            .select(col("node"),
+              coalesce(col("mroot2"), col("mroot")).as("mroot")))
+        contracted = scope.persist(nr
+          .select(col("mroot"), explode(col("roots")).as("r"))
+          .filter(col("r") =!= col("mroot"))
+          .select(col("r").as("src"), col("mroot").as("dst"))
+          .distinct())
+        val n = contracted.count()
+        val cur = if (lastParts > 0) lastParts else contracted.rdd.getNumPartitions
+        val target = math.max(1L, (n + LocalSweepEdges - 1) / LocalSweepEdges).toInt
+        if (n == 0 || target >= cur) continue = false
+        else {
+          lastParts = target
+          edges = contracted.repartition(target).as[(Long, Long)]
+        }
+      }
+      // cut: every round reads sym twice, and an uncut sym would carry
+      // the caller's whole pair plan into each round's analysis
+      val sym = cut(scope.persist(contracted.unionByName(
+        contracted.select(col("dst").as("src"), col("src").as("dst")))))
+      val labels = new LoopFrame(sym.select(col("src").as("id")).distinct()
+        .withColumn("label", col("id")))
+      var changed = 1L
+      var rounds = 0
+      while (changed > 0) {
+        rounds += 1
+        val roundScope = new CacheScope
+        changed = labels.advance(jumpRound(sym, labels.frame, rounds, roundScope),
+          _.filter(col("label") =!= col("old")).count())
+        roundScope.release()
+      }
+      val idType = e.schema("src").dataType
+      val out = mapping.join(labels.keep(scope)
+          .select(col("id").as("mroot"), col("label").as("component")),
+          Seq("mroot"), "left")
+        .select(col("node").cast(idType).as("node_id"),
+          coalesce(col("component"), col("mroot")).cast(idType).as("component"))
+      (out, rounds)
+    }
+
+  /** One round of min-label propagation over the symmetric (src, dst)
+    * list `sym`, shared by the in-memory and the durable loop: every node
+    * adopts the minimum label over its closed neighborhood; from round
+    * [[ClusterJumpAfter]] + 1 on it then also shortcuts to its label's
+    * label (labels are node ids, so the lookup is a complete self-join),
+    * which halves the remaining distance to the component minimum.
+    * `labels` holds (id, label); the round is (id, old, label), so
+    * convergence is read off the round itself with no comparison join.
+    * The jump reads the stepped labels on both sides (shuffled by
+    * different keys, no exchange reuse), so they are persisted in
+    * `roundScope`, for the caller to release once the round is
+    * materialized.
+    */
+  private def jumpRound(sym: DataFrame, labels: DataFrame, round: Int,
+                        roundScope: CacheScope): DataFrame = {
+    val prop = sym.join(
+        labels.select(col("id").as("dst"), col("label").as("nbl")), "dst")
+      .groupBy(col("src").as("id")).agg(min("nbl").as("nbr"))
+    val stepped = labels.select(col("id"), col("label").as("old"))
+      .join(prop, Seq("id"), "left")
+      .select(col("id"), col("old"),
+        least(col("old"), coalesce(col("nbr"), col("old"))).as("label"))
+    if (round <= ClusterJumpAfter) stepped
+    else {
+      val s = roundScope.persist(stepped)
+      s.join(s.select(col("id").as("lid"), col("label").as("llabel")),
+          col("label") === col("lid"))
+        .select(col("id"), col("old"), least(col("label"), col("llabel")).as("label"))
+    }
+  }
+
+  /** Durable, resumable [[connectedComponents]]: the plain [[jumpRound]]
+    * loop (no contraction), with every round's label frame committed to
+    * `stateDir` through [[CheckpointOps.iterateResumable]], so a
+    * pre-empted job over a 10^12-node pair graph restarts from its last
+    * durable round, not from scratch. The parquet round trip doubles as
+    * the plan cut (each round's plan is reborn from a scan); its cost is
+    * one write+read barrier per round. Use the in-memory operator for
+    * latency, this one for long jobs on pre-emptible capacity. Returns
+    * (labels as [[connectedComponents]], total completed rounds, rounds
+    * executed this invocation — 0 on a full resume); pass `maxRounds` to
+    * budget an invocation and call again to continue.
+    */
+  def connectedComponentsResumable(edges: DataFrame, stateDir: String,
+      maxRounds: Int = Int.MaxValue): (DataFrame, Int, Int) = {
+    val sym = edges.select(col("src"), col("dst")).unionByName(
+      edges.select(col("dst").as("src"), col("src").as("dst"))).persist()
+    val init = sym.select(col("src").as("id")).distinct()
+      .withColumn("old", col("id")).withColumn("label", col("id"))
+    val roundScope = new CacheScope
+    val (state, rounds, executed) = CheckpointOps.iterateResumable(
+        edges.sparkSession, init, stateDir, maxRounds) { (labels, round) =>
+      roundScope.release() // the previous round is durable by now
+      val out = jumpRound(sym, labels, round, roundScope)
+      (out, out.filter(col("label") =!= col("old")).count())
+    }
+    roundScope.release()
+    sym.unpersist(blocking = false)
+    (state.select(col("id").as("node_id"), col("label").as("component")),
+      rounds, executed)
+  }
 
   /** HITS hubs/authorities with fixed-point INTEGER arithmetic — the
     * link-graph quality signal pair next to [[pageRank]] (a good hub
@@ -1343,7 +1521,7 @@ object GraphOps {
     * budget: the identical Borůvka schedule — per round every component picks
     * its lexicographic-min (w, a, b) cross edge, the chosen set dedups,
     * components merge to the MIN member label (the connectedComponents
-    * contract) — run over a [[LocalGraph]] with a union-find on node indices
+    * contract) — run over a [[LocalGraph]] with a [[UnionFind]] on node indices
     * in one task. Same chosen edges per round by construction; parity spec'd
     * against the distributed rounds.
     */
@@ -1368,21 +1546,14 @@ object GraphOps {
         }
         val chosen = best.filter(_ >= 0)
         done = chosen.isEmpty
-        // merge chosen components to the min member label: union-find
-        // whose root is always its group's smallest label (the WCC
-        // min-label contract)
-        val parent = Array.range(0, g.n)
-        def find(x: Int): Int = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          r
-        }
+        // merge chosen components to the min member label (the
+        // connectedComponents min-label contract)
+        val uf = new UnionFind(g.n)
         chosen.foreach { k =>
           mst += ((g.src(k), g.nbr(k), g.w(k)))
-          val ra = find(comp(g.src(k))); val rb = find(comp(g.nbr(k)))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+          uf.union(comp(g.src(k)), comp(g.nbr(k)))
         }
-        (0 until g.n).foreach(i => comp(i) = find(comp(i)))
+        (0 until g.n).foreach(i => comp(i) = uf.find(comp(i)))
       }
       mst.iterator.map { case (a, b, w) => (g.ids(a), g.ids(b), w) }
     }.toDF("a", "b", "w")

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
+import graft.core.UnionFind
+
 /** A whole graph held by ONE task as primitive arrays: the single-shard
   * side of every graph operator's size dispatch ([[LocalGraph.dispatchBySize]]).
   *
@@ -56,6 +58,16 @@ final class LocalGraph(val ids: Array[Long], val off: Array[Int],
   /** The same graph with every edge present in both directions. */
   def undirected: LocalGraph =
     withEdges(src ++ nbr, nbr ++ src, if (w == null) null else w ++ w)
+
+  /** Every node with the smallest id of its component, edges taken
+    * undirected: one [[UnionFind]] pass over the edge slots.
+    */
+  def componentMins: Iterator[(Long, Long)] = {
+    val uf = new UnionFind(n)
+    var k = 0
+    while (k < m) { uf.union(src(k), nbr(k)); k += 1 }
+    Iterator.tabulate(n)(i => (ids(i), ids(uf.find(i))))
+  }
 
   /** Level-synchronous BFS from the nodes `from` over out-edges, at most
     * `maxHops` levels. Every node reached gets its first-arrival level in
@@ -155,8 +167,11 @@ object LocalGraph {
     df.select(df.columns.toIndexedSeq.map(c =>
       if (idCols.contains(c)) col(c).cast(idType).as(c) else col(c)): _*)
 
-  private def load(rows: Iterator[(Long, Long, Long, Int)],
-                   weighted: Boolean): LocalGraph = {
+  /** The graph of tagged rows (x, y, z, t): t = 1 is an edge x -> y of
+    * weight z, t = 0 a seed x with payload (y, z).
+    */
+  private[graft] def load(rows: Iterator[(Long, Long, Long, Int)],
+                          weighted: Boolean): LocalGraph = {
     import scala.collection.mutable.ArrayBuilder
     val from, to, w, seed, seedA, seedB = new ArrayBuilder.ofLong
     rows.foreach { case (x, y, z, t) =>

@@ -692,7 +692,7 @@ object SpatialOps {
     * Scale posture: the eps-neighborhood graph comes from ONE pass of
     * [[withinRadiusGeo]]'s cell-cover shuffle equi-join (no broadcast of
     * either side, no all-pairs stage anywhere); core-core connectivity
-    * resolves through [[DedupOps.duplicateClusters]]' adaptive pointer
+    * resolves through [[GraphOps.connectedComponents]]' adaptive pointer
     * jumping, so even a continent-spanning percolated cluster converges
     * in O(log diameter) rounds; the remaining steps are one count
     * aggregation and two anti-joins. The pair frame is persisted across
@@ -714,12 +714,12 @@ object SpatialOps {
     val coreEdges = pairs
       .join(cores.select(col("pid").as("qid")), "qid")
       .join(cores.select(col("pid").as("nid")), "nid")
-      .select(col("qid").as("doc_a"), col("nid").as("doc_b"))
-    val labels = DedupOps.duplicateClusters(coreEdges, scope)
+      .select(col("qid").as("src"), col("nid").as("dst"))
+    val labels = GraphOps.connectedComponents(coreEdges, scope)
     // isolated cores (no core neighbor) are their own singleton cluster
     val coreLab = scope.persist(cores
-      .join(labels.withColumnRenamed("doc_id", "pid"), Seq("pid"), "left")
-      .select(col("pid"), coalesce(col("cluster_id"), col("pid")).as("cluster"),
+      .join(labels.withColumnRenamed("node_id", "pid"), Seq("pid"), "left")
+      .select(col("pid"), coalesce(col("component"), col("pid")).as("cluster"),
         lit("core").as("role")))
     // persisted (scope-released): borders feeds BOTH the output union and
     // the noise anti-join — uncached, the pairs⋈cores⋈coreLab chain runs
@@ -1261,11 +1261,6 @@ object SpatialOps {
     */
   def segmentCellCover(segs: DataFrame, level: Int, maxSpanFix: Long,
                        keepCoords: Boolean = false): DataFrame = {
-    val n = 1L << level
-    // exact inclusive cell bounds: lo(c) = ceil(c·S/n) (the smallest fix
-    // coordinate binning into c), hi(c) = lo(c+1) - 1
-    def lo(c: Column, span: Long, half: Long) =
-      Fns.idiv(c * lit(span) + lit(n - 1), n) - lit(half)
     val local = segs.filter(
       abs(col("x1") - col("x0")) <= maxSpanFix &&
       abs(col("y1") - col("y0")) <= maxSpanFix)
@@ -1276,17 +1271,7 @@ object SpatialOps {
         Fns.cellX(least(col("x0"), col("x1")), level),
         Fns.cellX(greatest(col("x0"), col("x1")), level))))
       .withColumn("cell_y", explode(sequence(col("cy0"), col("cy1"))))
-    // the LAST cell absorbs the clamped domain edge (cellX/cellY bin
-    // x = +half into cell n-1), so its inclusive hi bound is the domain
-    // max — otherwise a segment lying exactly on the edge binned into
-    // cell n-1 would sit one fix unit beyond every candidate rect and
-    // the side test would emit nothing
-    val rx0 = lo(col("cell_x"), 3600000000L, 1800000000L)
-    val rx1 = when(col("cell_x") === (n - 1), lit(1800000000L))
-      .otherwise(lo(col("cell_x") + 1, 3600000000L, 1800000000L) - 1)
-    val ry0 = lo(col("cell_y"), 1800000000L, 900000000L)
-    val ry1 = when(col("cell_y") === (n - 1), lit(900000000L))
-      .otherwise(lo(col("cell_y") + 1, 1800000000L, 900000000L) - 1)
+    val (rx0, ry0, rx1, ry1) = cellRect(level)
     val dx = col("x1") - col("x0")
     val dy = col("y1") - col("y0")
     def side(cx: Column, cy: Column) = dx * (cy - col("y0")) - dy * (cx - col("x0"))
@@ -1296,6 +1281,26 @@ object SpatialOps {
     cand
       .filter(least(sides: _*) <= 0 && greatest(sides: _*) >= 0)
       .select(out.map(col): _*)
+  }
+
+  /** Exact inclusive fix-coordinate bounds (x0, y0, x1, y1) of the cell
+    * (cell_x, cell_y) at `level`: lo(c) = ceil(c·S/n), the smallest fix
+    * coordinate binning into c, and hi(c) = lo(c+1) - 1. The LAST cell
+    * absorbs the clamped domain edge (cellX/cellY bin x = +half into cell
+    * n-1), so its hi bound is the domain max — otherwise a segment lying
+    * exactly on the edge binned into cell n-1 would sit one fix unit
+    * beyond every candidate rect and the side test would emit nothing.
+    */
+  private def cellRect(level: Int): (Column, Column, Column, Column) = {
+    val n = 1L << level
+    def lo(c: Column, span: Long, half: Long) =
+      Fns.idiv(c * lit(span) + lit(n - 1), n) - lit(half)
+    (lo(col("cell_x"), 3600000000L, 1800000000L),
+      lo(col("cell_y"), 1800000000L, 900000000L),
+      when(col("cell_x") === (n - 1), lit(1800000000L))
+        .otherwise(lo(col("cell_x") + 1, 3600000000L, 1800000000L) - 1),
+      when(col("cell_y") === (n - 1), lit(900000000L))
+        .otherwise(lo(col("cell_y") + 1, 1800000000L, 900000000L) - 1))
   }
 
   /** Vector-tile geometry cut: each way segment, clipped to every grid
@@ -1312,15 +1317,7 @@ object SpatialOps {
     */
   def clipSegmentsToCells(segs: DataFrame, level: Int,
                           maxSpanFix: Long): DataFrame = {
-    val n = 1L << level
-    def lo(c: Column, span: Long, half: Long) =
-      Fns.idiv(c * lit(span) + lit(n - 1), n) - lit(half)
-    val rx0 = lo(col("cell_x"), 3600000000L, 1800000000L)
-    val rx1 = when(col("cell_x") === (n - 1), lit(1800000000L))
-      .otherwise(lo(col("cell_x") + 1, 3600000000L, 1800000000L) - 1)
-    val ry0 = lo(col("cell_y"), 1800000000L, 900000000L)
-    val ry1 = when(col("cell_y") === (n - 1), lit(900000000L))
-      .otherwise(lo(col("cell_y") + 1, 1800000000L, 900000000L) - 1)
+    val (rx0, ry0, rx1, ry1) = cellRect(level)
     val c = graft.plans.GeomExpressions.clipSegRect(
       array(col("x0"), col("y0"), col("x1"), col("y1")),
       array(rx0, ry0, rx1, ry1))
@@ -1356,24 +1353,7 @@ object SpatialOps {
   def waysCrossJoin(segsA: DataFrame, segsB: DataFrame, level: Int,
                     maxSpanFix: Long, selfJoin: Boolean = false,
                     scope: CacheScope = CacheScope.global): DataFrame = {
-    def ali(cov: DataFrame, p: String) =
-      cov.select(col("way_id").as(s"way_$p"), col("seq").as(s"seq_$p"),
-        col("cell_x"), col("cell_y"),
-        col("x0").as(s"${p}x0"), col("y0").as(s"${p}y0"),
-        col("x1").as(s"${p}x1"), col("y1").as(s"${p}y1"))
-    def cover(segs: DataFrame) =
-      segmentCellCover(segs, level, maxSpanFix, keepCoords = true)
-    // selfJoin: BOTH join sides read the same cover — persist it once
-    // (scope-released) instead of recomputing the explode per side
-    // (ReuseExchange does not fire across the per-side aliasing)
-    val (a, b) = if (selfJoin) {
-      val cov = scope.persist(cover(segsA))
-      (ali(cov, "a"), ali(cov, "b"))
-    } else (ali(cover(segsA), "a"), ali(cover(segsB), "b"))
-    val pairFilter =
-      if (selfJoin) col("way_a") < col("way_b")
-      else col("way_a") =!= col("way_b")
-    val cand = a.join(b, Seq("cell_x", "cell_y")).filter(pairFilter)
+    val cand = segPairCandidates(segsA, segsB, level, maxSpanFix, selfJoin, scope)
     val (straddle, allZero) = straddleTest
     val bboxOverlap =
       least(col("ax0"), col("ax1")) <= greatest(col("bx0"), col("bx1")) &&
@@ -1385,6 +1365,35 @@ object SpatialOps {
       .distinct()
       .groupBy("way_a", "way_b")
       .agg(count(lit(1)).as("n_crossings"))
+  }
+
+  /** The segment pairs that share a [[segmentCellCover]] cell — the
+    * candidates [[waysCrossJoin]] and [[planarize]] refine: both covers
+    * keep their coordinates, aliased to (way_a, seq_a, ax0 .. ay1) and
+    * (way_b, seq_b, bx0 .. by1), then one equi-join on the cell and the
+    * pair filter (way_a < way_b for a self join, way_a != way_b
+    * otherwise). A self join's two sides read ONE cover, persisted in
+    * `scope`, instead of recomputing the explode per side (ReuseExchange
+    * does not fire across the per-side aliasing).
+    */
+  private def segPairCandidates(segsA: DataFrame, segsB: DataFrame,
+      level: Int, maxSpanFix: Long, selfJoin: Boolean,
+      scope: CacheScope): DataFrame = {
+    def ali(cov: DataFrame, p: String) =
+      cov.select(col("way_id").as(s"way_$p"), col("seq").as(s"seq_$p"),
+        col("cell_x"), col("cell_y"),
+        col("x0").as(s"${p}x0"), col("y0").as(s"${p}y0"),
+        col("x1").as(s"${p}x1"), col("y1").as(s"${p}y1"))
+    def cover(segs: DataFrame) =
+      segmentCellCover(segs, level, maxSpanFix, keepCoords = true)
+    val (a, b) = if (selfJoin) {
+      val cov = scope.persist(cover(segsA))
+      (ali(cov, "a"), ali(cov, "b"))
+    } else (ali(cover(segsA), "a"), ali(cover(segsB), "b"))
+    val pairFilter =
+      if (selfJoin) col("way_a") < col("way_b")
+      else col("way_a") =!= col("way_b")
+    a.join(b, Seq("cell_x", "cell_y")).filter(pairFilter)
   }
 
   /** The CLRS four-cross-product straddle test on the joined (a, b)
@@ -1431,27 +1440,11 @@ object SpatialOps {
   def planarize(segsA: DataFrame, segsB: DataFrame, level: Int,
                 maxSpanFix: Long, selfJoin: Boolean = false,
                 scope: CacheScope = CacheScope.global): DataFrame = {
-    def ali(cov: DataFrame, p: String) =
-      cov.select(col("way_id").as(s"way_$p"), col("seq").as(s"seq_$p"),
-        col("cell_x"), col("cell_y"),
-        col("x0").as(s"${p}x0"), col("y0").as(s"${p}y0"),
-        col("x1").as(s"${p}x1"), col("y1").as(s"${p}y1"))
-    def cover(segs: DataFrame) =
-      segmentCellCover(segs, level, maxSpanFix, keepCoords = true)
-    // selfJoin: persist the shared cover once (see waysCrossJoin)
-    val (covA, covB) = if (selfJoin) {
-      val cov = scope.persist(cover(segsA))
-      (ali(cov, "a"), ali(cov, "b"))
-    } else (ali(cover(segsA), "a"), ali(cover(segsB), "b"))
-    val pairFilter =
-      if (selfJoin) col("way_a") < col("way_b")
-      else col("way_a") =!= col("way_b")
     // straddle is NECESSARY for any intersection (collinear overlap has
     // all four products zero, so it passes too) — a strict superset of
     // the kernel's size-2 rows, evaluated entirely in int64 codegen.
     val (straddle, _) = straddleTest
-    covA.join(covB, Seq("cell_x", "cell_y"))
-      .filter(pairFilter)
+    segPairCandidates(segsA, segsB, level, maxSpanFix, selfJoin, scope)
       .filter(straddle)
       .select(col("way_a"), col("seq_a"), col("way_b"), col("seq_b"),
         graft.plans.GeomExpressions.segIntersectionFix(
@@ -1545,8 +1538,8 @@ object SpatialOps {
     * (gaps-and-islands per row — `bx - row_number()` is constant along a
     * consecutive strip), keyed by the run's smallest cell key. Horizontal
     * adjacency is then within-run by construction, so the component graph
-    * that feeds the dedup engine's label propagation
-    * ([[DedupOps.duplicateClusters]]: adaptive pointer jumping,
+    * that feeds the components operator
+    * ([[GraphOps.connectedComponents]]: adaptive pointer jumping,
     * O(3+log d) rounds) has ONE node per run, not per cell: a filled
     * w-cell row is a single node, blob diameters — and with them the
     * pointer-jump round count, the cost floor of the loop — shrink by the
@@ -1573,11 +1566,11 @@ object SpatialOps {
     val edges = c.join(
         c.select(col("bx"), (col("by") - 1).as("by"), col("rk").as("nrk")),
         Seq("bx", "by"))
-      .select(col("rk").as("doc_a"), col("nrk").as("doc_b"))
+      .select(col("rk").as("src"), col("nrk").as("dst"))
       .distinct()
-    val labels = DedupOps.duplicateClusters(edges, scope)
-    c.join(labels.withColumnRenamed("doc_id", "rk"), Seq("rk"), "left")
-      .withColumn("comp", coalesce(col("cluster_id"), col("rk")))
+    val labels = GraphOps.connectedComponents(edges, scope)
+    c.join(labels.withColumnRenamed("node_id", "rk"), Seq("rk"), "left")
+      .withColumn("comp", coalesce(col("component"), col("rk")))
       .groupBy("comp")
       .agg(min("bx").as("min_bx"), min("by").as("min_by"),
         max("bx").as("max_bx"), max("by").as("max_by"),

@@ -459,18 +459,11 @@ object StreamingOps {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
-        val merged =
-          try {
-            val base = spark.read.parquet(snapshotDir)
-            graft.operators.HistoryOps.mergeUpsert(base, batch.toDF(), keyCol, versionCol)
-          } catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getMessage.contains("PATH_NOT_FOUND") ||
-                   e.getMessage.toLowerCase.contains("path does not exist") =>
-              // first batch: the change set IS the snapshot (dedup within)
-              graft.operators.HistoryOps.mergeUpsert(
-                batch.toDF().limit(0), batch.toDF(), keyCol, versionCol)
-          }
+        // first batch: the change set IS the snapshot (dedup within)
+        val base = graft.operators.CheckpointOps.readIfExists(spark, snapshotDir)
+          .getOrElse(batch.toDF().limit(0))
+        val merged = graft.operators.HistoryOps.mergeUpsert(
+          base, batch.toDF(), keyCol, versionCol)
         val tmp = snapshotDir + ".tmp"
         merged.write.mode("overwrite").parquet(tmp)
         val fs = new org.apache.hadoop.fs.Path(snapshotDir)
@@ -519,17 +512,11 @@ object StreamingOps {
     val spark = batchDf.sparkSession
     import graft.functions.Fns
     val base = spark.read.parquet(snapshotDir)
-    val hist =
-      try spark.read.parquet(histDir)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("PATH_NOT_FOUND") ||
-               e.getMessage.toLowerCase.contains("path does not exist") =>
-          base.groupBy(Fns.cellX(col("lon_fix"), level).as("bx"),
-              Fns.cellY(col("lat_fix"), level).as("by"))
-            .agg(count(lit(1)).as("cnt"))
-            .withColumn("applied_batch", lit(-1L))
-      }
+    val hist = graft.operators.CheckpointOps.readIfExists(spark, histDir)
+      .getOrElse(base.groupBy(Fns.cellX(col("lon_fix"), level).as("bx"),
+          Fns.cellY(col("lat_fix"), level).as("by"))
+        .agg(count(lit(1)).as("cnt"))
+        .withColumn("applied_batch", lit(-1L)))
     val b = batchDf.persist()
     try {
       val fs = new org.apache.hadoop.fs.Path(snapshotDir)

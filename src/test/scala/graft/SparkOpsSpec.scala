@@ -269,20 +269,21 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(p => p._1 != p._2)
       .toDF("doc_a", "doc_b").repartition(16)
     val scopeA = new graft.core.CacheScope
-    val scopeB = new graft.core.CacheScope
-    val viaContract = DedupOps.duplicateClustersContractedLoop(
-        edges.select(col("doc_a"), col("doc_b")), scopeA)._1
+    val viaContract = GraphOps.componentsLoop(
+        edges.select(col("doc_a").as("src"), col("doc_b").as("dst")), scopeA)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val viaLocal = DedupOps.duplicateClusters(edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(viaLocal === viaContract) // dispatch twin vs contraction path
-    val viaLoop = DedupOps.duplicateClustersLoop(
-        edges.select(col("doc_a").cast("long").as("doc_a"),
-          col("doc_b").cast("long").as("doc_b")), scopeB)
+    // the plain loop: the same rounds with no contraction (the durable form)
+    val loopDir = java.nio.file.Files.createTempDirectory("graft_cc_plain").toString
+    val viaLoop = GraphOps.connectedComponentsResumable(
+        edges.select(col("doc_a").cast("long").as("src"),
+          col("doc_b").cast("long").as("dst")), loopDir)
       ._1.collect()
       .map(r => (r.getLong(0).asInstanceOf[Long], r.getLong(1))).toMap
     assert(viaContract === viaLoop)
-    scopeA.release(); scopeB.release()
+    scopeA.release()
     // a chain laid out one-edge-per-partition: every merge is
     // cross-partition, the contracted graph is the chain itself — the
     // worst case for contraction must still be exact
@@ -325,6 +326,23 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val direct = job(pts)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(bucketed === direct)
+  }
+
+  test("missing-table read: only an absent path is a fresh start, a corrupt table throws") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt_read")
+    assert(CheckpointOps.readIfExists(spark, s"$tmp/absent").isEmpty)
+    assert(CheckpointOps.completedBuckets(spark, s"$tmp/absent") === Set.empty[Int])
+    // a lineage table whose only file is not parquet: the read fails for
+    // a reason other than a missing path, and no caller may swallow it
+    val bad = java.nio.file.Files.createDirectories(tmp.resolve("lineage"))
+    java.nio.file.Files.write(bad.resolve("part-00000.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    intercept[Exception](CheckpointOps.readIfExists(spark, bad.toString).map(_.collect()))
+    intercept[Exception](CheckpointOps.completedBuckets(spark, bad.toString))
+    intercept[Exception](CheckpointOps.iterateResumable(spark,
+      spark.range(1).toDF("id"), tmp.toString, maxRounds = 1)((st, _) => (st, 0L)))
+    assert(!java.nio.file.Files.exists(tmp.resolve("round=0")),
+      "a corrupt lineage must not restart the loop from round 0")
   }
 
   test("density PNG round-trips the reference gray mapping (nodedensity.cpp:63-84)") {
@@ -998,14 +1016,14 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // rounds; pointer jumping must close it in O(log d)
     val pairs = (0L until 60L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val scope = new graft.core.CacheScope
-    val (labels, rounds) = DedupOps.duplicateClustersContractedLoop(
-      pairs.select(col("doc_a"), col("doc_b")), scope)
+    val (labels, rounds) = GraphOps.componentsLoop(
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")), scope)
     val out = labels.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.length === 61)
     assert(out.forall(_._2 === 0L), out.filter(_._2 != 0L).take(5).mkString(","))
     // 3 plain warm-up rounds (ClusterJumpAfter) + O(log 60) jump rounds;
     // plain min-label alone would need ~60
-    assert(rounds <= DedupOps.ClusterJumpAfter + 11,
+    assert(rounds <= GraphOps.ClusterJumpAfter + 11,
       s"rounds=$rounds — pointer jumping not effective")
     scope.release()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
@@ -1067,6 +1085,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("duplicateClusters", sc =>
         DedupOps.duplicateClusters(DedupOps.minHashLshPairs(corpus, sc), sc)),
       // the distributed loops, called past their size dispatch
+      ("componentsLoop", sc => GraphOps.componentsLoop(ring, sc)._1),
       ("pageRankLoop", sc => GraphOps.pageRankLoop(ring.distinct(), 3, sc)),
       ("topologicalLayersLoop", sc => GraphOps.topologicalLayersLoop(
         ring.filter(col("src") < col("dst")), 4, sc)),
@@ -1735,15 +1754,16 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("doc_a", "doc_b")
     // pre-emption right after round 0 committed: the resume must NOT
     // re-run init or append a duplicate round-0 lineage row
-    val (_, r0, e0) = DedupOps.duplicateClustersResumable(pairs, dir, maxRounds = 0)
+    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    val (_, r0, e0) = GraphOps.connectedComponentsResumable(edges, dir, maxRounds = 0)
     assert(r0 === 0 && e0 === 0)
-    DedupOps.duplicateClustersResumable(pairs, dir, maxRounds = 0)
+    GraphOps.connectedComponentsResumable(edges, dir, maxRounds = 0)
     assert(spark.read.parquet(s"$dir/lineage").count() === 1L,
       "a resume whose newest durable round is 0 must not rewrite round 0")
-    val (_, r1, e1) = DedupOps.duplicateClustersResumable(pairs, dir, maxRounds = 2)
+    val (_, r1, e1) = GraphOps.connectedComponentsResumable(edges, dir, maxRounds = 2)
     assert(r1 === 2 && e1 === 2, "the budgeted invocation stops at its round cap")
     val lineageAfterBudget = spark.read.parquet(s"$dir/lineage").count()
-    val (labels, total, _) = DedupOps.duplicateClustersResumable(pairs, dir)
+    val (labels, total, _) = GraphOps.connectedComponentsResumable(edges, dir)
     assert(total > 2, "the chain needs more rounds than the budget")
     val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = DedupOps.duplicateClusters(pairs)

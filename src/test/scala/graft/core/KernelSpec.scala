@@ -388,4 +388,85 @@ class KernelSpec extends AnyFunSuite {
       assert(dtab.toLongArray().toSeq === rawTable(v, raw, m), v.mkString(","))
     }
   }
+
+  // --- union-find: the one connected-components kernel --------------------
+  test("UnionFind: min roots equal a brute-force BFS component minimum on seeded random graphs") {
+    forSeeded(300) { rnd =>
+      val n = 1 + rnd.nextInt(80)
+      // disjoint node blocks for chains, stars and isolated pairs, then
+      // self-loops, duplicate edges and a few edges across blocks
+      val perm = rnd.shuffle((0 until n).toIndexedSeq)
+      var next = 0
+      def take(k: Int): IndexedSeq[Int] = {
+        val b = perm.slice(next, next + k); next += b.length; b
+      }
+      val edges = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+      (0 until rnd.nextInt(4)).foreach { _ =>
+        val c = take(2 + rnd.nextInt(10))
+        c.indices.drop(1).foreach(i => edges += ((c(i - 1), c(i))))
+      }
+      (0 until rnd.nextInt(3)).foreach { _ =>
+        val s = take(2 + rnd.nextInt(8))
+        s.drop(1).foreach(v => edges += ((s(0), v)))
+      }
+      (0 until rnd.nextInt(5)).foreach { _ =>
+        val p = take(2)
+        if (p.length == 2) edges += ((p(0), p(1)))
+      }
+      (0 until rnd.nextInt(4)).foreach { _ => val v = rnd.nextInt(n); edges += ((v, v)) }
+      if (edges.nonEmpty)
+        (0 until rnd.nextInt(5)).foreach(_ => edges += edges(rnd.nextInt(edges.length)))
+      (0 until rnd.nextInt(3)).foreach(_ => edges += ((rnd.nextInt(n), rnd.nextInt(n))))
+      val order = rnd.shuffle(edges.toSeq).map(e => if (rnd.nextBoolean()) e else e.swap)
+
+      val uf = new UnionFind(n)
+      val merges = order.count { case (a, b) => uf.union(a, b) }
+
+      val adj = Array.fill(n)(List.empty[Int])
+      order.foreach { case (a, b) => adj(a) ::= b; adj(b) ::= a }
+      val want = Array.fill(n)(-1)
+      var components = 0
+      (0 until n).foreach { s =>
+        if (want(s) < 0) {
+          components += 1
+          val seen = scala.collection.mutable.ArrayBuffer(s)
+          want(s) = s
+          var i = 0
+          while (i < seen.length) {
+            adj(seen(i)).foreach(v => if (want(v) < 0) { want(v) = s; seen += v })
+            i += 1
+          }
+          val m = seen.min
+          seen.foreach(want(_) = m)
+        }
+      }
+      assert((0 until n).map(uf.find) === want.toSeq, order.mkString(" "))
+      // union is true exactly for the edges that join two components
+      assert(merges === n - components)
+    }
+  }
+
+  test("interiorConnected: touch-graph verdicts (one touch valid, a touch cycle or shared segment not)") {
+    def ring(pts: (Long, Long)*): (Array[Long], Array[Long]) =
+      (pts.map(_._1).toArray, pts.map(_._2).toArray)
+    val shell = ring((0, 0), (100, 0), (100, 100), (0, 100))
+    val cases = Seq(
+      ("no holes", Seq(), true),
+      ("a free hole", Seq(ring((20, 20), (40, 20), (40, 40))), true),
+      ("a hole touching the shell at one point",
+        Seq(ring((0, 50), (20, 40), (20, 60))), true),
+      ("a hole touching the shell at two points",
+        Seq(ring((0, 50), (50, 0), (50, 50))), false),
+      ("two holes sharing one vertex",
+        Seq(ring((20, 20), (40, 20), (40, 40)), ring((40, 40), (60, 40), (60, 60))), true),
+      ("a chain of holes closing on the shell",
+        Seq(ring((0, 50), (30, 40), (30, 60)), ring((30, 60), (50, 100), (60, 60))), false),
+      ("three rings meeting at one common point",
+        Seq(ring((0, 50), (20, 30), (20, 45)), ring((0, 50), (20, 55), (20, 70))), true),
+      ("a hole sharing a boundary segment with the shell",
+        Seq(ring((0, 20), (0, 40), (20, 30))), false))
+    cases.foreach { case (name, holes, valid) =>
+      assert(Planar.interiorConnected(shell, holes) === valid, name)
+    }
+  }
 }

@@ -188,7 +188,8 @@ class LocalGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
         g => GraphOps.topologicalLayersLoop(noLoops(g), 6, sc)),
       Twin("duplicateClusters", Seq("doc_id", "cluster_id"),
         g => DedupOps.duplicateClusters(pairs(g)),
-        g => DedupOps.duplicateClustersContractedLoop(pairs(g), sc)._1),
+        g => GraphOps.componentsLoop(e2(g), sc)._1
+          .select(col("node_id").as("doc_id"), col("component").as("cluster_id"))),
       Twin("resolveRedirects", Seq("src", "final"),
         g => CrawlOps.resolveRedirects(redirects(g)),
         g => CrawlOps.resolveRedirectsLoop(redirects(g),
