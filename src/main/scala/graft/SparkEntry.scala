@@ -1537,9 +1537,8 @@ object SparkEntry {
     // (trusted-seed crawl prioritization / related-page discovery)
     "q_ppr" -> ((s, d) => {
       val e = linkEdges(s, d)
-      GraphOps.personalizedPageRank(e,
-        e.select(col("src").as("node_id")).filter(col("node_id") % 101 === 0),
-        5)
+      GraphOps.pageRank(e, 5, Some(
+        e.select(col("src").as("node_id")).filter(col("node_id") % 101 === 0)))
     }),
 
     // --- HITS hubs/authorities (integer max-normalized power iteration) ---
@@ -3824,10 +3823,6 @@ object SparkEntry {
     s"min((sh * $a + $b) % 1000000007) AS mh$j"
   }
 
-  /** Chained-CTE twin of GraphOps.pageRank over the deterministic doc link
-    * graph (every constant derives from GraphOps so a parameter change
-    * cannot drift; `pr` not `rank` as the column name — DuckDB keyword).
-    */
   /** [[linkEdges]] twin: the `edges` CTE (plus its `e0` feeder) —
     * DISTINCT here because every Scala-side consumer dedupes too.
     */
@@ -3842,6 +3837,12 @@ object SparkEntry {
        |  FROM e0 WHERE ${mixIdSql("src * 53 + j * 17 + 1")} %
        |      (SELECT count(*) FROM documents) <> src)""".stripMargin
 
+  /** Chained-CTE twin of GraphOps.pageRank over an unweighted edge list
+    * (the deterministic doc link graph unless `edgesWith` says otherwise):
+    * every edge weighs 1, so ⌊pr·w/sw⌋ is ⌊pr/outdeg⌋. Every constant
+    * derives from GraphOps so a parameter change cannot drift; `pr` not
+    * `rank` as the column name — DuckDB keyword.
+    */
   private def pageRankSql(iters: Int, edgesWith: String = linkEdgesSql,
                           idCol: String = "node_id"): String = {
     import graft.operators.GraphOps.{DampingPct, RankScale}
@@ -3867,9 +3868,10 @@ object SparkEntry {
        |SELECT node_id AS $idCol, pr AS rank_e6 FROM r$iters""".stripMargin
   }
 
-  /** GraphOps.personalizedPageRank twin: pageRankSql with the restart
-    * term gated on the seed flag (r0 = S·seed; per round
-    * seed·base + ⌊d·in_sum/100⌋), seeds = node_id % 101 = 0.
+  /** Twin of GraphOps.pageRank with a seed set (personalized PageRank):
+    * pageRankSql with the restart term gated on the seed flag
+    * (r0 = S·seed; per round seed·base + ⌊d·in_sum/100⌋), seeds =
+    * node_id % 101 = 0.
     */
   private def pprSql(iters: Int): String = {
     import graft.operators.GraphOps.{DampingPct, RankScale}
@@ -3896,9 +3898,9 @@ object SparkEntry {
        |SELECT node_id, pr AS rank_e6 FROM r$iters""".stripMargin
   }
 
-  /** GraphOps.pageRankWeighted twin: the same unrolled rounds with
-    * per-edge ⌊pr·w / sw⌋ contributions; `edgesWith` must end in
-    * edges(src, dst, w).
+  /** Twin of GraphOps.pageRank over a weighted edge list: the same
+    * unrolled rounds with per-edge ⌊pr·w / sw⌋ contributions; `edgesWith`
+    * must end in edges(src, dst, w).
     */
   private def pageRankWeightedSql(iters: Int, edgesWith: String,
                                   idCol: String): String = {

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,111 +22,93 @@ object GraphOps {
   /** Damping factor as an exact integer percentage (85 / 100 = 0.85). */
   val DampingPct: Long = 85L
 
-  /** PageRank with FIXED-POINT integer arithmetic: every node starts at
-    * [[RankScale]] micro-units; each iteration a node keeps
-    * `(1-d)·RankScale + d·Σ contrib` where an out-degree-`g` node
-    * contributes `rank / g` (floor division) along each out-edge and
-    * d = [[DampingPct]]/100 (dangling mass is dropped — the documented
-    * variant; re-injecting it needs a global agg per round for no ranking
-    * benefit at this use). All arithmetic is int64, so the result is
-    * bit-identical in any engine — float PageRank can NOT be
-    * oracle-compared because distributed sum order is nondeterministic.
+  /** PageRank with FIXED-POINT integer arithmetic: a node keeps
+    * `(seed ? (1-d)·RankScale : 0) + d·Σ_in ⌊rank·w / sw⌋` each iteration,
+    * where `sw` is the source's total out-weight and d = [[DampingPct]]/100
+    * (dangling mass is dropped — the documented variant; re-injecting it
+    * needs a global agg per round for no ranking benefit at this use).
+    * All arithmetic is int64, so the result is bit-identical in any
+    * engine — float PageRank can NOT be oracle-compared because
+    * distributed sum order is nondeterministic.
     *
-    * Scale posture: per iteration exactly one shuffle join of the edge
-    * list with the rank frame on `src` plus one aggregation shuffle on
-    * `dst` — the canonical distributed PageRank shape. The degree-joined
-    * edge list is computed once and persisted; the rank frame moves
-    * through a [[graft.core.LoopFrame]], so the analyzer never walks a
-    * depth-`iterations` join chain. Overflow headroom: total mass
-    * is n·RankScale ≤ 2^63 for n up to ~9·10^12 nodes; the damping
-    * product multiplies a per-node in-sum by 85, ANSI mode fails loudly
-    * (not silently wraps) if a single node ever concentrates > 2^63/85
-    * micro-units.
+    * Edges: (src, dst) long ids — parallel edges collapse, the rank
+    * contract is over the simple graph, and every edge weighs 1, so `sw`
+    * is the out-degree — or, when the frame has a `w` column,
+    * (src, dst, w) with w ≥ 1, one row per directed edge, taken as
+    * given: the walk follows an edge with probability proportional to
+    * its weight (anchor counts, co-occurrence counts — the TextRank
+    * formulation). Overflow headroom: rank·w must stay
+    * < 2⁶³ — fine for count-scale weights — and a per-node in-sum times
+    * 85 likewise; ANSI mode fails loudly (not silently wraps) past it.
     *
-    * Input: (src, dst) long edge ids (parallel edges collapse — the rank
-    * contract is over the simple graph). Output: (node_id, rank_e6).
+    * Seeds: without them every node starts at [[RankScale]] micro-units
+    * and every node restarts. With a seed frame (node_id) the restart
+    * mass teleports to the seeds only — PERSONALIZED PageRank, rank_0 =
+    * RankScale on seeds and 0 elsewhere: the topic-/site-conditioned
+    * relevance primitive (crawl frontier prioritization from trusted
+    * seeds, related-page discovery), mass diffusing outward along links
+    * and decaying with the damping factor per hop. Seeds outside the edge
+    * set are ignored (no links to diffuse over). Output: (node_id,
+    * rank_e6) over all linked nodes — nodes no seed reaches report 0.
+    *
+    * Scale posture: per iteration exactly one shuffle join of the
+    * weight-annotated edge list with the rank frame on `src` plus one
+    * aggregation shuffle on `dst` — the canonical distributed PageRank
+    * shape ([[rankLoop]]). Strategy selection
+    * ([[LocalGraph.dispatchBySize]]): a small edge list runs every
+    * iteration in ONE task ([[rankLocal]]); parity spec'd.
     */
   def pageRank(edges: DataFrame, iterations: Int,
+               seeds: Option[DataFrame] = None,
                scope: CacheScope = CacheScope.global): DataFrame = {
-    val simple = scope.persist(edges.select(col("src"), col("dst")).distinct())
-    dispatchBySize(simple, LocalSweepEdges, srcDst(edges): _*)(
-      prLocal(simple, None, iterations, edges.schema("src").dataType))(
-      _ => pageRankLoop(simple, iterations, scope))
+    val e = rankEdges(edges, scope)
+    val ids = seeds.map(_.select(col("node_id")).distinct())
+    dispatchBySize(e, LocalSweepEdges,
+        srcDst(edges) ++ seeds.map(_.schema("node_id").dataType): _*)(
+      rankLocal(e, ids, iterations, edges.schema("src").dataType))(
+      _ => rankLoop(e, ids, iterations, scope))
   }
 
-  /** The distributed power-iteration loop of [[pageRank]]
-    * (spec-reachable; `simple` must be the distinct (src, dst) list).
+  /** The (src, dst, w) edge list [[pageRank]] iterates over: a list with
+    * a `w` column as given, persisted; any other as its persisted
+    * distinct (src, dst) simple graph with w = 1.
     */
-  private[graft] def pageRankLoop(simple: DataFrame, iterations: Int,
-      scope: CacheScope): DataFrame = {
-    val nodes = scope.persist(
-      simple.select(col("src").as("node_id"))
-        .unionByName(simple.select(col("dst").as("node_id"))).distinct())
-    val deg = simple.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    // degree-annotated edges: the loop's only join input, persisted once
-    val e = scope.persist(simple.join(deg, "src"))
+  private[graft] def rankEdges(edges: DataFrame,
+                               scope: CacheScope): DataFrame =
+    if (edges.columns.contains("w"))
+      scope.persist(edges.select(col("src"), col("dst"), col("w")))
+    else scope.persist(edges.select(col("src"), col("dst")).distinct())
+      .withColumn("w", lit(1L))
 
-    val ranks = new LoopFrame(nodes.withColumn("rank", lit(RankScale)))
-    val base = (100L - DampingPct) * (RankScale / 100L)
-    for (_ <- 1 to iterations) {
-      // `div` = IntegralDivide: exact long division at full int64 range
-      // (Column./ on longs routes through doubles, inexact past 2^53)
-      val contrib = e.join(ranks.frame, col("src") === col("node_id"))
-        .groupBy(col("dst"))
-        .agg(sum(expr("rank div outdeg")).cast("long").as("in_sum"))
-      ranks.advance(nodes.join(contrib, col("node_id") === col("dst"), "left")
-        .select(col("node_id"), coalesce(col("in_sum"), lit(0L)).as("in_sum"))
-        .selectExpr("node_id",
-          s"$base + ($DampingPct * in_sum) div 100 AS rank"))
-    }
-    ranks.keep(scope).select(col("node_id"), col("rank").as("rank_e6"))
-  }
-
-  /** PERSONALIZED PageRank: the restart mass teleports to a SEED set
-    * instead of uniformly — rank_0 = S on seeds and 0 elsewhere, each
-    * round a node keeps `(seed ? (1−d)·S : 0) + d·Σ_in ⌊rank/outdeg⌋`.
-    * This is the topic-/site-conditioned relevance primitive (crawl
-    * frontier prioritization from trusted seeds, related-page discovery):
-    * mass diffuses outward from the seeds along links and decays with
-    * the damping factor per hop.
-    *
-    * Same exact-int64 arithmetic and scale posture as [[pageRank]]: one
-    * degree-annotated-edge join + one agg shuffle per iteration, the
-    * seed flag rides the persisted node frame, the rank frame moves
-    * through a [[graft.core.LoopFrame]]. Seeds outside the edge set are
-    * ignored (they have no links to diffuse over). Input:
-    * edges(src, dst), seeds(node_id). Output: (node_id, rank_e6) over
-    * all linked nodes — nodes unreachable from any seed report 0.
+  /** The distributed power-iteration loop of [[pageRank]] (spec-reachable
+    * directly — the size dispatch would hide it at test scale). `e` is a
+    * [[rankEdges]] list, `seeds` distinct seed ids (none: every node is a
+    * seed). The weight-annotated edges are persisted once; the seed flag
+    * rides the persisted node frame; the rank frame moves through a
+    * [[graft.core.LoopFrame]], so the analyzer never walks a
+    * depth-`iterations` join chain.
     */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-                           iterations: Int,
-                           scope: CacheScope = CacheScope.global): DataFrame = {
-    val simple = scope.persist(edges.select(col("src"), col("dst")).distinct())
-    dispatchBySize(simple, LocalSweepEdges,
-        srcDst(edges) :+ seeds.schema("node_id").dataType: _*)(
-      prLocal(simple, Some(seeds.select(col("node_id")).distinct()),
-        iterations, edges.schema("src").dataType))(
-      _ => personalizedPageRankLoop(simple, seeds, iterations, scope))
-  }
-
-  /** The distributed loop of [[personalizedPageRank]] (spec-reachable). */
-  private[graft] def personalizedPageRankLoop(simple: DataFrame,
-      seeds: DataFrame, iterations: Int, scope: CacheScope): DataFrame = {
-    val nodes = scope.persist(
-      simple.select(col("src").as("node_id"))
-        .unionByName(simple.select(col("dst").as("node_id"))).distinct()
-        .join(seeds.select(col("node_id"), lit(1L).as("__s")).distinct(),
+  private[graft] def rankLoop(e: DataFrame, seeds: Option[DataFrame],
+      iterations: Int, scope: CacheScope): DataFrame = {
+    val linked = e.select(col("src").as("node_id"))
+      .unionByName(e.select(col("dst").as("node_id"))).distinct()
+    val nodes = scope.persist(seeds.fold(linked.withColumn("seed", lit(1L))) {
+      s => linked.join(s.select(col("node_id"), lit(1L).as("__s")),
           Seq("node_id"), "left")
-        .select(col("node_id"), coalesce(col("__s"), lit(0L)).as("seed")))
-    val deg = simple.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val e = scope.persist(simple.join(deg, "src"))
+        .select(col("node_id"), coalesce(col("__s"), lit(0L)).as("seed"))
+    })
+    val sw = e.groupBy("src").agg(sum(col("w")).as("sw"))
+    // weight-annotated edges: the loop's only join input, persisted once
+    val ew = scope.persist(e.join(sw, "src"))
     val ranks = new LoopFrame(nodes
       .select(col("node_id"), (col("seed") * RankScale).as("rank")))
     val base = (100L - DampingPct) * (RankScale / 100L)
     for (_ <- 1 to iterations) {
-      val contrib = e.join(ranks.frame, col("src") === col("node_id"))
+      // `div` = IntegralDivide: exact long division at full int64 range
+      // (Column./ on longs routes through doubles, inexact past 2^53)
+      val contrib = ew.join(ranks.frame, col("src") === col("node_id"))
         .groupBy(col("dst"))
-        .agg(sum(expr("rank div outdeg")).cast("long").as("in_sum"))
+        .agg(sum(expr("(rank * w) div sw")).cast("long").as("in_sum"))
       ranks.advance(nodes.join(contrib, col("node_id") === col("dst"), "left")
         .select(col("node_id"), col("seed"),
           coalesce(col("in_sum"), lit(0L)).as("in_sum"))
@@ -134,49 +118,37 @@ object GraphOps {
     ranks.keep(scope).select(col("node_id"), col("rank").as("rank_e6"))
   }
 
-  /** WEIGHTED PageRank, same fixed-point integer contract as
-    * [[pageRank]]: a node keeps (1−d)·S + d·Σ_in ⌊rank_src·w / sw_src⌋
-    * where sw_src is the source's total out-weight — the walk follows an
-    * edge with probability proportional to its weight (anchor counts,
-    * co-occurrence counts), which is the actual TextRank/weighted-graph
-    * formulation. All arithmetic int64 (bit-identical in any engine);
-    * overflow headroom: rank·w must stay < 2⁶³ — fine for count-scale
-    * weights, and ANSI mode fails loudly, not wraps.
-    *
-    * Scale posture identical to [[pageRank]] (one join + one agg shuffle
-    * per iteration, persisted weighted-degree frame, rank frame through
-    * a [[graft.core.LoopFrame]]). Input: (src, dst, w) with w ≥ 1, one
-    * row per directed edge. Output: (node_id, rank_e6).
+  /** Single-shard twin of [[rankLoop]] for graphs under the
+    * [[LocalSweepEdges]] budget: the identical exact-int64 update
+    * (seed·base + ⌊d·Σ⌊rank·w/sw⌋/100⌋, every operand non-negative so
+    * Java `/` = Spark `div`) runs all iterations inside ONE task — one
+    * job instead of two shuffles per round. Seeds ride the tagged union;
+    * bit-identical by construction, parity spec'd against the loop.
     */
-  def pageRankWeighted(edges: DataFrame, iterations: Int,
-                       scope: CacheScope = CacheScope.global): DataFrame = {
-    val e = scope.persist(edges.select(col("src"), col("dst"), col("w")))
-    dispatchBySize(e, LocalSweepEdges, srcDst(edges): _*)(
-      pageRankWeightedLocal(e, iterations, edges.schema("src").dataType))(
-      _ => pageRankWeightedLoop(e, iterations, scope))
-  }
-
-  /** The distributed loop of [[pageRankWeighted]] (spec-reachable). */
-  private[graft] def pageRankWeightedLoop(e: DataFrame, iterations: Int,
-      scope: CacheScope): DataFrame = {
-    val sw = e.groupBy("src").agg(sum(col("w")).as("sw"))
-    val ew = scope.persist(e.join(sw, "src"))
-    // persisted (scope-released): re-joined every round for dangling nodes
-    val nodes = scope.persist(ew.select(col("src").as("node_id"))
-      .unionByName(ew.select(col("dst").as("node_id"))).distinct())
-    val ranks = new LoopFrame(nodes.withColumn("rank", lit(RankScale)))
-    val base = (100L - DampingPct) * (RankScale / 100L)
-    for (_ <- 1 to iterations) {
-      val inSum = ew.join(ranks.frame.withColumnRenamed("node_id", "src"), "src")
-        .select(col("dst").as("node_id"),
-          expr("(rank * w) div sw").as("c"))
-        .groupBy("node_id").agg(sum(col("c")).as("in_sum"))
-      ranks.advance(nodes.join(inSum, Seq("node_id"), "left")
-        .select(col("node_id"),
-          (lit(base) + expr(
-            s"($DampingPct * coalesce(in_sum, 0L)) div 100")).as("rank")))
-    }
-    ranks.keep(scope).select(col("node_id"), col("rank").as("rank_e6"))
+  private def rankLocal(e: DataFrame, seeds: Option[DataFrame],
+                        iterations: Int,
+                        idType: org.apache.spark.sql.types.DataType): DataFrame = {
+    val everyNode = seeds.isEmpty
+    LocalGraph.run(e, seeds) { g =>
+      val seed = Array.fill(g.n)(everyNode)
+      g.seeds.foreach(seed(_) = true)
+      val sw = new Array[Long](g.n)
+      (0 until g.m).foreach(k => sw(g.src(k)) += g.w(k))
+      val base = (100L - DampingPct) * (RankScale / 100L)
+      val rank = Array.tabulate(g.n)(i => if (seed(i)) RankScale else 0L)
+      for (_ <- 1 to iterations) {
+        val inSum = new Array[Long](g.n)
+        (0 until g.m).foreach { k =>
+          val s = g.src(k)
+          inSum(g.nbr(k)) += rank(s) * g.w(k) / sw(s)
+        }
+        (0 until g.n).foreach { i =>
+          rank(i) = (if (seed(i)) base else 0L) + DampingPct * inSum(i) / 100L
+        }
+      }
+      // seeds outside the edge set are ignored: no links to diffuse over
+      (0 until g.n).iterator.filter(g.onEdge).map(i => (g.ids(i), rank(i)))
+    }.toDF("node_id", "rank_e6").transform(castIds(idType, "node_id"))
   }
 
   /** Weighted multi-source shortest paths, distributed Bellman-Ford:
@@ -631,41 +603,78 @@ object GraphOps {
   /** Multi-source BFS hop distance: for every node reachable from the
     * source set within `maxHops` directed hops, the minimum hop count —
     * crawl-frontier / link-neighborhood analytics (how far is every page
-    * from the seed list). Classic frontier propagation: each round is ONE
-    * shuffle join of the (persisted, deduplicated) edge list with the
-    * current frontier plus an anti-join against the visited set — no
-    * all-pairs reachability, no per-node path enumeration; rounds stop
-    * early when the frontier drains. The visited frame moves through a
-    * [[graft.core.LoopFrame]], so the analyzer never walks a
-    * depth-`maxHops` union chain.
+    * from the seed list). Classic frontier propagation ([[frontierLoop]]):
+    * each round is ONE shuffle join of the (persisted, deduplicated) edge
+    * list with the current frontier plus an anti-join against the visited
+    * set — no all-pairs reachability, no per-node path enumeration;
+    * rounds stop early when the frontier drains.
     *
     * Input: edges (src, dst), sources (node_id). Output: (node_id, hops)
     * with hops ∈ [0, maxHops]; unreached nodes are absent.
     *
-    * Strategy selection ([[LocalGraph.dispatchBySize]]): a small
-    * deduplicated edge list runs the whole BFS inside ONE task over a
-    * [[LocalGraph]] ([[hopDistanceLocal]] — memory bounded by the edge
-    * budget) instead of paying one blocking frontier round per hop;
-    * larger graphs take the distributed loop unchanged. Same small/large
-    * split as the kNN family; parity spec'd.
+    * Strategy selection ([[bfsOperator]]): a small deduplicated edge list
+    * runs the whole BFS inside ONE task over a [[LocalGraph]]
+    * ([[hopDistanceLocal]] — memory bounded by the edge budget) instead
+    * of paying one blocking frontier round per hop; larger graphs take
+    * the distributed loop unchanged. Same small/large split as the kNN
+    * family; parity spec'd.
     */
   def hopDistance(edges: DataFrame, sources: DataFrame, maxHops: Int,
-                  scope: CacheScope = CacheScope.global): DataFrame = {
+                  scope: CacheScope = CacheScope.global): DataFrame =
+    bfsOperator(edges, sources, scope, "node_id", "hops")(
+      hopDistanceLocal(_, maxHops))(
+      (e, ids) => frontierLoop(e, ids, maxHops, scope = scope))
+
+  /** The prologue of the BFS operators ([[hopDistance]],
+    * [[landmarkCloseness]], [[shortestPathCounts]],
+    * [[landmarkBetweenness]]): persists the deduplicated (src, dst) edge
+    * list, then size-dispatches ([[LocalGraph.dispatchBySize]], with the
+    * source id type) between the single-shard `local` kernel — run over a
+    * [[LocalGraph]] whose seeds are the distinct source ids, its rows
+    * named `cols` and node ids cast back to the source id type — and the
+    * `distributed` loop, handed the edge list and the distinct source ids.
+    */
+  private def bfsOperator[T <: Product : TypeTag](edges: DataFrame,
+      sources: DataFrame, scope: CacheScope, cols: String*)(
+      local: LocalGraph => Iterator[T])(
+      distributed: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val e = scope.persist(edges.select(col("src"), col("dst")).distinct())
-    dispatchBySize(e, LocalSweepEdges,
-        srcDst(edges) :+ sources.schema("node_id").dataType: _*)(
-      hopDistanceLocal(e, sources, maxHops))(
-      _ => hopDistanceLoop(e, sources, maxHops, scope))
+    val ids = sources.select(col("node_id")).distinct()
+    val idType = sources.schema("node_id").dataType
+    dispatchBySize(e, LocalSweepEdges, srcDst(edges) :+ idType: _*)(
+      LocalGraph.run(e, Some(ids))(local).toDF(cols: _*)
+        .transform(castIds(idType, "node_id")))(
+      _ => distributed(e, ids))
   }
 
-  /** The distributed frontier loop of [[hopDistance]] (spec-reachable
-    * directly — the dispatch's size switch would otherwise hide it at
-    * test scale). `e` must be the deduplicated (src, dst) edge list.
+  /** The one distributed BFS frontier loop (spec-reachable directly — the
+    * size dispatch would otherwise hide it at test scale). `e` must be
+    * the deduplicated (src, dst) edge list; `seeds` are distinct
+    * (keys…, node_id) rows, one independent BFS per key value (none: one
+    * multi-source BFS). Each round joins the frontier (the rows first
+    * reached last round) to the edges, keeps the (keys…, dst) arrivals
+    * not yet visited under their keys, and adds them at the round's hop;
+    * the visited frame moves through a [[graft.core.LoopFrame]], so the
+    * analyzer never walks a depth-`maxHops` union chain, and the loop
+    * stops early once a round adds nothing.
+    *
+    * With a `payload` column, every seed row carries 1 and an arrival
+    * carries the SUM of its frontier predecessors' payloads (one `dst`
+    * aggregation in place of DISTINCT) — the σ shortest-path counts of
+    * the level-synchronous BFS DAG; later (longer) arrivals never
+    * contribute.
+    *
+    * Output: (keys…, node_id, hops[, payload]) for every reached row,
+    * hops ∈ [0, maxHops].
     */
-  private[graft] def hopDistanceLoop(e: DataFrame, sources: DataFrame,
-      maxHops: Int, scope: CacheScope = CacheScope.global): DataFrame = {
-    val visited = new LoopFrame(sources.select(col("node_id")).distinct()
-      .withColumn("hops", lit(0L)))
+  private[graft] def frontierLoop(e: DataFrame, seeds: DataFrame,
+      maxHops: Int, keys: Seq[String] = Nil, payload: Option[String] = None,
+      scope: CacheScope = CacheScope.global): DataFrame = {
+    val at = keys :+ "node_id"
+    val atCols = at.map(col)
+    val carried = payload.toSeq.map(col)
+    val visited = new LoopFrame(seeds.select(atCols ++
+      (lit(0L).as("hops") +: payload.toSeq.map(lit(1L).as(_))): _*))
     var frontier = visited.frame
     var h = 0L
     var drained = false
@@ -673,71 +682,30 @@ object GraphOps {
       h += 1
       val seen = visited.frame
       val prevTotal = visited.rows
-      val next = e.join(frontier.select(col("node_id")),
+      val reached = e.join(frontier.select(atCols ++ carried: _*),
           col("src") === col("node_id"))
-        .select(col("dst").as("node_id")).distinct()
-        .join(seen.select(col("node_id")), Seq("node_id"), "left_anti")
-        .withColumn("hops", lit(h))
+        .select(keys.map(col) ++ (col("dst").as("node_id") +: carried): _*)
+      val next = payload.fold(reached.distinct())(p =>
+          reached.groupBy(atCols: _*).agg(sum(col(p)).as(p)))
+        .join(seen.select(atCols: _*), at, "left_anti")
+        .select(atCols ++ (lit(h).as("hops") +: carried): _*)
       drained = visited.advance(seen.unionByName(next)) == prevTotal
       frontier = visited.frame.filter(col("hops") === h)
     }
     visited.keep(scope)
   }
 
-  /** Single-shard twin of the [[pageRank]] / [[personalizedPageRank]]
-    * power iteration for graphs under the [[LocalSweepEdges]] budget:
-    * the identical exact-int64 update (base + ⌊d·Σ⌊rank/outdeg⌋/100⌋,
-    * every operand non-negative so Java `/` = Spark `div`) runs all
-    * iterations inside ONE task — one job instead of two shuffles per
-    * round. Seeds (PPR) ride the tagged union; bit-identical by
-    * construction, parity spec'd against the distributed loop.
+  /** Single-shard twin of [[hopDistance]] under the [[LocalSweepEdges]]
+    * budget: the whole multi-source sweep runs in one task, sources on
+    * the tagged union (no driver collect) — identical output contract to
+    * the distributed loop (minimum hops per reached node, sources at 0,
+    * unreached absent, capped at maxHops).
     */
-  private def prLocal(simple: DataFrame, seeds: Option[DataFrame],
-                      iterations: Int,
-                      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val personalized = seeds.isDefined
-    LocalGraph.run(simple, seeds) { g =>
-      val seed = new Array[Boolean](g.n)
-      g.seeds.foreach(seed(_) = true)
-      val base = (100L - DampingPct) * (RankScale / 100L)
-      val rank = Array.tabulate(g.n)(i =>
-        if (!personalized || seed(i)) RankScale else 0L)
-      for (_ <- 1 to iterations) {
-        val inSum = new Array[Long](g.n)
-        (0 until g.m).foreach { k =>
-          val s = g.src(k)
-          inSum(g.nbr(k)) += rank(s) / g.degree(s)
-        }
-        (0 until g.n).foreach { i =>
-          val b = if (!personalized || seed(i)) base else 0L
-          rank(i) = b + DampingPct * inSum(i) / 100L
-        }
-      }
-      // seeds outside the edge set are ignored: no links to diffuse over
-      (0 until g.n).iterator.filter(g.onEdge).map(i => (g.ids(i), rank(i)))
-    }.toDF("node_id", "rank_e6").transform(castIds(idType, "node_id"))
+  private def hopDistanceLocal(g: LocalGraph,
+                               maxHops: Int): Iterator[(Long, Long)] = {
+    val dist = Array.fill(g.n)(-1)
+    g.bfs(g.seeds, maxHops, dist).iterator.map(i => (g.ids(i), dist(i).toLong))
   }
-
-  /** Single-shard twin of [[pageRankWeighted]] (⌊rank·w/sw⌋ contribs,
-    * same exact-int64 contract) under the [[LocalSweepEdges]] budget.
-    */
-  private def pageRankWeightedLocal(e: DataFrame, iterations: Int,
-      idType: org.apache.spark.sql.types.DataType): DataFrame =
-    LocalGraph.run(e) { g =>
-      val sw = new Array[Long](g.n)
-      (0 until g.m).foreach(k => sw(g.src(k)) += g.w(k))
-      val base = (100L - DampingPct) * (RankScale / 100L)
-      val rank = Array.fill(g.n)(RankScale)
-      for (_ <- 1 to iterations) {
-        val inSum = new Array[Long](g.n)
-        (0 until g.m).foreach { k =>
-          val s = g.src(k)
-          inSum(g.nbr(k)) += rank(s) * g.w(k) / sw(s)
-        }
-        (0 until g.n).foreach(i => rank(i) = base + DampingPct * inSum(i) / 100L)
-      }
-      (0 until g.n).iterator.map(i => (g.ids(i), rank(i)))
-    }.toDF("node_id", "rank_e6").transform(castIds(idType, "node_id"))
 
   /** Single-shard twin of [[hits]] (integer max-renormalized hub/auth
     * half-steps, qa/qh = max raw ÷ RankScale floor-divided — identical
@@ -760,21 +728,6 @@ object GraphOps {
       }
       (0 until g.n).iterator.map(i => (g.ids(i), h(i), a(i)))
     }.toDF("node_id", "hub_e6", "auth_e6").transform(castIds(idType, "node_id"))
-
-  /** Single-shard BFS for graphs under the [[LocalSweepEdges]] budget:
-    * edges and sources ride one tagged union into a single partition
-    * (no driver collect) and the whole multi-source sweep runs in that
-    * task — identical output contract to the distributed loop (minimum
-    * hops per reached node, sources at 0, unreached absent, capped at
-    * maxHops).
-    */
-  private[graft] def hopDistanceLocal(e: DataFrame, sources: DataFrame,
-                                      maxHops: Int): DataFrame =
-    LocalGraph.run(e, Some(sources.select(col("node_id")).distinct())) { g =>
-      val dist = Array.fill(g.n)(-1)
-      g.bfs(g.seeds, maxHops, dist).iterator.map(i => (g.ids(i), dist(i).toLong))
-    }.toDF("node_id", "hops")
-      .transform(castIds(sources.schema("node_id").dataType, "node_id"))
 
   /** Deterministic RANDOM-WALK corpus (the DeepWalk/node2vec input):
     * `walksPerNode` walks from every node, each `steps` hops, where hop
@@ -1621,46 +1574,27 @@ object GraphOps {
     *
     * Scale posture: BFS state is (landmark × visited-node) pairs —
     * bounded by |landmarks| · |V|, LINEAR in graph size at the fixed
-    * landmark count, never all-pairs. The visited set moves through a
-    * [[graft.core.LoopFrame]]; early exit on a drained frontier.
+    * landmark count, never all-pairs: [[frontierLoop]] keyed by landmark,
+    * early exit on a drained frontier, then one node-keyed aggregation
+    * ([[harmonicCloseness]]).
     */
   def landmarkCloseness(edges: DataFrame, landmarks: DataFrame, maxHops: Int,
-                        scope: CacheScope = CacheScope.global): DataFrame = {
-    val e = scope.persist(edges.select(col("src"), col("dst")).distinct())
-    dispatchBySize(e, LocalSweepEdges,
-        srcDst(edges) :+ landmarks.schema("node_id").dataType: _*)(
-      landmarkClosenessLocal(e, landmarks, maxHops))(
-      _ => landmarkClosenessLoop(e, landmarks, maxHops, scope))
-  }
+                        scope: CacheScope = CacheScope.global): DataFrame =
+    bfsOperator(edges, landmarks, scope, "node_id", "n_lm", "close_e6")(
+      landmarkClosenessLocal(_, maxHops))((e, ids) =>
+      harmonicCloseness(frontierLoop(e,
+        ids.select(col("node_id").as("lm"), col("node_id")), maxHops,
+        Seq("lm"), scope = scope)))
 
-  /** The distributed (landmark × node) frontier loop of
-    * [[landmarkCloseness]] (spec-reachable directly). `e` must be the
-    * deduplicated (src, dst) edge list.
+  /** The harmonic sums of [[landmarkCloseness]] over the distributed
+    * (lm, node_id, hops) visited frame of [[frontierLoop]] keyed by
+    * landmark (spec-reachable directly).
     */
-  private[graft] def landmarkClosenessLoop(e: DataFrame, landmarks: DataFrame,
-      maxHops: Int, scope: CacheScope = CacheScope.global): DataFrame = {
-    val visited = new LoopFrame(landmarks.select(col("node_id")).distinct()
-      .select(col("node_id").as("lm"), col("node_id"), lit(0L).as("hops")))
-    var frontier = visited.frame
-    var h = 0L
-    var drained = false
-    while (h < maxHops && !drained) {
-      h += 1
-      val seen = visited.frame
-      val prevTotal = visited.rows
-      val next = e.join(frontier.select(col("lm"), col("node_id")),
-          col("src") === col("node_id"))
-        .select(col("lm"), col("dst").as("node_id")).distinct()
-        .join(seen.select("lm", "node_id"), Seq("lm", "node_id"), "left_anti")
-        .withColumn("hops", lit(h))
-      drained = visited.advance(seen.unionByName(next)) == prevTotal
-      frontier = visited.frame.filter(col("hops") === h)
-    }
-    visited.keep(scope).groupBy("node_id")
+  private[graft] def harmonicCloseness(visited: DataFrame): DataFrame =
+    visited.groupBy("node_id")
       .agg(count(lit(1)).as("n_lm"),
         sum(when(col("hops") > 0, expr("1000000 div hops")).otherwise(0L))
           .as("close_e6"))
-  }
 
   /** Single-shard twin of [[landmarkCloseness]] under the
     * [[LocalSweepEdges]] budget: one BFS per landmark over a
@@ -1670,23 +1604,21 @@ object GraphOps {
     * BFS minimality, so the aggregated rows match bit-for-bit; parity
     * spec'd.
     */
-  private[graft] def landmarkClosenessLocal(e: DataFrame,
-      landmarks: DataFrame, maxHops: Int): DataFrame =
-    LocalGraph.run(e, Some(landmarks.select(col("node_id")).distinct())) { g =>
-      val nLm = new Array[Long](g.n)
-      val close = new Array[Long](g.n)
-      val dist = Array.fill(g.n)(-1)
-      g.seeds.foreach { lm =>
-        g.bfs(Array(lm), maxHops, dist).foreach { v =>
-          nLm(v) += 1L
-          if (dist(v) > 0) close(v) += 1000000L / dist(v)
-          dist(v) = -1
-        }
+  private def landmarkClosenessLocal(g: LocalGraph,
+      maxHops: Int): Iterator[(Long, Long, Long)] = {
+    val nLm = new Array[Long](g.n)
+    val close = new Array[Long](g.n)
+    val dist = Array.fill(g.n)(-1)
+    g.seeds.foreach { lm =>
+      g.bfs(Array(lm), maxHops, dist).foreach { v =>
+        nLm(v) += 1L
+        if (dist(v) > 0) close(v) += 1000000L / dist(v)
+        dist(v) = -1
       }
-      (0 until g.n).iterator.filter(nLm(_) > 0)
-        .map(v => (g.ids(v), nLm(v), close(v)))
-    }.toDF("node_id", "n_lm", "close_e6")
-      .transform(castIds(landmarks.schema("node_id").dataType, "node_id"))
+    }
+    (0 until g.n).iterator.filter(nLm(_) > 0)
+      .map(v => (g.ids(v), nLm(v), close(v)))
+  }
 
   /** Shortest-path COUNTING from a seed set — the σ table of Brandes
     * betweenness (how many distinct shortest paths from the seeds reach
@@ -1698,9 +1630,9 @@ object GraphOps {
     *
     * Scale posture: per round ONE shuffle join of the persisted edge
     * list with the current frontier plus one `dst` aggregation and an
-    * anti-join against the visited set — [[hopDistance]]'s shape with a
-    * summed payload instead of DISTINCT; the visited set moves through
-    * a [[graft.core.LoopFrame]], early exit when the frontier drains. σ
+    * anti-join against the visited set — [[frontierLoop]] with σ as its
+    * summed payload instead of DISTINCT, early exit when the frontier
+    * drains. σ
     * grows at most by the max out-degree factor per hop, so int64 holds
     * for any realistic (maxHops, degree) envelope; ANSI mode fails
     * loudly on overflow rather than wrapping.
@@ -1713,40 +1645,10 @@ object GraphOps {
     * need for centrality estimates.
     */
   def shortestPathCounts(edges: DataFrame, sources: DataFrame, maxHops: Int,
-                         scope: CacheScope = CacheScope.global): DataFrame = {
-    val e = scope.persist(edges.select(col("src"), col("dst")).distinct())
-    dispatchBySize(e, LocalSweepEdges,
-        srcDst(edges) :+ sources.schema("node_id").dataType: _*)(
-      shortestPathCountsLocal(e, sources, maxHops))(
-      _ => shortestPathCountsLoop(e, sources, maxHops, scope))
-  }
-
-  /** The distributed σ frontier loop of [[shortestPathCounts]]
-    * (spec-reachable directly). `e` must be the deduplicated (src, dst)
-    * edge list.
-    */
-  private[graft] def shortestPathCountsLoop(e: DataFrame, sources: DataFrame,
-      maxHops: Int, scope: CacheScope = CacheScope.global): DataFrame = {
-    val visited = new LoopFrame(sources.select(col("node_id")).distinct()
-      .withColumn("hops", lit(0L)).withColumn("sigma", lit(1L)))
-    var frontier = visited.frame
-    var h = 0L
-    var drained = false
-    while (h < maxHops && !drained) {
-      h += 1
-      val seen = visited.frame
-      val prevTotal = visited.rows
-      val next = e.join(frontier.select(col("node_id"), col("sigma")),
-          col("src") === col("node_id"))
-        .groupBy(col("dst")).agg(sum(col("sigma")).as("sigma"))
-        .withColumnRenamed("dst", "node_id")
-        .join(seen.select(col("node_id")), Seq("node_id"), "left_anti")
-        .select(col("node_id"), lit(h).as("hops"), col("sigma"))
-      drained = visited.advance(seen.unionByName(next)) == prevTotal
-      frontier = visited.frame.filter(col("hops") === h)
-    }
-    visited.keep(scope)
-  }
+                         scope: CacheScope = CacheScope.global): DataFrame =
+    bfsOperator(edges, sources, scope, "node_id", "hops", "sigma")(
+      shortestPathCountsLocal(_, maxHops))((e, ids) =>
+      frontierLoop(e, ids, maxHops, payload = Some("sigma"), scope = scope))
 
   /** Single-shard twin of [[shortestPathCounts]] under the
     * [[LocalSweepEdges]] budget: the level-synchronous BFS-DAG σ
@@ -1756,15 +1658,13 @@ object GraphOps {
     * textbook definition), so rows match the loop bit-for-bit; parity
     * spec'd.
     */
-  private[graft] def shortestPathCountsLocal(e: DataFrame,
-      sources: DataFrame, maxHops: Int): DataFrame =
-    LocalGraph.run(e, Some(sources.select(col("node_id")).distinct())) { g =>
-      val hops = Array.fill(g.n)(-1)
-      val sigma = new Array[Long](g.n)
-      g.bfs(g.seeds, maxHops, hops, sigma).iterator
-        .map(v => (g.ids(v), hops(v).toLong, sigma(v)))
-    }.toDF("node_id", "hops", "sigma")
-      .transform(castIds(sources.schema("node_id").dataType, "node_id"))
+  private def shortestPathCountsLocal(g: LocalGraph,
+      maxHops: Int): Iterator[(Long, Long, Long)] = {
+    val hops = Array.fill(g.n)(-1)
+    val sigma = new Array[Long](g.n)
+    g.bfs(g.seeds, maxHops, hops, sigma).iterator
+      .map(v => (g.ids(v), hops(v).toLong, sigma(v)))
+  }
 
   /** Landmark BETWEENNESS (Brandes): the σ forward pass of
     * [[shortestPathCounts]] plus the level-synchronous BACKWARD
@@ -1776,10 +1676,11 @@ object GraphOps {
     * `maxHops` in BOTH passes (the landmark approximation's documented
     * horizon).
     *
-    * Scale posture: the forward pass is the audited frontier loop; the
+    * Scale posture: the forward pass is [[frontierLoop]] with the σ
+    * payload, read from its cached last round; the
     * backward pass is exactly `maxHops` rounds (level-bounded, not
     * data-dependent), each ONE edge-list join against two level slices
-    * of the persisted forward frame plus a map-side-combined sum.
+    * of the forward frame plus a map-side-combined sum.
     * Output: (node_id, hops, sigma, delta_e6) for every reached node.
     */
   def landmarkBetweenness(edges: DataFrame, sources: DataFrame, maxHops: Int,
@@ -1787,20 +1688,21 @@ object GraphOps {
     // maxHops == 0 would make the backward-level Seq empty and the
     // levels.reduce below throw UnsupportedOperationException
     require(maxHops >= 1, s"landmarkBetweenness needs maxHops >= 1, got $maxHops")
-    val e = scope.persist(edges.select(col("src"), col("dst")).distinct())
-    dispatchBySize(e, LocalSweepEdges,
-        srcDst(edges) :+ sources.schema("node_id").dataType: _*)(
-      landmarkBetweennessLocal(e, sources, maxHops))(
-      _ => landmarkBetweennessLoop(e, sources, maxHops, scope))
+    bfsOperator(edges, sources, scope, "node_id", "hops", "sigma", "delta_e6")(
+      landmarkBetweennessLocal(_, maxHops))(
+      landmarkBetweennessLoop(_, _, maxHops, scope))
   }
 
   /** The distributed Brandes passes of [[landmarkBetweenness]]
     * (spec-reachable directly). `e` must be the deduplicated (src, dst)
-    * edge list.
+    * edge list, `sources` distinct source ids.
     */
   private[graft] def landmarkBetweennessLoop(e: DataFrame, sources: DataFrame,
       maxHops: Int, scope: CacheScope = CacheScope.global): DataFrame = {
-    val fwd = scope.persist(shortestPathCountsLoop(e, sources, maxHops, scope))
+    // the loop's kept round is already cached in `scope`: the level
+    // slices below read it without a second copy
+    val fwd = frontierLoop(e, sources, maxHops, payload = Some("sigma"),
+      scope = scope)
     var deeper: Option[DataFrame] = None
     val levels = (maxHops - 1 to 0 by -1).map { h =>
       val v = fwd.filter(col("hops") === h)
@@ -1838,25 +1740,23 @@ object GraphOps {
     * division), identical level slices, so the table matches
     * bit-for-bit; parity spec'd.
     */
-  private[graft] def landmarkBetweennessLocal(e: DataFrame,
-      sources: DataFrame, maxHops: Int): DataFrame =
-    LocalGraph.run(e, Some(sources.select(col("node_id")).distinct())) { g =>
-      // forward: first-arrival level + sigma (the shortestPathCounts twin)
-      val hops = Array.fill(g.n)(-1)
-      val sigma = new Array[Long](g.n)
-      val order = g.bfs(g.seeds, maxHops, hops, sigma)
-      // backward: deepest level first, over the BFS-DAG edges — δ terms
-      // identical to the loop's idiv2 floor
-      val delta = new Array[Long](g.n)
-      order.reverseIterator.foreach { v =>
-        (g.off(v) until g.off(v + 1)).map(g.nbr).filter(hops(_) == hops(v) + 1)
-          .foreach { w =>
-            delta(v) += sigma(v) * (1000000L + delta(w)) / sigma(w)
-          }
-      }
-      order.iterator.map(v => (g.ids(v), hops(v).toLong, sigma(v), delta(v)))
-    }.toDF("node_id", "hops", "sigma", "delta_e6")
-      .transform(castIds(sources.schema("node_id").dataType, "node_id"))
+  private def landmarkBetweennessLocal(g: LocalGraph,
+      maxHops: Int): Iterator[(Long, Long, Long, Long)] = {
+    // forward: first-arrival level + sigma (the shortestPathCounts twin)
+    val hops = Array.fill(g.n)(-1)
+    val sigma = new Array[Long](g.n)
+    val order = g.bfs(g.seeds, maxHops, hops, sigma)
+    // backward: deepest level first, over the BFS-DAG edges — δ terms
+    // identical to the loop's idiv2 floor
+    val delta = new Array[Long](g.n)
+    order.reverseIterator.foreach { v =>
+      (g.off(v) until g.off(v + 1)).map(g.nbr).filter(hops(_) == hops(v) + 1)
+        .foreach { w =>
+          delta(v) += sigma(v) * (1000000L + delta(w)) / sigma(w)
+        }
+    }
+    order.iterator.map(v => (g.ids(v), hops(v).toLong, sigma(v), delta(v)))
+  }
 
   /** Odd-cycle witness edges: BFS-parity conflicts on the SYMMETRIZED
     * graph. Runs [[hopDistance]] from the seed set over undirected

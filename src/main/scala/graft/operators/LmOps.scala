@@ -163,37 +163,35 @@ object LmOps {
     * (word, rank_e6).
     */
   def textRank(corpus: DataFrame, iterations: Int, minCount: Long,
-               scope: CacheScope = CacheScope.global): DataFrame = {
-    val und = collocationGraph(corpus, minCount)
-    val vocab = scope.persist(wordIds(und))
-    val enc = und
-      .join(vocab.select(col("w").as("a"), col("wid").as("ida")), "a")
-      .join(vocab.select(col("w").as("b"), col("wid").as("idb")), "b")
-    val edges = enc.select(col("ida").as("src"), col("idb").as("dst"))
-      .unionByName(enc.select(col("idb").as("src"), col("ida").as("dst")))
-    GraphOps.pageRank(edges, iterations, scope)
-      .join(vocab.select(col("wid").as("node_id"), col("w").as("word")),
-        "node_id")
-      .select(col("word"), col("rank_e6"))
-  }
+               scope: CacheScope = CacheScope.global): DataFrame =
+    wordRank(corpus, iterations, minCount, weighted = false, scope)
 
   /** WEIGHTED TextRank: the walk follows co-occurrence counts —
-    * [[textRank]]'s graph with the bigram count as edge weight through
-    * [[GraphOps.pageRankWeighted]]'s ⌊rank·w/sw⌋ contributions. Same
+    * [[textRank]]'s graph with the bigram count as edge weight `w`, so
+    * [[GraphOps.pageRank]] takes ⌊rank·w/sw⌋ contributions. Same
     * encode/decode bijection, same bit-identity argument.
     */
   def textRankWeighted(corpus: DataFrame, iterations: Int, minCount: Long,
-                       scope: CacheScope = CacheScope.global): DataFrame = {
+                       scope: CacheScope = CacheScope.global): DataFrame =
+    wordRank(corpus, iterations, minCount, weighted = true, scope)
+
+  /** [[GraphOps.pageRank]] over the TextRank word graph: the undirected
+    * [[collocationGraph]] edges encoded to dense word ids ([[wordIds]]),
+    * each edge in both directions (its count as `w` when `weighted`),
+    * and the ranks decoded back to (word, rank_e6).
+    */
+  private def wordRank(corpus: DataFrame, iterations: Int, minCount: Long,
+                       weighted: Boolean, scope: CacheScope): DataFrame = {
     val und = collocationGraph(corpus, minCount)
     val vocab = scope.persist(wordIds(und))
     val enc = und
       .join(vocab.select(col("w").as("a"), col("wid").as("ida")), "a")
       .join(vocab.select(col("w").as("b"), col("wid").as("idb")), "b")
-    val edges = enc
-      .select(col("ida").as("src"), col("idb").as("dst"), col("c").as("w"))
-      .unionByName(enc
-        .select(col("idb").as("src"), col("ida").as("dst"), col("c").as("w")))
-    GraphOps.pageRankWeighted(edges, iterations, scope)
+    def directed(from: String, to: String) = enc.select(
+      Seq(col(from).as("src"), col(to).as("dst")) ++
+        (if (weighted) Seq(col("c").as("w")) else Nil): _*)
+    GraphOps.pageRank(directed("ida", "idb").unionByName(directed("idb", "ida")),
+        iterations, scope = scope)
       .join(vocab.select(col("wid").as("node_id"), col("w").as("word")),
         "node_id")
       .select(col("word"), col("rank_e6"))

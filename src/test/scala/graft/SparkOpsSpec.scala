@@ -1086,7 +1086,8 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         DedupOps.duplicateClusters(DedupOps.minHashLshPairs(corpus, sc), sc)),
       // the distributed loops, called past their size dispatch
       ("componentsLoop", sc => GraphOps.componentsLoop(ring, sc)._1),
-      ("pageRankLoop", sc => GraphOps.pageRankLoop(ring.distinct(), 3, sc)),
+      ("pageRankLoop", sc => GraphOps.rankLoop(GraphOps.rankEdges(ring, sc), None, 3,
+        sc)),
       ("topologicalLayersLoop", sc => GraphOps.topologicalLayersLoop(
         ring.filter(col("src") < col("dst")), 4, sc)),
       ("lubyRoundsLoop", sc => GraphOps.lubyRoundsLoop(

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * boruvkaMst. The public dispatch takes the local path at spec scale,
   * so each loop is invoked directly with the same pre-shaped input and
   * every row must match bit-for-bit (the operators' exact-int64 /
-  * deterministic-schedule contracts).
+  * deterministic-schedule contracts). landmarkCloseness is also checked
+  * against a driver-side per-landmark BFS.
   */
 class GraphLocalParity2Spec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
@@ -28,6 +29,10 @@ class GraphLocalParity2Spec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  private def lcg(seed: Long): Iterator[Long] =
+    Iterator.iterate(seed)(x => x * 6364136223846793005L + 1442695040888963407L)
+      .map(x => x >>> 33)
 
   private def seededEdges(seed: Int, n: Int, m: Int) = {
     val s = spark; import s.implicits._
@@ -113,8 +118,9 @@ class GraphLocalParity2Spec extends AnyFunSuite with BeforeAndAfterAll {
     val edges = seededEdges(41, 90, 400)
     val lms = Seq(1L, 5L, 9L, 33L, 77L).toDF("node_id")
     val e = edges.select(col("src"), col("dst")).distinct()
-    val viaLoop = GraphOps.landmarkClosenessLoop(e, lms, 6,
-        new graft.core.CacheScope)
+    val viaLoop = GraphOps.harmonicCloseness(GraphOps.frontierLoop(e,
+        lms.select(col("node_id").as("lm"), col("node_id")), 6, Seq("lm"),
+        scope = new graft.core.CacheScope))
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     val viaLocal = GraphOps.landmarkCloseness(edges, lms, 6)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
@@ -126,8 +132,8 @@ class GraphLocalParity2Spec extends AnyFunSuite with BeforeAndAfterAll {
     val edges = seededEdges(53, 90, 400)
     val seeds = Seq(2L, 17L).toDF("node_id")
     val e = edges.select(col("src"), col("dst")).distinct()
-    val viaLoop = GraphOps.shortestPathCountsLoop(e, seeds, 5,
-        new graft.core.CacheScope)
+    val viaLoop = GraphOps.frontierLoop(e, seeds, 5, payload = Some("sigma"),
+        scope = new graft.core.CacheScope)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     val viaLocal = GraphOps.shortestPathCounts(edges, seeds, 5)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
@@ -202,5 +208,34 @@ class GraphLocalParity2Spec extends AnyFunSuite with BeforeAndAfterAll {
     // minimum size (|V| - #components edges)
     val nodes = und.flatMap(e => Seq(e._1, e._2)).distinct.size
     assert(viaLocal.size < nodes)
+  }
+
+  test("landmarkCloseness matches per-landmark BFS") {
+    val s = spark; import s.implicits._
+    val n = 18
+    val edges = lcg(5L).take(90).grouped(2)
+      .map(p => (p.head % n, p.last % n)).filter(p => p._1 != p._2)
+      .toSeq.distinct
+    val lms = Seq(0L, 5L, 10L)
+    val maxHops = 4
+    val got = GraphOps.landmarkCloseness(edges.toDF("src", "dst"),
+        lms.toDF("node_id"), maxHops)
+      .as[(Long, Long, Long)].collect().map(t => t._1 -> (t._2, t._3)).toMap
+    val adj = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    val want = scala.collection.mutable.Map[Long, (Long, Long)]()
+    for (lm <- lms) {
+      val dist = scala.collection.mutable.Map[Long, Long](lm -> 0L)
+      var frontier = Set(lm)
+      for (h <- 1 to maxHops) {
+        frontier = frontier.flatMap(u => adj.getOrElse(u, Nil))
+          .filterNot(dist.contains)
+        frontier.foreach(v => dist(v) = h.toLong)
+      }
+      for ((v, d) <- dist) {
+        val (c, sum) = want.getOrElse(v, (0L, 0L))
+        want(v) = (c + 1, sum + (if (d > 0) 1000000L / d else 0L))
+      }
+    }
+    assert(got == want.toMap)
   }
 }

@@ -75,9 +75,9 @@ class HopDistanceSpec extends AnyFunSuite with BeforeAndAfterAll {
       s.sparkContext.addSparkListener(listener)
       try {
         jobs.set(0)
-        // hopDistanceLoop directly: the public dispatch would take the
+        // frontierLoop directly: the public dispatch would take the
         // single-shard local path at this scale and hide the loop
-        val got = GraphOps.hopDistanceLoop(edges.distinct(),
+        val got = GraphOps.frontierLoop(edges.distinct(),
             Seq(1L).toDF("node_id"), maxHops)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         // give the async listener bus a beat to drain before reading
@@ -114,7 +114,7 @@ class HopDistanceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(e => e._1 != e._2).toDF("src", "dst")
     val sources = Seq(0L, 55L, 179L).toDF("node_id")
     for (maxHops <- Seq(2, 9)) {
-      val viaLoop = GraphOps.hopDistanceLoop(edges.distinct(), sources, maxHops)
+      val viaLoop = GraphOps.frontierLoop(edges.distinct(), sources, maxHops)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val viaLocal = GraphOps.hopDistance(edges, sources, maxHops)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -141,7 +141,7 @@ class HopDistanceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .unionByName(df.selectExpr("dst as src", "src as dst")).distinct()
     val seed = edges.flatMap(e => Seq(e._1, e._2)).min
     def farthest(from: Long): (Long, Long) = {
-      val d = GraphOps.hopDistanceLoop(sym, Seq(from).toDF("node_id"), maxHops)
+      val d = GraphOps.frontierLoop(sym, Seq(from).toDF("node_id"), maxHops)
         .collect().map(x => (x.getLong(0), x.getLong(1)))
       val ecc = d.map(_._2).max
       (d.filter(_._2 == ecc).map(_._1).min, ecc)
@@ -150,5 +150,22 @@ class HopDistanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (peak, ecc2) = farthest(far)
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
       r.getLong(4)) === ((seed, far, ecc1, peak, ecc2)))
+  }
+
+  test("doubleSweepDiameter is exact on a path graph and tie-breaks deterministically") {
+    val s = spark; import s.implicits._
+    // path 5-4-3-2-1-0-10-11 (seed = min node 0): ecc(0) = 5 (node 5),
+    // second sweep from 5 reaches 11 at distance 7 = the true diameter
+    val edges = Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L), (1L, 0L),
+      (0L, 10L), (10L, 11L)).toDF("src", "dst")
+    val r = GraphOps.doubleSweepDiameter(edges, 30).head()
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
+      === ((0L, 5L, 5L, 11L, 7L)))
+    // star: every leaf at distance 1 from hub 0; seed 0 picks leaf 1
+    // (tie by min id), sweep from 1 crosses the hub: diameter 2
+    val star = (1L to 6L).map(i => (0L, i)).toDF("src", "dst")
+    val r2 = GraphOps.doubleSweepDiameter(star, 30).head()
+    assert((r2.getLong(0), r2.getLong(1), r2.getLong(2), r2.getLong(4))
+      === ((0L, 1L, 1L, 2L)))
   }
 }

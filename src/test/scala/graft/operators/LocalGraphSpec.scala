@@ -142,19 +142,20 @@ class LocalGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     def sc = new CacheScope
     Seq(
       Twin("pageRank", Seq("node_id"), g => GraphOps.pageRank(e2(g), 4),
-        g => GraphOps.pageRankLoop(e2(g).distinct(), 4, sc)),
+        g => GraphOps.rankLoop(GraphOps.rankEdges(e2(g), sc), None, 4, sc)),
       Twin("personalizedPageRank", Seq("node_id"),
-        g => GraphOps.personalizedPageRank(e2(g), g.seeds, 4),
-        g => GraphOps.personalizedPageRankLoop(e2(g).distinct(), g.seeds, 4, sc)),
+        g => GraphOps.pageRank(e2(g), 4, Some(g.seeds)),
+        g => GraphOps.rankLoop(GraphOps.rankEdges(e2(g), sc), Some(g.seeds), 4,
+          sc)),
       Twin("pageRankWeighted", Seq("node_id"),
-        g => GraphOps.pageRankWeighted(g.edges, 4),
-        g => GraphOps.pageRankWeightedLoop(g.edges, 4, sc)),
+        g => GraphOps.pageRank(g.edges, 4),
+        g => GraphOps.rankLoop(g.edges, None, 4, sc)),
       Twin("weightedDistance", Seq("node_id"),
         g => GraphOps.weightedDistance(g.edges, g.seeds, 6),
         g => GraphOps.weightedDistanceLoop(g.edges.distinct(), g.seeds, 6, sc)),
       Twin("hopDistance", Seq("node_id"),
         g => GraphOps.hopDistance(e2(g), g.seeds, 6),
-        g => GraphOps.hopDistanceLoop(e2(g).distinct(), g.seeds, 6, sc)),
+        g => GraphOps.frontierLoop(e2(g).distinct(), g.seeds, 6, scope = sc)),
       Twin("hits", Seq("node_id"), g => GraphOps.hits(e2(g), 4),
         g => GraphOps.hitsLoop(e2(g).distinct(), 4, sc)),
       Twin("kTruss", Seq("a", "b"), g => GraphOps.kTruss(e2(g), 3, 5),
@@ -176,10 +177,13 @@ class LocalGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
         g => GraphOps.boruvkaBody(mstInput(g), sc)),
       Twin("landmarkCloseness", Seq("node_id"),
         g => GraphOps.landmarkCloseness(e2(g), g.seeds, 6),
-        g => GraphOps.landmarkClosenessLoop(e2(g).distinct(), g.seeds, 6, sc)),
+        g => GraphOps.harmonicCloseness(GraphOps.frontierLoop(e2(g).distinct(),
+          g.seeds.select(col("node_id").as("lm"), col("node_id")), 6, Seq("lm"),
+          scope = sc))),
       Twin("shortestPathCounts", Seq("node_id"),
         g => GraphOps.shortestPathCounts(e2(g), g.seeds, 6),
-        g => GraphOps.shortestPathCountsLoop(e2(g).distinct(), g.seeds, 6, sc)),
+        g => GraphOps.frontierLoop(e2(g).distinct(), g.seeds, 6,
+          payload = Some("sigma"), scope = sc)),
       Twin("landmarkBetweenness", Seq("node_id"),
         g => GraphOps.landmarkBetweenness(e2(g), g.seeds, 4),
         g => GraphOps.landmarkBetweennessLoop(e2(g).distinct(), g.seeds, 4, sc)),
@@ -224,7 +228,7 @@ class LocalGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
         .toDF("seed", "far_node", "seed_ecc", "peak_node", "diameter_lb")
     else {
       def farthest(from: Long): (Long, Long) = {
-        val d = GraphOps.hopDistanceLoop(sym, Seq(from).toDF("node_id"), maxHops)
+        val d = GraphOps.frontierLoop(sym, Seq(from).toDF("node_id"), maxHops)
           .as[(Long, Long)].collect()
         val ecc = d.map(_._2).max
         (d.filter(_._2 == ecc).map(_._1).min, ecc)

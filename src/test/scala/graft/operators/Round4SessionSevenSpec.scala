@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Specs for the session-7 additions: personalized PageRank and SemDeDup
-  * semantic near-dup pairs. Checks are algebraic identities (PPR with
-  * the full seed set IS PageRank) and brute-force references on seeded
-  * data (no Math.random).
+/** Specs for the session-7 additions: SemDeDup semantic near-dup pairs,
+  * hard negatives, the crawl frontier schedule, gazetteer tagging and
+  * random walks. Checks are brute-force references on seeded data (no
+  * Math.random) and structural invariants.
   */
 class Round4SessionSevenSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
@@ -23,41 +23,6 @@ class Round4SessionSevenSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
-
-  private def lcg(seed: Long): Iterator[Long] =
-    Iterator.iterate(seed)(x => x * 6364136223846793005L + 1442695040888963407L)
-      .map(x => x >>> 33)
-
-  test("personalizedPageRank with the full node set as seeds equals pageRank") {
-    val s = spark; import s.implicits._
-    val edges = lcg(9L).take(120).grouped(2)
-      .map(p => (p.head % 40L, p(1) % 40L)).filter(p => p._1 != p._2)
-      .toSeq.toDF("src", "dst")
-    val all = edges.select(col("src").as("node_id"))
-      .unionByName(edges.select(col("dst").as("node_id"))).distinct()
-    val pr = GraphOps.pageRank(edges, 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val ppr = GraphOps.personalizedPageRank(edges, all, 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(ppr === pr)
-  }
-
-  test("personalizedPageRank: mass decays with hop distance from the seed") {
-    val s = spark; import s.implicits._
-    // directed path 0 -> 1 -> 2 -> 3 plus a disconnected pair 10 -> 11
-    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (10L, 11L))
-      .toDF("src", "dst")
-    val seeds = Seq(0L).toDF("node_id")
-    val got = GraphOps.personalizedPageRank(edges, seeds, 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got(0L) > got(1L) && got(1L) > got(2L) && got(2L) > got(3L),
-      got.toString)
-    // nothing reaches the disconnected component
-    assert(got(10L) === 0L && got(11L) === 0L, got.toString)
-    // the seed keeps at least the restart mass
-    import GraphOps.{DampingPct, RankScale}
-    assert(got(0L) >= (100L - DampingPct) * (RankScale / 100L))
-  }
 
   test("semDedupPairs finds planted near-identical pairs in small clusters") {
     val s = spark; import s.implicits._
@@ -132,23 +97,6 @@ class Round4SessionSevenSpec extends AnyFunSuite with BeforeAndAfterAll {
     // stalest-first within host a: /y (50) before /x (max(100,900)=900)
     val a = byHost("a.example.org").sortBy(_._3).map(_._1)
     assert(a.head.contains("/y") && a(1).contains("/x"), a.mkString(","))
-  }
-
-  test("doubleSweepDiameter is exact on a path graph and tie-breaks deterministically") {
-    val s = spark; import s.implicits._
-    // path 5-4-3-2-1-0-10-11 (seed = min node 0): ecc(0) = 5 (node 5),
-    // second sweep from 5 reaches 11 at distance 7 = the true diameter
-    val edges = Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L), (1L, 0L),
-      (0L, 10L), (10L, 11L)).toDF("src", "dst")
-    val r = GraphOps.doubleSweepDiameter(edges, 30).head()
-    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-      === ((0L, 5L, 5L, 11L, 7L)))
-    // star: every leaf at distance 1 from hub 0; seed 0 picks leaf 1
-    // (tie by min id), sweep from 1 crosses the hub: diameter 2
-    val star = (1L to 6L).map(i => (0L, i)).toDF("src", "dst")
-    val r2 = GraphOps.doubleSweepDiameter(star, 30).head()
-    assert((r2.getLong(0), r2.getLong(1), r2.getLong(2), r2.getLong(4))
-      === ((0L, 1L, 1L, 2L)))
   }
 
   test("gazetteerTag counts multi-word names exactly and picks the max-mention winner") {

@@ -7,8 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the session-6 additions: Borůvka MST, FW-BW strongly
   * connected components, the STR partitioner's exact balance, the metric
-  * buffer's exact distance predicate, quadtree leaf partitioning, and
-  * landmark closeness. Each checks against an independent driver-side
+  * buffer's exact distance predicate and quadtree leaf partitioning. Each checks against an independent driver-side
   * brute-force reference on seeded data (no Math.random).
   */
 class Round4SessionSixSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -183,34 +182,5 @@ class Round4SessionSixSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       assert(hits == 1, s"point ($x,$y) in $hits leaves")
     }
-  }
-
-  test("landmarkCloseness matches per-landmark BFS") {
-    val s = spark; import s.implicits._
-    val n = 18
-    val edges = lcg(5L).take(90).grouped(2)
-      .map(p => (p.head % n, p.last % n)).filter(p => p._1 != p._2)
-      .toSeq.distinct
-    val lms = Seq(0L, 5L, 10L)
-    val maxHops = 4
-    val got = GraphOps.landmarkCloseness(edges.toDF("src", "dst"),
-        lms.toDF("node_id"), maxHops)
-      .as[(Long, Long, Long)].collect().map(t => t._1 -> (t._2, t._3)).toMap
-    val adj = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-    val want = scala.collection.mutable.Map[Long, (Long, Long)]()
-    for (lm <- lms) {
-      val dist = scala.collection.mutable.Map[Long, Long](lm -> 0L)
-      var frontier = Set(lm)
-      for (h <- 1 to maxHops) {
-        frontier = frontier.flatMap(u => adj.getOrElse(u, Nil))
-          .filterNot(dist.contains)
-        frontier.foreach(v => dist(v) = h.toLong)
-      }
-      for ((v, d) <- dist) {
-        val (c, sum) = want.getOrElse(v, (0L, 0L))
-        want(v) = (c + 1, sum + (if (d > 0) 1000000L / d else 0L))
-      }
-    }
-    assert(got == want.toMap)
   }
 }
