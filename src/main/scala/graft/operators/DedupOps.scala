@@ -90,13 +90,6 @@ object DedupOps {
     */
   val MaxBandBucket = 64
 
-  /** LSH candidate pairs: docs sharing at least one band (bands of
-    * BandSize consecutive minhashes, band key = mod-chained polynomial).
-    * Output (doc_a < doc_b, n_bands). One pass over the corpus (posexplode
-    * of the band-key array), banded rows persisted for the self-join —
-    * shuffle cost is O(bands·rows) narrow rows; never all-pairs, and
-    * per-bucket pair count is bounded by MaxBandBucket^2.
-    */
   /** (doc_id, band, band_key) banded rows — the LSH bucketing both the
     * batch self-join and the streaming candidate operator share (one
     * stateless narrow pass: signature + posexplode of the band keys).
@@ -113,29 +106,52 @@ object DedupOps {
       .select(col("doc_id"), posexplode(bandKeys).as(Seq("band", "band_key")))
   }
 
-  /** Drop every row of a bucket larger than MaxBandBucket: the one
-    * guard all three LSH candidate generators (and their QUALIFY oracle
-    * twins) share. `keys` identify the bucket.
+  /** Drop every row of a bucket larger than `cap` rows — the one bucket
+    * guard of every candidate generator here and of its QUALIFY oracle
+    * twin; `keys` identify the bucket. The kept keys (a row per bucket,
+    * so they grow with the corpus) join back shuffled on `keys`, which
+    * leaves the rows partitioned for [[bucketPairs]].
     */
-  private[graft] def capBuckets(rows: DataFrame, keys: Seq[String]): DataFrame = {
+  private[graft] def capBuckets(rows: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
     val small = rows.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__bsz"))
-      .filter(col("__bsz") <= MaxBandBucket)
+      .filter(col("__bsz") <= cap)
       .select(keys.map(col): _*)
-    rows.join(small, keys)
+    rows.join(small.hint("shuffle_hash"), keys)
   }
 
+  /** Every pair of rows sharing a bucket, the blocking step of every
+    * near-duplicate candidate generator here: [[capBuckets]] at `cap`
+    * (None: capped already, or bounded by construction), then one
+    * equi-join on `keys` keeping `id` a < `id` b, hinted shuffled-hash so
+    * that no runtime size re-plans it as a broadcast (a capped bucket
+    * bounds each build-side table). Output: `keys`, the ids named `out`,
+    * and each `carry` column c of both sides as c_a and c_b.
+    */
+  private[graft] def bucketPairs(rows: DataFrame, keys: Seq[String], id: String,
+                                 cap: Option[Int], out: (String, String) = ("doc_a", "doc_b"),
+                                 carry: Seq[String] = Nil): DataFrame = {
+    val kept = cap.fold(rows)(capBuckets(rows, keys, _))
+    def side(name: String, sfx: String) = kept.select(keys.map(col) ++
+      (col(id).as(name) +: carry.map(c => col(c).as(s"${c}_$sfx"))): _*)
+    side(out._1, "a").join(side(out._2, "b").hint("shuffle_hash"), keys)
+      .filter(col(out._1) < col(out._2))
+  }
+
+  /** LSH candidate pairs: docs sharing at least one band (bands of
+    * BandSize consecutive minhashes, band key = mod-chained polynomial).
+    * Output (doc_a < doc_b, n_bands). One pass over the corpus (posexplode
+    * of the band-key array), banded rows persisted for the self-join —
+    * shuffle cost is O(bands·rows) narrow rows; never all-pairs, and
+    * per-bucket pair count is bounded by MaxBandBucket^2.
+    */
   def minHashLshPairs(corpus: DataFrame,
                       scope: CacheScope = CacheScope.global): DataFrame = {
     // persisted (scope-released): feeds the bucket-size filter and both
     // sides of the candidate self-join
     val banded = scope.persist(bandedRows(corpus))
-    val kept = capBuckets(banded, Seq("band", "band_key"))
-    val a = kept.as("a"); val b = kept.as("b")
-    a.join(b, col("a.band") === col("b.band") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    bucketPairs(banded, Seq("band", "band_key"), "doc_id", Some(MaxBandBucket))
+      .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_bands"))
   }
 
@@ -153,9 +169,9 @@ object DedupOps {
   def minHashLshPairsIncremental(existing: DataFrame, fresh: DataFrame,
                                  scope: CacheScope = CacheScope.global): DataFrame = {
     val keptOld = capBuckets(scope.persist(bandedRows(existing)),
-      Seq("band", "band_key"))
+      Seq("band", "band_key"), MaxBandBucket)
     val keptNew = capBuckets(scope.persist(bandedRows(fresh)),
-      Seq("band", "band_key"))
+      Seq("band", "band_key"), MaxBandBucket)
     keptNew.as("n").join(keptOld.as("o"),
         col("n.band") === col("o.band") && col("n.band_key") === col("o.band_key"))
       .groupBy(col("n.doc_id").as("doc_new"), col("o.doc_id").as("doc_old"))
@@ -334,10 +350,8 @@ object DedupOps {
                   scope: CacheScope = CacheScope.global): DataFrame = {
     val fps = scope.persist(
       winnowFingerprints(corpus, n, w).select("doc_id", "h").distinct())
-    val kept = capBuckets(fps, Seq("h"))
-    kept.join(kept.select(col("h"), col("doc_id").as("doc_b")), "h")
-      .filter(col("doc_id") < col("doc_b"))
-      .groupBy(col("doc_id").as("doc_a"), col("doc_b"))
+    bucketPairs(fps, Seq("h"), "doc_id", Some(MaxBandBucket))
+      .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }
@@ -362,19 +376,13 @@ object DedupOps {
     */
   def ppjoinPairs(corpus: DataFrame, thrPm: Long,
                   scope: CacheScope = CacheScope.global): DataFrame = {
-    // ONE tokenize pass: the distinct-token ARRAY per doc is the shared
-    // artifact — the prefix index explodes it, sizes come from size()
-    // (no groupBy shuffle), and verification intersects the two arrays
-    // per candidate pair directly (|∩| = size(array_intersect) on
-    // distinct arrays) instead of exploding every candidate pair by the
-    // doc's tokens into a pairs×|doc| semi-join + aggregate. Same exact
-    // counts, two narrow joins on doc ids in place of the token-row
-    // explosion — the verify stage's shuffle volume drops from
-    // Θ(pairs · |doc|) rows to Θ(pairs).
-    val tokArr = scope.persist(corpus.select(col("doc_id"), array_distinct(
-      regexp_extract_all(col("text"), lit("[^ ]+"), lit(0))).as("toks")))
-    val toks = tokArr.select(col("doc_id"), explode(col("toks")).as("tok"))
-    val sz = tokArr.select(col("doc_id"), size(col("toks")).cast("long").as("sz"))
+    // ONE tokenize pass: the distinct-token ARRAY per doc feeds the prefix
+    // index (exploded), the sizes (size(), no groupBy shuffle) and the
+    // verification, which intersects the two arrays per candidate pair
+    // (|∩| = size(array_intersect) on distinct arrays) — two narrow joins
+    // on doc ids, Θ(pairs) shuffled rows instead of Θ(pairs · |doc|).
+    val tokArr = scope.persist(ppjoinTokArrays(corpus))
+    val (toks, sz) = ppjoinToks(tokArr)
     val cand = ppjoinCandidates(toks, sz, thrPm, scope)
     val a = tokArr.select(col("doc_id").as("doc_a"), col("toks").as("__ta"),
       size(col("toks")).cast("long").as("sza"))
@@ -388,11 +396,15 @@ object DedupOps {
         expr("(inter * 1000) div union_sz").as("jac_pm"))
   }
 
-  /** Distinct-token rows (doc_id, tok) for the PPJoin family. */
-  private[graft] def ppjoinToks(corpus: DataFrame): DataFrame =
-    corpus.select(col("doc_id"), explode(
-        array_distinct(regexp_extract_all(col("text"), lit("[^ ]+"), lit(0))))
-      .as("tok"))
+  /** PPJoin's one tokenization: (doc_id, toks), each doc's distinct tokens. */
+  private[graft] def ppjoinTokArrays(corpus: DataFrame): DataFrame =
+    corpus.select(col("doc_id"), array_distinct(
+      regexp_extract_all(col("text"), lit("[^ ]+"), lit(0))).as("toks"))
+
+  /** The candidate stage's inputs: (doc_id, tok) rows and (doc_id, sz). */
+  private[graft] def ppjoinToks(tokArr: DataFrame): (DataFrame, DataFrame) =
+    (tokArr.select(col("doc_id"), explode(col("toks")).as("tok")),
+      tokArr.select(col("doc_id"), size(col("toks")).cast("long").as("sz")))
 
   /** PPJoin PREFIX rows (tok, doc_id, sz, rn): each document's first
     * |s| − ⌈τ·|s|⌉ + 1 tokens in the global (df, token) rarity order —
@@ -440,16 +452,13 @@ object DedupOps {
     //    boilerplate-heavy shard where every prefix token has df ≈ n/V):
     //    high-rank matches on size-mismatched tails die HERE, before
     //    the distinct + verification joins.
-    prefix.join(
-        prefix.select(col("tok"), col("doc_id").as("doc_b"),
-          col("sz").as("szb"), col("rn").as("rnb")), "tok")
-      .filter(col("doc_id") < col("doc_b") &&
-        least(col("sz"), col("szb")) * 1000 >=
-          lit(thrPm) * greatest(col("sz"), col("szb")) &&
-        (least(col("rn"), col("rnb")) +
-          least(col("sz") - col("rn"), col("szb") - col("rnb"))) *
-          lit(1000L + thrPm) >= lit(thrPm) * (col("sz") + col("szb")))
-      .select(col("doc_id").as("doc_a"), col("doc_b")).distinct()
+    bucketPairs(prefix, Seq("tok"), "doc_id", None, carry = Seq("sz", "rn"))
+      .filter(least(col("sz_a"), col("sz_b")) * 1000 >=
+          lit(thrPm) * greatest(col("sz_a"), col("sz_b")) &&
+        (least(col("rn_a"), col("rn_b")) +
+          least(col("sz_a") - col("rn_a"), col("sz_b") - col("rn_b"))) *
+          lit(1000L + thrPm) >= lit(thrPm) * (col("sz_a") + col("sz_b")))
+      .select("doc_a", "doc_b").distinct()
   }
 
   /** Per-shingle document-frequency cap for [[containmentPairs]]'
@@ -486,11 +495,9 @@ object DedupOps {
     val sh = scope.persist(corpus.select(col("doc_id"), explode(array_distinct(
       graft.plans.TextHashExpressions
         .shingleHashes(col("text"), ShingleCap, ShingleLen))).as("sh")))
-    val rare = sh.groupBy("sh").agg(count(lit(1)).as("__df"))
-      .filter(col("__df") <= dfCap).select("sh")
     // persisted (scope-released): the capped index feeds both join sides
     // and the per-doc size aggregation
-    val capped = scope.persist(sh.join(rare, "sh"))
+    val capped = scope.persist(capBuckets(sh, Seq("sh"), dfCap))
     val sizes = capped.groupBy("doc_id").agg(count(lit(1)).as("na"))
     // |∩| is symmetric: count each UNORDERED pair once (a < b) — half
     // the candidate rows through the pair exchange — and expand to both
@@ -499,10 +506,7 @@ object DedupOps {
     // persisted (scope-released): both union branches read the
     // aggregated pair frame — uncached, the heavy per-shingle join would
     // run once per branch
-    val inter = scope.persist(capped.select(col("sh"), col("doc_id").as("doc_a"))
-      .join(capped.select(col("sh"), col("doc_id").as("doc_b"))
-        .hint("shuffle_hash"), "sh")
-      .filter(col("doc_a") < col("doc_b"))
+    val inter = scope.persist(bucketPairs(capped, Seq("sh"), "doc_id", None)
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter")))
     inter.unionByName(inter.select(col("doc_b").as("doc_a"),
         col("doc_a").as("doc_b"), col("inter")))
@@ -537,13 +541,10 @@ object DedupOps {
       posexplode(array((0 until SimHashBands).map(j =>
         shiftright(col("sh"), 16 * j).bitwiseAND(lit(0xFFFFL))): _*))
         .as(Seq("band", "band_key"))))
-    val kept = capBuckets(banded, Seq("band", "band_key"))
-    val a = kept.as("a"); val b = kept.as("b")
-    a.join(b, col("a.band") === col("b.band") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).cast("long").as("dist"))
+    bucketPairs(banded, Seq("band", "band_key"), "doc_id", Some(MaxBandBucket),
+        carry = Seq("sh"))
+      .select(col("doc_a"), col("doc_b"),
+        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long").as("dist"))
       .distinct()
       .filter(col("dist") <= maxDist)
   }
@@ -572,12 +573,10 @@ object DedupOps {
     // sides of the candidate self-join
     val e = scope.persist(SimilarityOps.lshBands(emb, "embedding", NearDupTables, NearDupBits,
       "vec_id", "embedding"))
-    val kept = capBuckets(e, Seq("table", "bucket"))
-    val a = kept.as("a"); val b = kept.as("b")
-    a.join(b, col("a.table") === col("b.table") &&
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        round(graft.plans.TextHashExpressions.vecCosine(col("a.embedding"), col("b.embedding")) * lit(10000.0), 0)
+    bucketPairs(e, Seq("table", "bucket"), "vec_id", Some(MaxBandBucket),
+        ("vec_a", "vec_b"), Seq("embedding"))
+      .select(col("vec_a"), col("vec_b"),
+        round(graft.plans.TextHashExpressions.vecCosine(col("embedding_a"), col("embedding_b")) * lit(10000.0), 0)
           .cast("long").as("cos_e4"))
       .distinct()
       .filter(col("cos_e4") >= thresholdE4)
@@ -711,10 +710,7 @@ object DedupOps {
       "transform(sequence(1, length(__s)), " +
         "i -> concat(substring(__s, 1, i - 1), substring(__s, i + 1)))"))
         .as(Seq("pos", "key"))))
-    val subs = del.select(col("key"), col("pos"), col("__s").as("sa"))
-      .join(del.select(col("key"), col("pos"), col("__s").as("sb")),
-        Seq("key", "pos"))
-      .filter(col("sa") < col("sb"))
+    val subs = bucketPairs(del, Seq("key", "pos"), "__s", None, ("sa", "sb"))
       .select("sa", "sb")
     val indel = ds.select(col("__s").as("key"), col("__s").as("sa"))
       .join(del.select(col("key"), col("__s").as("sb")), "key")

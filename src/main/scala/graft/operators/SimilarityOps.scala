@@ -322,19 +322,14 @@ object SimilarityOps {
     val sized = scope.persist(emb.select(col("vec_id"), col("embedding"))
       .withColumn("cid", nearestCentroid(col("embedding"), bc))
       .withColumn("__csz", count(lit(1)).over(Window.partitionBy("cid"))))
-    val small = sized.filter(col("__csz") <= maxClusterSize)
-    val smallPairs = small.select(col("cid"), col("vec_id").as("vec_a"))
-      .join(small.select(col("cid"), col("vec_id").as("vec_b")), "cid")
-      .filter(col("vec_a") < col("vec_b"))
+    val smallPairs = DedupOps.bucketPairs(sized.filter(col("__csz") <= maxClusterSize),
+        Seq("cid"), "vec_id", None, ("vec_a", "vec_b"))
       .select("vec_a", "vec_b")
     val big = lshBands(sized.filter(col("__csz") > maxClusterSize), "embedding",
       DedupOps.NearDupTables, DedupOps.NearDupBits, "vec_id", "cid")
-    val bigKept = DedupOps.capBuckets(big, Seq("cid", "table", "bucket"))
-    val bigPairs = bigKept.as("a")
-      .join(bigKept.as("b"), col("a.cid") === col("b.cid") &&
-        col("a.table") === col("b.table") &&
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
+    val bigPairs = DedupOps.bucketPairs(big, Seq("cid", "table", "bucket"), "vec_id",
+        Some(DedupOps.MaxBandBucket), ("vec_a", "vec_b"))
+      .select("vec_a", "vec_b")
       .distinct()
     val e = sized.select(col("vec_id"), col("embedding"))
     val ea = e.select(col("vec_id").as("vec_a"), col("embedding").as("__ea"))
@@ -440,16 +435,12 @@ object SimilarityOps {
                         scope: CacheScope = CacheScope.global): DataFrame = {
     val tc = occurrences.groupBy(col("key"), col("tok"))
       .agg(count(lit(1)).as("c"))
-    val rare = tc.groupBy("tok").agg(count(lit(1)).as("__df"))
-      .filter(col("__df") <= dfCap).select("tok")
     // persisted (scope-released): feeds both join sides and the norms
-    val capped = scope.persist(tc.join(rare, "tok"))
+    val capped = scope.persist(DedupOps.capBuckets(tc, Seq("tok"), dfCap))
     val norms = capped.groupBy("key").agg(sum(col("c") * col("c")).as("n2"))
-    val dots = capped.select(col("tok"), col("key").as("key_a"), col("c").as("ca"))
-      .join(capped.select(col("tok"), col("key").as("key_b"), col("c").as("cb"))
-        .hint("shuffle_hash"), "tok")
-      .filter(col("key_a") < col("key_b"))
-      .groupBy("key_a", "key_b").agg(sum(col("ca") * col("cb")).as("dot"))
+    val dots = DedupOps.bucketPairs(capped, Seq("tok"), "key", None,
+        ("key_a", "key_b"), Seq("c"))
+      .groupBy("key_a", "key_b").agg(sum(col("c_a") * col("c_b")).as("dot"))
     dots
       .join(norms.select(col("key").as("key_a"), col("n2").as("na2")), "key_a")
       .join(norms.select(col("key").as("key_b"), col("n2").as("nb2")), "key_b")

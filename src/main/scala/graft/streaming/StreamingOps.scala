@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -206,8 +206,12 @@ object StreamingOps {
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("text_sha", "text_len")
 
-  case class LshBucketState(ids: Vector[Long], saturated: Boolean)
-  case class LshCandidate(docA: Long, docB: Long)
+  /** A streaming candidate bucket: the (doc_id, sz, rn) rows seen so far
+    * (sz and rn are 0 for LSH buckets), or, once the bucket has passed its
+    * cap, the empty saturated sentinel.
+    */
+  case class BucketState(rows: Vector[(Long, Long, Long)], saturated: Boolean)
+  case class CandidatePair(docA: Long, docB: Long)
 
   /** Streaming MinHash-LSH near-duplicate candidates for an ingest
     * pipeline: each arriving doc is banded exactly like the batch operator
@@ -235,58 +239,16 @@ object StreamingOps {
     */
   def lshCandidateStream(docs: DataFrame,
                          maxBucket: Int = graft.operators.DedupOps.MaxBandBucket,
-                         stateTtlMs: Long = 0L): Dataset[LshCandidate] = {
+                         stateTtlMs: Long = 0L): Dataset[CandidatePair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    graft.operators.DedupOps.bandedRows(docs)
+    val rows = graft.operators.DedupOps.bandedRows(docs)
       .select(col("doc_id").cast("long"), col("band").cast("int"),
         col("band_key").cast("long"))
       .as[(Long, Int, Long)]
-      .groupByKey { case (_, band, key) => (band, key) }
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (_: (Int, Long), rows: Iterator[(Long, Int, Long)],
-         state: GroupState[LshBucketState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val st = state.getOption.getOrElse(LshBucketState(Vector.empty, saturated = false))
-            val out =
-              if (st.saturated) { rows.foreach(_ => ()); Iterator.empty[LshCandidate] }
-              else {
-                // batch-internal order is nondeterministic — sort for stable output
-                val incoming = rows.map(_._1).toArray.sorted
-                var ids = st.ids
-                var saturated = false
-                val b = Vector.newBuilder[LshCandidate]
-                incoming.foreach { id =>
-                  if (!saturated && !ids.contains(id)) {
-                    if (ids.length >= maxBucket) saturated = true
-                    else {
-                      ids.foreach(prev => b += LshCandidate(math.min(prev, id), math.max(prev, id)))
-                      ids = ids :+ id
-                    }
-                  }
-                }
-                state.update(
-                  if (saturated) LshBucketState(Vector.empty, saturated = true)
-                  else LshBucketState(ids, saturated = false))
-                b.result().iterator
-              }
-            if (stateTtlMs > 0 && state.exists) state.setTimeoutDuration(stateTtlMs)
-            out
-          }
-        })
+    bucketCandidates(rows, maxBucket, stateTtlMs)(
+      { case (_, band, key) => (band, key) }, r => (r._1, 0L, 0L), (_, _) => true)
   }
-
-  /** Per-token PPJoin bucket state: (doc_id, sz, rn) triples seen so far
-    * on this prefix token; saturated buckets drop to a sentinel (the
-    * MaxBandBucket pattern — a boilerplate-degenerate token stops
-    * generating candidates instead of going quadratic).
-    */
-  case class PpjoinTokState(rows: Vector[(Long, Long, Long)], saturated: Boolean)
-  case class PpjoinCandidate(docA: Long, docB: Long)
 
   /** Streaming twin of the batch PPJoin CANDIDATE stage
     * (DedupOps.ppjoinCandidates): ingests prefix rows (tok, doc_id, sz,
@@ -317,53 +279,63 @@ object StreamingOps {
     */
   def ppjoinCandidateStream(prefix: DataFrame, thrPm: Long,
                             maxBucket: Int = graft.operators.DedupOps.MaxBandBucket,
-                            stateTtlMs: Long = 0L): Dataset[PpjoinCandidate] = {
+                            stateTtlMs: Long = 0L): Dataset[CandidatePair] = {
     val spark = prefix.sparkSession
+    import spark.implicits._
+    val rows = prefix
+      .select(col("tok").cast("string"), col("doc_id").cast("long"),
+        col("sz").cast("long"), col("rn").cast("long"))
+      .as[(String, Long, Long, Long)]
+    bucketCandidates(rows, maxBucket, stateTtlMs)(_._1, r => (r._2, r._3, r._4),
+      { case ((_, psz, prn), (_, sz, rn)) =>
+        val lenOk = math.min(sz, psz) * 1000L >= thrPm * math.max(sz, psz)
+        // positional filter: overlap ≤ common prefix before the match +
+        // the match + the shorter tail after it
+        val ubound = math.min(rn, prn) + math.min(sz - rn, psz - prn)
+        lenOk && ubound * (1000L + thrPm) >= thrPm * (sz + psz)
+      })
+  }
+
+  /** The saturating bucket state machine of the streaming candidate
+    * generators: rows group by `key`; each new doc of a bucket pairs with
+    * every earlier one that `pairOk` accepts, until the bucket holds
+    * `maxBucket` docs — the next new doc saturates it, and it emits
+    * nothing more and drops its rows. `stateTtlMs` > 0 evicts a bucket
+    * idle that long (processing-time timeout).
+    */
+  private def bucketCandidates[V, K: Encoder](rows: Dataset[V], maxBucket: Int,
+      stateTtlMs: Long)(key: V => K, row: V => (Long, Long, Long),
+      pairOk: ((Long, Long, Long), (Long, Long, Long)) => Boolean): Dataset[CandidatePair] = {
+    val spark = rows.sparkSession
     import spark.implicits._
     val timeoutConf =
       if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
       else GroupStateTimeout.NoTimeout()
-    prefix
-      .select(col("tok").cast("string"), col("doc_id").cast("long"),
-        col("sz").cast("long"), col("rn").cast("long"))
-      .as[(String, Long, Long, Long)]
-      .groupByKey(_._1)
+    rows.groupByKey(key)
       .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (_: String, rows: Iterator[(String, Long, Long, Long)],
-         state: GroupState[PpjoinTokState]) => {
+        (_: K, in: Iterator[V], state: GroupState[BucketState]) => {
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
-            val st = state.getOption.getOrElse(PpjoinTokState(Vector.empty, saturated = false))
+            val st = state.getOption.getOrElse(BucketState(Vector.empty, saturated = false))
             val out =
-              if (st.saturated) { rows.foreach(_ => ()); Iterator.empty[PpjoinCandidate] }
+              if (st.saturated) { in.foreach(_ => ()); Iterator.empty[CandidatePair] }
               else {
                 // batch-internal order is nondeterministic — sort for stable output
-                val incoming = rows.map(r => (r._2, r._3, r._4)).toArray.sortBy(_._1)
+                val incoming = in.map(row).toArray.sortBy(_._1)
                 var kept = st.rows
                 var saturated = false
-                val b = Vector.newBuilder[PpjoinCandidate]
-                incoming.foreach { case (id, sz, rn) =>
-                  if (!saturated && !kept.exists(_._1 == id)) {
+                val b = Vector.newBuilder[CandidatePair]
+                incoming.foreach { r =>
+                  if (!saturated && !kept.exists(_._1 == r._1)) {
                     if (kept.length >= maxBucket) saturated = true
                     else {
-                      kept.foreach { case (pid, psz, prn) =>
-                        val lenOk = math.min(sz, psz) * 1000L >=
-                          thrPm * math.max(sz, psz)
-                        // positional filter: overlap ≤ common prefix before
-                        // the match + the match + the shorter tail after it
-                        val ubound = math.min(rn, prn) +
-                          math.min(sz - rn, psz - prn)
-                        val posOk = ubound * (1000L + thrPm) >= thrPm * (sz + psz)
-                        if (pid != id && lenOk && posOk)
-                          b += PpjoinCandidate(math.min(pid, id), math.max(pid, id))
-                      }
-                      kept = kept :+ ((id, sz, rn))
+                      kept.foreach(p => if (pairOk(p, r))
+                        b += CandidatePair(math.min(p._1, r._1), math.max(p._1, r._1)))
+                      kept = kept :+ r
                     }
                   }
                 }
-                state.update(
-                  if (saturated) PpjoinTokState(Vector.empty, saturated = true)
-                  else PpjoinTokState(kept, saturated = false))
+                state.update(BucketState(if (saturated) Vector.empty else kept, saturated))
                 b.result().iterator
               }
             if (stateTtlMs > 0 && state.exists) state.setTimeoutDuration(stateTtlMs)

@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Specs for the session-7 additions: SemDeDup semantic near-dup pairs,
-  * hard negatives, the crawl frontier schedule, gazetteer tagging and
-  * random walks. Checks are brute-force references on seeded data (no
-  * Math.random) and structural invariants.
+/** Specs for the session-7 additions: the crawl frontier schedule,
+  * gazetteer tagging and random walks. Checks are brute-force references
+  * on seeded data (no Math.random) and structural invariants.
   */
 class Round4SessionSevenSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
@@ -23,58 +22,6 @@ class Round4SessionSevenSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
-
-  test("semDedupPairs finds planted near-identical pairs in small clusters") {
-    val s = spark; import s.implicits._
-    // 40 well-separated base vectors (axis-ish directions) + a planted
-    // near-copy of every 4th: the quantizer puts copy next to original
-    val dim = 16
-    val base = (0 until 40).map { i =>
-      val v = Array.fill(dim)(0.01f * ((i * 7 + 3) % 5))
-      v(i % dim) = 1f; v((i / dim + 1) % dim) = 0.5f
-      (i.toLong, v.toSeq)
-    }
-    val copies = base.filter(_._1 % 4 == 0).map { case (id, v) =>
-      (id + 1000L, v.updated(0, v.head + 0.001f))
-    }
-    val emb = (base ++ copies).toDF("vec_id", "embedding")
-      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    val got = SimilarityOps.semDedupPairs(emb, 999000L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // SemDeDup recall is cluster-local BY DESIGN: a pair whose copy
-    // flips to a neighboring coarse cluster is missed (the documented
-    // trade vs global LSH), so require most planted pairs, not all
-    val want = copies.map(c => (c._1 - 1000L, c._1)).toSet
-    assert(want.intersect(got).size * 10 >= want.size * 8,
-      s"found only ${want.intersect(got).size}/${want.size}: missing ${want.diff(got)}")
-    // and nothing below the threshold sneaks in: every reported pair is
-    // a planted (original, copy) pair — the base vectors are separated
-    assert(got.subsetOf(want), s"extra: ${got.diff(want)}")
-  }
-
-  test("hardNegatives: nothing at/above the ceiling, dense ranks, and " +
-      "exclusion happens before the rank") {
-    val s = spark; import s.implicits._
-    val dim = 8
-    // query 0; 3 near-copies (positives, cos ~ 1) and 5 spread vectors
-    val base = Array.fill(dim)(1f)
-    val rows = Seq((0L, base.toSeq)) ++
-      (1 to 3).map(i => (i.toLong, base.updated(0, 1f + 0.0001f * i).toSeq)) ++
-      (4 to 8).map { i =>
-        val v = Array.fill(dim)(0.2f); v(i % dim) = 1f; (i.toLong, v.toSeq)
-      }
-    val emb = rows.toDF("vec_id", "embedding")
-      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    val got = SimilarityOps.topK(emb, emb.filter(col("vec_id") === 0L), 3,
-        score = SimilarityOps.VecScore.Cosine(below = Some(999000L)))
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(got.forall(_._3 < 999000L), got.mkString(","))
-    // the 3 near-copies are excluded BEFORE ranking, so ranks 1..3 are
-    // the best of the spread vectors — a post-filtered top-3 of the raw
-    // ranking would have returned ZERO rows here
-    assert(got.map(_._2).sorted.toSeq === Seq(1L, 2L, 3L), got.mkString(","))
-    assert(got.forall(g => g._1 >= 4L), got.mkString(","))
-  }
 
   test("frontierSchedule: dense per-host slots, politeness spacing, stalest first") {
     val s = spark; import s.implicits._
@@ -133,24 +80,5 @@ class Round4SessionSevenSpec extends AnyFunSuite with BeforeAndAfterAll {
       // a walk only ends early at the sink
       if (path.length < 4) assert(path.last._3 === 2L, s"walk $wid stopped at ${path.last._3}")
     }
-  }
-
-  test("semDedupPairs mega-cluster stays bounded and still finds dups") {
-    val s = spark; import s.implicits._
-    // 300 near-identical vectors: ONE coarse cluster of size 300 >
-    // MaxSemCluster, so the LSH-refined path must engage — output pairs
-    // must stay far below the 300*299/2 = 44850 all-pairs blowup while
-    // still finding near-dups (identical vectors share every bucket, but
-    // the per-(cid, table, bucket) cap skips oversized groups; the
-    // perturbations spread vectors over nearby buckets)
-    val dim = 16
-    val emb = (0 until 300).map { i =>
-      val v = Array.fill(dim)(1f)
-      v(i % dim) = 1f + 0.002f * (i / dim)
-      (i.toLong, v.toSeq)
-    }.toDF("vec_id", "embedding")
-      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    val got = SimilarityOps.semDedupPairs(emb, 999900L).collect()
-    assert(got.length < 44850 / 2, s"unbounded: ${got.length} pairs")
   }
 }

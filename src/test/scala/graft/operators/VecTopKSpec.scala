@@ -119,4 +119,28 @@ class VecTopKSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
   }
+
+  test("hardNegatives: nothing at/above the ceiling, dense ranks, and " +
+      "exclusion happens before the rank") {
+    val s = spark; import s.implicits._
+    val dim = 8
+    // query 0; 3 near-copies (positives, cos ~ 1) and 5 spread vectors
+    val base = Array.fill(dim)(1f)
+    val rows = Seq((0L, base.toSeq)) ++
+      (1 to 3).map(i => (i.toLong, base.updated(0, 1f + 0.0001f * i).toSeq)) ++
+      (4 to 8).map { i =>
+        val v = Array.fill(dim)(0.2f); v(i % dim) = 1f; (i.toLong, v.toSeq)
+      }
+    val emb = rows.toDF("vec_id", "embedding")
+      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
+    val got = SimilarityOps.topK(emb, emb.filter(col("vec_id") === 0L), 3,
+        score = SimilarityOps.VecScore.Cosine(below = Some(999000L)))
+      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(got.forall(_._3 < 999000L), got.mkString(","))
+    // the 3 near-copies are excluded BEFORE ranking, so ranks 1..3 are
+    // the best of the spread vectors — a post-filtered top-3 of the raw
+    // ranking would have returned ZERO rows here
+    assert(got.map(_._2).sorted.toSeq === Seq(1L, 2L, 3L), got.mkString(","))
+    assert(got.forall(g => g._1 >= 4L), got.mkString(","))
+  }
 }

@@ -236,7 +236,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming PPJoin candidates ⊇ batch candidate stage; filters + saturation hold") {
     val ss = spark
     import ss.implicits._
-    import org.apache.spark.sql.functions.{col, count, lit}
     implicit val sqlCtx = ss.sqlContext
     val rnd = new scala.util.Random(533)
     val vocab = (0 until 24).map(i => s"w$i")
@@ -248,8 +247,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
           103L -> "r0 r1 r2 r3 r4 r5 r6 r7 r8")
     val thr = 800L
     val corpus = docs.toDF("doc_id", "text")
-    val toks = graft.operators.DedupOps.ppjoinToks(corpus)
-    val sz = toks.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+    val (toks, sz) = graft.operators.DedupOps.ppjoinToks(
+      graft.operators.DedupOps.ppjoinTokArrays(corpus))
     val prefixRows = graft.operators.DedupOps.ppjoinPrefixRows(toks, sz, thr)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getInt(3).toLong))
