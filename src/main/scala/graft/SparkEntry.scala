@@ -482,13 +482,11 @@ object SparkEntry {
         .select(col("way_id").as("entity"), col("seq").as("tidx"),
           (col("x") + Fns.mixId(key * 2) % lit(800001L) - lit(400000L)).as("ox"),
           (col("y") + Fns.mixId(key * 2 + 1) % lit(800001L) - lit(400000L)).as("oy"))
-      val offs = array((for (dx <- -1 to 1; dy <- -1 to 1) yield
-        struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))): _*)
-      val probes = obs.select(col("entity"), col("tidx"), col("ox"), col("oy"),
-          explode(offs).as("o"))
-        .select(col("entity"), col("tidx"), col("ox"), col("oy"),
-          (Fns.cellX(col("ox"), MmLevel) + col("o.dx")).as("jx"),
-          (Fns.cellY(col("oy"), MmLevel) + col("o.dy")).as("jy"))
+      val probes = SpatialOps.stamp(
+        obs.select(col("entity"), col("tidx"), col("ox"), col("oy"),
+          Fns.cellX(col("ox"), MmLevel).as("jx"),
+          Fns.cellY(col("oy"), MmLevel).as("jy")),
+        "jx", "jy", SpatialOps.square(1), SpatialOps.StampEdge.Keep)
       val nodes = wp.select(col("way_id").as("way"), col("seq").as("wseq"),
         col("x").as("cx"), col("y").as("cy"),
         Fns.cellX(col("x"), MmLevel).as("jx"), Fns.cellY(col("y"), MmLevel).as("jy"))

@@ -279,11 +279,7 @@ object GraphOps {
     */
   def triangleCounts(edges: DataFrame,
                      scope: CacheScope = CacheScope.global): DataFrame = {
-    val ec = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    orientedTriangles(ec, scope)
+    orientedTriangles(undirected(edges), scope)
       .select(explode(array(col("u"), col("v1"), col("v2"))).as("node_id"))
       .groupBy("node_id").agg(count(lit(1)).as("n_tri"))
   }
@@ -355,11 +351,7 @@ object GraphOps {
   def kTruss(edges: DataFrame, k: Int, rounds: Int,
              scope: CacheScope = CacheScope.global): DataFrame = {
     require(k >= 3, "k-truss peeling joins away support-0 edges; k >= 3")
-    val ec = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val cec = scope.persist(ec)
+    val cec = scope.persist(undirected(edges))
     dispatchBySize(cec, LocalSweepEdges, srcDst(edges): _*)(
       kTrussLocal(cec, k, rounds))(_ => kTrussLoop(cec, k, rounds, scope))
   }
@@ -448,10 +440,7 @@ object GraphOps {
     */
   def labelPropagation(edges: DataFrame, rounds: Int,
                        scope: CacheScope = CacheScope.global): DataFrame = {
-    val ec = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val ec = undirected(edges)
     val adj = scope.persist(ec.select(col("a").as("u"), col("b").as("v"))
       .unionByName(ec.select(col("b").as("u"), col("a").as("v"))))
     dispatchBySize(adj, LocalSweepEdges, srcDst(edges): _*)(
@@ -527,10 +516,7 @@ object GraphOps {
     */
   def clusteringCoefficients(edges: DataFrame,
                              scope: CacheScope = CacheScope.global): DataFrame = {
-    val ec = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val ec = undirected(edges)
     val deg = ec.select(col("a").as("node_id"))
       .unionByName(ec.select(col("b").as("node_id")))
       .groupBy("node_id").agg(count(lit(1)).as("deg"))
@@ -577,10 +563,7 @@ object GraphOps {
   def linkPrediction(edges: DataFrame, minCn: Long = 2L,
                      hubCap: Int = LinkPredHubCap,
                      scope: CacheScope = CacheScope.global): DataFrame = {
-    val ec = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val ec = undirected(edges)
     val adj = ec.select(col("a").as("u"), col("b").as("v"))
       .unionByName(ec.select(col("b").as("u"), col("a").as("v")))
     // pivot contribution: 1e6/ln(deg) as exact integer floor division of
@@ -814,6 +797,15 @@ object GraphOps {
 
   private def srcDst(edges: DataFrame) =
     Seq(edges.schema("src").dataType, edges.schema("dst").dataType)
+
+  /** The undirected simple graph of (src, dst) edges: one (a, b) row per
+    * edge with a < b, self-loops dropped, parallel and reversed edges
+    * collapsed.
+    */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") =!= col("b")).distinct()
 
   /** Double-sweep diameter estimation (the standard BFS heuristic whose
     * result is an exact LOWER bound and exact on trees): BFS from a
@@ -1160,9 +1152,7 @@ object GraphOps {
     */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int,
             scope: CacheScope = CacheScope.global): DataFrame = {
-    val und = edges.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val und = undirected(edges)
     val ue = scope.persist(
       und.unionByName(und.select(col("b").as("a"), col("a").as("b"))))
     dispatchBySize(ue, LocalSweepEdges, srcDst(edges): _*)(
@@ -1773,9 +1763,7 @@ object GraphOps {
     */
   def oddParityEdges(edges: DataFrame, sources: DataFrame, maxHops: Int,
                      scope: CacheScope = CacheScope.global): DataFrame = {
-    val und = edges.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val und = undirected(edges)
     val dist = hopDistance(
       und.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(und.select(col("b").as("src"), col("a").as("dst"))),
@@ -1914,10 +1902,7 @@ object GraphOps {
   private def lubyRounds(edges: DataFrame, rounds: Int, prioMul: Long,
                          removeNeighbors: Boolean,
                          scope: CacheScope): DataFrame = {
-    val und = scope.persist(
-      edges.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct())
+    val und = scope.persist(undirected(edges))
     dispatchBySize(und, LocalSweepEdges, srcDst(edges): _*)(
       lubyRoundsLocal(und, rounds, prioMul, removeNeighbors,
         edges.schema("src").dataType))(

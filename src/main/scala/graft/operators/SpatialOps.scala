@@ -789,7 +789,60 @@ object SpatialOps {
         Fns.tileX(z, Fns.fixToDeg(col("lon_fix"))).as("tx"),
         Fns.tileY(z, Fns.fixToDeg(col("lat_fix"))).as("ty"))
       .groupBy("tx", "ty")
-      .agg(least(count(lit(1)), lit(65535L)).as("cnt"))
+      .agg(DensityCount)
+
+  /** The density rasters' uint16-saturating cell count (nodedensity.cpp:50-57). */
+  private[graft] val DensityCount: Column = least(count(lit(1)), lit(65535L)).as("cnt")
+
+  /** Grid-edge policy of [[stamp]] on the 2^level grid: drop shifted cells
+    * off the grid; wrap x (the antimeridian) and drop y; or keep every
+    * cell (contour blocks at -1, stamps joined back to occupied cells).
+    */
+  private[graft] sealed trait StampEdge
+  private[graft] object StampEdge {
+    final case class Drop(level: Int) extends StampEdge
+    final case class WrapX(level: Int) extends StampEdge
+    case object Keep extends StampEdge
+  }
+
+  /** [[stamp]] offsets: the (2r+1)² Chebyshev ball, and the 4 neighbours. */
+  private[graft] def square(r: Int): Seq[(Int, Int)] =
+    for (dx <- -r to r; dy <- -r to r) yield (dx, dy)
+  private[graft] val rook: Seq[(Int, Int)] = Seq((1, 0), (-1, 0), (0, 1), (0, -1))
+
+  /** The raster stencils' cell stamp: each row once per (dx, dy) of
+    * `offsets`, its `x`/`y` cells shifted by it and the offset carried as
+    * int `dx`/`dy` columns, from which each stencil derives its payload;
+    * other columns ride along. A literal array, so one narrow explode (a
+    * single offset is a projection); `edge` drops or wraps off-grid cells.
+    */
+  private[graft] def stamp(df: DataFrame, x: String, y: String,
+                           offsets: Seq[(Int, Int)], edge: StampEdge): DataFrame = {
+    val (dx, dy, fanned) = offsets match {
+      case Seq((ox, oy)) => (lit(ox), lit(oy), df)
+      case _ => (col("o.dx"), col("o.dy"), df.select(df.columns.map(col) :+
+        explode(array(offsets.map { case (ox, oy) =>
+          struct(lit(ox).as("dx"), lit(oy).as("dy"))
+        }: _*)).as("o"): _*))
+    }
+    val sx = edge match {
+      case StampEdge.WrapX(level) => pmod(col(x) + dx, lit(1L << level))
+      case _ => col(x) + dx
+    }
+    val shifted = fanned.select(df.columns.map {
+        case `x` => sx.as(x)
+        case `y` => (col(y) + dy).as(y)
+        case c => col(c)
+      } ++ Seq(dx.as("dx"), dy.as("dy")): _*)
+    edge match {
+      case StampEdge.Drop(level) =>
+        val n = 1L << level
+        shifted.filter(col(x) >= 0 && col(x) < n && col(y) >= 0 && col(y) < n)
+      case StampEdge.WrapX(level) =>
+        shifted.filter(col(y) >= 0 && col(y) < (1L << level))
+      case StampEdge.Keep => shifted
+    }
+  }
 
   /** Sparse 3×3 integer convolution over a z/x/y tile raster — the
     * smoothing pass of a density heatmap (binomial kernel 1-2-1 ⊗ 1-2-1,
@@ -802,20 +855,11 @@ object SpatialOps {
     * (rows scattered past the pole are dropped). Output cells are every
     * tile with ≥1 contributing neighbor.
     */
-  def rasterBlur(tiles: DataFrame, z: Int): DataFrame = {
-    val n = 1L << z
-    val offs = Seq((-1, -1, 1), (0, -1, 2), (1, -1, 1), (-1, 0, 2), (0, 0, 4),
-      (1, 0, 2), (-1, 1, 1), (0, 1, 2), (1, 1, 1))
-    val offCol = array(offs.map { case (dx, dy, w) =>
-      struct(lit(dx).as("dx"), lit(dy).as("dy"), lit(w.toLong).as("w"))
-    }: _*)
-    tiles.select(col("tx"), col("ty"), col("cnt"), explode(offCol).as("o"))
-      .select(pmod(col("tx") + col("o.dx"), lit(n)).as("tx"),
-        (col("ty") + col("o.dy")).as("ty"),
-        (col("cnt") * col("o.w")).as("c"))
-      .filter(col("ty") >= 0 && col("ty") < n)
+  def rasterBlur(tiles: DataFrame, z: Int): DataFrame =
+    stamp(tiles.select("tx", "ty", "cnt"), "tx", "ty", square(1), StampEdge.WrapX(z))
+      .select(col("tx"), col("ty"), (col("cnt") *
+        ((lit(2) - abs(col("dx"))) * (lit(2) - abs(col("dy"))))).as("c"))
       .groupBy("tx", "ty").agg(sum("c").as("blur16"))
-  }
 
   /** Bing-style quadkey density at zoom z: the web-mercator z/x/y tile
     * assignment of [[tileDensity]] re-keyed as the interleaved base-4
@@ -835,7 +879,7 @@ object SpatialOps {
     points.select(tx.as("tx"), ty.as("ty"))
       .select(concat(digits: _*).as("quadkey"))
       .groupBy("quadkey")
-      .agg(least(count(lit(1)), lit(65535L)).as("cnt"))
+      .agg(DensityCount)
   }
 
   /** Standard geohash base32 alphabet (no a/i/l/o). */
@@ -918,7 +962,7 @@ object SpatialOps {
         Fns.cellX(col("lon_fix"), level).as("bx"),
         Fns.cellY(col("lat_fix"), level).as("by"))
       .groupBy("bx", "by")
-      .agg(least(count(lit(1)), lit(65535L)).as("cnt"))
+      .agg(DensityCount)
 
   /** Incremental tile-histogram maintenance: apply a changeset to a
     * maintained per-cell count WITHOUT rescanning the corpus — the
@@ -1087,8 +1131,8 @@ object SpatialOps {
     * [[vectorizeRaster]]'s component bboxes (components say WHAT is
     * connected; contours say WHERE the boundary runs, ready for a
     * vector-tile render). Samples are the occupied cells; every 2×2
-    * sample block gets a 4-bit mask via the same constant-fanout stamp
-    * as [[dilateRaster]] (each occupied sample adds its bit to the ≤ 4
+    * sample block gets a 4-bit mask via the constant-fanout [[stamp]]
+    * (each occupied sample adds its bit to the ≤ 4
     * blocks cornered on it — distinct input cells, so the bit sum IS the
     * bitmask), then the [[MsCases]] lookup emits 0–2 segments per block.
     * Blocks just outside the grid edge form naturally (their missing
@@ -1099,17 +1143,13 @@ object SpatialOps {
     * (gx, gy, x1, y1, x2, y2) in doubled block coordinates.
     */
   def marchingSquares(cells: DataFrame): DataFrame = {
-    val stamps = cells.select(explode(array(
-      (for (dx <- 0 to 1; dy <- 0 to 1) yield {
-        val bit = (dx, dy) match {
-          case (0, 0) => 1L; case (1, 0) => 2L; case (1, 1) => 4L
-          case _ => 8L
-        }
-        struct((col("bx") - dx).as("gx"), (col("by") - dy).as("gy"),
-          lit(bit).as("bit"))
-      }): _*)).as("s"))
-      .select(col("s.gx"), col("s.gy"), col("s.bit"))
-    stamps.groupBy("gx", "gy").agg(sum(col("bit")).as("mask"))
+    // bit of the block's lower-left, lower-right, upper-right, upper-left sample
+    val bit = when(col("dy") === 0, when(col("dx") === 0, 1L).otherwise(2L))
+      .otherwise(when(col("dx") === 0, 8L).otherwise(4L))
+    stamp(cells.select("bx", "by"), "bx", "by",
+        Seq((0, 0), (-1, 0), (-1, -1), (0, -1)), StampEdge.Keep)
+      .select(col("bx").as("gx"), col("by").as("gy"), bit.as("bit"))
+      .groupBy("gx", "gy").agg(sum(col("bit")).as("mask"))
       .filter(col("mask") =!= 0 && col("mask") =!= 15)
       .select(col("gx"), col("gy"),
         explode(expr(msCaseSql(duck = false))).as("seg"))
@@ -1153,7 +1193,7 @@ object SpatialOps {
   /** Morphological dilation of an occupied-cell raster by Chebyshev
     * radius `radius` — the grid-space buffer operator (coverage halos,
     * safety margins, "near data" masks) on the same equirect grid as
-    * [[equirectDensity]]. Each occupied cell stamps its
+    * [[equirectDensity]]. Each occupied cell [[stamp]]s its
     * (2·radius+1)² neighborhood (a LITERAL offset array — the explode
     * factor is a compile-time constant, not data-dependent); cells
     * falling off the grid are dropped (the world grid has no wraparound
@@ -1166,48 +1206,31 @@ object SpatialOps {
     * embarrassingly parallel; no join, no window. Output:
     * (cell_x, cell_y, core).
     */
-  def dilateRaster(cells: DataFrame, radius: Int, level: Int): DataFrame = {
-    val n = 1L << level
-    val offsets = for (dx <- -radius to radius; dy <- -radius to radius)
-      yield struct(lit(dx).as("dx"), lit(dy).as("dy"))
-    cells.select(col("bx"), col("by"),
-        explode(array(offsets: _*)).as("o"))
-      .select((col("bx") + col("o.dx")).as("cell_x"),
-        (col("by") + col("o.dy")).as("cell_y"),
-        (col("o.dx") === 0 && col("o.dy") === 0).as("c"))
-      .filter(col("cell_x") >= 0 && col("cell_x") < n &&
-        col("cell_y") >= 0 && col("cell_y") < n)
+  def dilateRaster(cells: DataFrame, radius: Int, level: Int): DataFrame =
+    stamp(cells.select("bx", "by"), "bx", "by", square(radius), StampEdge.Drop(level))
+      .select(col("bx").as("cell_x"), col("by").as("cell_y"),
+        (col("dx") === 0 && col("dy") === 0).as("c"))
       .groupBy("cell_x", "cell_y").agg(max(col("c")).as("core"))
-  }
 
   /** Morphological erosion of an occupied-cell raster by Chebyshev
     * radius `radius`: a cell survives iff its ENTIRE (2·radius+1)²
     * neighborhood is occupied — the interior-core operator (dilation's
     * adjoint; together they compose opening/closing for speckle removal
     * on coverage masks). Implemented WITHOUT a self-join: every occupied
-    * cell stamps the neighborhood it *supports* (the same constant-
-    * fanout explode as [[dilateRaster]]), and a cell survives when its
+    * cell stamps the neighborhood it *supports* (the constant-fanout
+    * [[stamp]]), and a cell survives when its
     * support count reaches the full (2r+1)² — one aggregation shuffle
     * total. Cells near the grid edge can never collect full support, so
     * the border is eroded by construction (the documented contract).
     *
     * Output: (cell_x, cell_y) — the surviving core cells.
     */
-  def erodeRaster(cells: DataFrame, radius: Int, level: Int): DataFrame = {
-    val n = 1L << level
-    val full = (2 * radius + 1).toLong * (2 * radius + 1)
-    val offsets = for (dx <- -radius to radius; dy <- -radius to radius)
-      yield struct(lit(dx).as("dx"), lit(dy).as("dy"))
-    cells.select(col("bx"), col("by"),
-        explode(array(offsets: _*)).as("o"))
-      .select((col("bx") + col("o.dx")).as("cell_x"),
-        (col("by") + col("o.dy")).as("cell_y"))
-      .filter(col("cell_x") >= 0 && col("cell_x") < n &&
-        col("cell_y") >= 0 && col("cell_y") < n)
+  def erodeRaster(cells: DataFrame, radius: Int, level: Int): DataFrame =
+    stamp(cells.select("bx", "by"), "bx", "by", square(radius), StampEdge.Drop(level))
+      .select(col("bx").as("cell_x"), col("by").as("cell_y"))
       .groupBy("cell_x", "cell_y").agg(count(lit(1)).as("__sup"))
-      .filter(col("__sup") === full)
+      .filter(col("__sup") === square(radius).size.toLong)
       .select("cell_x", "cell_y")
-  }
 
   /** Zonal statistics: per-polygon rollup of the point-density raster —
     * the raster↔vector capstone (rasterize the zones, grid the points,
@@ -1564,7 +1587,8 @@ object SpatialOps {
     // run keys embed `by` in the low bits, so runs in adjacent rows never
     // share a key — no self-edges to filter
     val edges = c.join(
-        c.select(col("bx"), (col("by") - 1).as("by"), col("rk").as("nrk")),
+        stamp(c.select(col("bx"), col("by"), col("rk").as("nrk")), "bx", "by",
+          Seq((0, -1)), StampEdge.Keep),
         Seq("bx", "by"))
       .select(col("rk").as("src"), col("nrk").as("dst"))
       .distinct()
@@ -2087,8 +2111,8 @@ object SpatialOps {
     * INLINE and the partial aggregation collapses the 9× fanout to
     * ~|occupied cells| rows BEFORE the only wide shuffle; the occupancy
     * gate (estimates exist only where an observation actually lies) is
-    * then a cell-set-sized semi-join, never a row-scale join. Same
-    * bounded-fanout stencil family as [[rasterBlur]]; per-cell work is
+    * then a cell-set-sized semi-join, never a row-scale join. The
+    * scatter is the bounded-fanout [[stamp]]; per-cell work is
     * the 3×3 neighborhood's observation count, kept O(1) by deriving
     * `level` from the corpus size (callers use the q_vectorize scheme).
     * Input (x, y, v) fix-coord observations; output
@@ -2098,17 +2122,10 @@ object SpatialOps {
     val g = 1L << level
     val cellW = 3600000000L / g
     val cellH = 1800000000L / g
-    val occupied = obs
-      .select(Fns.cellX(col("x"), level).as("bx"),
-        Fns.cellY(col("y"), level).as("by"))
-      .distinct()
-    val offs = array((for (dx <- -1 to 1; dy <- -1 to 1) yield
-      struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))): _*)
-    val scattered = obs
-      .select(col("x"), col("y"), col("v"), explode(offs).as("o"))
-      .select((Fns.cellX(col("x"), level) + col("o.dx")).as("bx"),
-        (Fns.cellY(col("y"), level) + col("o.dy")).as("by"),
-        col("x"), col("y"), col("v"))
+    val binned = obs.select(Fns.cellX(col("x"), level).as("bx"),
+      Fns.cellY(col("y"), level).as("by"), col("x"), col("y"), col("v"))
+    val occupied = binned.select("bx", "by").distinct()
+    val scattered = stamp(binned, "bx", "by", square(1), StampEdge.Keep)
     // exact floor division of nonnegative int64 columns (pmod keeps the
     // quotient an exact multiple, so the final double division is exact)
     def fdiv(a: Column, b: Column): Column = ((a - pmod(a, b)) / b).cast("long")
@@ -2309,8 +2326,8 @@ object SpatialOps {
     * on the raster approximation.
     *
     * Scale posture: delegates to [[GraphOps.hopDistance]]'s frontier BFS
-    * over the occupied-cell adjacency list (two shifted self equi-joins
-    * per direction pair — Θ(occupied cells), bounded rounds). Output:
+    * over the occupied-cell adjacency list (one 4-neighbor [[stamp]] and
+    * one equi-join — Θ(occupied cells), bounded rounds). Output:
     * (bx, by, hops).
     */
   def isochrone(occ: DataFrame, seeds: DataFrame, level: Int,
@@ -2322,15 +2339,10 @@ object SpatialOps {
     // re-execute per consumer
     val cells = scope.persist(occ.select(col("bx"), col("by"),
       (col("bx") * g + col("by")).as("cid")))
-    // all four 4-neighbor shifts through ONE explode + ONE equi-join
+    // all four 4-neighbor shifts through ONE stamp + ONE equi-join
     // (same edge set as four per-shift joins, one shuffle instead of four)
-    val shifted = cells.select(col("cid").as("dst"),
-        explode(expr("array(struct(bx + 1L AS bx, by AS by), " +
-          "struct(bx - 1L AS bx, by AS by), " +
-          "struct(bx AS bx, by + 1L AS by), " +
-          "struct(bx AS bx, by - 1L AS by))")).as("s"))
-      .select(col("s.bx").as("bx"), col("s.by").as("by"), col("dst"))
-    val edges = shifted
+    val edges = stamp(cells.select(col("bx"), col("by"), col("cid").as("dst")),
+        "bx", "by", rook, StampEdge.Keep)
       .join(cells.select(col("bx"), col("by"), col("cid").as("src")),
         Seq("bx", "by"))
       .select(col("src"), col("dst"))
@@ -2356,10 +2368,7 @@ object SpatialOps {
     */
   def poleOfInaccessibility(cells: DataFrame): DataFrame = {
     val c = cells.select(col("poly_id"), col("cell_x"), col("cell_y"))
-    val stamps = Seq((1L, 0L), (-1L, 0L), (0L, 1L), (0L, -1L)).map {
-      case (dx, dy) => c.select(col("poly_id"),
-        (col("cell_x") + dx).as("cell_x"), (col("cell_y") + dy).as("cell_y"))
-    }.reduce(_ unionByName _)
+    val stamps = stamp(c, "cell_x", "cell_y", rook, StampEdge.Keep)
       .groupBy("poly_id", "cell_x", "cell_y").agg(count(lit(1)).as("nn"))
     val boundary = c.join(stamps, Seq("poly_id", "cell_x", "cell_y"), "left")
       .filter(coalesce(col("nn"), lit(0L)) < 4)
@@ -2385,21 +2394,15 @@ object SpatialOps {
     * yields the transform. Exact integers end-to-end; cells farther than
     * k are absent (the cap bounds the fanout).
     *
-    * Scale posture: constant fanout per occupied cell (the q_dilate
-    * stamp argument) into ONE map-side-combinable min groupBy — no
+    * Scale posture: one constant-fanout [[stamp]] per occupied cell into
+    * ONE map-side-combinable min groupBy — no
     * joins, no iteration; cost is Θ(occupied · (2k+1)²).
     */
-  def distanceTransform(occ: DataFrame, level: Int, k: Int): DataFrame = {
-    val gmax = (1L << level) - 1
-    val offs = array((-k to k).map(i => lit(i.toLong)): _*)
-    occ.select(col("bx"), col("by"), explode(offs).as("dx"))
-      .select(col("bx"), col("by"), col("dx"), explode(offs).as("dy"))
-      .select((col("bx") + col("dx")).as("gx"), (col("by") + col("dy")).as("gy"),
-        greatest(abs(col("dx")), abs(col("dy"))).as("d"))
-      .filter(col("gx") >= 0 && col("gx") <= gmax &&
-        col("gy") >= 0 && col("gy") <= gmax)
+  def distanceTransform(occ: DataFrame, level: Int, k: Int): DataFrame =
+    stamp(occ.select("bx", "by"), "bx", "by", square(k), StampEdge.Drop(level))
+      .select(col("bx").as("gx"), col("by").as("gy"),
+        greatest(abs(col("dx")), abs(col("dy"))).cast("long").as("d"))
       .groupBy("gx", "gy").agg(min(col("d")).as("dist"))
-  }
 
   /** Raster region labeling: 4-connected components of an occupancy mask
     * with per-region size and bbox — the raster-space dissolve (which
@@ -2407,9 +2410,9 @@ object SpatialOps {
     * patches touch). Component label = the smallest cell id (bx·2^level
     * + by) reachable through occupied 4-neighbors.
     *
-    * Scale posture: neighbor edges come from TWO shifted self equi-joins
-    * of the mask (right + down — each occupied cell appears in ≤ 2
-    * candidate pairs per direction, no neighborhood explode); labels via
+    * Scale posture: neighbor edges come from ONE equi-join of the mask
+    * against its left + down [[stamp]] (a 2× fan-out, one candidate pair
+    * per adjacent pair); labels via
     * [[GraphOps.connectedComponents]]'s adaptive pointer-jumping loop
     * (O(log d) rounds); isolated cells self-label through the left join.
     * One final rollup shuffle.
@@ -2418,14 +2421,10 @@ object SpatialOps {
     val g = 1L << level
     val cells = occ.select(col("bx"), col("by"),
       (col("bx") * g + col("by")).as("cid"))
-    val right = cells.select((col("bx") - 1).as("bx"), col("by"),
-      col("cid").as("dst"))
-    val down = cells.select(col("bx"), (col("by") - 1).as("by"),
-      col("cid").as("dst"))
-    val edges = cells.join(right, Seq("bx", "by"))
+    val edges = stamp(cells.select(col("bx"), col("by"), col("cid").as("dst")),
+        "bx", "by", Seq((-1, 0), (0, -1)), StampEdge.Keep)
+      .join(cells, Seq("bx", "by"))
       .select(col("cid").as("src"), col("dst"))
-      .unionByName(cells.join(down, Seq("bx", "by"))
-        .select(col("cid").as("src"), col("dst")))
     val comp = GraphOps.connectedComponents(edges)
     cells.join(comp, cells("cid") === comp("node_id"), "left")
       .select(col("bx"), col("by"),

@@ -163,7 +163,7 @@ object StatsOps {
     * one double division of two exactly-agreed integers — deterministic
     * across engines.
     *
-    * Scale posture: adjacency is a narrow 4× explode + ONE self
+    * Scale posture: adjacency is a 4-neighbor [[SpatialOps.stamp]] + ONE self
     * equi-join on the neighbor key (no window, no matrix) and every
     * aggregate is map-side combined; the whole statistic is two shuffles
     * over the GRID (already ≪ the corpus), ending in a single row
@@ -185,20 +185,15 @@ object StatsOps {
     * HUGEINT — it overflows int64 first); one double expression per cell
     * ends it, deterministic across engines.
     *
-    * Scale posture: the neighbor sum is a 5× scatter explode + ONE
+    * Scale posture: the neighbor sum is a 5× [[SpatialOps.stamp]] + ONE
     * groupBy on the cell key (map-side combined), then a semi-join back
     * to occupied cells and a broadcast of the 3-number global row — no
     * window, no matrix, no per-cell loop. Output (bx, by, v, gi_e6).
     */
   def getisOrd(cells: DataFrame): DataFrame = {
     val base = cells.select(col("bx"), col("by"), col("v"))
-    val offs = array(Seq((0, 0), (1, 0), (-1, 0), (0, 1), (0, -1)).map {
-      case (dx, dy) => struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))
-    }: _*)
-    val scattered = base
-      .select(col("bx"), col("by"), col("v"), explode(offs).as("o"))
-      .select((col("bx") + col("o.dx")).as("bx"),
-        (col("by") + col("o.dy")).as("by"), col("v"))
+    val scattered = SpatialOps.stamp(base, "bx", "by",
+        (0, 0) +: SpatialOps.rook, SpatialOps.StampEdge.Keep)
       .groupBy("bx", "by")
       .agg(sum("v").as("l"), count(lit(1)).as("k"))
     val local = base.join(scattered, Seq("bx", "by"))
@@ -218,13 +213,8 @@ object StatsOps {
 
   def moranI(cells: DataFrame): DataFrame = {
     val base = cells.select(col("bx"), col("by"), col("v"))
-    val offs = array(Seq((1, 0), (-1, 0), (0, 1), (0, -1)).map { case (dx, dy) =>
-      struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))
-    }: _*)
-    val nbrs = base
-      .select(col("bx"), col("by"), col("v"), explode(offs).as("o"))
-      .select((col("bx") + col("o.dx")).as("bx"),
-        (col("by") + col("o.dy")).as("by"), col("v").as("vi"))
+    val nbrs = SpatialOps.stamp(base.withColumnRenamed("v", "vi"), "bx", "by",
+        SpatialOps.rook, SpatialOps.StampEdge.Keep)
       .join(base.select(col("bx"), col("by"), col("v").as("vj")),
         Seq("bx", "by"))
       .agg(count(lit(1)).as("w"), sum(col("vi") * col("vj")).as("p"),

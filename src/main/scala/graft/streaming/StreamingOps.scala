@@ -40,7 +40,7 @@ object StreamingOps {
       .groupBy(window(col(tsCol), windowLen),
         graft.functions.Fns.tileX(z, graft.functions.Fns.fixToDeg(col("lon_fix"))).as("tx"),
         graft.functions.Fns.tileY(z, graft.functions.Fns.fixToDeg(col("lat_fix"))).as("ty"))
-      .agg(least(count(lit(1)), lit(65535L)).as("cnt"))
+      .agg(graft.operators.SpatialOps.DensityCount)
       .select(col("window.start").as("win_start"), col("tx"), col("ty"), col("cnt"))
 
   /** Streaming point-in-polygon counts — the watermarked twin of the

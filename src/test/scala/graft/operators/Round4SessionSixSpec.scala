@@ -6,9 +6,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the session-6 additions: Borůvka MST, FW-BW strongly
-  * connected components, the STR partitioner's exact balance, the metric
-  * buffer's exact distance predicate and quadtree leaf partitioning. Each checks against an independent driver-side
-  * brute-force reference on seeded data (no Math.random).
+  * connected components and the STR partitioner's exact balance. Each
+  * checks against an independent driver-side brute-force reference on
+  * seeded data (no Math.random).
   */
 class Round4SessionSixSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
@@ -110,77 +110,5 @@ class Round4SessionSixSpec extends AnyFunSuite with BeforeAndAfterAll {
     val counts = out.map(_.getAs[Long]("n_pts"))
     assert(counts.sum == n)
     assert(counts.max - counts.min <= 2, s"counts ${counts.mkString(",")}")
-  }
-
-  test("bufferCells matches BigInt brute force on seeded ways") {
-    val s = spark; import s.implicits._
-    val level = 9; val r = 2000000L
-    val pX = 3600000000L / (1L << level); val pY = 1800000000L / (1L << level)
-    val pts = (0 until 3).flatMap { w =>
-      val it = lcg(100L + w)
-      val bx = it.next() % 200000000L - 100000000L
-      val by = it.next() % 100000000L - 50000000L
-      (0 until 4).map(i =>
-        (w.toLong, i.toLong, bx + it.next() % 10000000L, by + it.next() % 10000000L))
-    }
-    val got = SpatialOps.bufferCells(pts.toDF("way_id", "seq", "x", "y"), r, level)
-      .as[(Long, Long, Long)].collect()
-      .map(t => (t._1, t._2) -> t._3).toMap
-    // brute force: every segment, every cell in a 2R-expanded bbox, exact
-    // BigInt point-to-segment distance on doubled coords
-    val want = scala.collection.mutable.Map[(Long, Long), Long]()
-    for (Seq((w1, _, x1, y1), (w2, _, x2, y2)) <- pts.sortBy(t => (t._1, t._2))
-           .sliding(2).toSeq if w1 == w2) {
-      val bxlo = math.max((math.min(x1, x2) - 2 * r + 1800000000L) / pX, 0L)
-      val bxhi = math.min((math.max(x1, x2) + 2 * r + 1800000000L) / pX,
-        (1L << level) - 1)
-      val bylo = math.max((math.min(y1, y2) - 2 * r + 900000000L) / pY, 0L)
-      val byhi = math.min((math.max(y1, y2) + 2 * r + 900000000L) / pY,
-        (1L << level) - 1)
-      for (bx <- bxlo to bxhi; by <- bylo to byhi) {
-        val cx = BigInt(bx * 2 * pX + pX - 3600000000L)
-        val cy = BigInt(by * 2 * pY + pY - 1800000000L)
-        val (vx, vy) = (BigInt((x2 - x1) * 2), BigInt((y2 - y1) * 2))
-        val (wx, wy) = (cx - x1 * 2, cy - y1 * 2)
-        val (ux, uy) = (cx - x2 * 2, cy - y2 * 2)
-        val dot = vx * wx + vy * wy
-        val len2 = vx * vx + vy * vy
-        val r2 = BigInt(4 * r * r)
-        val in =
-          if (dot <= 0) wx * wx + wy * wy <= r2
-          else if (dot >= len2) ux * ux + uy * uy <= r2
-          else {
-            val cr = vx * wy - vy * wx
-            cr * cr <= r2 * len2
-          }
-        if (in) want((bx, by)) = want.getOrElse((bx, by), 0L) + 1L
-      }
-    }
-    assert(got == want.toMap)
-  }
-
-  test("quadtreeLeaves: every point lands in exactly one leaf; counts add up") {
-    val s = spark; import s.implicits._
-    val n = 700
-    val pts = lcg(21L).take(2 * n).grouped(2)
-      .map(g => (g(0) % 1800000000L - 900000000L, g(1) % 1200000000L - 600000000L))
-      .toSeq
-    val maxLevel = 6; val cap = 40L
-    val leaves = SpatialOps.quadtreeLeaves(
-        pts.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
-          .toDF("pid", "lon_fix", "lat_fix"), maxLevel, cap)
-      .collect()
-      .map(r => (r.getAs[Long]("lv"), r.getAs[Long]("bx"), r.getAs[Long]("by"),
-        r.getAs[Long]("cnt")))
-    assert(leaves.map(_._4).sum == n)
-    def cellAt(v: Long, lv: Int, span: Long, off: Long): Long =
-      math.min((v + off) * (1L << lv) / span, (1L << lv) - 1)
-    for ((x, y) <- pts) {
-      val hits = leaves.count { case (lv, bx, by, _) =>
-        cellAt(x, lv.toInt, 3600000000L, 1800000000L) == bx &&
-          cellAt(y, lv.toInt, 1800000000L, 900000000L) == by
-      }
-      assert(hits == 1, s"point ($x,$y) in $hits leaves")
-    }
   }
 }

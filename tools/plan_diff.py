@@ -9,9 +9,10 @@ codegen and AQE stage ids, lambda variable ids, lambda class names and
 object hashes become
 placeholders, so two dumps of the same plan compare equal. Then, for
 each file, the script prints the counts of shuffle `Exchange`,
-`BroadcastExchange`, `ReusedExchange`, each join operator, and
-whole-stage-codegen stages (a run of `*` operators under a non-codegen
-parent, counted once), followed by a unified diff of the normalized
+`BroadcastExchange`, `ReusedExchange`, `Generate` (explode), `Union`,
+each join operator, and whole-stage-codegen stages (a run of `*`
+operators under a non-codegen parent, counted once), followed by a
+unified diff of the normalized
 text. Exit status: 0 when the normalized plans are identical, 1 when
 they differ.
 """
@@ -66,7 +67,8 @@ def counts(text):
             c["WholeStageCodegen"] += 1
         stack.append((depth, starred))
         name = op.split(" ")[0]
-        if name in ("Exchange", "BroadcastExchange", "ReusedExchange"):
+        if name in ("Exchange", "BroadcastExchange", "ReusedExchange",
+                    "Generate", "Union"):
             c[name] += 1
         elif JOIN.search(name):
             c[name] += 1
@@ -81,7 +83,8 @@ def main(argv):
         with open(path, encoding="utf-8") as f:
             texts.append(normalize(f.read()))
     cs = [counts(t) for t in texts]
-    keys = ["Exchange", "BroadcastExchange", "ReusedExchange", "WholeStageCodegen"]
+    keys = ["Exchange", "BroadcastExchange", "ReusedExchange", "Generate", "Union",
+            "WholeStageCodegen"]
     keys += sorted(k for k in set(cs[0]) | set(cs[1]) if k not in keys)
     width = max(len(k) for k in keys)
     print(f"{'':{width}}  {'A':>4}  {'B':>4}")
